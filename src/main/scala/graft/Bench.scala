@@ -91,7 +91,7 @@ object Bench {
     parseWarnings.foreach(k => System.err.println(
       s"[bench] PRIOR-ARTIFACT PARSE FAILURE: $k present but parsed empty - " +
         "warm/streaming adjudication gates are running blind this round"))
-    val hostFp = BenchAdjudicate.hostFingerprint()
+    val hostFp = BenchAdjudicate.hostFingerprint(cpus.toInt)
     // EVERY prior comparison assumes same hardware: a committed artifact
     // from another box must not read as pressure here, fire phantom
     // warm_retries, or flag every streaming query as a throughput drop

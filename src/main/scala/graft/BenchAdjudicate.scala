@@ -68,14 +68,17 @@ object BenchAdjudicate {
     if (m.find()) Some(m.group(1)) else None
   }
 
-  /** This host's canary-comparison key: hostname + core count — enough to
-    * catch the committed-artifact-from-other-hardware case without
-    * recording anything machine-identifying beyond what `hostname` says.
+  /** This run's canary-comparison key: hostname + core count + the
+    * session's parallelism (`local[N]`, N = `SPARK_GRAFT_CPUS` or the
+    * caller's default) — enough to catch the committed-artifact-from-
+    * other-hardware case, and a run at 8 cores judged against a 32-core
+    * prior on the same box, without recording anything
+    * machine-identifying beyond what `hostname` says.
     */
-  def hostFingerprint(): String = {
+  def hostFingerprint(sessionCores: Int): String = {
     val host = try java.net.InetAddress.getLocalHost.getHostName
       catch { case _: Throwable => "unknown" }
-    s"$host/${Runtime.getRuntime.availableProcessors()}cpu"
+    s"$host/${Runtime.getRuntime.availableProcessors()}cpu/local[$sessionCores]"
   }
 
   /** `"provisional":true` from a prior artifact (absent before r14): the

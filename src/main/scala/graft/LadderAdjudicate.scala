@@ -236,7 +236,7 @@ object LadderAdjudicate {
       val nErr = rs.count(_._2.isLeft)
       s"""{"metric":"sf_ladder_adjudicated","unit":"sec_warm_adjudicated",""" +
         s""""protocol":"graft.LadderAdjudicate: cold+warm(+retry past 1.1x cold) per rung at 1x ($dir1) and 100x ($dir100); value = adjudicated warm; prior = BENCH_LADDER.json else legacy BENCH_SF_LADDER.json nested blocks; rungs not re-measured by an ONLY run are carried forward (carried:true)",""" +
-        s""""host_fingerprint":${jstr(BenchAdjudicate.hostFingerprint())},""" +
+        s""""host_fingerprint":${jstr(BenchAdjudicate.hostFingerprint(cpus.toInt))},""" +
         s""""canary_start_sec":${d3(canaryStart)},"canary_end_sec":${d3(canaryEnd)},""" +
         s""""n_rungs":${rs.size},"n_errors":$nErr,""" +
         s""""n_measured":${rs.count(r => !carriedKeys(r._1))},""" +

@@ -9,7 +9,9 @@ package graft.core
   * order-independent aggregates, but the map is order-preserving anyway
   * (`Future.sequence`) so callers are bit-identical to the sequential
   * form. Bounded pool, created and torn down per call: this runs a
-  * handful of times per query, never in a hot loop.
+  * handful of times per query, never in a hot loop. The pool is torn down
+  * with `shutdownNow`, so when one walk fails (or the await times out)
+  * the walks still running are interrupted instead of left to finish.
   */
 object Par {
   def mapOrdered[A, B](xs: Seq[A], maxThreads: Int = 16)(f: A => B): Seq[B] =
@@ -21,6 +23,6 @@ object Par {
         math.min(maxThreads, xs.size))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try Await.result(Future.sequence(xs.map(x => Future(f(x)))), 10.minutes)
-      finally pool.shutdown()
+      finally pool.shutdownNow()
     }
 }

@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.Dataset
 import graft.core.Model.Question
 
@@ -32,9 +33,8 @@ object LlmOperator {
     questions.mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
       else {
-        val client = factory.create()
-        try {
-        val out = it.grouped(batchSize).flatMap { batch =>
+        val client = openForTask(factory)
+        it.grouped(batchSize).flatMap { batch =>
           val t0 = System.nanoTime()
           var attempt = 0
           var result: Option[Seq[String]] = None
@@ -59,10 +59,6 @@ object LlmOperator {
                 s"LLM generate failed after $maxRetries retries", lastErr)
           }
         }
-        // exhaust before close: mapPartitions iterators are lazy; the
-        // finally keeps the client from leaking when retries exhaust
-        out.toVector.iterator
-        } finally client.close()
       }
     }
   }
@@ -78,9 +74,8 @@ object LlmOperator {
     questions.mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
       else {
-        val client = factory.create()
-        try {
-        val out = it.flatMap { q =>
+        val client = openForTask(factory)
+        it.flatMap { q =>
           var attempt = 0
           var result: Option[Seq[(String, Double)]] = None
           var lastErr: Throwable = null
@@ -96,10 +91,19 @@ object LlmOperator {
           result.getOrElse(throw new RuntimeException(
               s"LLM score failed after $maxRetries retries", lastErr))
             .map { case (c, s) => Scored(q.caseId, q.queryAttr, c, s) }
-        }.toVector
-        out.iterator
-        } finally client.close()
+        }
       }
     }
+  }
+
+  /** A client for the running task, closed when the task ends: normally,
+    * on failure, or when the consumer stops early (e.g. under `limit`).
+    * The operators can then hand their lazy iterators downstream instead
+    * of buffering the whole partition just to close the client.
+    */
+  private def openForTask(factory: LlmClientFactory): LlmClient = {
+    val client = factory.create()
+    TaskContext.get().addTaskCompletionListener[Unit](_ => client.close())
+    client
   }
 }

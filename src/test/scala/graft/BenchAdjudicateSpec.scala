@@ -111,8 +111,8 @@ class BenchAdjudicateSpec extends AnyFunSuite {
   }
 
   test("host fingerprint round-trips through the artifact; parse sanity flags empty parses") {
-    val fp = BenchAdjudicate.hostFingerprint()
-    assert(fp.contains("/") && fp.endsWith("cpu"))
+    val fp = BenchAdjudicate.hostFingerprint(8)
+    assert(fp.contains("cpu/") && fp.endsWith("/local[8]"))
     val txt = s"""{"canary_best_sec":0.42,"host_fingerprint":"$fp"}"""
     assert(BenchAdjudicate.parseHostFingerprint(txt).contains(fp))
     assert(BenchAdjudicate.parseHostFingerprint("{}").isEmpty)
@@ -132,6 +132,21 @@ class BenchAdjudicateSpec extends AnyFunSuite {
       BenchAdjudicate.parseQueriesWarm(healthy),
       BenchAdjudicate.parseStreamingRates(healthy)).isEmpty)
     assert(BenchAdjudicate.parseSanity("", Map.empty, Map.empty).isEmpty)
+  }
+
+  test("host fingerprint keys on the session core count: 8- and 32-core runs do not match") {
+    val fp8 = BenchAdjudicate.hostFingerprint(8)
+    val fp32 = BenchAdjudicate.hostFingerprint(32)
+    assert(fp8 != fp32)
+    assert(fp8 == BenchAdjudicate.hostFingerprint(8))
+    // a 32-core run reading an 8-core prior sees a different host key, so
+    // Bench disables every prior comparison instead of judging across them
+    val prior8 = s"""{"canary_best_sec":0.42,"host_fingerprint":"$fp8"}"""
+    assert(!BenchAdjudicate.parseHostFingerprint(prior8).contains(fp32))
+    // the fingerprint before the session core count was part of it
+    // ("host/32cpu") matches neither
+    val legacy = fp8.substring(0, fp8.lastIndexOf('/'))
+    assert(legacy.endsWith("cpu") && legacy != fp8 && legacy != fp32)
   }
 
   test("provisional prior falls back to the last quiet artifact (r13 item 4)") {

@@ -2,7 +2,9 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.llm.{HttpLlmClient, MiniJson}
@@ -10,8 +12,10 @@ import graft.llm.{HttpLlmClient, MiniJson}
 /** Hermetic spec for the OpenAI-compatible HTTP adapter: a JDK HttpServer
   * stub implements `/v1/completions` deterministically (batch generation
   * with shuffled choice indexes, echo+logprobs scoring with per-token
-  * offsets, and an injectable 500 for the retry path). No sockets leave
-  * localhost; no external model anywhere.
+  * offsets, and an injectable 500 for the retry path). It records the
+  * client port of every exchange, so a spec can tell which requests
+  * shared a connection. No sockets leave localhost; no external model
+  * anywhere.
   */
 class HttpLlmClientSpec extends AnyFunSuite {
 
@@ -28,10 +32,15 @@ class HttpLlmClientSpec extends AnyFunSuite {
     out.result()
   }
 
-  private def completionsHandler(failFirst: AtomicInteger)(ex: HttpExchange): Unit = {
+  private def completionsHandler(failFirst: AtomicInteger,
+      ports: ConcurrentLinkedQueue[Int])(ex: HttpExchange): Unit = {
+    ports.add(ex.getRemoteAddress.getPort)
     val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    if (failFirst.getAndDecrement() > 0) {
-      ex.sendResponseHeaders(500, -1); ex.close(); return
+    if (failFirst.getAndDecrement() > 0) { // an error body, as real servers send
+      val err = """{"error": {"message": "injected failure"}}""".getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(500, err.length)
+      ex.getResponseBody.write(err)
+      ex.close(); return
     }
     val req = parse(body)
     val resp = req.obj("prompt") match {
@@ -58,17 +67,22 @@ class HttpLlmClientSpec extends AnyFunSuite {
     ex.close()
   }
 
-  private def withServer(failFirst: Int)(f: String => Unit): Unit = {
+  /** Runs `f` with the endpoint URL and a view of the client port of
+    * every exchange so far, in arrival order.
+    */
+  private def withServer(failFirst: Int)(f: (String, () => Seq[Int]) => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val failures = new AtomicInteger(failFirst)
-    server.createContext("/v1/completions", completionsHandler(failures)(_))
+    val ports = new ConcurrentLinkedQueue[Int]()
+    server.createContext("/v1/completions", completionsHandler(failures, ports)(_))
     server.start()
-    try f(s"http://127.0.0.1:${server.getAddress.getPort}/v1/completions")
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}/v1/completions",
+      () => ports.asScala.toSeq)
     finally server.stop(0)
   }
 
   test("generate re-orders shuffled choices by index and round-trips escapes") {
-    withServer(failFirst = 0) { url =>
+    withServer(failFirst = 0) { (url, _) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 0)
       val out = c.generate(Seq("alpha", "with \"quotes\"\nand newline", "gamma"))
       assert(out == Seq("gen:alpha", "gen:with \"quotes\"\nand newline", "gen:gamma"))
@@ -76,7 +90,7 @@ class HttpLlmClientSpec extends AnyFunSuite {
   }
 
   test("scoreCandidates sums logprobs past the prompt and normalizes to a simplex") {
-    withServer(failFirst = 0) { url =>
+    withServer(failFirst = 0) { (url, _) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 0)
       val prompt = "pick one: " // 10 chars; "one:" token starts at offset 5 < 10
       val scored = c.scoreCandidates(prompt, Seq("aa", "bbbb"))
@@ -90,12 +104,30 @@ class HttpLlmClientSpec extends AnyFunSuite {
     }
   }
 
+  test("sequential requests reuse one kept-alive connection") {
+    withServer(failFirst = 0) { (url, ports) =>
+      val c = new HttpLlmClient(url, "m", maxRetries = 0)
+      (1 to 20).foreach { i =>
+        assert(c.scoreCandidates(s"pick $i: ", Seq("aa")).map(_._1) == Seq("aa"))
+      }
+      assert(ports().size == 20)
+      // one connection, or two if the first socket went stale in between;
+      // a connection per request would show 20 ports
+      assert(ports().distinct.size <= 2, s"client ports: ${ports()}")
+    }
+  }
+
   test("a 500 response is retried (reference's retry loop, bounded)") {
-    withServer(failFirst = 1) { url =>
+    withServer(failFirst = 1) { (url, ports) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 2)
       assert(c.generate(Seq("x")) == Seq("gen:x"))
+      // the failed connection is dropped: the retry arrives on a new one
+      assert(ports().size == 2 && ports()(0) != ports()(1), s"client ports: ${ports()}")
+      // ...and that fresh connection serves the next call
+      assert(c.generate(Seq("y")) == Seq("gen:y"))
+      assert(ports().size == 3 && ports()(2) == ports()(1), s"client ports: ${ports()}")
     }
-    withServer(failFirst = 10) { url =>
+    withServer(failFirst = 10) { (url, _) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 1)
       intercept[Exception](c.generate(Seq("x")))
     }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import graft.core.Model.Question
 import graft.llm._
 
@@ -40,6 +44,37 @@ class LlmOperatorSpec extends SparkSpec {
     assert(out.head.attempts == 3) // 2 failures + 1 success
   }
 
+  /** 3 partitions of 4 questions each, so every partition is non-empty. */
+  private def partitioned = {
+    val s = spark
+    import s.implicits._
+    s.sparkContext.parallelize((0 until 12).map { i =>
+      Question(s"c$i", "a", s"match it\nOptions:\n- x$i\n- y$i", Seq(s"x$i", s"y$i"))
+    }, 3).toDS()
+  }
+
+  test("each partition's client is closed exactly once, also when the consumer stops early") {
+    val gen = UUID.randomUUID().toString
+    assert(LlmOperator.generate(partitioned, CountingFactory(gen), batchSize = 2)
+      .collect().length == 12)
+    assert(CountingFactory.closeCountsOf(gen) == Seq(1, 1, 1))
+    assert(CountingFactory.calls(gen).get == 6)
+
+    val sc = UUID.randomUUID().toString
+    assert(LlmOperator.score(partitioned, CountingFactory(sc)).collect().length == 24)
+    assert(CountingFactory.closeCountsOf(sc) == Seq(1, 1, 1))
+
+    // limit(1): the operators stream, so the task stops after the first
+    // batch instead of calling the LLM for the whole partition, and the
+    // task-completion listener still closes its client
+    val lim = UUID.randomUUID().toString
+    assert(LlmOperator.generate(partitioned, CountingFactory(lim), batchSize = 1)
+      .limit(1).collect().length == 1)
+    val limCloses = CountingFactory.closeCountsOf(lim)
+    assert(limCloses.nonEmpty && limCloses.forall(_ == 1), limCloses)
+    assert(CountingFactory.calls(lim).get < 4 * limCloses.size)
+  }
+
   test("exhausted retries surface the error") {
     val e = intercept[org.apache.spark.SparkException] {
       LlmOperator.generate(questions.repartition(1), FlakyFactory(failures = 10),
@@ -52,4 +87,36 @@ class LlmOperatorSpec extends SparkSpec {
 
 final case class FlakyFactory(failures: Int) extends LlmClientFactory {
   override def create(): LlmClient = new FlakyLlmClient(new MockLlmClient(), failures)
+}
+
+/** Mock clients that record, per factory `id`, each client's close count
+  * and the LLM calls made. Local mode runs tasks in this JVM, so the
+  * records are visible to the spec.
+  */
+final case class CountingFactory(id: String) extends LlmClientFactory {
+  override def create(): LlmClient = {
+    val closes = new AtomicInteger()
+    CountingFactory.closes(id).add(closes)
+    new LlmClient {
+      private val inner = new MockLlmClient()
+      override def generate(prompts: Seq[String]): Seq[String] = {
+        CountingFactory.calls(id).incrementAndGet(); inner.generate(prompts)
+      }
+      override def scoreCandidates(prompt: String, candidates: Seq[String]): Seq[(String, Double)] = {
+        CountingFactory.calls(id).incrementAndGet(); inner.scoreCandidates(prompt, candidates)
+      }
+      override def close(): Unit = closes.incrementAndGet()
+    }
+  }
+}
+
+object CountingFactory {
+  private val closeCounts = new ConcurrentHashMap[String, ConcurrentLinkedQueue[AtomicInteger]]()
+  private val callCounts = new ConcurrentHashMap[String, AtomicInteger]()
+  def closes(id: String): ConcurrentLinkedQueue[AtomicInteger] =
+    closeCounts.computeIfAbsent(id, _ => new ConcurrentLinkedQueue[AtomicInteger]())
+  def calls(id: String): AtomicInteger =
+    callCounts.computeIfAbsent(id, _ => new AtomicInteger())
+  /** Close count of every client created so far. */
+  def closeCountsOf(id: String): Seq[Int] = closes(id).asScala.toSeq.map(_.get)
 }

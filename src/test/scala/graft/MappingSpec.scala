@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Model._
 import graft.mapping.{OverlapEvaluator, SqlGuard}
@@ -123,6 +124,94 @@ class MappingSpec extends SparkSpec {
     assert(a.typeViolations == 1)   // age 'notanumber' not integer
     assert(a.sizeViolations == 1)   // name > 10 chars
     assert(a.uniqueViolations == 1) // person_id 1 twice (nulls group separately)
+  }
+
+  /** The set-operation form `tableOverlap` replaced: SQLite's
+    * INTERSECT/EXCEPT, one Spark job each.
+    */
+  private def setOpOverlap(pred: DataFrame, gold: DataFrame, rel: Relation) = {
+    val cols = rel.attributes.filter(_.meaningful).map(a => col(a.name))
+    val (p, g) = (pred.select(cols: _*), gold.select(cols: _*))
+    OverlapEvaluator.Overlap(rel.name,
+      tp = p.intersect(g).count(), fp = p.except(g).count(), fn = g.except(p).count())
+  }
+
+  /** The per-key `groupBy` form the fused audit replaced: rows in excess
+    * of one per key value, NULL keys grouped together.
+    */
+  private def groupByUniqueness(df: DataFrame, rel: Relation): Long =
+    (rel.primaryKey +: rel.uniques).filter(_.nonEmpty).map { key =>
+      df.groupBy(key.map(col): _*).agg(count(lit(1)).as("n"))
+        .filter(col("n") > 1)
+        .agg(coalesce(sum(col("n") - 1), lit(0L)))
+        .head().getLong(0)
+    }.sum
+
+  private def L(v: Long): java.lang.Long = java.lang.Long.valueOf(v)
+
+  private def people(rows: (java.lang.Long, String, java.lang.Long)*): DataFrame = {
+    val s = spark
+    import s.implicits._
+    rows.toDF("person_id", "name", "age")
+  }
+
+  test("fused tableOverlap equals the INTERSECT/EXCEPT form") {
+    val gold = people((L(1), "alice", L(30)), (L(2), "bob", null), (L(3), null, null),
+      (L(4), "dave", L(60)), (L(4), "dave", L(60)))
+    val cases = Seq(
+      // duplicate rows on both sides count once
+      "duplicates" -> people((L(1), "alice", L(30)), (L(1), "alice", L(30)),
+        (L(9), "zed", L(1)), (L(9), "zed", L(1))),
+      // NULLs in a meaningful column match NULLs on the other side
+      "nulls" -> people((L(2), "bob", null), (L(3), null, null), (L(5), null, L(7))),
+      // the non-meaningful person_id differs: still a true positive
+      "surrogate key differs" -> people((L(100), "alice", L(30)), (L(200), "dave", L(60))),
+      "empty pred" -> people(),
+      "all" -> gold)
+    val expected = Map(
+      "duplicates" -> (1L, 1L, 3L), "nulls" -> (2L, 1L, 2L),
+      "surrogate key differs" -> (2L, 0L, 2L), "empty pred" -> (0L, 0L, 4L),
+      "all" -> (4L, 0L, 0L))
+    cases.foreach { case (name, pred) =>
+      val fused = OverlapEvaluator.tableOverlap(pred, gold, person)
+      assert(fused == setOpOverlap(pred, gold, person), name)
+      assert((fused.tp, fused.fp, fused.fn) == expected(name), name)
+    }
+    // empty gold: every distinct predicted tuple is a false positive
+    val pred = cases.head._2
+    val fused = OverlapEvaluator.tableOverlap(pred, people(), person)
+    assert(fused == setOpOverlap(pred, people(), person))
+    assert((fused.tp, fused.fp, fused.fn) == ((0L, 2L, 0L)))
+    assert(OverlapEvaluator.tableOverlap(people(), people(), person).isAllZero)
+  }
+
+  test("fused audit uniqueness equals per-key groupBy: composite key, uniques, NULL keys") {
+    val s = spark
+    import s.implicits._
+    val rel = Relation("visit",
+      attributes = Seq(Attribute("a", "integer"), Attribute("b", "integer"),
+        Attribute("c", "text")),
+      primaryKey = Seq("a", "b"),
+      uniques = Seq(Seq("c")))
+    val df = Seq[(java.lang.Long, java.lang.Long, String)](
+      (L(1), L(1), "x"), (L(1), L(1), "y"), // composite key (1,1) twice
+      (L(1), L(2), "x"),                    // unique c = x twice
+      (null, L(1), "z"), (null, L(1), "z"), // NULL in one key column
+      (null, null, null), (null, null, null) // all-NULL key, NULL c
+    ).toDF("a", "b", "c")
+    val a = OverlapEvaluator.audit(df, rel)
+    // (a,b): (1,1)+1, (null,1)+1, (null,null)+1; c: x+1, z+1, null+1
+    assert(a.uniqueViolations == groupByUniqueness(df, rel))
+    assert(a.uniqueViolations == 6)
+    assert(a.nullViolations == 0 && a.typeViolations == 0 && a.sizeViolations == 0)
+    // each key alone, and no key at all
+    Seq(rel.copy(uniques = Nil), rel.copy(primaryKey = Nil), rel.copy(primaryKey = Nil, uniques = Nil))
+      .foreach { r =>
+        assert(OverlapEvaluator.audit(df, r).uniqueViolations == groupByUniqueness(df, r), r)
+      }
+    assert(OverlapEvaluator.audit(df, rel.copy(uniques = Nil)).uniqueViolations == 3)
+    // an empty table audits clean
+    assert(OverlapEvaluator.audit(df.limit(0), rel) == OverlapEvaluator.Audit("visit", 0, 0, 0, 0))
   }
 
   test("runaway SQL is cancelled and reported as timeout") {
