@@ -19,61 +19,62 @@ package graft
   *    wall-clock outliers.
   */
 object BenchAdjudicate {
+  import graft.llm.MiniJson._
 
-  /** `"queries_warm":{"name":1.234,...}` from a prior BENCH_FULL.json. */
-  def parseQueriesWarm(txt: String): Map[String, Double] = {
-    val m = java.util.regex.Pattern
-      .compile("\"queries_warm\":\\{([^}]*)\\}").matcher(txt)
-    if (!m.find()) Map.empty
-    else m.group(1).split(",").filter(_.contains(":")).flatMap { kv =>
-      val i = kv.lastIndexOf(':')
-      val k = kv.substring(0, i).trim.stripPrefix("\"").stripSuffix("\"")
-      kv.substring(i + 1).toDoubleOption.map(k -> _)
-    }.toMap
-  }
+  private def typeError(key: String, expected: String, v: JValue): Nothing =
+    throw new IllegalArgumentException(
+      s"artifact key '$key': expected $expected, got ${v.render.take(60)}")
 
-  /** Per-query `rows_per_trigger_sec` out of a prior artifact's
-    * `"streaming_metrics":{"name":{...,"rows_per_trigger_sec":N,...},...}`.
-    * The value is NOT anchored to a closing brace: entries written since
-    * r12 carry `prior_rows_per_trigger_sec`/`prior_ratio` AFTER the rate
-    * (a brace-anchored pattern would silently stop parsing exactly one
-    * round after the gate first records priors — self-disabling). The
-    * LEADING quote keeps `"rows_per_trigger_sec"` from matching inside
-    * the `prior_`-prefixed key.
+  /** The number under `key`; null reads as absent. Any other type throws,
+    * naming the key: a format drift must stop the run, not silently turn
+    * the gates off.
     */
-  def parseStreamingRates(txt: String): Map[String, Double] = {
-    val m = java.util.regex.Pattern.compile(
-      "\"([^\"]+)\":\\{[^{}]*?\"rows_per_trigger_sec\":([0-9.eE+-]+)")
-      .matcher(txt)
-    val b = Map.newBuilder[String, Double]
-    while (m.find()) m.group(2).toDoubleOption.foreach(v => b += m.group(1) -> v)
-    b.result()
+  def number(key: String, v: JValue): Option[Double] = v match {
+    case JNum(n) => Some(n)
+    case JNull   => None
+    case other   => typeError(key, "a number", other)
   }
 
-  /** `"canary_best_sec":N` from a prior artifact (absent before r12). */
-  def parsePriorCanary(txt: String): Option[Double] = {
-    val m = java.util.regex.Pattern
-      .compile("\"canary_best_sec\":([0-9.eE+-]+)").matcher(txt)
-    if (m.find()) m.group(1).toDoubleOption else None
+  /** A `{name: number}` object read from under `key`; null reads as empty. */
+  def numbers(key: String, v: JValue): Map[String, Double] = v match {
+    case JObj(kvs) => kvs.flatMap { case (k, x) => number(s"$key.$k", x).map(k -> _) }.toMap
+    case JNull     => Map.empty
+    case other     => typeError(key, "an object", other)
   }
 
-  /** `"host_fingerprint":"..."` from a prior artifact (absent before r13).
+  /** Per-query warm seconds of a prior BENCH_FULL.json. */
+  def queriesWarm(a: JValue): Map[String, Double] =
+    a.get("queries_warm").fold(Map.empty[String, Double])(numbers("queries_warm", _))
+
+  /** Per-query `rows_per_trigger_sec` under a prior artifact's
+    * `streaming_metrics`.
+    */
+  def streamingRates(a: JValue): Map[String, Double] =
+    a.get("streaming_metrics").fold(Map.empty[String, Double])(_.fields.flatMap {
+      case (q, m) => m.get("rows_per_trigger_sec")
+        .flatMap(number(s"streaming_metrics.$q.rows_per_trigger_sec", _)).map(q -> _)
+    }.toMap)
+
+  /** `canary_best_sec` of a prior artifact (absent before r12). */
+  def priorCanary(a: JValue): Option[Double] =
+    a.get("canary_best_sec").flatMap(number("canary_best_sec", _))
+
+  /** `host_fingerprint` of a prior artifact (absent before r13).
     * Canary-vs-prior comparisons assume same hardware; a differing
     * fingerprint disables them rather than reporting phantom pressure
     * (or phantom quiet) after a box change.
     */
-  def parseHostFingerprint(txt: String): Option[String] = {
-    val m = java.util.regex.Pattern
-      .compile("\"host_fingerprint\":\"([^\"]*)\"").matcher(txt)
-    if (m.find()) Some(m.group(1)) else None
-  }
+  def priorHostFingerprint(a: JValue): Option[String] =
+    a.get("host_fingerprint").map {
+      case JStr(s) => s
+      case other => typeError("host_fingerprint", "a string", other)
+    }
 
   /** This run's canary-comparison key: hostname + core count + the
-    * session's parallelism (`local[N]`, N = `SPARK_GRAFT_CPUS` or the
-    * caller's default) — enough to catch the committed-artifact-from-
-    * other-hardware case, and a run at 8 cores judged against a 32-core
-    * prior on the same box, without recording anything
-    * machine-identifying beyond what `hostname` says.
+    * session's parallelism (`local[N]`, N = [[Harness.cores]]) — enough to
+    * catch the committed-artifact-from-other-hardware case, and a run at
+    * 8 cores judged against a 32-core prior on the same box, without
+    * recording anything machine-identifying beyond what `hostname` says.
     */
   def hostFingerprint(sessionCores: Int): String = {
     val host = try java.net.InetAddress.getLocalHost.getHostName
@@ -81,38 +82,25 @@ object BenchAdjudicate {
     s"$host/${Runtime.getRuntime.availableProcessors()}cpu/local[$sessionCores]"
   }
 
-  /** `"provisional":true` from a prior artifact (absent before r14): the
-    * run happened on a loud box (pressure > 1.25), so its warm timings,
+  /** `provisional` of a prior artifact (absent before r14): the run
+    * happened on a loud box (pressure > 1.25), so its warm timings,
     * streaming rates and canary carry the noise floor.
     */
-  def parseProvisional(txt: String): Boolean =
-    txt.contains("\"provisional\":true")
+  def provisional(a: JValue): Boolean = a.get("provisional") match {
+    case None => false
+    case Some(JBool(b)) => b
+    case Some(other) => typeError("provisional", "a boolean", other)
+  }
 
   /** Prior-artifact selection (VERDICT r13 item 4): a provisional prior
     * hands this round inflated warm/streaming/canary baselines, so fall
     * back to the last quiet artifact when one exists. Returns
-    * (text, source-name); the source lands in the new artifact so a
+    * (artifact, source-name); the source lands in the new artifact so a
     * reviewer can see which prior adjudicated this run.
     */
-  def selectPrior(fullTxt: String, quietTxt: String): (String, String) =
-    if (parseProvisional(fullTxt) && quietTxt.nonEmpty) (quietTxt, "BENCH_QUIET.json")
-    else (fullTxt, "BENCH_FULL.json")
-
-  /** Parse-count sanity (ADVICE r12): the regex parsers degrade to empty
-    * maps on a format drift, which silently disables the warm/streaming
-    * gates. Returns the artifact keys whose marker is present in a
-    * non-empty prior artifact but whose parser yielded nothing — callers
-    * log these loudly and record them in the new artifact.
-    */
-  def parseSanity(txt: String, warm: Map[String, Double],
-      strm: Map[String, Double]): Seq[String] = {
-    if (txt.isEmpty) Seq.empty
-    else Seq(
-      Option.when(txt.contains("\"queries_warm\":{\"") && warm.isEmpty)(
-        "queries_warm"),
-      Option.when(txt.contains("\"rows_per_trigger_sec\":") && strm.isEmpty)(
-        "streaming_metrics")).flatten
-  }
+  def selectPrior(full: JValue, quiet: JValue): (JValue, String) =
+    if (provisional(full) && quiet.fields.nonEmpty) (quiet, "BENCH_QUIET.json")
+    else (full, "BENCH_FULL.json")
 
   /** The review total: every query at min(warm, warm_retry) — a retry that
     * came in faster proves the first warm carried transient pressure.

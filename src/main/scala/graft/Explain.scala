@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps the formatted physical plan of every registered query to PLANS.md —
   * reviewable evidence that filters push down, small sides broadcast, and
@@ -12,13 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    graft.core.Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cores)
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans per query\n\n")
     sb.append(s"Generated by `graft.Explain` at `$sfDir`. Queries that run\n")

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.llm.MiniJson._
 
 /** Self-adjudicating 100× SCALE LADDER (VERDICT r12 item 2): r6–r12
   * hand-curated BENCH_SF_LADDER entries and never re-measured old rungs,
   * so a rung could silently rot. This is the `BenchAdjudicate` pattern
   * applied to the ladder: ONE command —
   *
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.LadderAdjudicate"
+  *   sbt "runMain graft.LadderAdjudicate"
   *
   * — re-runs EVERY recorded rung query at 1× (sf0.1) and 100×
   * (/tmp/graft_sf10 from graft.ScaleUp), writes BENCH_LADDER.json with
@@ -24,32 +24,25 @@ import org.apache.spark.sql.SparkSession
   */
 object LadderAdjudicate {
 
-  /** Every (query → seconds) pair inside any `"<tag>": { flat float map }`
-    * block of a ladder artifact. Later occurrences win (later sections =
-    * later rounds re-measuring the same rung).
+  /** Every (query → seconds) pair inside any `"<tag>": {...}` object of a
+    * ladder artifact, at any depth. Later occurrences in document order
+    * win (later sections = later rounds re-measuring the same rung).
     */
-  def parseRungBlocks(txt: String, tag: String): Map[String, Double] = {
-    val m = java.util.regex.Pattern
-      .compile("\"" + java.util.regex.Pattern.quote(tag) + "\"\\s*:\\s*\\{([^{}]*)\\}")
-      .matcher(txt)
-    val out = scala.collection.mutable.Map[String, Double]()
-    while (m.find()) {
-      m.group(1).split(",").foreach { kv =>
-        val i = kv.lastIndexOf(':')
-        if (i > 0) {
-          val k = kv.substring(0, i).trim.stripPrefix("\"").stripSuffix("\"")
-          kv.substring(i + 1).trim.toDoubleOption
-            .foreach(v => if (k.startsWith("q")) out(k) = v)
-        }
+  def rungBlocks(a: JValue, tag: String): Map[String, Double] = {
+    def walk(v: JValue): Seq[(String, Double)] = v match {
+      case JObj(kvs) => kvs.flatMap { case (k, x) =>
+        (if (k == tag) BenchAdjudicate.numbers(tag, x).toSeq else Nil) ++ walk(x)
       }
+      case JArr(vs) => vs.flatMap(walk)
+      case _ => Nil
     }
-    out.toMap
+    walk(a).toMap
   }
 
   /** Prior per-rung (x1, x100) from one artifact's nested blocks. */
-  def parsePrior(txt: String): Map[String, (Option[Double], Option[Double])] = {
-    val x1 = parseRungBlocks(txt, "1x_sf0.1")
-    val x100 = parseRungBlocks(txt, "100x_sf10")
+  def parsePrior(a: JValue): Map[String, (Option[Double], Option[Double])] = {
+    val x1 = rungBlocks(a, "1x_sf0.1")
+    val x100 = rungBlocks(a, "100x_sf10")
     (x1.keySet ++ x100.keySet).map(q => q -> (x1.get(q), x100.get(q))).toMap
   }
 
@@ -59,13 +52,8 @@ object LadderAdjudicate {
     * overwritten artifact), recreating exactly the rot this tool exists
     * to prevent.
     */
-  def parseRungNames(txt: String): Set[String] = {
-    val m = java.util.regex.Pattern
-      .compile("\"rung_names\"\\s*:\\s*\\[([^\\]]*)\\]").matcher(txt)
-    if (!m.find()) Set.empty
-    else m.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.startsWith("q")).toSet
-  }
+  def rungNames(a: JValue): Set[String] =
+    a.get("rung_names").fold(Set.empty[String])(_.arr.map(_.str).toSet)
 
   /** Rungs whose current 100×/1× ratio exceeds `factor` × the prior ratio
     * AND whose absolute 100× cost grew → (prior_ratio, current_ratio).
@@ -114,15 +102,11 @@ object LadderAdjudicate {
     require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir100)),
       s"100x corpus missing at $dir100 — generate it first: " +
         "runMain graft.ScaleUp /root/testdata/sf0.1 /tmp/graft_sf10 100")
-    def readIf(p: String): String = {
-      val path = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(path)) java.nio.file.Files.readString(path) else ""
-    }
     // the regular artifact (this writer's output) is the preferred prior;
     // the legacy hand-curated file seeds rungs it doesn't cover yet
-    val regularTxt = readIf("BENCH_LADDER.json")
-    val legacyTxt = readIf("BENCH_SF_LADDER.json")
-    val prior = parsePrior(legacyTxt) ++ parsePrior(regularTxt)
+    val regular = Harness.readArtifact("BENCH_LADDER.json")
+    val prior = parsePrior(Harness.readArtifact("BENCH_SF_LADDER.json")) ++
+      parsePrior(regular)
     val priorRatio: Map[String, Double] = prior.collect {
       case (q, (Some(a), Some(b))) if a > 0 => q -> b / a
     }
@@ -134,7 +118,7 @@ object LadderAdjudicate {
     // NAMES from the prior regular artifact keep once-errored rungs
     // enrolled even though they have no prior timings
     val rungSet = envSet("SPARK_GRAFT_LADDER_ONLY").getOrElse(
-      prior.keySet ++ parseRungNames(regularTxt) ++
+      prior.keySet ++ rungNames(regular) ++
         envSet("SPARK_GRAFT_LADDER_ADD").getOrElse(Set.empty))
     val queries = rungSet.filter { q =>
       val ok = known.contains(q)
@@ -143,23 +127,10 @@ object LadderAdjudicate {
     }.toSeq.sorted
     require(queries.nonEmpty, "no rung queries to run")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.core.Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    def canarySec(): Double = {
-      import org.apache.spark.sql.functions.sum
-      val t0 = System.nanoTime()
-      spark.range(0, 32L * 1000 * 1000, 1, 32)
-        .selectExpr("id % 9973 AS k", "id")
-        .groupBy("k").agg(sum("id").as("s")).agg(sum("s")).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val cores = Harness.cores
+    val spark = Harness.session(cores)
+    Harness.warmUp(spark)
+    def canarySec(): Double = Harness.canarySec(spark)
     canarySec(); canarySec()
     val canaryStart = math.min(canarySec(), canarySec())
     def timeOne(name: String, dir: String): Either[String, Double] = {
@@ -202,52 +173,37 @@ object LadderAdjudicate {
       case (q, Right((a, b))) => q -> (b, b / math.max(1e-9, a))
     }.toMap
     val regressions = rungRegressions(prior, cur)
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    def d3(v: Double): JNum = fixed(v, 3)
     def emit(rs: Seq[(String, Either[String, (Double, Double)])],
-        carriedKeys: Set[String], extraNames: Set[String] = Set.empty): String = {
+        carriedKeys: Set[String], extraNames: Set[String] = Set.empty): JObj = {
       // extraNames: once-errored prior rungs have a name but no timings;
       // they must stay enrolled in rung_names (the anti-rot contract)
       val allNames = (rs.map(_._1) ++ extraNames).distinct.sorted
-      val rungJson = rs.map {
+      val rungs = JObj(rs.map {
         case (q, Right((a, b))) =>
           val ratio = b / math.max(1e-9, a)
-          val carriedTag = if (carriedKeys(q)) ""","carried":true""" else ""
-          val pr = priorRatio.get(q).filterNot(_ => carriedKeys(q)).map(p =>
-            s""","prior_ratio":${d3(p)},"ratio_vs_prior":${d3(ratio / math.max(1e-9, p))}""")
-            .getOrElse("")
-          val p1 = prior.get(q).flatMap(_._1).filterNot(_ => carriedKeys(q))
-            .map(v => s""","prior_x1":${d3(v)}""").getOrElse("")
-          val p100 = prior.get(q).flatMap(_._2).filterNot(_ => carriedKeys(q))
-            .map(v => s""","prior_x100":${d3(v)}""").getOrElse("")
-          jstr(q) + s""":{"x1":${d3(a)},"x100":${d3(b)},"ratio":${d3(ratio)}$p1$p100$pr$carriedTag}"""
-        case (q, Left(e)) => jstr(q) + s""":{"error":${jstr(e)}}"""
-      }.mkString("{", ",", "}")
-      val regJson = regressions.toSeq.sortBy(_._1).map { case (q, (p, c)) =>
-        jstr(q) + s""":{"prior_ratio":${d3(p)},"ratio":${d3(c)}}"""
-      }.mkString("{", ",", "}")
-      val nErr = rs.count(_._2.isLeft)
-      s"""{"metric":"sf_ladder_adjudicated","unit":"sec_warm_adjudicated",""" +
-        s""""protocol":"graft.LadderAdjudicate: cold+warm(+retry past 1.1x cold) per rung at 1x ($dir1) and 100x ($dir100); value = adjudicated warm; prior = BENCH_LADDER.json else legacy BENCH_SF_LADDER.json nested blocks; rungs not re-measured by an ONLY run are carried forward (carried:true)",""" +
-        s""""host_fingerprint":${jstr(BenchAdjudicate.hostFingerprint(cpus.toInt))},""" +
-        s""""canary_start_sec":${d3(canaryStart)},"canary_end_sec":${d3(canaryEnd)},""" +
-        s""""n_rungs":${rs.size},"n_errors":$nErr,""" +
-        s""""n_measured":${rs.count(r => !carriedKeys(r._1))},""" +
-        s""""rung_names":${allNames.map(jstr).mkString("[", ",", "]")},""" +
-        s""""1x_sf0.1":${
-          rs.collect { case (q, Right((a, _))) => jstr(q) + ":" + d3(a) }
-            .mkString("{", ",", "}")},""" +
-        s""""100x_sf10":${
-          rs.collect { case (q, Right((_, b))) => jstr(q) + ":" + d3(b) }
-            .mkString("{", ",", "}")},""" +
-        s""""rungs":$rungJson,"rung_regressions":$regJson}"""
+          val measured = !carriedKeys(q)
+          val p = prior.get(q).filter(_ => measured)
+          q -> JObj(Seq[(String, JValue)]("x1" -> d3(a), "x100" -> d3(b), "ratio" -> d3(ratio)) ++
+            p.flatMap(_._1).map("prior_x1" -> d3(_)) ++
+            p.flatMap(_._2).map("prior_x100" -> d3(_)) ++
+            priorRatio.get(q).filter(_ => measured).toSeq.flatMap(pr => Seq(
+              "prior_ratio" -> d3(pr), "ratio_vs_prior" -> d3(ratio / math.max(1e-9, pr)))) ++
+            Option.when(!measured)("carried" -> JBool(true)))
+        case (q, Left(e)) => q -> obj("error" -> JStr(e))
+      })
+      obj("metric" -> JStr("sf_ladder_adjudicated"), "unit" -> JStr("sec_warm_adjudicated"),
+        "protocol" -> JStr(s"graft.LadderAdjudicate: cold+warm(+retry past 1.1x cold) per rung at 1x ($dir1) and 100x ($dir100); value = adjudicated warm; prior = BENCH_LADDER.json else legacy BENCH_SF_LADDER.json nested blocks; rungs not re-measured by an ONLY run are carried forward (carried:true)"),
+        "host_fingerprint" -> JStr(BenchAdjudicate.hostFingerprint(cores)),
+        "canary_start_sec" -> d3(canaryStart), "canary_end_sec" -> d3(canaryEnd),
+        "n_rungs" -> JNum(rs.size), "n_errors" -> JNum(rs.count(_._2.isLeft)),
+        "n_measured" -> JNum(rs.count(r => !carriedKeys(r._1))),
+        "rung_names" -> JArr(allNames.map(JStr)),
+        "1x_sf0.1" -> JObj(rs.collect { case (q, Right((a, _))) => q -> d3(a) }),
+        "100x_sf10" -> JObj(rs.collect { case (q, Right((_, b))) => q -> d3(b) }),
+        "rungs" -> rungs,
+        "rung_regressions" -> JObj(regressions.toSeq.sortBy(_._1).map { case (q, (p, c)) =>
+          q -> obj("prior_ratio" -> d3(p), "ratio" -> d3(c)) }))
     }
     // an ONLY-restricted run keeps its raw measurements as a run log in
     // BENCH_LADDER_SUBSET.json AND merges them into the canonical
@@ -255,26 +211,20 @@ object LadderAdjudicate {
     // runs no longer lose rungs by overwriting each other (r13 item 2)
     val onlyMode = sys.env.contains("SPARK_GRAFT_LADDER_ONLY")
     val (allResults, carriedKeys) =
-      if (onlyMode) mergeCarried(parsePrior(regularTxt), results)
+      if (onlyMode) mergeCarried(parsePrior(regular), results)
       else (results.sortBy(_._1), Set.empty[String])
     // the streaming_ladder block (written by graft.StreamingLadder into
     // this same artifact) must survive a batch-rung rewrite — carry it
     val merged = emit(allResults, carriedKeys,
-      if (onlyMode) parseRungNames(regularTxt) else Set.empty)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LADDER.json"),
-      StreamingLadder.extractObject(regularTxt, "streaming_ladder")
-        .map(b => StreamingLadder.withBlock(merged, "streaming_ladder", b))
-        .getOrElse(merged + "\n"))
-    if (onlyMode)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_LADDER_SUBSET.json"),
-        emit(results, Set.empty) + "\n")
-    println(s"""{"metric":"sf_ladder_adjudicated","n_rungs":${allResults.size},""" +
-      s""""n_measured":${results.size},""" +
-      s""""n_errors":${results.count(_._2.isLeft)},"n_rung_regressions":${regressions.size},""" +
-      s""""canary_start_sec":${d3(canaryStart)},"canary_end_sec":${d3(canaryEnd)},""" +
-      s""""artifact":"BENCH_LADDER.json"}""")
+      if (onlyMode) rungNames(regular) else Set.empty)
+    Harness.writeArtifact("BENCH_LADDER.json", regular.get("streaming_ladder")
+      .fold(merged)(StreamingLadder.withStreamingBlock(merged, _)))
+    if (onlyMode) Harness.writeArtifact("BENCH_LADDER_SUBSET.json", emit(results, Set.empty))
+    println(obj("metric" -> JStr("sf_ladder_adjudicated"), "n_rungs" -> JNum(allResults.size),
+      "n_measured" -> JNum(results.size), "n_errors" -> JNum(results.count(_._2.isLeft)),
+      "n_rung_regressions" -> JNum(regressions.size),
+      "canary_start_sec" -> d3(canaryStart), "canary_end_sec" -> d3(canaryEnd),
+      "artifact" -> JStr("BENCH_LADDER.json")).render)
     spark.stop()
   }
 }

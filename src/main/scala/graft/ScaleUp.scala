@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the sf1 smoke bench (SURVEY scale mandate —
@@ -24,14 +23,8 @@ object ScaleUp {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.core.Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = Harness.cores
+    val spark = Harness.session(cores)
     val docs = graft.core.Tables(spark, src, "documents")
     val idStride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     val replicas = (0 until factor).map { r =>
@@ -48,7 +41,7 @@ object ScaleUp {
           .withColumn("n_chars", length(col("text")).cast("long"))
     }
     replicas.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cores)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")
     val n = spark.read.parquet(s"$dst/documents.parquet").count()
     println(s"[scaleup] wrote $n documents ($factor x $src) to $dst")
@@ -81,7 +74,7 @@ object ScaleUp {
         col("label"))
     }
     embReplicas.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(cores)
       .write.mode("overwrite").parquet(s"$dst/embeddings.parquet")
     val nEmb = spark.read.parquet(s"$dst/embeddings.parquet").count()
     println(s"[scaleup] wrote $nEmb embeddings ($factor x $src) to $dst")
@@ -116,7 +109,7 @@ object ScaleUp {
         }.select(cols.map(col): _*)
       }
       replicas.reduce(_ unionByName _)
-        .repartition(cpus.toInt)
+        .repartition(cores)
         .write.mode("overwrite").parquet(s"$dst/$table.parquet")
       val n = spark.read.parquet(s"$dst/$table.parquet").count()
       println(s"[scaleup] wrote $n $table rows ($factor x $src) to $dst")

@@ -1,13 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.llm.MiniJson._
 
 /** STREAMING scale ladder (VERDICT r13 item 3): `rows_per_trigger_sec`
   * was only ever measured at the fixed 2000-row bench feed on sf0.1 —
   * blind to the real streaming scale risk, STATE growth (watermark maps,
   * RocksDB ValueState/ListState, interval-join buffers). One command —
   *
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.StreamingLadder"
+  *   sbt "runMain graft.StreamingLadder"
   *
   * — re-measures EVERY streaming-gated query twice: the base rung (the
   * standing 2000-row feed from sf0.1) and a scaled rung (a 10× feed of
@@ -25,67 +26,21 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamingLadder {
 
-  /** Raw `"key":{...}` object (balanced braces) out of an artifact. */
-  def extractObject(txt: String, key: String): Option[String] = {
-    val k = "\"" + key + "\":"
-    val i = txt.indexOf(k)
-    if (i < 0) return None
-    val start = txt.indexOf('{', i + k.length)
-    if (start < 0) return None
-    var depth = 0
-    var j = start
-    while (j < txt.length) {
-      txt.charAt(j) match {
-        case '{' => depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) return Some(txt.substring(start, j + 1))
-        case _ => ()
-      }
-      j += 1
-    }
-    None
-  }
-
-  /** Replace-or-append a `"key":{...}` block at the artifact's top level
-    * (before the final `}`). Idempotent: an existing block for `key` is
-    * removed first.
+  /** `artifact` with its `streaming_ladder` block replaced by `block`, or
+    * with `block` appended when it has none.
     */
-  def withBlock(txt: String, key: String, objJson: String): String = {
-    val stripped = extractObject(txt, key) match {
-      case Some(old) =>
-        val full = "\"" + key + "\":" + old
-        val i = txt.indexOf(full)
-        val before = txt.substring(0, i)
-        val after = txt.substring(i + full.length)
-        // drop one adjacent comma (leading if present, else trailing)
-        if (before.endsWith(",")) before.dropRight(1) + after
-        else if (after.startsWith(",")) before + after.drop(1)
-        else before + after
-      case None => txt
-    }
-    val end = stripped.lastIndexOf('}')
-    require(end >= 0, "not a JSON object artifact")
-    val head = stripped.substring(0, end).stripTrailing()
-    val sep = if (head.endsWith("{")) "" else ","
-    head + sep + "\"" + key + "\":" + objJson + "}\n"
-  }
+  def withStreamingBlock(artifact: JValue, block: JValue): JObj =
+    JObj(artifact.fields.filterNot(_._1 == "streaming_ladder") :+ ("streaming_ladder" -> block))
 
-  /** (rate_base, rate_scaled) per query from a prior streaming_ladder
-    * block (absent → empty).
+  /** (rate_base, rate_scaled) per query from a prior artifact's
+    * `streaming_ladder.rungs` (absent → empty).
     */
-  def parsePrior(txt: String): Map[String, (Double, Double)] = {
-    extractObject(txt, "streaming_ladder").map { block =>
-      val m = java.util.regex.Pattern.compile(
-        "\"(q[^\"]+)\":\\{\"rate_base\":([0-9.eE+-]+),\"rate_scaled\":([0-9.eE+-]+)")
-        .matcher(block)
-      val b = Map.newBuilder[String, (Double, Double)]
-      while (m.find())
-        for (rb <- m.group(2).toDoubleOption; rs <- m.group(3).toDoubleOption)
-          b += m.group(1) -> (rb, rs)
-      b.result()
-    }.getOrElse(Map.empty)
-  }
+  def parsePrior(a: JValue): Map[String, (Double, Double)] =
+    a.get("streaming_ladder").flatMap(_.get("rungs")).fold(Map.empty[String, (Double, Double)])(
+      _.fields.flatMap { case (q, r) =>
+        def rate(k: String) = r.get(k).flatMap(BenchAdjudicate.number(s"streaming_ladder.rungs.$q.$k", _))
+        for (rb <- rate("rate_base"); rs <- rate("rate_scaled")) yield q -> (rb, rs)
+      }.toMap)
 
   /** Queries whose per-row slowdown ratio (base/scaled) grew past
     * `factor` × the prior ratio AND whose scaled rate actually fell —
@@ -226,21 +181,11 @@ object StreamingLadder {
       .getOrElse(20000)
     val feed100 = sys.env.get("SPARK_GRAFT_LADDER_FEED100").map(_.toInt)
       .getOrElse(200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.core.Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = Harness.session(Harness.cores)
+    Harness.warmUp(spark)
 
-    val artifactPath = java.nio.file.Paths.get("BENCH_LADDER.json")
-    val priorTxt =
-      if (java.nio.file.Files.exists(artifactPath))
-        java.nio.file.Files.readString(artifactPath) else "{}"
-    val prior = parsePrior(priorTxt)
+    val priorArtifact = Harness.readArtifact("BENCH_LADDER.json")
+    val prior = parsePrior(priorArtifact)
 
     val queries = SparkEntry.streamingQueries.toSeq.sorted
     final case class Rung(rate: Double, stateRows: Long, stateBytes: Long)
@@ -329,66 +274,55 @@ object StreamingLadder {
       case (q, (_, rs, r100)) if r100.rate > 0 && rs.rate / r100.rate > 3.0 =>
         q -> (rs.rate, r100.rate)
     }
-    def d1(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val block = results.map { case (q, (rb, rs, r100)) =>
+    def d1(v: Double): JNum = fixed(v, 1)
+    def d3(v: Double): JNum = fixed(v, 3)
+    def n(v: Long): JNum = JNum(v.toDouble)
+    val rungs = JObj(results.map { case (q, (rb, rs, r100)) =>
       val ratio = if (rs.rate > 0) rb.rate / rs.rate else -1.0
-      val pr = prior.get(q).collect { case (pb, ps) if ps > 0 =>
-        s""","prior_ratio":${d3(pb / ps)}""" +
-          (if (ratio > 0) s""","ratio_vs_prior":${d3(ratio / (pb / ps))}""" else "")
-      }.getOrElse("")
+      val pr = prior.get(q).toSeq.collect { case (pb, ps) if ps > 0 =>
+        ("prior_ratio" -> d3(pb / ps)) +:
+          Option.when(ratio > 0)("ratio_vs_prior" -> d3(ratio / (pb / ps))).toSeq
+      }.flatten
       val stateRatio =
         if (rs.stateRows > 0) r100.stateRows.toDouble / rs.stateRows else -1.0
       val expFields =
         if (RowBufferingQueries.contains(q))
-          s""""state_expected_rows_10x":${expScaled.getOrElse(q, -1L)},""" +
-            s""""state_expected_rows_100x":${exp100.getOrElse(q, -1L)},"""
-        else ""
-      s""""$q":{"rate_base":${d1(rb.rate)},"rate_scaled":${d1(rs.rate)},"ratio":${d3(ratio)}$pr,""" +
-        s""""rate_100x":${d1(r100.rate)},"state_rows_10x":${rs.stateRows},""" +
-        s""""state_rows_100x":${r100.stateRows},"state_bytes_10x":${rs.stateBytes},""" +
-        s""""state_bytes_100x":${r100.stateBytes},"state_ratio":${d3(stateRatio)},""" +
-        expFields +
-        s""""row_buffering":${RowBufferingQueries.contains(q)}}"""
-    }.mkString(
-      s"""{"protocol":"graft.StreamingLadder: rows/sum(triggerExecution) at the 2000-row sf0.1 feed (base) vs $scaledFeed-row and $feed100-row feeds from $dir100 (100x key space); ratio=base/scaled; retry past 2x prior ratio (scaled) / 3x rate fall (100x); state gate: keyed-state rows at the 100x feed must stay within 8x of the 10x feed; row-buffering joins/replay are exempt from THAT gate but carry their own feed-derived bound (state_expected_rows_*: watermark-horizon rows for the interval joins, 2 state rows per key for the replay buffer) gated at 2x expected (buffer_regressions); a ratio flag is exonerated when state rows EQUAL the distinct-key count over the same feed (state_adjudicated)","feed_scaled":$scaledFeed,"feed_100x":$feed100,"rungs":{""",
-      ",",
-      "}," + s""""regressions":${
-        regs.toSeq.sortBy(_._1).map { case (q, (p, c)) =>
-          s""""$q":{"prior_ratio":${d3(p)},"ratio":${d3(c)}}"""
-        }.mkString("{", ",", "}")
-      },"state_regressions":${
-        stateRegs.toSeq.sortBy(_._1).map { case (q, (a, b)) =>
-          s""""$q":{"state_rows_10x":$a,"state_rows_100x":$b}"""
-        }.mkString("{", ",", "}")
-      },"state_adjudicated":${
-        stateAdjudicated.toSeq.sortBy(_._1).map { case (q, (st, dk)) =>
-          s""""$q":{"state_rows_100x":$st,"distinct_keys_100x":$dk}"""
-        }.mkString("{", ",", "}")
-      },"rate_regressions_100x":${
-        rateRegs100.toSeq.sortBy(_._1).map { case (q, (a, b)) =>
-          s""""$q":{"rate_scaled":${d1(a)},"rate_100x":${d1(b)}}"""
-        }.mkString("{", ",", "}")
-      },"buffer_regressions":${
-        bufRegs.toSeq.sortBy(_._1).map { case (q, (e, a)) =>
-          s""""$q":{"state_expected_rows":$e,"state_rows":$a}"""
-        }.mkString("{", ",", "}")
-      }}""")
+          Seq("state_expected_rows_10x" -> n(expScaled.getOrElse(q, -1L)),
+            "state_expected_rows_100x" -> n(exp100.getOrElse(q, -1L)))
+        else Nil
+      q -> JObj(Seq[(String, JValue)]("rate_base" -> d1(rb.rate),
+        "rate_scaled" -> d1(rs.rate), "ratio" -> d3(ratio)) ++ pr ++
+        Seq("rate_100x" -> d1(r100.rate), "state_rows_10x" -> n(rs.stateRows),
+          "state_rows_100x" -> n(r100.stateRows), "state_bytes_10x" -> n(rs.stateBytes),
+          "state_bytes_100x" -> n(r100.stateBytes), "state_ratio" -> d3(stateRatio)) ++
+        expFields ++
+        Seq("row_buffering" -> JBool(RowBufferingQueries.contains(q))))
+    })
+    val block = obj(
+      "protocol" -> JStr(s"graft.StreamingLadder: rows/sum(triggerExecution) at the 2000-row sf0.1 feed (base) vs $scaledFeed-row and $feed100-row feeds from $dir100 (100x key space); ratio=base/scaled; retry past 2x prior ratio (scaled) / 3x rate fall (100x); state gate: keyed-state rows at the 100x feed must stay within 8x of the 10x feed; row-buffering joins/replay are exempt from THAT gate but carry their own feed-derived bound (state_expected_rows_*: watermark-horizon rows for the interval joins, 2 state rows per key for the replay buffer) gated at 2x expected (buffer_regressions); a ratio flag is exonerated when state rows EQUAL the distinct-key count over the same feed (state_adjudicated)"),
+      "feed_scaled" -> JNum(scaledFeed), "feed_100x" -> JNum(feed100),
+      "rungs" -> rungs,
+      "regressions" -> JObj(regs.toSeq.sortBy(_._1).map { case (q, (p, c)) =>
+        q -> obj("prior_ratio" -> d3(p), "ratio" -> d3(c)) }),
+      "state_regressions" -> JObj(stateRegs.toSeq.sortBy(_._1).map { case (q, (a, b)) =>
+        q -> obj("state_rows_10x" -> n(a), "state_rows_100x" -> n(b)) }),
+      "state_adjudicated" -> JObj(stateAdjudicated.toSeq.sortBy(_._1).map { case (q, (st, dk)) =>
+        q -> obj("state_rows_100x" -> n(st), "distinct_keys_100x" -> n(dk)) }),
+      "rate_regressions_100x" -> JObj(rateRegs100.sortBy(_._1).map { case (q, (a, b)) =>
+        q -> obj("rate_scaled" -> d1(a), "rate_100x" -> d1(b)) }),
+      "buffer_regressions" -> JObj(bufRegs.toSeq.sortBy(_._1).map { case (q, (e, a)) =>
+        q -> obj("state_expected_rows" -> n(e), "state_rows" -> n(a)) }))
     // merge into the canonical ladder artifact + standalone run log
-    java.nio.file.Files.writeString(artifactPath,
-      withBlock(priorTxt, "streaming_ladder", block))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_STREAMING_LADDER.json"),
-      s"""{"metric":"streaming_ladder","streaming_ladder":$block}""" + "\n")
-    println(s"""{"metric":"streaming_ladder","n_queries":${results.size},""" +
-      s""""n_regressions":${regs.size},"n_state_regressions":${stateRegs.size},""" +
-      s""""n_state_adjudicated":${stateAdjudicated.size},""" +
-      s""""n_buffer_regressions":${bufRegs.size},""" +
-      s""""n_rate_regressions_100x":${rateRegs100.size},""" +
-      s""""feed_scaled":$scaledFeed,"feed_100x":$feed100,""" +
-      s""""artifact":"BENCH_LADDER.json"}""")
+    Harness.writeArtifact("BENCH_LADDER.json", withStreamingBlock(priorArtifact, block))
+    Harness.writeArtifact("BENCH_STREAMING_LADDER.json",
+      obj("metric" -> JStr("streaming_ladder"), "streaming_ladder" -> block))
+    println(obj("metric" -> JStr("streaming_ladder"), "n_queries" -> JNum(results.size),
+      "n_regressions" -> JNum(regs.size), "n_state_regressions" -> JNum(stateRegs.size),
+      "n_state_adjudicated" -> JNum(stateAdjudicated.size),
+      "n_buffer_regressions" -> JNum(bufRegs.size),
+      "n_rate_regressions_100x" -> JNum(rateRegs100.size),
+      "feed_scaled" -> JNum(scaledFeed), "feed_100x" -> JNum(feed100),
+      "artifact" -> JStr("BENCH_LADDER.json")).render)
     spark.stop()
   }
 }

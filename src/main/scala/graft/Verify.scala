@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,14 +18,7 @@ object Verify {
         s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.core.Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
     new java.io.File(outDir).mkdirs()
     // sorted name order: a query's predecessors (and so any residual JVM
     // state) are identical run-to-run, matching Bench's iteration order
@@ -39,18 +31,11 @@ object Verify {
       }
       graft.core.SessionHygiene.dropAllBlocks(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // JStr escapes backslash, quote and ALL control chars (<0x20): a tab
+    // or CR in the oracle SQL would otherwise make the driver's json.load
+    // fail and silently zero the round's correctness. The `": "`
+    // separator keeps the file byte-identical to earlier rounds.
+    def q(s: String): String = graft.llm.MiniJson.JStr(s).render
     val json = SparkEntry.oracleSql.filter(o => keep(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -172,7 +172,7 @@ object VectorExpressions {
 }
 
 /** Session-extension entry point:
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * `.withExtensions(new GraftExtensions)` on the session builder or
   * `spark.sql.extensions=graft.expressions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -17,8 +17,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * materializes every partition before filtering; this operator keeps one
   * bounded k-heap per key — O(n log k) compares, memory O(keys·k).
   *
-  * Measured honestly (graft.BenchTopK, 20M rows × 1000 keys, k=5,
-  * local[32]): comparable wall time to the window plan while it fits in
+  * Measured honestly (graft.BenchTopK, a micro-bench removed after commit
+  * c920517; 20M rows × 1000 keys, k=5, local[32]): comparable wall time
+  * to the window plan while it fits in
   * memory (~1.5 s vs ~1.9 s — Tungsten's codegen'd sort is excellent). The
   * heap's advantage is the MEMORY BOUND: a partition that exceeds executor
   * memory makes the sort spill to disk, while heap state stays O(keys·k)

@@ -1,12 +1,16 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.llm.MiniJson._
 
 /** The bench artifact's self-adjudication pieces, refereed on synthetic
   * artifacts — including the demonstrated streaming slowdown VERDICT r11
   * item 6 asked for (a prior artifact with 10× the throughput must flag).
   */
 class BenchAdjudicateSpec extends AnyFunSuite {
+
+  /** An artifact's text as the harness reads it: "" stands for no file. */
+  private def art(txt: String): JValue = if (txt.isEmpty) JObj(Nil) else parse(txt)
 
   private val priorArtifact =
     """{"metric":"total","value":100.0,"unit":"sec",
@@ -19,20 +23,17 @@ class BenchAdjudicateSpec extends AnyFunSuite {
       |"sf":"/root/testdata/sf0.1"}""".stripMargin
 
   test("parses prior warm timings, streaming rates, and canary") {
-    val warm = BenchAdjudicate.parseQueriesWarm(priorArtifact)
+    val warm = BenchAdjudicate.queriesWarm(art(priorArtifact))
     assert(warm == Map("q01_agg" -> 0.512, "q02_filter" -> 1.25, "q74_stream" -> 2.0))
-    // q74/q76 carry the r12+ prior_* fields AFTER the rate — the parser
-    // must read the rate (not the prior, despite the shared suffix) and
-    // must not require a closing brace right after the number; a regex
-    // anchored on '}' would self-disable the gate one round after priors
-    // first appear in the artifact
-    val rates = BenchAdjudicate.parseStreamingRates(priorArtifact)
+    // q74/q76 carry the r12+ prior_* fields AFTER the rate — the reader
+    // must read the rate, not the prior, despite the shared suffix
+    val rates = BenchAdjudicate.streamingRates(art(priorArtifact))
     assert(rates == Map("q74_stream" -> 20000.0, "q75_stream" -> 5000.0,
       "q76_stream" -> 0.0))
-    assert(BenchAdjudicate.parsePriorCanary(priorArtifact).contains(0.420))
-    assert(BenchAdjudicate.parseQueriesWarm("") == Map.empty[String, Double])
-    assert(BenchAdjudicate.parseStreamingRates("{}") == Map.empty[String, Double])
-    assert(BenchAdjudicate.parsePriorCanary("{}").isEmpty)
+    assert(BenchAdjudicate.priorCanary(art(priorArtifact)).contains(0.420))
+    assert(BenchAdjudicate.queriesWarm(art("")) == Map.empty[String, Double])
+    assert(BenchAdjudicate.streamingRates(art("{}")) == Map.empty[String, Double])
+    assert(BenchAdjudicate.priorCanary(art("{}")).isEmpty)
   }
 
   test("adjudicated total takes min(warm, warm_retry) per query") {
@@ -43,7 +44,7 @@ class BenchAdjudicateSpec extends AnyFunSuite {
   }
 
   test("streaming gate flags a synthetic 10x throughput drop, not jitter") {
-    val prior = BenchAdjudicate.parseStreamingRates(priorArtifact)
+    val prior = BenchAdjudicate.streamingRates(art(priorArtifact))
     // q74 collapsed 10x (flag), q75 wobbled 1.5x (no flag — inside 2x),
     // q76 was and is rate 0 (skip: correctness problem, not throughput),
     // q77 is new this round (no prior — nothing to compare)
@@ -110,28 +111,26 @@ class BenchAdjudicateSpec extends AnyFunSuite {
       Map("q" -> 0.0), Map("q" -> 2.0), drift = 1.0).isEmpty)
   }
 
-  test("host fingerprint round-trips through the artifact; parse sanity flags empty parses") {
+  test("host fingerprint round-trips through the artifact; a drifted value type throws naming its key") {
     val fp = BenchAdjudicate.hostFingerprint(8)
     assert(fp.contains("cpu/") && fp.endsWith("/local[8]"))
     val txt = s"""{"canary_best_sec":0.42,"host_fingerprint":"$fp"}"""
-    assert(BenchAdjudicate.parseHostFingerprint(txt).contains(fp))
-    assert(BenchAdjudicate.parseHostFingerprint("{}").isEmpty)
-    // parse sanity (ADVICE r12): markers present + empty parse = the
-    // format drifted and the gates would silently run blind
-    // a writer change to units-in-strings: marker present, zero entries parse
+    assert(BenchAdjudicate.priorHostFingerprint(art(txt)).contains(fp))
+    assert(BenchAdjudicate.priorHostFingerprint(art("{}")).isEmpty)
+    // a writer change to units-in-strings would silently turn the warm
+    // gate off if it read as "no entries" — it must stop the run instead
     val drifted = """{"queries_warm":{"q01":"1.234s"},""" +
       """"streaming_metrics":{"q41":{"rows_per_trigger_sec":5.0}}}"""
-    val warm = BenchAdjudicate.parseQueriesWarm(drifted)
-    val strm = BenchAdjudicate.parseStreamingRates(drifted)
-    val warnings = BenchAdjudicate.parseSanity(drifted, warm, strm)
-    assert(warnings.contains("queries_warm"), s"warm drift not flagged: $warnings")
-    // healthy artifact: no warnings; empty prior: no warnings
+    val e = intercept[IllegalArgumentException](
+      BenchAdjudicate.queriesWarm(art(drifted)))
+    assert(e.getMessage.contains("queries_warm"), e.getMessage)
+    assert(BenchAdjudicate.streamingRates(art(drifted)) == Map("q41" -> 5.0))
+    // healthy artifact and empty prior read normally
     val healthy = """{"queries_warm":{"q01":1.0},""" +
       """"streaming_metrics":{"q41":{"rows_per_trigger_sec":5.0}}}"""
-    assert(BenchAdjudicate.parseSanity(healthy,
-      BenchAdjudicate.parseQueriesWarm(healthy),
-      BenchAdjudicate.parseStreamingRates(healthy)).isEmpty)
-    assert(BenchAdjudicate.parseSanity("", Map.empty, Map.empty).isEmpty)
+    assert(BenchAdjudicate.queriesWarm(art(healthy)) == Map("q01" -> 1.0))
+    assert(BenchAdjudicate.streamingRates(art(healthy)) == Map("q41" -> 5.0))
+    assert(BenchAdjudicate.queriesWarm(art("")).isEmpty)
   }
 
   test("host fingerprint keys on the session core count: 8- and 32-core runs do not match") {
@@ -142,7 +141,7 @@ class BenchAdjudicateSpec extends AnyFunSuite {
     // a 32-core run reading an 8-core prior sees a different host key, so
     // Bench disables every prior comparison instead of judging across them
     val prior8 = s"""{"canary_best_sec":0.42,"host_fingerprint":"$fp8"}"""
-    assert(!BenchAdjudicate.parseHostFingerprint(prior8).contains(fp32))
+    assert(!BenchAdjudicate.priorHostFingerprint(art(prior8)).contains(fp32))
     // the fingerprint before the session core count was part of it
     // ("host/32cpu") matches neither
     val legacy = fp8.substring(0, fp8.lastIndexOf('/'))
@@ -152,15 +151,15 @@ class BenchAdjudicateSpec extends AnyFunSuite {
   test("provisional prior falls back to the last quiet artifact (r13 item 4)") {
     val loud = """{"ambient_pressure":1.44,"provisional":true,"queries_warm":{"q01":2.0}}"""
     val quiet = """{"ambient_pressure":1.02,"provisional":false,"queries_warm":{"q01":1.0}}"""
-    assert(BenchAdjudicate.parseProvisional(loud))
-    assert(!BenchAdjudicate.parseProvisional(quiet))
+    assert(BenchAdjudicate.provisional(art(loud)))
+    assert(!BenchAdjudicate.provisional(art(quiet)))
     // pre-r14 artifacts have no stamp: treated as quiet (no fallback)
-    assert(!BenchAdjudicate.parseProvisional("""{"ambient_pressure":1.44}"""))
-    assert(BenchAdjudicate.selectPrior(loud, quiet) == (quiet, "BENCH_QUIET.json"))
-    assert(BenchAdjudicate.selectPrior(quiet, loud) == (quiet, "BENCH_FULL.json"))
+    assert(!BenchAdjudicate.provisional(art("""{"ambient_pressure":1.44}""")))
+    assert(BenchAdjudicate.selectPrior(art(loud), art(quiet)) == (art(quiet), "BENCH_QUIET.json"))
+    assert(BenchAdjudicate.selectPrior(art(quiet), art(loud)) == (art(quiet), "BENCH_FULL.json"))
     // provisional prior but no quiet fallback yet: use what exists
-    assert(BenchAdjudicate.selectPrior(loud, "") == (loud, "BENCH_FULL.json"))
-    assert(BenchAdjudicate.selectPrior("", "") == ("", "BENCH_FULL.json"))
+    assert(BenchAdjudicate.selectPrior(art(loud), art("")) == (art(loud), "BENCH_FULL.json"))
+    assert(BenchAdjudicate.selectPrior(art(""), art("")) == (art(""), "BENCH_FULL.json"))
   }
 
   test("concurrent pool assignment: deterministic, complete, balanced") {
@@ -193,6 +192,45 @@ class BenchAdjudicateSpec extends AnyFunSuite {
     assert(drops("q108_streaming_decontaminate") == (600.0, 90.0))
     // a missing sequential rate never flags
     assert(BenchAdjudicate.contentionDrops(Map.empty, conc).isEmpty)
+  }
+
+  /** A full Bench artifact over `names`, with the fields the summary reads. */
+  private def fullArtifact(names: Seq[String], sf: String): JObj = obj(
+    "metric" -> JStr("total"), "value" -> JNum(12345.678), "unit" -> JStr("sec"),
+    "queries" -> JObj(names.zipWithIndex.map { case (n, i) => n -> JNum(1000.0 + i + 0.125) }),
+    "total_warm" -> JNum(9876.543), "queries_warm" -> JObj(names.map(_ -> JNum(1.5))),
+    "total_warm_adjudicated" -> JNum(9000.001), "canary_start_sec" -> JNum(0.421),
+    "canary_end_sec" -> JNum(0.43), "ambient_pressure" -> JNum(1.021),
+    "total_warm_batch" -> JNum(8000.5), "total_warm_streaming" -> JNum(1000.25),
+    "streaming_regressions" -> JObj(Seq("q1" -> obj("prior" -> JNum(2), "current" -> JNum(1)))),
+    "errors" -> JObj(Nil), "sf" -> JStr(sf))
+
+  test("Bench summary line: one JSON line under the 2000-char output tail, with the driver's keys") {
+    // the 20 longest registered names are the worst case for the line
+    val names = SparkEntry.queries.keySet.toSeq.sortBy(n => (-n.length, n))
+    val line = Bench.summary(fullArtifact(names, "/data/graft/sf0.1"),
+      "BENCH_SF1_FULL.json").render
+    assert(!line.contains('\n') && line.length <= 2000, s"${line.length} chars")
+    val back = parse(line)
+    for (k <- Seq("metric", "value", "unit", "queries", "sf"))
+      assert(back.get(k).nonEmpty, k)
+    // the slowest 20 by cold time, and totals stay numbers for
+    // tools/bench_adjudicate.py
+    val qs = back.obj("queries").fields
+    assert(qs.size == 20 && qs.map(_._1) == names.takeRight(20).reverse)
+    assert(back.obj("total_warm") == JNum(9876.543) && back.obj("n_queries") == JNum(names.size))
+    assert(back.obj("n_streaming_regressions") == JNum(1) && back.obj("n_errors") == JNum(0))
+  }
+
+  test("artifact paths with quotes and backslashes round-trip through the written JSON") {
+    val sf = """/data/we"ird\dir/sf0.1"""
+    val artifact = """C:\bench\"full".json"""
+    val full = fullArtifact(Seq("""q01_"agg"\x"""), sf)
+    val back = parse(full.render)
+    assert(back == full && back.obj("sf") == JStr(sf))
+    val line = parse(Bench.summary(full, artifact).render)
+    assert(line.obj("sf") == JStr(sf) && line.obj("queries_full") == JStr(artifact))
+    assert(line.obj("queries").fields.map(_._1) == Seq("""q01_"agg"\x"""))
   }
 
   test("Fs.cleanupStale sweeps only old graft dirs, keeps fresh + scale corpora") {

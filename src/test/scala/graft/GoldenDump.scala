@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the QueriesSpec content-hash goldens (run via
   * `sbt "Test/runMain graft.GoldenDump"`) after an INTENTIONAL semantic
   * change to a no-oracle query. The hash format must stay byte-identical
@@ -9,12 +7,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GoldenDump {
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder().master("local[4]").appName("golden")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    graft.core.Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the same local[4] session QueriesSpec hashes under
+    val spark = SparkSpec.spark
     val names = Seq("q34_matching_pipeline", "q35_stable_matching",
       "q38_multimodal_features", "q47_ensemble_pipeline", "q48_icl_pipeline")
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",

@@ -32,13 +32,14 @@ class HttpLlmClientSpec extends AnyFunSuite {
     out.result()
   }
 
-  private def completionsHandler(failFirst: AtomicInteger,
+  private def completionsHandler(failFirst: AtomicInteger, errorBodyDelayMs: Long,
       ports: ConcurrentLinkedQueue[Int])(ex: HttpExchange): Unit = {
     ports.add(ex.getRemoteAddress.getPort)
     val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
     if (failFirst.getAndDecrement() > 0) { // an error body, as real servers send
       val err = """{"error": {"message": "injected failure"}}""".getBytes(StandardCharsets.UTF_8)
       ex.sendResponseHeaders(500, err.length)
+      Thread.sleep(errorBodyDelayMs)
       ex.getResponseBody.write(err)
       ex.close(); return
     }
@@ -70,11 +71,12 @@ class HttpLlmClientSpec extends AnyFunSuite {
   /** Runs `f` with the endpoint URL and a view of the client port of
     * every exchange so far, in arrival order.
     */
-  private def withServer(failFirst: Int)(f: (String, () => Seq[Int]) => Unit): Unit = {
+  private def withServer(failFirst: Int, errorBodyDelayMs: Long = 0)(
+      f: (String, () => Seq[Int]) => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val failures = new AtomicInteger(failFirst)
     val ports = new ConcurrentLinkedQueue[Int]()
-    server.createContext("/v1/completions", completionsHandler(failures, ports)(_))
+    server.createContext("/v1/completions", completionsHandler(failures, errorBodyDelayMs, ports)(_))
     server.start()
     try f(s"http://127.0.0.1:${server.getAddress.getPort}/v1/completions",
       () => ports.asScala.toSeq)
@@ -131,6 +133,13 @@ class HttpLlmClientSpec extends AnyFunSuite {
       val c = new HttpLlmClient(url, "m", maxRetries = 1)
       intercept[Exception](c.generate(Seq("x")))
     }
+    // an error body that arrives after the status line: a half-read body
+    // must not hand the failed socket back for the retry
+    withServer(failFirst = 1, errorBodyDelayMs = 300) { (url, ports) =>
+      val c = new HttpLlmClient(url, "m", maxRetries = 2)
+      assert(c.generate(Seq("x")) == Seq("gen:x"))
+      assert(ports().size == 2 && ports()(0) != ports()(1), s"client ports: ${ports()}")
+    }
   }
 
   test("live endpoint round-trip (env-gated: set GRAFT_LLM_ENDPOINT to enable)") {
@@ -170,5 +179,13 @@ class HttpLlmClientSpec extends AnyFunSuite {
     // render/parse round-trip incl. control chars
     val s = JStr("line\nquote\" tab\t")
     assert(parse(s.render) == s)
+    // JSON has no NaN/Infinity: they render as null, and null reads as absent
+    val nonFinite = obj("nan" -> JNum(Double.NaN), "inf" -> JNum(Double.PositiveInfinity),
+      "ninf" -> JNum(Double.NegativeInfinity), "x" -> fixed(1.23456, 3))
+    assert(nonFinite.render == """{"nan":null,"inf":null,"ninf":null,"x":1.235}""")
+    val back = parse(nonFinite.render)
+    assert(back.get("nan").isEmpty && back.get("inf").isEmpty && back.get("ninf").isEmpty)
+    assert(back.get("x").contains(JNum(1.235)) && back.get("absent").isEmpty)
+    assert(back.fields.map(_._1) == Seq("nan", "inf", "ninf", "x"))
   }
 }

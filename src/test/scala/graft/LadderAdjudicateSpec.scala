@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.llm.MiniJson.parse
 
 class LadderAdjudicateSpec extends AnyFunSuite {
 
@@ -16,7 +17,7 @@ class LadderAdjudicateSpec extends AnyFunSuite {
         "100x_sf10": {"q174_dup_pagerank": 5.203, "q266_cube_subtotals": 3.347}
       }
     }"""
-    val p = LadderAdjudicate.parsePrior(legacy)
+    val p = LadderAdjudicate.parsePrior(parse(legacy))
     // later section wins for the re-measured rung
     assert(p("q174_dup_pagerank") == (Some(2.695), Some(5.203)))
     assert(p("q197_cc_star") == (Some(1.555), Some(4.369)))
@@ -30,7 +31,7 @@ class LadderAdjudicateSpec extends AnyFunSuite {
       "1x_sf0.1":{"q281_compaction_bytes":1.100},
       "100x_sf10":{"q281_compaction_bytes":2.970},
       "rungs":{"q281_compaction_bytes":{"x1":1.100,"x100":2.970,"ratio":2.700}}}"""
-    assert(LadderAdjudicate.parsePrior(regular)("q281_compaction_bytes") ==
+    assert(LadderAdjudicate.parsePrior(parse(regular))("q281_compaction_bytes") ==
       (Some(1.1), Some(2.97)))
   }
 
@@ -70,11 +71,11 @@ class LadderAdjudicateSpec extends AnyFunSuite {
       "100x_sf10":{"q281_compaction_bytes":2.9},
       "rungs":{"q281_compaction_bytes":{"x1":1.1,"x100":2.9,"ratio":2.6},
                "q999_flaky_rung":{"error":"OOM"}}}"""
-    assert(LadderAdjudicate.parseRungNames(artifact) ==
+    assert(LadderAdjudicate.rungNames(parse(artifact)) ==
       Set("q281_compaction_bytes", "q999_flaky_rung"))
-    assert(LadderAdjudicate.parseRungNames("{}").isEmpty)
+    assert(LadderAdjudicate.rungNames(parse("{}")).isEmpty)
     // the errored rung has no prior timings — parsePrior ignores it
-    assert(!LadderAdjudicate.parsePrior(artifact).contains("q999_flaky_rung"))
+    assert(!LadderAdjudicate.parsePrior(parse(artifact)).contains("q999_flaky_rung"))
   }
 
   test("ONLY-mode merge carries forward unmeasured rungs, overrides measured ones") {
@@ -104,7 +105,7 @@ class LadderAdjudicateSpec extends AnyFunSuite {
   test("the real legacy artifact yields a non-trivial rung set") {
     val p = java.nio.file.Paths.get("BENCH_SF_LADDER.json")
     assume(java.nio.file.Files.exists(p))
-    val prior = LadderAdjudicate.parsePrior(java.nio.file.Files.readString(p))
+    val prior = LadderAdjudicate.parsePrior(Harness.readArtifact(p.toString))
     // the r8-r12 sections hold at least the graph + event + decision rungs
     assert(prior.size >= 20, s"only ${prior.size} rungs parsed: ${prior.keySet}")
     assert(prior.contains("q174_dup_pagerank") &&
@@ -112,5 +113,34 @@ class LadderAdjudicateSpec extends AnyFunSuite {
     // every parsed rung with both ends yields a usable ratio
     val ratios = prior.collect { case (q, (Some(a), Some(b))) if a > 0 => q -> b / a }
     assert(ratios.nonEmpty && ratios.values.forall(r => r > 0 && r < 1000))
+
+    // every committed artifact parses, and each reader that applies to it
+    // returns a non-empty map of finite values
+    def finite(m: Map[String, Double]): Boolean =
+      m.nonEmpty && m.values.forall(v => !v.isNaN && !v.isInfinite)
+    def read(name: String) = {
+      assume(java.nio.file.Files.exists(java.nio.file.Paths.get(name)))
+      Harness.readArtifact(name)
+    }
+    for (name <- Seq("BENCH_FULL.json", "BENCH_QUIET.json", "BENCH_SF1.json",
+        "BENCH_SF1_FULL.json")) {
+      val a = read(name)
+      assert(finite(BenchAdjudicate.queriesWarm(a)), name)
+      if (name != "BENCH_SF1.json") { // the r15 sf1 rungs predate these fields
+        assert(finite(BenchAdjudicate.streamingRates(a)), name)
+        assert(BenchAdjudicate.priorCanary(a).exists(_ > 0), name)
+        assert(BenchAdjudicate.priorHostFingerprint(a).exists(_.nonEmpty), name)
+      }
+    }
+    val ladder = read("BENCH_LADDER.json")
+    val rungs = LadderAdjudicate.parsePrior(ladder)
+    assert(rungs.nonEmpty && rungs.values.forall { case (a, b) =>
+      a.exists(v => v > 0 && !v.isInfinite) && b.exists(v => v > 0 && !v.isInfinite) })
+    assert(LadderAdjudicate.rungNames(ladder).size == rungs.size)
+    for (name <- Seq("BENCH_LADDER.json", "BENCH_STREAMING_LADDER.json")) {
+      val strm = StreamingLadder.parsePrior(read(name))
+      assert(finite(strm.map { case (q, (rb, _)) => q -> rb }) &&
+        finite(strm.map { case (q, (_, rs)) => q -> rs }), name)
+    }
   }
 }

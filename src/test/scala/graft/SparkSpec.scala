@@ -7,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * session startup is ~5s, so suites must not each build their own).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    graft.core.Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(cores = 4)
   val sfDir = "/root/testdata/sf0.001"
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.llm.MiniJson._
 
 class StreamingLadderSpec extends AnyFunSuite {
 
@@ -12,30 +13,29 @@ class StreamingLadderSpec extends AnyFunSuite {
       "regressions":{}},
     "rung_regressions":{}}"""
 
-  test("extractObject pulls a balanced nested block; withBlock replaces idempotently") {
-    val block = StreamingLadder.extractObject(artifact, "streaming_ladder")
-    assert(block.exists(b => b.startsWith("{") && b.endsWith("}") &&
-      b.contains("q41_streaming_tumbling") && b.contains("regressions")))
-    assert(StreamingLadder.extractObject(artifact, "absent_key").isEmpty)
+  test("withStreamingBlock replaces the streaming_ladder block idempotently, appends it when absent") {
+    val block = parse(artifact).obj("streaming_ladder")
+    assert(block.obj("rungs").get("q41_streaming_tumbling").nonEmpty &&
+      block.get("regressions").nonEmpty)
+    assert(parse(artifact).get("absent_key").isEmpty)
     // replace: the new block wins, the old one is gone, JSON stays valid
-    val replaced = StreamingLadder.withBlock(artifact, "streaming_ladder",
-      """{"rungs":{},"regressions":{}}""")
+    val empty = parse("""{"rungs":{},"regressions":{}}""")
+    val replaced = StreamingLadder.withStreamingBlock(parse(artifact), empty).render
     assert(!replaced.contains("q41_streaming_tumbling"))
-    assert(StreamingLadder.extractObject(replaced, "streaming_ladder")
-      .contains("""{"rungs":{},"regressions":{}}"""))
+    assert(parse(replaced).obj("streaming_ladder") == empty)
+    assert(StreamingLadder.withStreamingBlock(parse(replaced), empty).render == replaced)
     // append: adding to an artifact without the block keeps other keys
-    val bare = """{"a":1,"rungs":{"q22":{"x1":1.0}}}"""
-    val appended = StreamingLadder.withBlock(bare, "streaming_ladder", """{"x":{}}""")
+    val bare = parse("""{"a":1,"rungs":{"q22":{"x1":1.0}}}""")
+    val appended = StreamingLadder.withStreamingBlock(bare, parse("""{"x":{}}""")).render
     assert(appended.contains(""""a":1""") && appended.contains(""""q22""""))
-    assert(StreamingLadder.extractObject(appended, "streaming_ladder")
-      .contains("""{"x":{}}"""))
+    assert(parse(appended).obj("streaming_ladder") == parse("""{"x":{}}"""))
   }
 
   test("parsePrior reads (rate_base, rate_scaled) per query") {
-    val p = StreamingLadder.parsePrior(artifact)
+    val p = StreamingLadder.parsePrior(parse(artifact))
     assert(p("q41_streaming_tumbling") == (3300.0, 2900.0))
     assert(p("q132_streaming_outer_nulls") == (325.0, 120.0))
-    assert(StreamingLadder.parsePrior("{}").isEmpty)
+    assert(StreamingLadder.parsePrior(parse("{}")).isEmpty)
   }
 
   test("regressions: flags a real per-row collapse, not base-side speedups or jitter") {
@@ -58,12 +58,12 @@ class StreamingLadderSpec extends AnyFunSuite {
       Map("qa" -> (0.0, 0.0)), Map("qa" -> (1.0, 0.0))).isEmpty)
   }
 
-  test("LadderAdjudicate-style rewrite carries the streaming block through withBlock") {
+  test("LadderAdjudicate-style rewrite carries the streaming block through withStreamingBlock") {
     // simulate: batch writer produces fresh text, then re-attaches the
     // block extracted from the previous artifact
-    val fresh = """{"metric":"sf_ladder_adjudicated","rungs":{"q22":{"x1":1.1}}}"""
-    val carried = StreamingLadder.extractObject(artifact, "streaming_ladder")
-      .map(b => StreamingLadder.withBlock(fresh, "streaming_ladder", b)).get
+    val fresh = parse("""{"metric":"sf_ladder_adjudicated","rungs":{"q22":{"x1":1.1}}}""")
+    val carried = parse(artifact).get("streaming_ladder")
+      .map(b => StreamingLadder.withStreamingBlock(fresh, b).render).get
     assert(carried.contains("q41_streaming_tumbling") &&
       carried.contains(""""q22":{"x1":1.1}"""))
   }
