@@ -102,9 +102,6 @@ object BenchAdjudicate {
     if (provisional(full) && quiet.fields.nonEmpty) (quiet, "BENCH_QUIET.json")
     else (full, "BENCH_FULL.json")
 
-  /** The review total: every query at min(warm, warm_retry) — a retry that
-    * came in faster proves the first warm carried transient pressure.
-    */
   /** Deterministic assignment of queries to concurrent-bench pools
     * (VERDICT r14 item 8): sorted names round-robin over `nPools`, so
     * every query lands in exactly one pool, pool sizes differ by at
@@ -113,15 +110,13 @@ object BenchAdjudicate {
   def poolAssignment(names: Seq[String], nPools: Int): Map[String, Int] =
     names.sorted.zipWithIndex.map { case (n, i) => n -> i % nPools }.toMap
 
+  /** The review total: every query at min(warm, warm_retry) — a retry that
+    * came in faster proves the first warm carried transient pressure.
+    */
   def adjudicatedTotal(warm: Seq[(String, Double)],
       retry: Map[String, Double]): Double =
     warm.map { case (k, w) => math.min(w, retry.getOrElse(k, w)) }.sum
 
-  /** Streaming queries whose engine-side throughput fell past `factor`
-    * vs the prior artifact → (prior, current). Rates ≤ 0 (no batches
-    * drained) are skipped — absence is a correctness problem, not a
-    * throughput regression.
-    */
   /** Streaming queries driven in the mixed concurrent pass (r16 —
     * VERDICT r15 item 6): one per state-store family — a watermarked
     * window aggregation (HDFS state store), a stateless stream-static
@@ -145,6 +140,11 @@ object BenchAdjudicate {
       factor: Double = 5.0): Map[String, (Double, Double)] =
     streamingDrops(sequential, concurrent, factor)
 
+  /** Streaming queries whose engine-side throughput fell past `factor`
+    * vs the prior artifact → (prior, current). Rates ≤ 0 (no batches
+    * drained) are skipped — absence is a correctness problem, not a
+    * throughput regression.
+    */
   def streamingDrops(prior: Map[String, Double], cur: Map[String, Double],
       factor: Double = 2.0): Map[String, (Double, Double)] =
     cur.flatMap { case (k, c) =>

@@ -1,8 +1,10 @@
 package graft.llm
 
-import java.io.{ByteArrayOutputStream, InputStream}
+import java.io.{ByteArrayOutputStream, IOException, InputStream}
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
+
+import scala.annotation.tailrec
 
 /** Thin OpenAI-compatible HTTP adapter behind [[LlmClient]] — the
   * "real model" implementation slot (ref behavior: llm_classes.py:95-185
@@ -20,17 +22,28 @@ import java.nio.charset.StandardCharsets
   *    text offsets past the prompt — the completions-API translation of
   *    attempt_llm_logits (per-token probs → exp(Σ log p)), normalized to
   *    a simplex and sorted (score desc, candidate asc) like the mock.
-  *  - Retries with a 1 s sleep, matching the reference's
-  *    attempt_llm_request loop, but bounded (`maxRetries`) so a dead
-  *    endpoint fails the task instead of spinning forever.
+  *  - Each answer is checked before use: a batch must answer every
+  *    choice index 0..n-1 exactly once, and a scoring choice must give as
+  *    many token logprobs as text offsets. Anything else throws, naming
+  *    the endpoint, instead of handing one prompt another's answer.
+  *  - The client owns the retry policy at the LLM boundary; the engine
+  *    does not retry. An IOException, 408, 429 or 5xx is retried after a
+  *    1 s sleep, like the reference's attempt_llm_request loop, but at
+  *    most `maxRetries` times, so a dead endpoint fails the task instead
+  *    of spinning forever: at most 1 + `maxRetries` requests per call.
+  *    Any other non-2xx (a bad key, a wrong path, an over-long prompt)
+  *    cannot succeed on retry and fails at once. A 2xx body that does not
+  *    parse is not retried either: at temperature 0 the same request
+  *    gives the same answer. The final error names the endpoint, the last
+  *    status and the attempt count, with the last IOException as cause.
   *  - Connections are kept alive through the JDK's keep-alive cache: a
   *    2xx body is read to the end and its stream closed, never
   *    `disconnect()`ed, so the next request to the same host reuses the
   *    socket instead of paying a TCP connect. The cache keeps
   *    `http.maxConnections` (default 5) idle sockets per host; with more
   *    concurrent tasks than that, requests still work but some reconnect.
-  *    A non-2xx answer or an exception `disconnect()`s after the retry
-  *    sleep, so a failed connection is never reused. (An error answer with no body is a
+  *    A non-2xx answer or an exception `disconnect()`s, after the retry
+  *    sleep when there is one, so a failed connection is never reused. (An error answer with no body is a
   *    complete exchange; the JDK caches its socket before the status is
   *    seen, and reusing it is safe.) The body goes out in one buffered
   *    write with its Content-Length: fixed-length streaming sent the
@@ -54,11 +67,13 @@ final class HttpLlmClient(
       "prompt" -> JArr(prompts.map(JStr.apply)),
       "max_tokens" -> JNum(maxNewTokens),
       "temperature" -> JNum(temperature))
-    val resp = parse(post(body.render))
-    val choices = resp.obj("choices").arr
     // choices may interleave across the batch — re-order by index
-    choices.map(c => (c.obj("index").num.toInt, c.obj("text").str))
-      .sortBy(_._1).map(_._2)
+    val choices = parse(post(body.render)).obj("choices").arr
+      .map(c => (c.obj("index").num.toInt, c.obj("text").str)).sortBy(_._1)
+    val indexes = choices.map(_._1)
+    if (indexes != prompts.indices)
+      sys.error(s"$endpoint answered choice indexes ${indexes.mkString(",")} for ${prompts.size} prompts")
+    choices.map(_._2)
   }
 
   override def scoreCandidates(
@@ -71,13 +86,16 @@ final class HttpLlmClient(
         "max_tokens" -> JNum(0),
         "echo" -> JBool(true),
         "logprobs" -> JNum(0))
-      val resp = parse(post(body.render))
-      val lp = resp.obj("choices").arr.head.obj("logprobs")
+      val lp = parse(post(body.render)).obj("choices").arr.headOption
+        .getOrElse(sys.error(s"$endpoint answered no choice")).obj("logprobs")
       val offsets = lp.obj("text_offset").arr.map(_.num.toInt)
       val logprobs = lp.obj("token_logprobs").arr.map {
         case JNull => 0.0 // first token: API reports null
         case v     => v.num
       }
+      if (offsets.size != logprobs.size)
+        sys.error(s"$endpoint answered ${offsets.size} text offsets " +
+          s"but ${logprobs.size} token logprobs")
       // candidate tokens = those whose text offset is past the prompt
       val sum = offsets.zip(logprobs)
         .collect { case (o, l) if o >= prompt.length => l }.sum
@@ -90,40 +108,39 @@ final class HttpLlmClient(
     normed.sortBy { case (c, s) => (-s, c) }
   }
 
-  private def post(body: String): String = {
-    var attempt = 0
-    while (true) {
-      var conn: HttpURLConnection = null
-      try {
-        conn = URI.create(endpoint).toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        conn.setRequestMethod("POST")
-        conn.setRequestProperty("Content-Type", "application/json")
-        apiKey.foreach(k => conn.setRequestProperty("Authorization", s"Bearer $k"))
-        conn.setDoOutput(true)
-        conn.setConnectTimeout(10000)
-        conn.setReadTimeout(600000)
-        val os = conn.getOutputStream
-        try os.write(body.getBytes(StandardCharsets.UTF_8)) finally os.close()
-        val code = conn.getResponseCode
-        if (code / 100 != 2) sys.error(s"HTTP $code from $endpoint")
-        // read to EOF and close, no disconnect: the socket goes back to
-        // the keep-alive cache
-        return readAll(conn.getInputStream)
-      } catch {
-        case e: Exception =>
-          attempt += 1
-          if (attempt <= maxRetries)
-            Thread.sleep(1000L) // ref: attempt_llm_request sleeps 1 s per retry
-          // disconnect after the sleep: an error body still in flight when
-          // its stream closes goes to the JDK's background cleaner, which
-          // later puts the failed socket back in the keep-alive cache for
-          // the retry; once the body is in, the JDK drops the socket here
-          if (conn != null) conn.disconnect()
-          if (attempt > maxRetries) throw e
-      }
+  @tailrec
+  private def post(body: String, attempt: Int = 1): String = {
+    val conn = URI.create(endpoint).toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    var status = 0 // 0: no answer came
+    var cause: IOException = null
+    try {
+      conn.setRequestMethod("POST")
+      conn.setRequestProperty("Content-Type", "application/json")
+      apiKey.foreach(k => conn.setRequestProperty("Authorization", s"Bearer $k"))
+      conn.setDoOutput(true)
+      conn.setConnectTimeout(10000)
+      conn.setReadTimeout(600000)
+      val os = conn.getOutputStream
+      try os.write(body.getBytes(StandardCharsets.UTF_8)) finally os.close()
+      status = conn.getResponseCode
+      // read to EOF and close, no disconnect: the socket goes back to
+      // the keep-alive cache
+      if (status / 100 == 2) return readAll(conn.getInputStream)
+    } catch {
+      case e: IOException => cause = e
     }
-    throw new IllegalStateException("unreachable")
+    val retry = attempt <= maxRetries && (cause != null || HttpLlmClient.retryable(status))
+    if (retry) Thread.sleep(1000L) // ref: attempt_llm_request sleeps 1 s per retry
+    // disconnect after the sleep: an error body still in flight when
+    // its stream closes goes to the JDK's background cleaner, which
+    // later puts the failed socket back in the keep-alive cache for
+    // the retry; once the body is in, the JDK drops the socket here
+    conn.disconnect()
+    if (!retry)
+      throw new IOException(s"LLM request to $endpoint failed after $attempt attempt(s), " +
+        s"last status ${if (status == 0) "none" else s"HTTP $status"}", cause)
+    post(body, attempt + 1)
   }
 
   private def readAll(in: InputStream): String = {
@@ -138,6 +155,10 @@ final class HttpLlmClient(
 }
 
 object HttpLlmClient {
+  /** Statuses a retry can cure: timeout, rate limit, server error. */
+  private def retryable(status: Int): Boolean =
+    status == 408 || status == 429 || status / 100 == 5
+
   /** Serializable factory — ships endpoint config, builds per partition. */
   final case class Factory(
       endpoint: String,

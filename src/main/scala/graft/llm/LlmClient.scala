@@ -6,14 +6,20 @@ import java.security.MessageDigest
   * `Stable Schema Matching/LLM/llm_classes.py:95-185,261-324`).
   *
   * Inference happens OUTSIDE the engine (GPU service); the engine only
-  * batches prompts, retries, and scores — so the contract is a plain trait
+  * batches prompts and scores — so the contract is a plain trait
   * instantiated per partition (connection reuse), never a serialized
   * client. Implementations must be constructible from a
   * `LlmClientFactory` that IS serializable.
+  *
+  * A client owns its transient-failure policy (see [[HttpLlmClient]]):
+  * the engine does not retry, so an exception a client throws fails the
+  * task unchanged.
   */
 trait LlmClient extends AutoCloseable {
 
-  /** Greedy/sampled generation for a batch of prompts. */
+  /** Greedy/sampled generation for a batch of prompts: one answer per
+    * prompt, in prompt order.
+    */
   def generate(prompts: Seq[String]): Seq[String]
 
   /** Per-candidate log-prob-derived scores, normalized to a probability
@@ -72,16 +78,5 @@ object MockLlmClient {
 
   final case class Factory(temperature: Double = 1.0) extends LlmClientFactory {
     override def create(): LlmClient = new MockLlmClient(temperature)
-  }
-}
-
-/** A client whose first `failures` calls throw — for retry-path tests. */
-final class FlakyLlmClient(inner: LlmClient, failures: Int) extends LlmClient {
-  private var remaining = failures
-  private def maybeFail(): Unit =
-    if (remaining > 0) { remaining -= 1; throw new RuntimeException("transient LLM failure") }
-  override def generate(prompts: Seq[String]): Seq[String] = { maybeFail(); inner.generate(prompts) }
-  override def scoreCandidates(prompt: String, candidates: Seq[String]): Seq[(String, Double)] = {
-    maybeFail(); inner.scoreCandidates(prompt, candidates)
   }
 }

@@ -5,10 +5,16 @@ import org.apache.spark.sql.Dataset
 import graft.core.Model.Question
 
 /** The LLM inference operator (SURVEY §2.F5): `mapPartitions` — NOT a UDF —
-  * so the engine controls batching, bounded retry with backoff, and
-  * client/connection reuse per partition (ref: `ask_LLM.py:144-269` batches
-  * through a DataLoader; `llm_classes.py:130-143` retries — but infinitely;
-  * we bound it, surfacing poison prompts instead of hanging an executor).
+  * so the engine controls batching and client/connection reuse per
+  * partition (ref: `ask_LLM.py:144-269` batches through a DataLoader).
+  *
+  * Failure: the operator does not retry. Transient failures are the
+  * client's to retry, per HTTP request ([[HttpLlmClient]]; the reference's
+  * `llm_classes.py:130-143` retries infinitely, the client bounds it); an
+  * exception the client throws fails the task unchanged. On a cluster,
+  * Spark re-runs a failed task up to `spark.task.maxFailures` times, so a
+  * batch costs at most maxFailures × (1 + maxRetries) requests; `local[N]`
+  * has no task retry.
   *
   * Scale: one client per partition, `batchSize` prompts per call; executor
   * parallelism IS the request parallelism, so throughput tunes with
@@ -16,8 +22,7 @@ import graft.core.Model.Question
   */
 object LlmOperator {
 
-  final case class Generation(
-      caseId: String, queryAttr: String, response: String, attempts: Int, latencyMs: Long)
+  final case class Generation(caseId: String, queryAttr: String, response: String)
 
   final case class Scored(
       caseId: String, queryAttr: String, candAttr: String, score: Double)
@@ -25,9 +30,7 @@ object LlmOperator {
   def generate(
       questions: Dataset[Question],
       factory: LlmClientFactory,
-      batchSize: Int = 8,
-      maxRetries: Int = 3,
-      backoffMs: Long = 10): Dataset[Generation] = {
+      batchSize: Int = 8): Dataset[Generation] = {
     val spark = questions.sparkSession
     import spark.implicits._
     questions.mapPartitions { it =>
@@ -35,28 +38,8 @@ object LlmOperator {
       else {
         val client = openForTask(factory)
         it.grouped(batchSize).flatMap { batch =>
-          val t0 = System.nanoTime()
-          var attempt = 0
-          var result: Option[Seq[String]] = None
-          var lastErr: Throwable = null
-          while (result.isEmpty && attempt <= maxRetries) {
-            attempt += 1
-            try result = Some(client.generate(batch.map(_.prompt)))
-            catch {
-              case e: Exception =>
-                lastErr = e
-                if (attempt <= maxRetries) Thread.sleep(backoffMs * attempt)
-            }
-          }
-          val latency = (System.nanoTime() - t0) / 1000000
-          result match {
-            case Some(responses) =>
-              batch.zip(responses).map { case (q, r) =>
-                Generation(q.caseId, q.queryAttr, r, attempt, latency)
-              }
-            case None =>
-              throw new RuntimeException(
-                s"LLM generate failed after $maxRetries retries", lastErr)
+          batch.zip(client.generate(batch.map(_.prompt))).map { case (q, r) =>
+            Generation(q.caseId, q.queryAttr, r)
           }
         }
       }
@@ -64,11 +47,7 @@ object LlmOperator {
   }
 
   /** F6: per-question candidate scoring → long-form preference rows. */
-  def score(
-      questions: Dataset[Question],
-      factory: LlmClientFactory,
-      maxRetries: Int = 3,
-      backoffMs: Long = 10): Dataset[Scored] = {
+  def score(questions: Dataset[Question], factory: LlmClientFactory): Dataset[Scored] = {
     val spark = questions.sparkSession
     import spark.implicits._
     questions.mapPartitions { it =>
@@ -76,20 +55,7 @@ object LlmOperator {
       else {
         val client = openForTask(factory)
         it.flatMap { q =>
-          var attempt = 0
-          var result: Option[Seq[(String, Double)]] = None
-          var lastErr: Throwable = null
-          while (result.isEmpty && attempt <= maxRetries) {
-            attempt += 1
-            try result = Some(client.scoreCandidates(q.prompt, q.candidates))
-            catch {
-              case e: Exception =>
-                lastErr = e
-                if (attempt <= maxRetries) Thread.sleep(backoffMs * attempt)
-            }
-          }
-          result.getOrElse(throw new RuntimeException(
-              s"LLM score failed after $maxRetries retries", lastErr))
+          client.scoreCandidates(q.prompt, q.candidates)
             .map { case (c, s) => Scored(q.caseId, q.queryAttr, c, s) }
         }
       }

@@ -4720,7 +4720,7 @@ object PipelineQueries extends Registry {
         FROM best WHERE rn = 1
         ORDER BY case_id, tgt_attr, src_attr""")),
 
-    // ---- F5: the LLM inference operator (mapPartitions, batching, retry)
+    // ---- F5: the LLM inference operator (mapPartitions, batching)
     //      run END-TO-END against the DuckDB-replayable mock: the mock's
     //      "generation" is argmax over candidates of a 48-bit md5 hash of
     //      (prompt|candidate), and the prompt here is simple enough for the

@@ -1,6 +1,7 @@
 package graft
 
-import java.net.InetSocketAddress
+import java.io.IOException
+import java.net.{ConnectException, InetAddress, InetSocketAddress, ServerSocket}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
@@ -12,13 +13,15 @@ import graft.llm.{HttpLlmClient, MiniJson}
 /** Hermetic spec for the OpenAI-compatible HTTP adapter: a JDK HttpServer
   * stub implements `/v1/completions` deterministically (batch generation
   * with shuffled choice indexes, echo+logprobs scoring with per-token
-  * offsets, and an injectable 500 for the retry path). It records the
+  * offsets, an injectable error status for the retry path, and malformed
+  * answers: a dropped choice, a missing token logprob). It records the
   * client port of every exchange, so a spec can tell which requests
   * shared a connection. No sockets leave localhost; no external model
   * anywhere.
   */
 class HttpLlmClientSpec extends AnyFunSuite {
 
+  import HttpLlmClientSpec.Mode
   import MiniJson._
 
   /** Whitespace "tokenizer": token t scores logprob −0.01·len(t). */
@@ -32,14 +35,14 @@ class HttpLlmClientSpec extends AnyFunSuite {
     out.result()
   }
 
-  private def completionsHandler(failFirst: AtomicInteger, errorBodyDelayMs: Long,
+  private def completionsHandler(mode: Mode, failures: AtomicInteger,
       ports: ConcurrentLinkedQueue[Int])(ex: HttpExchange): Unit = {
     ports.add(ex.getRemoteAddress.getPort)
     val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-    if (failFirst.getAndDecrement() > 0) { // an error body, as real servers send
+    if (failures.getAndDecrement() > 0) { // an error body, as real servers send
       val err = """{"error": {"message": "injected failure"}}""".getBytes(StandardCharsets.UTF_8)
-      ex.sendResponseHeaders(500, err.length)
-      Thread.sleep(errorBodyDelayMs)
+      ex.sendResponseHeaders(mode.failStatus, err.length)
+      Thread.sleep(mode.errorBodyDelayMs)
       ex.getResponseBody.write(err)
       ex.close(); return
     }
@@ -47,8 +50,8 @@ class HttpLlmClientSpec extends AnyFunSuite {
     val resp = req.obj("prompt") match {
       case JArr(ps) => // batch generate: answer "gen:<prompt>", indexes reversed
         JObj(Seq("choices" -> JArr(
-          ps.zipWithIndex.reverse.map { case (p, i) =>
-            JObj(Seq("index" -> JNum(i), "text" -> JStr("gen:" + p.str)))
+          ps.zipWithIndex.reverse.filterNot(pi => mode.dropChoice.contains(pi._2)).map {
+            case (p, i) => JObj(Seq("index" -> JNum(i), "text" -> JStr("gen:" + p.str)))
           })))
       case JStr(p) => // echo scoring
         val toks = stubTokens(p)
@@ -57,8 +60,8 @@ class HttpLlmClientSpec extends AnyFunSuite {
           "text" -> JStr(p),
           "logprobs" -> JObj(Seq(
             "text_offset" -> JArr(toks.map(t => JNum(t._1))),
-            "token_logprobs" -> JArr(JNull +: toks.tail.map(t =>
-              JNum(-0.01 * t._2.length)))))))))))
+            "token_logprobs" -> JArr((JNull +: toks.tail.map(t =>
+              JNum(-0.01 * t._2.length))).dropRight(if (mode.dropLogprob) 1 else 0))))))))))
       case other => sys.error(s"unexpected prompt shape: $other")
     }
     val bytes = resp.render.getBytes(StandardCharsets.UTF_8)
@@ -71,12 +74,11 @@ class HttpLlmClientSpec extends AnyFunSuite {
   /** Runs `f` with the endpoint URL and a view of the client port of
     * every exchange so far, in arrival order.
     */
-  private def withServer(failFirst: Int, errorBodyDelayMs: Long = 0)(
-      f: (String, () => Seq[Int]) => Unit): Unit = {
+  private def withServer(mode: Mode)(f: (String, () => Seq[Int]) => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    val failures = new AtomicInteger(failFirst)
+    val failures = new AtomicInteger(mode.failFirst)
     val ports = new ConcurrentLinkedQueue[Int]()
-    server.createContext("/v1/completions", completionsHandler(failures, errorBodyDelayMs, ports)(_))
+    server.createContext("/v1/completions", completionsHandler(mode, failures, ports)(_))
     server.start()
     try f(s"http://127.0.0.1:${server.getAddress.getPort}/v1/completions",
       () => ports.asScala.toSeq)
@@ -84,7 +86,7 @@ class HttpLlmClientSpec extends AnyFunSuite {
   }
 
   test("generate re-orders shuffled choices by index and round-trips escapes") {
-    withServer(failFirst = 0) { (url, _) =>
+    withServer(Mode(failFirst = 0)) { (url, _) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 0)
       val out = c.generate(Seq("alpha", "with \"quotes\"\nand newline", "gamma"))
       assert(out == Seq("gen:alpha", "gen:with \"quotes\"\nand newline", "gen:gamma"))
@@ -92,7 +94,7 @@ class HttpLlmClientSpec extends AnyFunSuite {
   }
 
   test("scoreCandidates sums logprobs past the prompt and normalizes to a simplex") {
-    withServer(failFirst = 0) { (url, _) =>
+    withServer(Mode(failFirst = 0)) { (url, _) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 0)
       val prompt = "pick one: " // 10 chars; "one:" token starts at offset 5 < 10
       val scored = c.scoreCandidates(prompt, Seq("aa", "bbbb"))
@@ -107,7 +109,7 @@ class HttpLlmClientSpec extends AnyFunSuite {
   }
 
   test("sequential requests reuse one kept-alive connection") {
-    withServer(failFirst = 0) { (url, ports) =>
+    withServer(Mode(failFirst = 0)) { (url, ports) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 0)
       (1 to 20).foreach { i =>
         assert(c.scoreCandidates(s"pick $i: ", Seq("aa")).map(_._1) == Seq("aa"))
@@ -120,7 +122,7 @@ class HttpLlmClientSpec extends AnyFunSuite {
   }
 
   test("a 500 response is retried (reference's retry loop, bounded)") {
-    withServer(failFirst = 1) { (url, ports) =>
+    withServer(Mode(failFirst = 1)) { (url, ports) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 2)
       assert(c.generate(Seq("x")) == Seq("gen:x"))
       // the failed connection is dropped: the retry arrives on a new one
@@ -129,16 +131,60 @@ class HttpLlmClientSpec extends AnyFunSuite {
       assert(c.generate(Seq("y")) == Seq("gen:y"))
       assert(ports().size == 3 && ports()(2) == ports()(1), s"client ports: ${ports()}")
     }
-    withServer(failFirst = 10) { (url, _) =>
+    // exhausted: one error naming the endpoint, the last status and the attempts
+    withServer(Mode(failFirst = 10)) { (url, ports) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 1)
-      intercept[Exception](c.generate(Seq("x")))
+      val e = intercept[IOException](c.generate(Seq("x")))
+      assert(e.getMessage == s"LLM request to $url failed after 2 attempt(s), last status HTTP 500")
+      assert(ports().size == 2)
     }
     // an error body that arrives after the status line: a half-read body
     // must not hand the failed socket back for the retry
-    withServer(failFirst = 1, errorBodyDelayMs = 300) { (url, ports) =>
+    withServer(Mode(failFirst = 1, errorBodyDelayMs = 300)) { (url, ports) =>
       val c = new HttpLlmClient(url, "m", maxRetries = 2)
       assert(c.generate(Seq("x")) == Seq("gen:x"))
       assert(ports().size == 2 && ports()(0) != ports()(1), s"client ports: ${ports()}")
+    }
+  }
+
+  test("only transient failures are retried: a 400 fails at once, a 429 and a refused connection are retried") {
+    withServer(Mode(failFirst = 10, failStatus = 400)) { (url, ports) =>
+      val c = new HttpLlmClient(url, "m", maxRetries = 2)
+      val t0 = System.nanoTime()
+      val e = intercept[IOException](c.generate(Seq("x")))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(e.getMessage == s"LLM request to $url failed after 1 attempt(s), last status HTTP 400")
+      assert(ports().size == 1, s"client ports: ${ports()}")
+      assert(secs < 1.0, s"took $secs s")
+    }
+    withServer(Mode(failFirst = 1, failStatus = 429)) { (url, ports) =>
+      val c = new HttpLlmClient(url, "m", maxRetries = 1)
+      assert(c.generate(Seq("x")) == Seq("gen:x"))
+      assert(ports().size == 2, s"client ports: ${ports()}")
+    }
+    // a port nothing listens on: every attempt is an IOException, attached as cause
+    val closed = {
+      val s = new ServerSocket(0, 0, InetAddress.getLoopbackAddress)
+      try s.getLocalPort finally s.close()
+    }
+    val url = s"http://127.0.0.1:$closed/v1/completions"
+    val e = intercept[IOException](new HttpLlmClient(url, "m", maxRetries = 1).generate(Seq("x")))
+    assert(e.getMessage == s"LLM request to $url failed after 2 attempt(s), last status none")
+    assert(e.getCause.isInstanceOf[ConnectException], e.getCause)
+  }
+
+  test("a malformed answer throws, naming the endpoint, instead of misaligning answers") {
+    // choice indexes {0, 2} for 3 prompts: the second prompt has no answer
+    withServer(Mode(failFirst = 0, dropChoice = Some(1))) { (url, _) =>
+      val c = new HttpLlmClient(url, "m", maxRetries = 0)
+      val e = intercept[RuntimeException](c.generate(Seq("a", "b", "c")))
+      assert(e.getMessage.contains(url) && e.getMessage.contains("0,2"), e.getMessage)
+    }
+    // one token logprob fewer than text offsets
+    withServer(Mode(failFirst = 0, dropLogprob = true)) { (url, _) =>
+      val c = new HttpLlmClient(url, "m", maxRetries = 0)
+      val e = intercept[RuntimeException](c.scoreCandidates("pick one: ", Seq("aa", "bbbb")))
+      assert(e.getMessage.contains(url) && e.getMessage.contains("token logprobs"), e.getMessage)
     }
   }
 
@@ -188,4 +234,15 @@ class HttpLlmClientSpec extends AnyFunSuite {
     assert(back.get("x").contains(JNum(1.235)) && back.get("absent").isEmpty)
     assert(back.fields.map(_._1) == Seq("nan", "inf", "ninf", "x"))
   }
+}
+
+object HttpLlmClientSpec {
+  /** How the stub departs from a correct answer. The first `failFirst`
+    * requests answer `failStatus` with an error body sent
+    * `errorBodyDelayMs` after the status line; `dropChoice` omits that
+    * choice index from batch answers; `dropLogprob` omits the last token
+    * logprob from scoring answers.
+    */
+  final case class Mode(failFirst: Int, failStatus: Int = 500,
+      errorBodyDelayMs: Long = 0, dropChoice: Option[Int] = None, dropLogprob: Boolean = false)
 }

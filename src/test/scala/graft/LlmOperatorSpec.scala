@@ -1,9 +1,12 @@
 package graft
 
+import java.net.InetSocketAddress
 import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.SparkException
 import graft.core.Model.Question
 import graft.llm._
 
@@ -37,13 +40,6 @@ class LlmOperatorSpec extends SparkSpec {
     assert(s1.sorted.reverse.toSeq == s1.toSeq)
   }
 
-  test("bounded retry recovers from transient failures") {
-    val out = LlmOperator.generate(questions.repartition(1), FlakyFactory(failures = 2),
-      batchSize = 10, maxRetries = 3).collect()
-    assert(out.length == 3)
-    assert(out.head.attempts == 3) // 2 failures + 1 success
-  }
-
   /** 3 partitions of 4 questions each, so every partition is non-empty. */
   private def partitioned = {
     val s = spark
@@ -75,18 +71,70 @@ class LlmOperatorSpec extends SparkSpec {
     assert(CountingFactory.calls(lim).get < 4 * limCloses.size)
   }
 
-  test("exhausted retries surface the error") {
-    val e = intercept[org.apache.spark.SparkException] {
-      LlmOperator.generate(questions.repartition(1), FlakyFactory(failures = 10),
-        batchSize = 10, maxRetries = 2).collect()
+  /** The messages of `e` and of every cause under it. */
+  private def causeChain(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  test("a client failure fails the task with the client's error") {
+    val gen = intercept[SparkException] {
+      LlmOperator.generate(questions, FailingFactory()).collect()
     }
-    assert(e.getMessage.contains("LLM generate failed") ||
-      Option(e.getCause).exists(_.getMessage.contains("LLM generate failed")))
+    assert(causeChain(gen).contains(FailingFactory.message), causeChain(gen))
+    val sc = intercept[SparkException] {
+      LlmOperator.score(questions, FailingFactory()).collect()
+    }
+    assert(causeChain(sc).contains(FailingFactory.message), causeChain(sc))
+  }
+
+  /** Runs `f` with the URL of a local endpoint that answers every request
+    * 500, and returns how many requests it got.
+    */
+  private def withDeadEndpoint(f: String => Unit): Int = {
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val requests = new AtomicInteger()
+    server.createContext("/v1/completions", (ex: HttpExchange) => {
+      requests.incrementAndGet()
+      ex.getRequestBody.readAllBytes()
+      ex.sendResponseHeaders(500, -1)
+      ex.close()
+    })
+    server.start()
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}/v1/completions")
+    finally server.stop(0)
+    requests.get
+  }
+
+  test("a dead endpoint fails the task after 1 + maxRetries requests, naming it") {
+    // score sends one request per candidate: the first one fails the task
+    val oneQuestion = questions.filter(_.candidates.nonEmpty).limit(1).repartition(1)
+    Seq[LlmClientFactory => Unit](
+      f => LlmOperator.generate(questions.repartition(1), f, batchSize = 10).collect(),
+      f => LlmOperator.score(oneQuestion, f).collect()).foreach { run =>
+      val n = withDeadEndpoint { url =>
+        val t0 = System.nanoTime()
+        val e = intercept[SparkException](run(HttpLlmClient.Factory(url, "m", maxRetries = 1)))
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(causeChain(e).contains(url) && causeChain(e).contains("HTTP 500"), causeChain(e))
+        // one 1 s retry sleep, and no second retry loop around the client
+        assert(secs < 3.0, s"took $secs s")
+      }
+      assert(n == 2, s"$n requests")
+    }
   }
 }
 
-final case class FlakyFactory(failures: Int) extends LlmClientFactory {
-  override def create(): LlmClient = new FlakyLlmClient(new MockLlmClient(), failures)
+/** A client whose every call throws. */
+final case class FailingFactory() extends LlmClientFactory {
+  override def create(): LlmClient = new LlmClient {
+    override def generate(prompts: Seq[String]): Seq[String] =
+      throw new IllegalStateException(FailingFactory.message)
+    override def scoreCandidates(prompt: String, candidates: Seq[String]): Seq[(String, Double)] =
+      throw new IllegalStateException(FailingFactory.message)
+  }
+}
+
+object FailingFactory {
+  val message = "the LLM is down"
 }
 
 /** Mock clients that record, per factory `id`, each client's close count
