@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.llm.MiniJson
 
 /** What every harness main shares: the core count, the one session
-  * builder, the JVM warm-up, the load canary and the prior-artifact read.
+  * builder, the JVM warm-up, the one timing rule and the artifact I/O.
   */
 object Harness {
 
@@ -41,17 +41,55 @@ object Harness {
   def warmUp(spark: SparkSession): Unit =
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-  /** Seconds for a fixed synthetic load canary: CPU-bound range generation
-    * plus one small shuffle. Its cost is data-independent, so it moves
-    * only with box pressure.
+  /** Warm runs per query, after its cold run. */
+  val WarmRuns = 3
+
+  /** One query's timing in seconds: the cold run, the warm runs and the
+    * first error. Runs stop at the first error, so a failed query has
+    * fewer than [[WarmRuns]] warm samples (none when the cold run failed);
+    * the failed run's own seconds are kept.
     */
-  def canarySec(spark: SparkSession): Double = {
-    import org.apache.spark.sql.functions.sum
-    val t0 = System.nanoTime()
-    spark.range(0, 32L * 1000 * 1000, 1, 32)
-      .selectExpr("id % 9973 AS k", "id")
-      .groupBy("k").agg(sum("id").as("s")).agg(sum("s")).collect()
-    (System.nanoTime() - t0) / 1e9
+  final case class Timing(cold: Double, warm: Seq[Double], error: Option[String]) {
+    def median: Double = percentile(warm, 50)
+
+    /** Interquartile range of the warm samples; at three samples it is
+      * max − min.
+      */
+    def iqr: Double = percentile(warm, 75) - percentile(warm, 25)
+  }
+
+  /** The `p`th percentile of `xs` by nearest rank, as perfbench's
+    * `Stats.percentile`.
+    */
+  def percentile(xs: Seq[Double], p: Double): Double = {
+    require(xs.nonEmpty, "percentile of no samples")
+    val s = xs.sorted
+    s(math.min(s.length - 1, math.max(0, math.ceil(p / 100 * s.length).toInt - 1)))
+  }
+
+  /** Runs `query` once cold, then [[WarmRuns]] times warm, stopping at the
+    * first error. The one timing rule of Bench and LadderAdjudicate.
+    */
+  def time(query: () => Unit): Timing = {
+    def once(): (Double, Option[String]) = {
+      val t0 = System.nanoTime()
+      val err = try { query(); None } catch {
+        case e: Throwable =>
+          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+      }
+      ((System.nanoTime() - t0) / 1e9, err)
+    }
+    @annotation.tailrec
+    def warm(cold: Double, samples: Vector[Double]): Timing =
+      if (samples.size == WarmRuns) Timing(cold, samples, None)
+      else once() match {
+        case (s, None) => warm(cold, samples :+ s)
+        case (s, err) => Timing(cold, samples :+ s, err)
+      }
+    once() match {
+      case (cold, None) => warm(cold, Vector.empty)
+      case (cold, err) => Timing(cold, Vector.empty, err)
+    }
   }
 
   /** The JSON artifact at `path`, or an empty object when the file does

@@ -12,15 +12,15 @@ import graft.llm.MiniJson._
   * — re-runs EVERY recorded rung query at 1× (sf0.1) and 100×
   * (/tmp/graft_sf10 from graft.ScaleUp), writes BENCH_LADDER.json with
   * per-rung current ratio, prior ratio and ratio-vs-prior, and flags
-  * rungs whose 100×/1× ratio grew past 2× of the prior artifact the way
-  * `streaming_regressions` flags throughput drops. Prior rungs come from
+  * rungs whose 100×/1× ratio grew past 2× of the prior artifact. Each
+  * rung's time is the warm median of [[Harness.time]]. Prior rungs come from
   * BENCH_LADDER.json when it exists (the regular format this writer
   * emits) plus every nested `"1x_sf0.1"/"100x_sf10"` block in the legacy
   * hand-curated BENCH_SF_LADDER.json; SPARK_GRAFT_LADDER_ONLY restricts
   * to the named queries and SPARK_GRAFT_LADDER_ADD enrolls new kernels
   * on top of every recorded rung (both comma-separated).
   * Streaming-gated queries are excluded — their wall-clock is
-  * harness mechanics; the streaming gate lives in BENCH_FULL.json.
+  * harness mechanics; [[StreamingLadder]] gates them on throughput.
   */
 object LadderAdjudicate {
 
@@ -62,7 +62,7 @@ object LadderAdjudicate {
     * ladder run flagged exactly that on q268 — x100 2.19→2.00 s,
     * ratio 1.6→3.2 from a 1.41→0.62 s 1× improvement), and that is a
     * speedup, not a scale break. Sub-second 100× rungs are exempt — at
-    * that absolute cost a ratio is all jitter (warm_retry's floor).
+    * that absolute cost a ratio is all jitter.
     */
   def rungRegressions(prior: Map[String, (Option[Double], Option[Double])],
       cur: Map[String, (Double, Double)], factor: Double = 2.0,
@@ -130,28 +130,11 @@ object LadderAdjudicate {
     val cores = Harness.cores
     val spark = Harness.session(cores)
     Harness.warmUp(spark)
-    def canarySec(): Double = Harness.canarySec(spark)
-    canarySec(); canarySec()
-    val canaryStart = math.min(canarySec(), canarySec())
+    // the warm median of Harness.time; hygiene once, after all samples
     def timeOne(name: String, dir: String): Either[String, Double] = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      try {
-        val cold = once()
-        val warm = once()
-        // same stall adjudication as Bench: a warm slower than its own
-        // cold is box noise — retry once and take the min
-        val adj = if (warm > cold * 1.1 && warm > 0.5) math.min(warm, once()) else warm
-        graft.core.SessionHygiene.dropAllBlocks(spark)
-        Right(adj)
-      } catch {
-        case e: Throwable =>
-          graft.core.SessionHygiene.dropAllBlocks(spark)
-          Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
-      }
+      val t = Harness.time(() => SparkEntry.queries(name)(spark, dir).count())
+      graft.core.SessionHygiene.dropAllBlocks(spark)
+      t.error.toLeft(t.median)
     }
     val results: Seq[(String, Either[String, (Double, Double)])] = queries.map { q =>
       System.err.println(s"[ladder] $q @1x")
@@ -166,7 +149,6 @@ object LadderAdjudicate {
       }
       q -> r
     }
-    val canaryEnd = math.min(canarySec(), canarySec())
     // regressions adjudicate only what was MEASURED this run — a carried
     // rung's ratio equals its prior by construction
     val cur: Map[String, (Double, Double)] = results.collect {
@@ -192,10 +174,9 @@ object LadderAdjudicate {
             Option.when(!measured)("carried" -> JBool(true)))
         case (q, Left(e)) => q -> obj("error" -> JStr(e))
       })
-      obj("metric" -> JStr("sf_ladder_adjudicated"), "unit" -> JStr("sec_warm_adjudicated"),
-        "protocol" -> JStr(s"graft.LadderAdjudicate: cold+warm(+retry past 1.1x cold) per rung at 1x ($dir1) and 100x ($dir100); value = adjudicated warm; prior = BENCH_LADDER.json else legacy BENCH_SF_LADDER.json nested blocks; rungs not re-measured by an ONLY run are carried forward (carried:true)"),
+      obj("metric" -> JStr("sf_ladder_adjudicated"), "unit" -> JStr("sec_warm_median"),
+        "protocol" -> JStr(s"graft.LadderAdjudicate: 1 cold + ${Harness.WarmRuns} warm runs per rung at 1x ($dir1) and 100x ($dir100); value = warm median; prior = BENCH_LADDER.json else legacy BENCH_SF_LADDER.json nested blocks; rungs not re-measured by an ONLY run are carried forward (carried:true)"),
         "host_fingerprint" -> JStr(BenchAdjudicate.hostFingerprint(cores)),
-        "canary_start_sec" -> d3(canaryStart), "canary_end_sec" -> d3(canaryEnd),
         "n_rungs" -> JNum(rs.size), "n_errors" -> JNum(rs.count(_._2.isLeft)),
         "n_measured" -> JNum(rs.count(r => !carriedKeys(r._1))),
         "rung_names" -> JArr(allNames.map(JStr)),
@@ -223,7 +204,6 @@ object LadderAdjudicate {
     println(obj("metric" -> JStr("sf_ladder_adjudicated"), "n_rungs" -> JNum(allResults.size),
       "n_measured" -> JNum(results.size), "n_errors" -> JNum(results.count(_._2.isLeft)),
       "n_rung_regressions" -> JNum(regressions.size),
-      "canary_start_sec" -> d3(canaryStart), "canary_end_sec" -> d3(canaryEnd),
       "artifact" -> JStr("BENCH_LADDER.json")).render)
     spark.stop()
   }

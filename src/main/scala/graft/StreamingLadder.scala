@@ -19,9 +19,9 @@ import graft.llm.MiniJson._
   * per-batch full-state scan) collapses the scaled rate and the ratio
   * balloons. Results land in a `streaming_ladder` block MERGED into
   * BENCH_LADDER.json (same artifact the batch rungs live in; the batch
-  * writer carries the block forward), with the same prior-ratio +
-  * regression + retry protocol the batch ladder and the bench's
-  * strm_retry use. A standalone run log goes to
+  * writer carries the block forward), with the batch ladder's
+  * prior-ratio + regression protocol plus one re-measure before a
+  * breach is called. A standalone run log goes to
   * BENCH_STREAMING_LADDER.json.
   */
 object StreamingLadder {
@@ -207,9 +207,9 @@ object StreamingLadder {
       val rb = measure(q, dir1, None)
       System.err.println(f"[strm-ladder] $q base ${rb.rate}%.0f rows/trigger-sec; scaled feed $scaledFeed")
       var rs = measure(q, dir100, Some(scaledFeed))
-      // retry protocol (bench strm_retry's rule): same-code TWS rates
-      // swing ±1.7×; re-measure once before calling a 2× prior-ratio
-      // breach a regression, keep the better sample
+      // retry protocol: same-code TWS rates swing ±1.7×; re-measure once
+      // before calling a 2× prior-ratio breach a regression, keep the
+      // better sample
       val priorRatio = prior.get(q).collect { case (pb, ps) if ps > 0 => pb / ps }
       if (rs.rate > 0 && priorRatio.exists(p => rb.rate / rs.rate > 2.0 * p)) {
         System.err.println(f"[strm-ladder] $q retry (ratio ${rb.rate / rs.rate}%.2f vs prior ${priorRatio.get}%.2f)")

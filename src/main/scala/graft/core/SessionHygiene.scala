@@ -3,7 +3,9 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Between-query session cleanup shared by the driver entry points
-  * (`graft.Bench`, `graft.Verify`): several queries persist/localCheckpoint
+  * (`graft.Bench`, `graft.Verify`, `graft.LadderAdjudicate`,
+  * `graft.StreamingLadder`; Bench and LadderAdjudicate run it once per
+  * query, after all of its timed samples): several queries persist/localCheckpoint
   * reused subplans and a single long session never frees them — ~100
   * queries of accumulated blocks put the tail of a run under storage + GC
   * pressure (round-4 bench measured 143 s for the final query vs 5.7 s in

@@ -124,13 +124,7 @@ class LadderAdjudicateSpec extends AnyFunSuite {
     }
     for (name <- Seq("BENCH_FULL.json", "BENCH_QUIET.json", "BENCH_SF1.json",
         "BENCH_SF1_FULL.json")) {
-      val a = read(name)
-      assert(finite(BenchAdjudicate.queriesWarm(a)), name)
-      if (name != "BENCH_SF1.json") { // the r15 sf1 rungs predate these fields
-        assert(finite(BenchAdjudicate.streamingRates(a)), name)
-        assert(BenchAdjudicate.priorCanary(a).exists(_ > 0), name)
-        assert(BenchAdjudicate.priorHostFingerprint(a).exists(_.nonEmpty), name)
-      }
+      assert(finite(BenchAdjudicate.queriesWarm(read(name))), name)
     }
     val ladder = read("BENCH_LADDER.json")
     val rungs = LadderAdjudicate.parsePrior(ladder)

@@ -1,13 +1,14 @@
 #!/usr/bin/env python3
-"""Three-run bench adjudication (r6 verdict item 2): compare per-query warm
-times across consecutive same-box runs to separate real regressions from the
-documented floating stall. Usage:
+"""Cross-run bench comparison: line up per-query warm medians of same-box
+Bench artifacts to separate real regressions from run-to-run noise. Usage:
 
     python3 tools/bench_adjudicate.py run1.json run2.json [run3.json ...]
 
+Refuses (exit 2) runs whose `host_fingerprint` differs or is missing: a
+timing from another host or another core count is not comparable.
+
 Prints a table for the suspect queries plus any query whose max/min ratio
-across runs exceeds 2x (stall signature: large within-box variance with no
-code change).
+across runs exceeds 2x (large within-box variance with no code change).
 """
 import json
 import sys
@@ -16,18 +17,21 @@ SUSPECTS = [
     "q105_unigram_logprob", "q116_bigram_logprob",
     "q108_streaming_decontaminate", "q179_lsh_recall_audit",
 ]
-# r5 warm numbers (BENCH_r05 era) and the r6-verdict cold numbers quoted in
-# VERDICT.md's regression table, for reference in the printed output.
-PRIOR = {"q105_unigram_logprob": 5.9, "q116_bigram_logprob": 4.5,
-         "q108_streaming_decontaminate": 11.7, "q179_lsh_recall_audit": 4.8}
 
 
 def main(paths):
     runs = [json.load(open(p)) for p in paths]
+    hosts = [r.get("host_fingerprint") for r in runs]
+    if None in hosts or len(set(hosts)) > 1:
+        print("refusing to compare runs from different hosts:", file=sys.stderr)
+        for p, h in zip(paths, hosts):
+            print(f"  {p}: host_fingerprint {h if h is not None else '(missing)'}",
+                  file=sys.stderr)
+        return 2
     warm = [r["queries_warm"] for r in runs]
     names = sorted(set().union(*[set(w) for w in warm]))
-    print(f"{'query':42s} " + " ".join(f"run{i+1:>5d}"[-6:] for i in range(len(runs)))
-          + "   max/min  prior")
+    print(f"{'query':42s} " + " ".join(f"{'run' + str(i + 1):>6s}" for i in range(len(runs)))
+          + "   max/min")
     flagged = []
     for n in names:
         vs = [w.get(n, float('nan')) for w in warm]
@@ -37,12 +41,12 @@ def main(paths):
             flagged.append((n, vs, ratio))
     for n, vs, ratio in sorted(flagged, key=lambda t: -t[2]):
         mark = " <== suspect" if n in SUSPECTS else ""
-        prior = PRIOR.get(n, "")
         print(f"{n:42s} " + " ".join(f"{v:6.2f}" for v in vs)
-              + f"   {ratio:6.2f}  {prior}{mark}")
+              + f"   {ratio:6.2f}{mark}")
     totals = [float(r["total_warm"]) for r in runs]
     print(f"\n{'TOTAL warm':42s} " + " ".join(f"{t:6.1f}" for t in totals))
+    return 0
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    sys.exit(main(sys.argv[1:]))
