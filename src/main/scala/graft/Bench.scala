@@ -20,16 +20,12 @@ object Bench {
     // named queries, e.g. SPARK_GRAFT_BENCH_ONLY=q73_dedup_components
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    // alternate-artifact mode (r16 — VERDICT r15 item 7): a full-suite
-    // pass at another scale factor writes its own artifact (e.g.
-    // BENCH_SF1_FULL.json) and carries a vs_sf01 block comparing every
-    // query's warm median against the sf0.1 run in BENCH_FULL.json.
+    only.foreach(SparkEntry.requireKnown)
+    // SPARK_GRAFT_BENCH_ARTIFACT names the artifact file, e.g.
+    // BENCH_SF1_FULL.json for a full-suite pass at another scale factor.
+    // Bench compares it with no other run: scale ratios are
+    // LadderAdjudicate's job, cross-run comparison tools/bench_adjudicate.py's.
     val artifactEnv = sys.env.getOrElse("SPARK_GRAFT_BENCH_ARTIFACT", "BENCH_FULL.json")
-    val altArtifact = artifactEnv != "BENCH_FULL.json"
     final case class StrmStats(inputRows: Long, triggerMs: Long) {
       def rowsPerTriggerSec: Double =
         if (triggerMs <= 0) 0.0 else inputRows * 1000.0 / triggerMs
@@ -210,23 +206,6 @@ object Bench {
         "trigger_ms" -> JNum(s.triggerMs.toDouble),
         "rows_per_trigger_sec" -> d3(s.rowsPerTriggerSec))
     })
-    val vsSf01 = Option.when(altArtifact) {
-      // scale-ratio audit vs the canonical sf0.1 run: warm median here
-      // over warm there. Data is 10x, so linear cost is ratio 10; flag
-      // past 12 (linear + 20% margin) among queries whose sf1 warm is
-      // above a 1 s constant-cost floor. Streaming rungs are excluded
-      // (harness-dominated wall-clock).
-      val sf01 = BenchAdjudicate.queriesWarm(Harness.readArtifact("BENCH_FULL.json"))
-      val ratios = results.collect {
-        case (k, t) if t.error.isEmpty && !SparkEntry.streamingQueries(k) &&
-            sf01.get(k).exists(_ > 0.0) => (k, t.median, t.median / sf01(k))
-      }
-      val superlin = ratios.filter { case (_, w, r) => w > 1.0 && r > 12.0 }
-      obj("n_compared" -> JNum(ratios.size), "n_superlinear" -> JNum(superlin.size),
-        "superlinear" -> JObj(superlin.sortBy(_._1).map { case (k, w, r) =>
-          k -> obj("warm_adjudicated" -> d3(w), "ratio" -> d3(r)) }),
-        "worst_ratios" -> nums(ratios.sortBy(-_._3).take(10).map { case (k, _, r) => k -> r }))
-    }
     val full = JObj(Seq[(String, JValue)](
       "metric" -> JStr("total"), "value" -> d3(results.map(_._2.cold).sum),
       "unit" -> JStr("sec"),
@@ -244,7 +223,6 @@ object Bench {
       "streaming_metrics" -> strmJson) ++
       concurrent.map("concurrent" -> _) ++
       q127Iters.map(n => "q127_cte_iterations" -> JNum(n)) ++
-      vsSf01.map("vs_sf01" -> _) ++
       Seq("errors" -> JObj(results.collect { case (k, Harness.Timing(_, _, Some(m))) => k -> JStr(m) }),
         "sf" -> JStr(sfDir)))
     // The harness keeps only the LAST ~2000 chars of output, and 74 queries

@@ -35,10 +35,6 @@ object BenchAdjudicate {
     case other     => typeError(key, "an object", other)
   }
 
-  /** Per-query warm seconds of a BENCH_FULL.json. */
-  def queriesWarm(a: JValue): Map[String, Double] =
-    a.get("queries_warm").fold(Map.empty[String, Double])(numbers("queries_warm", _))
-
   /** The host label an artifact carries: hostname + core count + the
     * session's parallelism (`local[N]`, N = [[Harness.cores]]) — enough to
     * tell a committed artifact from other hardware, or a run at 8 cores

@@ -67,6 +67,15 @@ object SparkEntry {
   /** name → gate class for every registered query (see [[gateClasses]]). */
   def allGateClasses: Map[String, String] = all.map(q => q.name -> q.gate).toMap
 
+  /** Stops a run that names a query the registry does not have (Bench's
+    * and Verify's name filters): a typo would otherwise run or dump
+    * nothing and read as a pass.
+    */
+  def requireKnown(names: Set[String]): Unit = {
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q07_region_revenue")(spark, "/root/testdata/sf0.001")

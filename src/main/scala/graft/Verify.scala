@@ -12,11 +12,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     // a typo'd name would silently produce an empty dump dir + an empty
     // oracle_sql.json, which check.py reads as a vacuous pass — fail loudly
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    only.foreach(SparkEntry.requireKnown)
     def keep(name: String): Boolean = only.forall(_.contains(name))
     val spark = Harness.session(Harness.cores)
     new java.io.File(outDir).mkdirs()

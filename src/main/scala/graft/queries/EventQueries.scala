@@ -111,6 +111,27 @@ object EventQueries extends Registry {
     result
   }
 
+  /** Daily event counts per type and their 30-day spine from the first
+    * event day (q245, q246, q251). */
+  private val dailySpineCtes = """WITH ev AS (SELECT event_type, epoch_us(ts) // 86400000000 AS d
+            FROM events),
+          d0 AS (SELECT min(d) AS d0 FROM ev),
+          c AS (SELECT event_type, d, count(*) AS cnt FROM ev GROUP BY 1, 2),
+          spine AS (SELECT t.event_type, r.range AS off, d0.d0 + r.range AS d
+            FROM (SELECT DISTINCT event_type FROM c) t, d0, range(0, 30) r),"""
+
+  /** Per-user session ids: a gap over 30 minutes starts a new session
+    * (q247, q252). */
+  private val sessionIdCtes = """WITH ev AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
+          g AS (SELECT user_id, tus,
+              CASE WHEN tus - lag(tus) OVER (PARTITION BY user_id
+                ORDER BY tus) > 1800000000 THEN 1 ELSE 0 END AS gap
+            FROM ev),
+          sg AS (SELECT user_id, tus,
+              sum(gap) OVER (PARTITION BY user_id ORDER BY tus
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+            FROM g),"""
+
   override def entries: Seq[Q] = Seq(
 
     // ---- tumbling event-time window aggregation + JSON prop extraction ----
@@ -1398,12 +1419,7 @@ object EventQueries extends Registry {
               .cast("int").as("anomaly"))
           .orderBy($"event_type", $"day_offset")
       },
-      Some("""WITH ev AS (SELECT event_type, epoch_us(ts) // 86400000000 AS d
-            FROM events),
-          d0 AS (SELECT min(d) AS d0 FROM ev),
-          c AS (SELECT event_type, d, count(*) AS cnt FROM ev GROUP BY 1, 2),
-          spine AS (SELECT t.event_type, r.range AS off, d0.d0 + r.range AS d
-            FROM (SELECT DISTINCT event_type FROM c) t, d0, range(0, 30) r),
+      Some(s"""$dailySpineCtes
           filled AS (SELECT s.event_type, s.off, COALESCE(c.cnt, 0) AS a
             FROM spine s LEFT JOIN c
               ON s.event_type = c.event_type AND s.d = c.d),
@@ -1457,12 +1473,7 @@ object EventQueries extends Registry {
                     (acc, x) -> 0.5D * x + 0.5D * acc)""").as("ewma"))
           .orderBy($"event_type", $"day_offset")
       },
-      Some("""WITH ev AS (SELECT event_type, epoch_us(ts) // 86400000000 AS d
-            FROM events),
-          d0 AS (SELECT min(d) AS d0 FROM ev),
-          c AS (SELECT event_type, d, count(*) AS cnt FROM ev GROUP BY 1, 2),
-          spine AS (SELECT t.event_type, r.range AS off, d0.d0 + r.range AS d
-            FROM (SELECT DISTINCT event_type FROM c) t, d0, range(0, 30) r),
+      Some(s"""$dailySpineCtes
           filled AS (SELECT s.event_type, s.off,
               CAST(COALESCE(c.cnt, 0) AS DOUBLE) AS a
             FROM spine s LEFT JOIN c
@@ -1522,15 +1533,7 @@ object EventQueries extends Registry {
             $"n_starts".cast("long").as("n_sessions_started"))
           .orderBy($"day")
       },
-      Some("""WITH ev AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-          g AS (SELECT user_id, tus,
-              CASE WHEN tus - lag(tus) OVER (PARTITION BY user_id
-                ORDER BY tus) > 1800000000 THEN 1 ELSE 0 END AS gap
-            FROM ev),
-          sg AS (SELECT user_id, tus,
-              sum(gap) OVER (PARTITION BY user_id ORDER BY tus
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-            FROM g),
+      Some(s"""$sessionIdCtes
           sess AS (SELECT user_id, sid, min(tus) AS s, max(tus) AS e
             FROM sg GROUP BY 1, 2),
           b AS (SELECT s // 86400000000 AS day, s AS t, 1 AS delta FROM sess
@@ -1777,12 +1780,7 @@ object EventQueries extends Registry {
             when($"c_t" > $"h", 1).otherwise(0).cast("int"))
           .orderBy($"event_type", $"day_offset")
       },
-      Some("""WITH ev AS (SELECT event_type, epoch_us(ts) // 86400000000 AS d
-            FROM events),
-          d0 AS (SELECT min(d) AS d0 FROM ev),
-          c AS (SELECT event_type, d, count(*) AS cnt FROM ev GROUP BY 1, 2),
-          spine AS (SELECT t.event_type, r.range AS off, d0.d0 + r.range AS d
-            FROM (SELECT DISTINCT event_type FROM c) t, d0, range(0, 30) r),
+      Some(s"""$dailySpineCtes
           filled AS (SELECT s.event_type, s.off, COALESCE(c.cnt, 0) AS a
             FROM spine s LEFT JOIN c
               ON s.event_type = c.event_type AND s.d = c.d),
@@ -1844,15 +1842,7 @@ object EventQueries extends Registry {
             ($"dur_max".cast("double") / 1000000.0).as("max_dur_s"))
           .orderBy($"day")
       },
-      Some("""WITH ev AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-          g AS (SELECT user_id, tus,
-              CASE WHEN tus - lag(tus) OVER (PARTITION BY user_id
-                ORDER BY tus) > 1800000000 THEN 1 ELSE 0 END AS gap
-            FROM ev),
-          sg AS (SELECT user_id, tus,
-              sum(gap) OVER (PARTITION BY user_id ORDER BY tus
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-            FROM g),
+      Some(s"""$sessionIdCtes
           sess AS (SELECT user_id, sid, min(tus) AS st, max(tus) AS en,
               count(*) AS ne
             FROM sg GROUP BY 1, 2)

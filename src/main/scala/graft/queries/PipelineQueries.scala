@@ -219,6 +219,439 @@ object PipelineQueries extends Registry {
     es.map(q => if (streamingNames(q.name)) q.copy(streaming = true) else q)
   }
 
+  // ---- shared oracle fragments: each CTE that several DuckDB oracles
+  //      below repeat is written once here and interpolated at each use,
+  //      so a fix to it is made in one place (OracleSqlDigestSpec pins the
+  //      rendered texts). Oracle-only: no Spark-side code uses them. -----
+
+  /** The H.264 oracles' sampled documents: frame size in macroblocks
+    * (`wmb` x `hmb`) and QP, as `H264.ConstructH` derives them. */
+  private def h264Docs(mod: Int, rem: Int,
+      wmb: String = "1 + doc_id % 3"): String = s"""WITH d AS (
+            SELECT doc_id AS id, n_chars,
+              CAST($wmb AS BIGINT) AS wmb,
+              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
+              CAST(20 + doc_id % 8 AS BIGINT) AS qp
+            FROM documents WHERE doc_id % $mod = $rem),"""
+
+  /** H.264: one or two frames per sampled document. */
+  private val h264Frames = """fr AS (
+            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx
+            FROM d, UNNEST(range(0, 1 + id % 2)) AS t(f)),"""
+
+  /** H.264 B-frame GOP: four frames in decode order with their POC. */
+  private val h264PocFrames = """fr AS (
+            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx,
+              list_extract([0, 6, 2, 4], CAST(t.f AS INT) + 1) AS poc
+            FROM d, UNNEST(range(0, 4)) AS t(f)),"""
+
+  /** H.264 macroblock grid of every frame with its (mbx, mby) position
+    * (q312, q314). */
+  private val h264MbGrid = """mb AS (
+            SELECT fr.*, CAST(m.m AS BIGINT) AS mb,
+              CAST(m.m % wmb AS BIGINT) AS mbx,
+              CAST(m.m // wmb AS BIGINT) AS mby
+            FROM fr, UNNEST(range(0, wmb * hmb)) AS m(m)),"""
+
+  /** H.264 Intra_16x16 luma prediction mode of a macroblock by which
+    * neighbours exist (the arms of a CASE; the caller adds the ELSE). */
+  private val h264LumaModeArms = """WHEN mbx > 0 AND mby > 0 THEN
+                  list_extract([0, 1, 2, 3], CAST((id + mb) % 4 AS INT) + 1)
+                WHEN mby > 0 THEN
+                  list_extract([0, 2], CAST((id + mb) % 2 AS INT) + 1)
+                WHEN mbx > 0 THEN
+                  list_extract([1, 2], CAST((id + mb) % 2 AS INT) + 1)"""
+
+  /** H.264 intra chroma prediction mode of a macroblock by which
+    * neighbours exist (the arms of a CASE; the caller adds the ELSE). */
+  private val h264ChromaModeArms = """WHEN mbx > 0 AND mby > 0 THEN
+                  list_extract([0, 1, 2, 3], CAST((id + 2 * mb) % 4 AS INT) + 1)
+                WHEN mby > 0 THEN
+                  list_extract([0, 2], CAST((id + 2 * mb) % 2 AS INT) + 1)
+                WHEN mbx > 0 THEN
+                  list_extract([0, 1], CAST((id + 2 * mb) % 2 AS INT) + 1)"""
+
+  /** H.264 I_4x4 prediction-mode sum per frame over the 16 blocks of
+    * every I_4x4 macroblock (q312, q314; q316 frame 0 with p = "i"). */
+  private def h264I4Modes(p: String = ""): String = s"""${p}i4m AS (
+            SELECT id, frame_idx, CAST(sum(CASE
+                WHEN gx > 0 AND gy > 0 THEN (id + mb + blk) % 9
+                WHEN gy > 0 THEN
+                  list_extract([0, 2, 3, 7], CAST((id + mb + blk) % 4 AS INT) + 1)
+                WHEN gx > 0 THEN
+                  list_extract([1, 2, 8], CAST((id + mb + blk) % 3 AS INT) + 1)
+                ELSE 2 END) AS BIGINT) AS i4_mode_sum
+            FROM (
+              SELECT ${p}cls.*, CAST(bk.blk AS BIGINT) AS blk,
+                mbx * 4 + 2 * ((bk.blk // 4) % 2) + bk.blk % 2 AS gx,
+                mby * 4 + 2 * (bk.blk // 8) + (bk.blk // 2) % 2 AS gy
+              FROM ${p}cls, UNNEST(range(0, 16)) AS bk(blk)
+              WHERE isi4)
+            GROUP BY id, frame_idx),"""
+
+  /** H.264 CABAC intra MB classes (q314; q316 frame 0 with p = "i"):
+    * I_4x4 on even (id + mb), with its bin-coded CBP. */
+  private def h264CabacCls(p: String = ""): String = s"""${p}cls AS (
+            SELECT ${p}mb.*, (id + mb) % 2 = 0 AS isi4,
+              CASE WHEN (id + mb) % 2 = 0
+                THEN (id + 29 * mb) // 2 % 48 ELSE 0 END AS cbp4
+            FROM ${p}mb),"""
+
+  /** H.264 Intra_16x16 luma mode and CBP of the non-I_4x4 MBs (q314;
+    * q316 frame 0 with p = "i"). */
+  private def h264CabacPm16(p: String = ""): String = s"""${p}pm16 AS (
+            SELECT ${p}cls.*, CASE
+                $h264LumaModeArms
+                ELSE 2 END AS pm,
+              (id + mb) % 3 != 2 AS cbpl15,
+              (id + 2 + mb) % 3 AS cbpc16
+            FROM ${p}cls WHERE NOT isi4),"""
+
+  /** H.264 CABAC intra per-frame CBP and chroma-mode sums (q314; q316
+    * frame 0 with p = "i"). */
+  private def h264CabacCbpChroma(p: String = ""): String = s"""${p}cbps AS (
+            SELECT id, frame_idx,
+              CAST(sum(CASE WHEN isi4 THEN cbp4 * (mb + 1) ELSE 0 END)
+                AS BIGINT) AS cbp_sum,
+              CAST(sum(CASE WHEN isi4 THEN 1 ELSE 0 END) AS BIGINT) AS n_i4
+            FROM ${p}cls GROUP BY id, frame_idx),
+          ${p}cmode AS (
+            SELECT id, frame_idx, CAST(sum(CASE
+                $h264ChromaModeArms
+                ELSE 0 END) AS BIGINT) AS chroma_mode_sum
+            FROM ${p}cls GROUP BY id, frame_idx),"""
+
+  /** H.264 CABAC intra residual blocks: I_16x16 AC + chroma tags, I_NxN
+    * luma gated per 8x8 CBP bit (q314; q316 frame 0 with p = "i"). */
+  private def h264CabacTags(p: String = ""): String = s"""${p}tags AS (
+            SELECT c.*, CAST(tg.tag AS BIGINT) AS tag,
+              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN
+                     CASE WHEN c.isi4 THEN 16 ELSE 15 END
+                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
+                   ELSE 15 END AS ncoeffs
+            FROM (SELECT ${p}cls.*,
+                    CASE WHEN isi4 THEN cbp4 % 16
+                      WHEN (id + mb) % 3 != 2 THEN 15 ELSE 0 END AS cbpl,
+                    CASE WHEN isi4 THEN cbp4 // 16
+                      ELSE (id + 2 + mb) % 3 END AS cbpc
+                  FROM ${p}cls) c,
+              UNNEST(range(1, 27)) AS tg(tag)
+            WHERE (tg.tag BETWEEN 1 AND 16 AND
+                     (c.cbpl >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
+               OR (tg.tag BETWEEN 17 AND 18 AND c.cbpc > 0)
+               OR (tg.tag BETWEEN 19 AND 26 AND c.cbpc = 2)),"""
+
+  /** H.264 P-slice residual blocks: luma tags gated per 8x8 CBP bit, then
+    * chroma DC and AC (q309; q316 P frames with p = "p"). */
+  private def h264InterTags(p: String = ""): String = s"""${p}tags AS (
+            SELECT ${p}coded.*, CAST(tg.tag AS BIGINT) AS tag,
+              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN 16
+                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
+                   ELSE 15 END AS ncoeffs
+            FROM ${p}coded, UNNEST(range(1, 27)) AS tg(tag)
+            WHERE (tg.tag BETWEEN 1 AND 16 AND
+                   ((cbp % 16) >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
+               OR (tg.tag BETWEEN 17 AND 18 AND cbp // 16 > 0)
+               OR (tg.tag BETWEEN 19 AND 26 AND cbp // 16 = 2)),"""
+
+  /** H.264 residual levels: `lev` walks each coded level k of every
+    * residual block (tag) with its run step and coefficient count n, and
+    * `contrib` turns each level into its checksum term. `p` prefixes the
+    * CTE names for oracles that walk several slice types. */
+  private def h264Levels(p: String = ""): String = s"""${p}lev AS (
+            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
+              CASE WHEN ncoeffs = 4 THEN 1
+                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
+              CAST((id + frame_idx + mb + tag) %
+                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
+            FROM ${p}tags t, UNNEST(range(0, 3)) AS kk(k)
+            WHERE kk.k < (id + frame_idx + mb + tag) %
+              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
+          ${p}contrib AS (
+            SELECT id, frame_idx,
+              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
+              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
+              (mb * 131 + tag * 17 +
+                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
+                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
+                + k * step + 1) AS c
+            FROM ${p}lev),"""
+
+  /** H.264 wide Intra_16x16 DC levels (tag 0, magnitudes 1..25) and
+    * their checksum terms (q314; q316 frame 0 with p = "i"). */
+  private def h264WideDc(p: String = ""): String = s"""${p}widedc AS (
+            SELECT p.id, p.frame_idx, p.mb, CAST(kk.k AS BIGINT) AS k,
+              1 + CAST(p.id % 4 AS BIGINT) AS step,
+              CAST((p.id + p.frame_idx + p.mb) % 4 AS BIGINT) AS n
+            FROM ${p}pm16 p, UNNEST(range(0, 3)) AS kk(k)
+            WHERE kk.k < (p.id + p.frame_idx + p.mb) % 4),
+          ${p}widec AS (
+            SELECT id, frame_idx,
+              (1 + (id + mb + 3 * k + frame_idx) % 25) *
+              (CASE WHEN (id + mb + k) % 2 = 0 THEN 1 ELSE -1 END) *
+              (mb * 131 +
+                ((id + mb) % (16 - (n - 1) * step)) + k * step + 1) AS c
+            FROM ${p}widedc),"""
+
+  /** The oracle of q317 and q318, which differ only in the documents
+    * they sample: the CABAC B-frame construction (q313's MB classes with
+    * the bin-coded CBP), its level walk and the per-frame sums. */
+  private def h264CabacBOracle(mod: Int, rem: Int): String = s"""${h264Docs(mod, rem)}
+          $h264PocFrames
+          bmb AS (
+            -- q313's MB classes; the CBP is the bin-coded 48 sweep
+            SELECT fr.*, CAST(m.m AS BIGINT) AS mb,
+              (id + frame_idx + m.m) % 7 AS cls,
+              1 + (id + frame_idx + m.m) % 3 AS bt,
+              CAST((id + 5 * frame_idx + 29 * m.m) % 48 AS BIGINT) AS cbp
+            FROM fr, UNNEST(range(0, wmb * hmb)) AS m(m)
+            WHERE frame_idx >= 2),
+          bsums AS (
+            SELECT id, frame_idx,
+              CAST(sum(CASE WHEN cls IN (2, 4) THEN 0
+                ELSE bt * (mb + 1) END) AS BIGINT) AS b_type_sum,
+              CAST(sum(CASE WHEN cls = 2 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_b_skip,
+              CAST(sum(CASE WHEN cls = 4 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_direct,
+              CAST(sum(CASE WHEN cls = 2 THEN 0
+                ELSE cbp * (mb + 1) END) AS BIGINT) AS b_cbp_sum,
+              CAST(sum(CASE WHEN cls IN (2, 4) THEN 0 ELSE
+                (CASE WHEN bt IN (1, 3) THEN
+                  (mb * 64 + 1) * (((id + 3 * frame_idx + 5 * mb) % 17) - 8) +
+                  (mb * 64 + 3) * (((3 * id + frame_idx + 2 * mb) % 17) - 8)
+                 ELSE 0 END) +
+                (CASE WHEN bt IN (2, 3) THEN
+                  (mb * 64 + 17) * (((id + 3 * frame_idx + 5 * mb + 11) % 17) - 8) +
+                  (mb * 64 + 19) * (((3 * id + frame_idx + 2 * mb + 7) % 17) - 8)
+                 ELSE 0 END) END) AS BIGINT) AS b_mvd_checksum
+            FROM bmb GROUP BY id, frame_idx),
+          tags AS (
+            SELECT bmb.*, CAST(tg.tag AS BIGINT) AS tag,
+              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN 16
+                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
+                   ELSE 15 END AS ncoeffs
+            FROM bmb, UNNEST(range(1, 27)) AS tg(tag)
+            WHERE bmb.cls != 2 -- B_Skip MBs carry no residual
+              AND ((tg.tag BETWEEN 1 AND 16 AND
+                   ((cbp % 16) >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
+               OR (tg.tag BETWEEN 17 AND 18 AND cbp // 16 > 0)
+               OR (tg.tag BETWEEN 19 AND 26 AND cbp // 16 = 2))),
+          ${h264Levels()}
+          lsums AS (
+            SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS b_level_checksum
+            FROM contrib GROUP BY id, frame_idx)
+          SELECT fr.id, fr.frame_idx,
+            CAST(fr.poc AS BIGINT) AS poc,
+            CAST(fr.poc // 2 AS BIGINT) AS display_idx,
+            CAST(fr.wmb * 16 AS BIGINT) AS width,
+            CAST(fr.hmb * 16 AS BIGINT) AS height,
+            CAST(fr.wmb * fr.hmb AS BIGINT) AS n_mbs,
+            fr.qp AS qp,
+            coalesce(b.b_type_sum, 0) AS b_type_sum,
+            coalesce(b.b_mvd_checksum, 0) AS b_mvd_checksum,
+            coalesce(b.b_cbp_sum, 0) AS b_cbp_sum,
+            coalesce(l.b_level_checksum, 0) AS b_level_checksum,
+            coalesce(b.n_b_skip, 0) AS n_b_skip,
+            coalesce(b.n_direct, 0) AS n_direct,
+            CAST(1 AS BIGINT) AS recon_exact
+          FROM fr
+          LEFT JOIN bsums b ON b.id = fr.id AND b.frame_idx = fr.frame_idx
+          LEFT JOIN lsums l ON l.id = fr.id AND l.frame_idx = fr.frame_idx
+          ORDER BY fr.id, fr.frame_idx"""
+
+  /** The H.265 oracles' sampled documents: frame size in CTUs and QP. */
+  private def h265Docs(mod: Int, rem: Int): String = s"""WITH d AS (
+            SELECT doc_id AS id, n_chars,
+              CAST(2 + doc_id % 2 AS BIGINT) AS wctb,
+              CAST(1 + n_chars % 2 AS BIGINT) AS hctb,
+              CAST(20 + doc_id % 8 AS BIGINT) AS qp
+            FROM documents WHERE doc_id % $mod = $rem),"""
+
+  /** H.265 CTUs: each 32x32 CTU of a frame and whether it splits. */
+  private val h265Ctu = """ctu AS (
+            SELECT fr.*, CAST(t.c AS BIGINT) AS c,
+              CAST(t.c % wctb AS BIGINT) * 32 AS x32,
+              CAST(t.c // wctb AS BIGINT) * 32 AS y32,
+              (id + f + t.c) % 3 = 0 AS split32
+            FROM fr, UNNEST(range(0, wctb * hctb)) AS t(c)),"""
+
+  /** H.265: the four 16x16 quadrants of every split CTU. */
+  private val h265Quads = """q16 AS (
+            SELECT ctu.*, CAST(t.q AS BIGINT) AS q,
+              x32 + (t.q % 2) * 16 AS qx, y32 + (t.q // 2) * 16 AS qy,
+              (id + f + c + t.q) % 2 = 0 AS split16
+            FROM ctu, UNNEST(range(0, 4)) AS t(q)
+            WHERE split32),"""
+
+  /** H.265 coding-quadtree leaves: CUs of 32, 16 and 8 pixels. */
+  private val h265Cus = """cus AS (
+            SELECT id, f, qp, x32 AS cux, y32 AS cuy,
+              CAST(5 AS BIGINT) AS log2s FROM ctu WHERE NOT split32
+            UNION ALL
+            SELECT id, f, qp, qx, qy, CAST(4 AS BIGINT) FROM q16
+            WHERE NOT split16
+            UNION ALL
+            SELECT q16.id, q16.f, q16.qp,
+              qx + (t.s % 2) * 8, qy + (t.s // 2) * 8, CAST(3 AS BIGINT)
+            FROM q16, UNNEST(range(0, 4)) AS t(s)
+            WHERE split16),"""
+
+  /** H.265 inter oracles: split-flag checksums per frame. */
+  private val h265InterSplits = """splits AS (
+            SELECT id, f, CAST(sum(CASE WHEN split32 THEN c + 1 ELSE 0
+              END) AS BIGINT) AS s32
+            FROM ctu GROUP BY id, f),
+          splits16 AS (
+            SELECT id, f, CAST(sum(CASE WHEN split16 THEN c * 4 + q + 1
+              ELSE 0 END) AS BIGINT) AS s16
+            FROM q16 GROUP BY id, f),"""
+
+  /** H.265 inter oracles: intra PU modes, merge/AMVP sums, chroma
+    * modes and the transform units of every coded CU. */
+  private val h265InterModes = """-- intra PU modes (frame 0 + cls-2 CUs in P frames)
+          pus AS (
+            SELECT cuki.*, CAST(t.s2 AS BIGINT) AS s2,
+              (id + f + (cux // 8) + 2 * (cuy // 8) + log2s + 2 * t.s2)
+                % 35 AS pmode
+            FROM cuki, UNNEST(range(0, 4)) AS t(s2)
+            WHERE isintra AND t.s2 < CASE WHEN nxn THEN 4 ELSE 1 END),
+          msums AS (
+            SELECT id, f,
+              CAST(sum(pmode * (cukey * 8 + s2 + 1)) AS BIGINT)
+                AS mode_sum
+            FROM pus GROUP BY id, f),
+          cmodes AS (
+            SELECT cuki.*, icpm,
+              CASE WHEN icpm = 4 THEN pm0
+                   WHEN cand = pm0 THEN 34 ELSE cand END AS cmode
+            FROM (
+              SELECT cuki.*,
+                (id + f + (cux // 8) + (cuy // 8)) % 5 AS icpm,
+                (id + f + (cux // 8) + 2 * (cuy // 8) + log2s) % 35
+                  AS pm0,
+                list_extract([0, 26, 10, 1],
+                  CAST((id + f + (cux // 8) + (cuy // 8)) % 5 AS INT)
+                    % 4 + 1) AS cand
+              FROM cuki WHERE isintra) cuki),
+          csums AS (
+            SELECT id, f,
+              CAST(sum(cmode * (cukey + 1)) AS BIGINT)
+                AS chroma_mode_sum
+            FROM cmodes GROUP BY id, f),
+          -- unified TU table: intra CUs carry the q315 layout; inter
+          -- CUs with rqt_root_cbf carry TU 0/4/5 with the cbf_luma
+          -- inference (both chroma zero -> luma forced on)
+          tus AS (
+            SELECT cuki.*, CAST(t.s2 AS BIGINT) AS s2,
+              cukey * 8 + t.s2 AS tag,
+              CASE WHEN t.s2 >= 4 THEN (1 << (log2s - 1))
+                   WHEN isintra AND nxn THEN 4 ELSE (1 << log2s)
+                   END AS ntbs
+            FROM cuki, UNNEST(range(0, 6)) AS t(s2)
+            WHERE CASE
+              WHEN isintra THEN
+                (t.s2 >= 4 OR t.s2 < CASE WHEN nxn THEN 4 ELSE 1 END)
+                AND (id + cukey + t.s2) % 4 != 3
+              WHEN rootcbf THEN
+                (t.s2 = 4 AND (id + cukey) % 3 != 2) OR
+                (t.s2 = 5 AND (id + 2 * cukey + 1) % 3 != 2) OR
+                (t.s2 = 0 AND (
+                  ((id + cukey) % 3 = 2 AND (id + 2 * cukey + 1) % 3 = 2)
+                  OR (id + cukey) % 4 != 3))
+              ELSE FALSE END),"""
+
+  /** H.265 residuals over `tus`: coded-block flags, last-position
+    * and level checksums per frame. */
+  private val h265Levels = """tuk AS (
+            SELECT tus.*, 1 + (id + tag) % 3 AS step,
+              least(1 + (id + tag) % 8,
+                (ntbs * ntbs - 1) // (1 + (id + tag) % 3) + 1) AS nsig
+            FROM tus),
+          cbfsums AS (
+            SELECT id, f,
+              CAST(sum(tag + 1) AS BIGINT) AS cbf_sum,
+              CAST(sum((step * (nsig - 1)) * (tag + 1)) AS BIGINT)
+                AS last_checksum
+            FROM tuk GROUP BY id, f),
+          lev AS (
+            SELECT tuk.id, tuk.f, tuk.tag, CAST(t.k AS BIGINT) AS k
+            FROM tuk, UNNEST(range(0, 8)) AS t(k)
+            WHERE t.k < nsig),
+          lsums AS (
+            SELECT id, f, CAST(sum(
+              (1 + (id + tag + k) % 5 +
+                CASE WHEN k = 0 AND (id + tag) % 7 = 0 THEN 40 ELSE 0
+                END) *
+              (CASE WHEN (id + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
+              (tag * 31 + k + 1)) AS BIGINT) AS level_checksum
+            FROM lev GROUP BY id, f)"""
+
+  /** MPEG-1 Layer II quantization of the scaled sample `u` to code `c`
+    * with `nlev` levels of `nb` bits (q302, q310). */
+  private val mp2QuantizeSql = """LEAST(CAST(nlev - 1 AS BIGINT), GREATEST(CAST(0 AS BIGINT),
+                CAST(round((u / (pow(2, nb) / nlev)
+                  - (CASE WHEN nlev IN (3, 5, 9) THEN 0.5
+                     ELSE pow(2.0, 1 - nb) END) + 1) * pow(2, nb - 1))
+                  AS BIGINT))) AS c"""
+
+  /** Precision, recall and F1 from tp/fp/fn columns, as
+    * `Metrics.withPrfAccuracyEffort` computes them (all-zero counts
+    * score 1.0), in its float operation order (q34, q37). */
+  private val prfColumns = """CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
+               WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END AS precision,
+          CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
+               WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END AS recall,
+          CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
+               WHEN (CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
+                  + (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END) = 0 THEN 0.0
+               ELSE 2 * (CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
+                      * (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END)
+                    / ((CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
+                     + (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END)) END AS f1,"""
+
+  /** The n-to-one matching prompt `PromptRenderer.n2oneQuestion` renders,
+    * rebuilt from a `srcjson s` (schema JSON `sj`, option lines) joined to
+    * the target column `g` (q34, q47, q48). */
+  private def n2onePrompt(alias: String): String =
+    s"""'Source schema: ' || s.sj || chr(10) ||
+            'Target attribute: "t_' || g.name || '"' || chr(10) ||
+            'Which source column matches the target attribute? Answer as {"matches": [...]}.' || chr(10) ||
+            'Options:' || chr(10) || s.optlines || chr(10) || '- there is no match.' AS $alias"""
+
+  /** q39 and q188's oracle: gaps-and-islands sessions over the first
+    * 2000 events, keeping the sessions their streams have closed. */
+  private val closedSessionsOracle = """WITH e AS (SELECT user_id, ts FROM events
+          ORDER BY ts, event_id LIMIT 2000),
+        wm AS (SELECT max(epoch_ms(ts)) - 600000 AS w FROM e),
+        g AS (SELECT user_id, ts,
+            CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                   OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 1800000000
+                 THEN 1 ELSE 0 END AS new_sess
+          FROM e),
+        sess AS (SELECT user_id, ts,
+            sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
+                                ROWS UNBOUNDED PRECEDING) AS sess_idx
+          FROM g),
+        agg AS (SELECT user_id, sess_idx,
+            min(ts) AS session_start, max(ts) AS session_end,
+            count(*) AS n_events
+          FROM sess GROUP BY user_id, sess_idx),
+        lst AS (SELECT *, max(sess_idx) OVER (PARTITION BY user_id) AS max_idx FROM agg)
+        SELECT user_id, session_start, session_end, n_events
+        FROM lst, wm
+        WHERE sess_idx < max_idx OR epoch_ms(session_end) + 1800000 < w
+        ORDER BY user_id, session_start"""
+
+  /** q119 and q132's purchases `p` and clicks `c` among the first 2000
+    * purchase/click events. */
+  private val purchaseClickCtes = """WITH e AS (SELECT ts, event_id, user_id, event_type FROM events
+            WHERE event_type IN ('purchase', 'click')
+            ORDER BY ts, event_id LIMIT 2000),
+          p AS (SELECT user_id, event_id AS purchase_id, ts AS p_ts
+                FROM e WHERE event_type = 'purchase'),
+          c AS (SELECT user_id, ts AS c_ts FROM e WHERE event_type = 'click')"""
+
   private def rawEntries: Seq[Q] = Seq(
 
     // ---- §7.2 flagship slice: full matching pipeline with mock LLM -------
@@ -302,10 +735,7 @@ object PipelineQueries extends Registry {
           GROUP BY c.t),
         q AS (
           SELECT s.t, 'src:' || s.t || '|tgt:' || s.t AS case_id, 't_' || g.name AS tgt,
-            'Source schema: ' || s.sj || chr(10) ||
-            'Target attribute: "t_' || g.name || '"' || chr(10) ||
-            'Which source column matches the target attribute? Answer as {"matches": [...]}.' || chr(10) ||
-            'Options:' || chr(10) || s.optlines || chr(10) || '- there is no match.' AS prompt
+            ${n2onePrompt("prompt")}
           FROM srcjson s JOIN cols g ON s.t = g.t),
         cands AS (
           SELECT q.t, q.case_id, q.tgt, c.name AS cand, q.prompt FROM q JOIN cols c ON c.t = q.t
@@ -333,17 +763,7 @@ object PipelineQueries extends Registry {
           LEFT JOIN (SELECT case_id, count(*) AS n FROM (SELECT * FROM preds EXCEPT SELECT * FROM gold) GROUP BY case_id) fp USING (case_id)
           LEFT JOIN (SELECT case_id, count(*) AS n FROM (SELECT * FROM gold EXCEPT SELECT * FROM preds) GROUP BY case_id) fn USING (case_id))
         SELECT case_id, tp, fp, fn,
-          CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
-               WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END AS precision,
-          CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
-               WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END AS recall,
-          CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
-               WHEN (CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
-                  + (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END) = 0 THEN 0.0
-               ELSE 2 * (CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
-                      * (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END)
-                    / ((CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
-                     + (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END)) END AS f1,
+          $prfColumns
           CASE WHEN tp + fn = 0 THEN 0.0 ELSE (3 * fn + fp) / (tp + fn) END AS effort
         FROM counts
         ORDER BY case_id""")),
@@ -585,24 +1005,14 @@ object PipelineQueries extends Registry {
             $"tp", $"fp", $"fn", lit(0.0).as("tn"))
         graft.eval.Metrics.withPrfAccuracyEffort(counts).drop("tn", "accuracy2")
       },
-      Some("""WITH p AS (SELECT o_custkey FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1995),
+      Some(s"""WITH p AS (SELECT o_custkey FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1995),
         g AS (SELECT o_custkey FROM orders WHERE EXTRACT(year FROM o_orderdate) = 1996),
         c AS (SELECT 'orders_1995_vs_1996' AS relation,
           CAST((SELECT count(*) FROM (SELECT o_custkey FROM p INTERSECT SELECT o_custkey FROM g)) AS DOUBLE) AS tp,
           CAST((SELECT count(*) FROM (SELECT o_custkey FROM p EXCEPT SELECT o_custkey FROM g)) AS DOUBLE) AS fp,
           CAST((SELECT count(*) FROM (SELECT o_custkey FROM g EXCEPT SELECT o_custkey FROM p)) AS DOUBLE) AS fn)
         SELECT relation, tp, fp, fn,
-          CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
-               WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END AS precision,
-          CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
-               WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END AS recall,
-          CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 1.0
-               WHEN (CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
-                  + (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END) = 0 THEN 0.0
-               ELSE 2 * (CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
-                      * (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END)
-                    / ((CASE WHEN tp + fp = 0 THEN 0.0 ELSE tp / (tp + fp) END)
-                     + (CASE WHEN tp + fn = 0 THEN 0.0 ELSE tp / (tp + fn) END)) END AS f1,
+          $prfColumns
           CASE WHEN tp + fn = 0 THEN 0.0
                ELSE (3 * fn + fp) / (tp + fn) END AS effort
         FROM c""")),
@@ -1636,7 +2046,7 @@ object PipelineQueries extends Registry {
             "synth_ok")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH fr AS (
+      Some(s"""WITH fr AS (
             SELECT doc_id AS id, CAST(t.f AS BIGINT) AS frame_idx
             FROM documents, UNNEST(range(0, 2 + doc_id % 3)) AS t(f)
             WHERE doc_id % 11 = 3),
@@ -1666,11 +2076,7 @@ object PipelineQueries extends Registry {
             FROM cell WHERE nlev > 0),
           code AS (
             SELECT id, frame_idx, sb, t, sfi, nlev,
-              LEAST(CAST(nlev - 1 AS BIGINT), GREATEST(CAST(0 AS BIGINT),
-                CAST(round((u / (pow(2, nb) / nlev)
-                  - (CASE WHEN nlev IN (3, 5, 9) THEN 0.5
-                     ELSE pow(2.0, 1 - nb) END) + 1) * pow(2, nb - 1))
-                  AS BIGINT))) AS c
+              $mp2QuantizeSql
             FROM qc),
           agg AS (
             SELECT id, frame_idx,
@@ -1741,15 +2147,8 @@ object PipelineQueries extends Registry {
             "mode_sum", "chroma_mode_sum", "level_checksum", "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(1 + doc_id % 3 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 13 = 5),
-          fr AS (
-            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx
-            FROM d, UNNEST(range(0, 1 + id % 2)) AS t(f)),
+      Some(s"""${h264Docs(13, 5)}
+          $h264Frames
           mb AS (
             SELECT fr.*, CAST(m.m AS BIGINT) AS mb,
               CAST(m.m % wmb AS BIGINT) AS mbx,
@@ -1760,20 +2159,10 @@ object PipelineQueries extends Registry {
           modes AS (
             SELECT id, frame_idx, mb,
               CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([1, 2], CAST((id + mb) % 2 AS INT) + 1)
+                $h264LumaModeArms
                 ELSE 2 END AS pm,
               CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + 2 * mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + 2 * mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([0, 1], CAST((id + 2 * mb) % 2 AS INT) + 1)
+                $h264ChromaModeArms
                 ELSE 0 END AS cm
             FROM mb),
           tags AS (
@@ -1786,24 +2175,7 @@ object PipelineQueries extends Registry {
                OR (tg.tag BETWEEN 1 AND 16 AND cbpl)
                OR (tg.tag BETWEEN 17 AND 18 AND cbpc > 0)
                OR (tg.tag BETWEEN 19 AND 26 AND cbpc = 2)),
-          lev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM tags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          contrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM lev),
+          ${h264Levels()}
           sums AS (
             SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS level_checksum
             FROM contrib GROUP BY id, frame_idx),
@@ -1870,15 +2242,8 @@ object PipelineQueries extends Registry {
             "level_checksum", "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(1 + doc_id % 3 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 17 = 7),
-          fr AS (
-            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx
-            FROM d, UNNEST(range(0, 1 + id % 2)) AS t(f)),
+      Some(s"""${h264Docs(17, 7)}
+          $h264Frames
           mb AS (
             SELECT fr.*, CAST(m.m AS BIGINT) AS mb,
               CAST(m.m % wmb AS BIGINT) AS mbx,
@@ -1894,22 +2259,12 @@ object PipelineQueries extends Registry {
             FROM fr, UNNEST(range(0, wmb * hmb)) AS m(m)),
           modes16 AS (
             SELECT id, frame_idx, sum(CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([1, 2], CAST((id + mb) % 2 AS INT) + 1)
+                $h264LumaModeArms
                 ELSE 2 END) AS mode_sum
             FROM mb WHERE NOT isi4 GROUP BY id, frame_idx),
           cmodes AS (
             SELECT id, frame_idx, sum(CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + 2 * mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + 2 * mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([0, 1], CAST((id + 2 * mb) % 2 AS INT) + 1)
+                $h264ChromaModeArms
                 ELSE 0 END) AS chroma_mode_sum
             FROM mb GROUP BY id, frame_idx),
           i4m AS (
@@ -1942,24 +2297,7 @@ object PipelineQueries extends Registry {
                    ((isi4 AND cbpc4 > 0) OR (NOT isi4 AND cbpc16 > 0)))
                OR (tg.tag BETWEEN 19 AND 26 AND
                    ((isi4 AND cbpc4 = 2) OR (NOT isi4 AND cbpc16 = 2)))),
-          lev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM tags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          contrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM lev),
+          ${h264Levels()}
           sums AS (
             SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS level_checksum
             FROM contrib GROUP BY id, frame_idx),
@@ -2039,12 +2377,7 @@ object PipelineQueries extends Registry {
             "level_checksum", "recon_exact", "idr_ok")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(1 + doc_id % 3 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 19 = 9),
+      Some(s"""${h264Docs(19, 9)}
           fr AS (
             SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx
             FROM d, UNNEST(range(1, 3 + id % 2)) AS t(f)),
@@ -2082,34 +2415,8 @@ object PipelineQueries extends Registry {
             SELECT id, frame_idx,
               CAST(sum(CASE WHEN skip THEN 1 ELSE 0 END) AS BIGINT) AS n_skip
             FROM mb GROUP BY id, frame_idx),
-          tags AS (
-            SELECT coded.*, CAST(tg.tag AS BIGINT) AS tag,
-              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN 16
-                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
-                   ELSE 15 END AS ncoeffs
-            FROM coded, UNNEST(range(1, 27)) AS tg(tag)
-            WHERE (tg.tag BETWEEN 1 AND 16 AND
-                   ((cbp % 16) >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
-               OR (tg.tag BETWEEN 17 AND 18 AND cbp // 16 > 0)
-               OR (tg.tag BETWEEN 19 AND 26 AND cbp // 16 = 2)),
-          lev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM tags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          contrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM lev),
+          ${h264InterTags()}
+          ${h264Levels()}
           lsums AS (
             SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS level_checksum
             FROM contrib GROUP BY id, frame_idx)
@@ -2181,20 +2488,9 @@ object PipelineQueries extends Registry {
             "pcm_checksum", "level_checksum", "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(2 + doc_id % 2 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 31 = 17),
-          fr AS (
-            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx
-            FROM d, UNNEST(range(0, 1 + id % 2)) AS t(f)),
-          mb AS (
-            SELECT fr.*, CAST(m.m AS BIGINT) AS mb,
-              CAST(m.m % wmb AS BIGINT) AS mbx,
-              CAST(m.m // wmb AS BIGINT) AS mby
-            FROM fr, UNNEST(range(0, wmb * hmb)) AS m(m)),
+      Some(s"""${h264Docs(31, 17, wmb = "2 + doc_id % 2")}
+          $h264Frames
+          $h264MbGrid
           cls AS (
             SELECT mb.*,
               mbx = 0 AND (id + mby) % 2 = 0 AS ispcm,
@@ -2225,29 +2521,10 @@ object PipelineQueries extends Registry {
             FROM cls WHERE isi16 GROUP BY id, frame_idx),
           cmode AS (
             SELECT id, frame_idx, CAST(sum(CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + 2 * mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + 2 * mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([0, 1], CAST((id + 2 * mb) % 2 AS INT) + 1)
+                $h264ChromaModeArms
                 ELSE 0 END) AS BIGINT) AS chroma_mode_sum
             FROM cls WHERE NOT ispcm GROUP BY id, frame_idx),
-          i4m AS (
-            SELECT id, frame_idx, CAST(sum(CASE
-                WHEN gx > 0 AND gy > 0 THEN (id + mb + blk) % 9
-                WHEN gy > 0 THEN
-                  list_extract([0, 2, 3, 7], CAST((id + mb + blk) % 4 AS INT) + 1)
-                WHEN gx > 0 THEN
-                  list_extract([1, 2, 8], CAST((id + mb + blk) % 3 AS INT) + 1)
-                ELSE 2 END) AS BIGINT) AS i4_mode_sum
-            FROM (
-              SELECT cls.*, CAST(bk.blk AS BIGINT) AS blk,
-                mbx * 4 + 2 * ((bk.blk // 4) % 2) + bk.blk % 2 AS gx,
-                mby * 4 + 2 * (bk.blk // 8) + (bk.blk // 2) % 2 AS gy
-              FROM cls, UNNEST(range(0, 16)) AS bk(blk)
-              WHERE isi4)
-            GROUP BY id, frame_idx),
+          ${h264I4Modes()}
           -- CBP per MB class
           cbp AS (
             SELECT cls.*,
@@ -2278,24 +2555,7 @@ object PipelineQueries extends Registry {
                      leftpcm AND (tg.tag - 1) IN (0, 2, 8, 10)))
                OR (tg.tag BETWEEN 17 AND 18 AND cbpc > 0)
                OR (tg.tag BETWEEN 19 AND 26 AND cbpc = 2)),
-          lev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM tags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          contrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM lev),
+          ${h264Levels()}
           -- dense-block contributions (the nC >= 8 FLC blocks)
           dense AS (
             SELECT cbp.id, cbp.frame_idx, CAST(bb.b AS BIGINT) AS b,
@@ -2398,16 +2658,8 @@ object PipelineQueries extends Registry {
             "b_level_checksum", "n_b_skip", "n_direct", "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(1 + doc_id % 3 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 37 = 19),
-          fr AS (
-            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx,
-              list_extract([0, 6, 2, 4], CAST(t.f AS INT) + 1) AS poc
-            FROM d, UNNEST(range(0, 4)) AS t(f)),
+      Some(s"""${h264Docs(37, 19)}
+          $h264PocFrames
           bmb AS (
             -- MB classes (r16): cls 2 -> B_Skip (no syntax, no levels),
             -- cls 4 -> B_Direct_16x16 (CBP + levels, no mvd), else the
@@ -2452,24 +2704,7 @@ object PipelineQueries extends Registry {
                    list_extract([0, 16, 1, 2, 4, 8, 32, 3], cbpidx + 1) // 16 > 0)
                OR (tg.tag BETWEEN 19 AND 26 AND
                    list_extract([0, 16, 1, 2, 4, 8, 32, 3], cbpidx + 1) // 16 = 2))),
-          lev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM tags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          contrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM lev),
+          ${h264Levels()}
           lsums AS (
             SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS b_level_checksum
             FROM contrib GROUP BY id, frame_idx)
@@ -2538,38 +2773,12 @@ object PipelineQueries extends Registry {
             "cbp_sum", "bin_checksum", "level_checksum", "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(2 + doc_id % 2 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 41 = 23),
-          fr AS (
-            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx
-            FROM d, UNNEST(range(0, 1 + id % 2)) AS t(f)),
-          mb AS (
-            SELECT fr.*, CAST(m.m AS BIGINT) AS mb,
-              CAST(m.m % wmb AS BIGINT) AS mbx,
-              CAST(m.m // wmb AS BIGINT) AS mby
-            FROM fr, UNNEST(range(0, wmb * hmb)) AS m(m)),
-          cls AS (
-            SELECT mb.*, (id + mb) % 2 = 0 AS isi4,
-              CASE WHEN (id + mb) % 2 = 0
-                THEN (id + 29 * mb) // 2 % 48 ELSE 0 END AS cbp4
-            FROM mb),
+      Some(s"""${h264Docs(41, 23, wmb = "2 + doc_id % 2")}
+          $h264Frames
+          $h264MbGrid
+          ${h264CabacCls()}
           -- I_16x16 prediction mode, availability-aware (q303 rule)
-          pm16 AS (
-            SELECT cls.*, CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([1, 2], CAST((id + mb) % 2 AS INT) + 1)
-                ELSE 2 END AS pm,
-              (id + mb) % 3 != 2 AS cbpl15,
-              (id + 2 + mb) % 3 AS cbpc16
-            FROM cls WHERE NOT isi4),
+          ${h264CabacPm16()}
           m16 AS (
             SELECT id, frame_idx,
               CAST(sum(pm) AS BIGINT) AS mode_sum,
@@ -2584,88 +2793,14 @@ object PipelineQueries extends Registry {
                 CASE WHEN pm % 2 = 1 THEN mb * 8 + 7 ELSE 0 END)
                 AS BIGINT) AS bin_checksum
             FROM pm16 GROUP BY id, frame_idx),
-          cbps AS (
-            SELECT id, frame_idx,
-              CAST(sum(CASE WHEN isi4 THEN cbp4 * (mb + 1) ELSE 0 END)
-                AS BIGINT) AS cbp_sum,
-              CAST(sum(CASE WHEN isi4 THEN 1 ELSE 0 END) AS BIGINT) AS n_i4
-            FROM cls GROUP BY id, frame_idx),
-          cmode AS (
-            SELECT id, frame_idx, CAST(sum(CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + 2 * mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + 2 * mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([0, 1], CAST((id + 2 * mb) % 2 AS INT) + 1)
-                ELSE 0 END) AS BIGINT) AS chroma_mode_sum
-            FROM cls GROUP BY id, frame_idx),
-          i4m AS (
-            SELECT id, frame_idx, CAST(sum(CASE
-                WHEN gx > 0 AND gy > 0 THEN (id + mb + blk) % 9
-                WHEN gy > 0 THEN
-                  list_extract([0, 2, 3, 7], CAST((id + mb + blk) % 4 AS INT) + 1)
-                WHEN gx > 0 THEN
-                  list_extract([1, 2, 8], CAST((id + mb + blk) % 3 AS INT) + 1)
-                ELSE 2 END) AS BIGINT) AS i4_mode_sum
-            FROM (
-              SELECT cls.*, CAST(bk.blk AS BIGINT) AS blk,
-                mbx * 4 + 2 * ((bk.blk // 4) % 2) + bk.blk % 2 AS gx,
-                mby * 4 + 2 * (bk.blk // 8) + (bk.blk // 2) % 2 AS gy
-              FROM cls, UNNEST(range(0, 16)) AS bk(blk)
-              WHERE isi4)
-            GROUP BY id, frame_idx),
+          ${h264CabacCbpChroma()}
+          ${h264I4Modes()}
           -- standard blockLevels contributions: I_16x16 AC + chroma,
           -- I_NxN luma gated per 8x8 CBP bit
-          tags AS (
-            SELECT c.*, CAST(tg.tag AS BIGINT) AS tag,
-              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN
-                     CASE WHEN c.isi4 THEN 16 ELSE 15 END
-                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
-                   ELSE 15 END AS ncoeffs
-            FROM (SELECT cls.*,
-                    CASE WHEN isi4 THEN cbp4 % 16
-                      WHEN (id + mb) % 3 != 2 THEN 15 ELSE 0 END AS cbpl,
-                    CASE WHEN isi4 THEN cbp4 // 16
-                      ELSE (id + 2 + mb) % 3 END AS cbpc
-                  FROM cls) c,
-              UNNEST(range(1, 27)) AS tg(tag)
-            WHERE (tg.tag BETWEEN 1 AND 16 AND
-                     (c.cbpl >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
-               OR (tg.tag BETWEEN 17 AND 18 AND c.cbpc > 0)
-               OR (tg.tag BETWEEN 19 AND 26 AND c.cbpc = 2)),
-          lev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM tags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          contrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM lev),
+          ${h264CabacTags()}
+          ${h264Levels()}
           -- WIDE I_16x16 DC contributions (tag 0, magnitudes 1..25)
-          widedc AS (
-            SELECT p.id, p.frame_idx, p.mb, CAST(kk.k AS BIGINT) AS k,
-              1 + CAST(p.id % 4 AS BIGINT) AS step,
-              CAST((p.id + p.frame_idx + p.mb) % 4 AS BIGINT) AS n
-            FROM pm16 p, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (p.id + p.frame_idx + p.mb) % 4),
-          widec AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + 3 * k + frame_idx) % 25) *
-              (CASE WHEN (id + mb + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 +
-                ((id + mb) % (16 - (n - 1) * step)) + k * step + 1) AS c
-            FROM widedc),
+          ${h264WideDc()}
           lsums AS (
             SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS level_checksum
             FROM (SELECT * FROM contrib UNION ALL SELECT * FROM widec)
@@ -2742,12 +2877,7 @@ object PipelineQueries extends Registry {
             "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(1 + doc_id % 3 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 47 = 19),
+      Some(s"""${h264Docs(47, 19)}
           fr AS (
             SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx
             FROM d, UNNEST(range(0, 3 + id % 2)) AS t(f)),
@@ -2758,23 +2888,8 @@ object PipelineQueries extends Registry {
               CAST(m.m // wmb AS BIGINT) AS mby
             FROM fr, UNNEST(range(0, wmb * hmb)) AS m(m)
             WHERE frame_idx = 0),
-          icls AS (
-            SELECT imb.*, (id + mb) % 2 = 0 AS isi4,
-              CASE WHEN (id + mb) % 2 = 0
-                THEN (id + 29 * mb) // 2 % 48 ELSE 0 END AS cbp4
-            FROM imb),
-          ipm16 AS (
-            SELECT icls.*, CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([1, 2], CAST((id + mb) % 2 AS INT) + 1)
-                ELSE 2 END AS pm,
-              (id + mb) % 3 != 2 AS cbpl15,
-              (id + 2 + mb) % 3 AS cbpc16
-            FROM icls WHERE NOT isi4),
+          ${h264CabacCls("i")}
+          ${h264CabacPm16("i")}
           im16 AS (
             SELECT id, frame_idx,
               CAST(sum(pm) AS BIGINT) AS mode_sum,
@@ -2786,85 +2901,11 @@ object PipelineQueries extends Registry {
                 CASE WHEN pm % 2 = 1 THEN mb * 8 + 7 ELSE 0 END)
                 AS BIGINT) AS bin_checksum
             FROM ipm16 GROUP BY id, frame_idx),
-          icbps AS (
-            SELECT id, frame_idx,
-              CAST(sum(CASE WHEN isi4 THEN cbp4 * (mb + 1) ELSE 0 END)
-                AS BIGINT) AS cbp_sum,
-              CAST(sum(CASE WHEN isi4 THEN 1 ELSE 0 END) AS BIGINT) AS n_i4
-            FROM icls GROUP BY id, frame_idx),
-          icmode AS (
-            SELECT id, frame_idx, CAST(sum(CASE
-                WHEN mbx > 0 AND mby > 0 THEN
-                  list_extract([0, 1, 2, 3], CAST((id + 2 * mb) % 4 AS INT) + 1)
-                WHEN mby > 0 THEN
-                  list_extract([0, 2], CAST((id + 2 * mb) % 2 AS INT) + 1)
-                WHEN mbx > 0 THEN
-                  list_extract([0, 1], CAST((id + 2 * mb) % 2 AS INT) + 1)
-                ELSE 0 END) AS BIGINT) AS chroma_mode_sum
-            FROM icls GROUP BY id, frame_idx),
-          ii4m AS (
-            SELECT id, frame_idx, CAST(sum(CASE
-                WHEN gx > 0 AND gy > 0 THEN (id + mb + blk) % 9
-                WHEN gy > 0 THEN
-                  list_extract([0, 2, 3, 7], CAST((id + mb + blk) % 4 AS INT) + 1)
-                WHEN gx > 0 THEN
-                  list_extract([1, 2, 8], CAST((id + mb + blk) % 3 AS INT) + 1)
-                ELSE 2 END) AS BIGINT) AS i4_mode_sum
-            FROM (
-              SELECT icls.*, CAST(bk.blk AS BIGINT) AS blk,
-                mbx * 4 + 2 * ((bk.blk // 4) % 2) + bk.blk % 2 AS gx,
-                mby * 4 + 2 * (bk.blk // 8) + (bk.blk // 2) % 2 AS gy
-              FROM icls, UNNEST(range(0, 16)) AS bk(blk)
-              WHERE isi4)
-            GROUP BY id, frame_idx),
-          itags AS (
-            SELECT c.*, CAST(tg.tag AS BIGINT) AS tag,
-              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN
-                     CASE WHEN c.isi4 THEN 16 ELSE 15 END
-                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
-                   ELSE 15 END AS ncoeffs
-            FROM (SELECT icls.*,
-                    CASE WHEN isi4 THEN cbp4 % 16
-                      WHEN (id + mb) % 3 != 2 THEN 15 ELSE 0 END AS cbpl,
-                    CASE WHEN isi4 THEN cbp4 // 16
-                      ELSE (id + 2 + mb) % 3 END AS cbpc
-                  FROM icls) c,
-              UNNEST(range(1, 27)) AS tg(tag)
-            WHERE (tg.tag BETWEEN 1 AND 16 AND
-                     (c.cbpl >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
-               OR (tg.tag BETWEEN 17 AND 18 AND c.cbpc > 0)
-               OR (tg.tag BETWEEN 19 AND 26 AND c.cbpc = 2)),
-          ilev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM itags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          icontrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM ilev),
-          iwidedc AS (
-            SELECT p.id, p.frame_idx, p.mb, CAST(kk.k AS BIGINT) AS k,
-              1 + CAST(p.id % 4 AS BIGINT) AS step,
-              CAST((p.id + p.frame_idx + p.mb) % 4 AS BIGINT) AS n
-            FROM ipm16 p, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (p.id + p.frame_idx + p.mb) % 4),
-          iwidec AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + 3 * k + frame_idx) % 25) *
-              (CASE WHEN (id + mb + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 +
-                ((id + mb) % (16 - (n - 1) * step)) + k * step + 1) AS c
-            FROM iwidedc),
+          ${h264CabacCbpChroma("i")}
+          ${h264I4Modes("i")}
+          ${h264CabacTags("i")}
+          ${h264Levels("i")}
+          ${h264WideDc("i")}
           ilsums AS (
             SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS level_checksum
             FROM (SELECT * FROM icontrib UNION ALL SELECT * FROM iwidec)
@@ -2906,34 +2947,8 @@ object PipelineQueries extends Registry {
             SELECT id, frame_idx,
               CAST(sum(CASE WHEN skip THEN 1 ELSE 0 END) AS BIGINT) AS n_skip
             FROM pmb GROUP BY id, frame_idx),
-          ptags AS (
-            SELECT pcoded.*, CAST(tg.tag AS BIGINT) AS tag,
-              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN 16
-                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
-                   ELSE 15 END AS ncoeffs
-            FROM pcoded, UNNEST(range(1, 27)) AS tg(tag)
-            WHERE (tg.tag BETWEEN 1 AND 16 AND
-                   ((cbp % 16) >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
-               OR (tg.tag BETWEEN 17 AND 18 AND cbp // 16 > 0)
-               OR (tg.tag BETWEEN 19 AND 26 AND cbp // 16 = 2)),
-          plev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM ptags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          pcontrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM plev),
+          ${h264InterTags("p")}
+          ${h264Levels("p")}
           plsums AS (
             SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS level_checksum
             FROM pcontrib GROUP BY id, frame_idx)
@@ -3019,94 +3034,7 @@ object PipelineQueries extends Registry {
             "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(1 + doc_id % 3 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 53 = 23),
-          fr AS (
-            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx,
-              list_extract([0, 6, 2, 4], CAST(t.f AS INT) + 1) AS poc
-            FROM d, UNNEST(range(0, 4)) AS t(f)),
-          bmb AS (
-            -- q313's MB classes; the CBP is the bin-coded 48 sweep
-            SELECT fr.*, CAST(m.m AS BIGINT) AS mb,
-              (id + frame_idx + m.m) % 7 AS cls,
-              1 + (id + frame_idx + m.m) % 3 AS bt,
-              CAST((id + 5 * frame_idx + 29 * m.m) % 48 AS BIGINT) AS cbp
-            FROM fr, UNNEST(range(0, wmb * hmb)) AS m(m)
-            WHERE frame_idx >= 2),
-          bsums AS (
-            SELECT id, frame_idx,
-              CAST(sum(CASE WHEN cls IN (2, 4) THEN 0
-                ELSE bt * (mb + 1) END) AS BIGINT) AS b_type_sum,
-              CAST(sum(CASE WHEN cls = 2 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_b_skip,
-              CAST(sum(CASE WHEN cls = 4 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_direct,
-              CAST(sum(CASE WHEN cls = 2 THEN 0
-                ELSE cbp * (mb + 1) END) AS BIGINT) AS b_cbp_sum,
-              CAST(sum(CASE WHEN cls IN (2, 4) THEN 0 ELSE
-                (CASE WHEN bt IN (1, 3) THEN
-                  (mb * 64 + 1) * (((id + 3 * frame_idx + 5 * mb) % 17) - 8) +
-                  (mb * 64 + 3) * (((3 * id + frame_idx + 2 * mb) % 17) - 8)
-                 ELSE 0 END) +
-                (CASE WHEN bt IN (2, 3) THEN
-                  (mb * 64 + 17) * (((id + 3 * frame_idx + 5 * mb + 11) % 17) - 8) +
-                  (mb * 64 + 19) * (((3 * id + frame_idx + 2 * mb + 7) % 17) - 8)
-                 ELSE 0 END) END) AS BIGINT) AS b_mvd_checksum
-            FROM bmb GROUP BY id, frame_idx),
-          tags AS (
-            SELECT bmb.*, CAST(tg.tag AS BIGINT) AS tag,
-              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN 16
-                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
-                   ELSE 15 END AS ncoeffs
-            FROM bmb, UNNEST(range(1, 27)) AS tg(tag)
-            WHERE bmb.cls != 2 -- B_Skip MBs carry no residual
-              AND ((tg.tag BETWEEN 1 AND 16 AND
-                   ((cbp % 16) >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
-               OR (tg.tag BETWEEN 17 AND 18 AND cbp // 16 > 0)
-               OR (tg.tag BETWEEN 19 AND 26 AND cbp // 16 = 2))),
-          lev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM tags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          contrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM lev),
-          lsums AS (
-            SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS b_level_checksum
-            FROM contrib GROUP BY id, frame_idx)
-          SELECT fr.id, fr.frame_idx,
-            CAST(fr.poc AS BIGINT) AS poc,
-            CAST(fr.poc // 2 AS BIGINT) AS display_idx,
-            CAST(fr.wmb * 16 AS BIGINT) AS width,
-            CAST(fr.hmb * 16 AS BIGINT) AS height,
-            CAST(fr.wmb * fr.hmb AS BIGINT) AS n_mbs,
-            fr.qp AS qp,
-            coalesce(b.b_type_sum, 0) AS b_type_sum,
-            coalesce(b.b_mvd_checksum, 0) AS b_mvd_checksum,
-            coalesce(b.b_cbp_sum, 0) AS b_cbp_sum,
-            coalesce(l.b_level_checksum, 0) AS b_level_checksum,
-            coalesce(b.n_b_skip, 0) AS n_b_skip,
-            coalesce(b.n_direct, 0) AS n_direct,
-            CAST(1 AS BIGINT) AS recon_exact
-          FROM fr
-          LEFT JOIN bsums b ON b.id = fr.id AND b.frame_idx = fr.frame_idx
-          LEFT JOIN lsums l ON l.id = fr.id AND l.frame_idx = fr.frame_idx
-          ORDER BY fr.id, fr.frame_idx""")),
+      Some(h264CabacBOracle(53, 23))),
 
     // ---- H.264 TEMPORAL DIRECT under CABAC (q318 — the LAST H.264
     //      alphabet fall-through): the same I/P/B/B plan as q317 with
@@ -3158,94 +3086,7 @@ object PipelineQueries extends Registry {
             "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(1 + doc_id % 3 AS BIGINT) AS wmb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hmb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 59 = 29),
-          fr AS (
-            SELECT id, wmb, hmb, qp, CAST(t.f AS BIGINT) AS frame_idx,
-              list_extract([0, 6, 2, 4], CAST(t.f AS INT) + 1) AS poc
-            FROM d, UNNEST(range(0, 4)) AS t(f)),
-          bmb AS (
-            -- q313's MB classes; the CBP is the bin-coded 48 sweep
-            SELECT fr.*, CAST(m.m AS BIGINT) AS mb,
-              (id + frame_idx + m.m) % 7 AS cls,
-              1 + (id + frame_idx + m.m) % 3 AS bt,
-              CAST((id + 5 * frame_idx + 29 * m.m) % 48 AS BIGINT) AS cbp
-            FROM fr, UNNEST(range(0, wmb * hmb)) AS m(m)
-            WHERE frame_idx >= 2),
-          bsums AS (
-            SELECT id, frame_idx,
-              CAST(sum(CASE WHEN cls IN (2, 4) THEN 0
-                ELSE bt * (mb + 1) END) AS BIGINT) AS b_type_sum,
-              CAST(sum(CASE WHEN cls = 2 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_b_skip,
-              CAST(sum(CASE WHEN cls = 4 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_direct,
-              CAST(sum(CASE WHEN cls = 2 THEN 0
-                ELSE cbp * (mb + 1) END) AS BIGINT) AS b_cbp_sum,
-              CAST(sum(CASE WHEN cls IN (2, 4) THEN 0 ELSE
-                (CASE WHEN bt IN (1, 3) THEN
-                  (mb * 64 + 1) * (((id + 3 * frame_idx + 5 * mb) % 17) - 8) +
-                  (mb * 64 + 3) * (((3 * id + frame_idx + 2 * mb) % 17) - 8)
-                 ELSE 0 END) +
-                (CASE WHEN bt IN (2, 3) THEN
-                  (mb * 64 + 17) * (((id + 3 * frame_idx + 5 * mb + 11) % 17) - 8) +
-                  (mb * 64 + 19) * (((3 * id + frame_idx + 2 * mb + 7) % 17) - 8)
-                 ELSE 0 END) END) AS BIGINT) AS b_mvd_checksum
-            FROM bmb GROUP BY id, frame_idx),
-          tags AS (
-            SELECT bmb.*, CAST(tg.tag AS BIGINT) AS tag,
-              CASE WHEN tg.tag BETWEEN 1 AND 16 THEN 16
-                   WHEN tg.tag BETWEEN 17 AND 18 THEN 4
-                   ELSE 15 END AS ncoeffs
-            FROM bmb, UNNEST(range(1, 27)) AS tg(tag)
-            WHERE bmb.cls != 2 -- B_Skip MBs carry no residual
-              AND ((tg.tag BETWEEN 1 AND 16 AND
-                   ((cbp % 16) >> CAST((tg.tag - 1) // 4 AS INT)) & 1 = 1)
-               OR (tg.tag BETWEEN 17 AND 18 AND cbp // 16 > 0)
-               OR (tg.tag BETWEEN 19 AND 26 AND cbp // 16 = 2))),
-          lev AS (
-            SELECT t.*, CAST(kk.k AS BIGINT) AS k,
-              CASE WHEN ncoeffs = 4 THEN 1
-                   ELSE 1 + CAST((id + tag) % 4 AS BIGINT) END AS step,
-              CAST((id + frame_idx + mb + tag) %
-                (CASE WHEN tag >= 19 THEN 3 ELSE 4 END) AS BIGINT) AS n
-            FROM tags t, UNNEST(range(0, 3)) AS kk(k)
-            WHERE kk.k < (id + frame_idx + mb + tag) %
-              (CASE WHEN tag >= 19 THEN 3 ELSE 4 END)),
-          contrib AS (
-            SELECT id, frame_idx,
-              (1 + (id + mb + tag * 2 + k + frame_idx) % 3) *
-              (CASE WHEN (id + mb + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (mb * 131 + tag * 17 +
-                (CASE WHEN ncoeffs = 4 THEN (id + tag + mb) % 2
-                 ELSE (id + mb + tag) % (ncoeffs - (n - 1) * step) END)
-                + k * step + 1) AS c
-            FROM lev),
-          lsums AS (
-            SELECT id, frame_idx, CAST(sum(c) AS BIGINT) AS b_level_checksum
-            FROM contrib GROUP BY id, frame_idx)
-          SELECT fr.id, fr.frame_idx,
-            CAST(fr.poc AS BIGINT) AS poc,
-            CAST(fr.poc // 2 AS BIGINT) AS display_idx,
-            CAST(fr.wmb * 16 AS BIGINT) AS width,
-            CAST(fr.hmb * 16 AS BIGINT) AS height,
-            CAST(fr.wmb * fr.hmb AS BIGINT) AS n_mbs,
-            fr.qp AS qp,
-            coalesce(b.b_type_sum, 0) AS b_type_sum,
-            coalesce(b.b_mvd_checksum, 0) AS b_mvd_checksum,
-            coalesce(b.b_cbp_sum, 0) AS b_cbp_sum,
-            coalesce(l.b_level_checksum, 0) AS b_level_checksum,
-            coalesce(b.n_b_skip, 0) AS n_b_skip,
-            coalesce(b.n_direct, 0) AS n_direct,
-            CAST(1 AS BIGINT) AS recon_exact
-          FROM fr
-          LEFT JOIN bsums b ON b.id = fr.id AND b.frame_idx = fr.frame_idx
-          LEFT JOIN lsums l ON l.id = fr.id AND l.frame_idx = fr.frame_idx
-          ORDER BY fr.id, fr.frame_idx""")),
+      Some(h264CabacBOracle(59, 29))),
 
     // ---- H.265/HEVC INTRA decode (VERDICT r15 item 8, q315): CTB-32
     //      coding quadtree (split_cu_flag with neighbor-depth
@@ -3294,39 +3135,14 @@ object PipelineQueries extends Registry {
             "level_checksum", "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(2 + doc_id % 2 AS BIGINT) AS wctb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hctb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 43 = 17),
+      Some(s"""${h265Docs(43, 17)}
           fr AS (
             SELECT id, wctb, hctb, qp, CAST(t.f AS BIGINT) AS f
             FROM d, UNNEST(range(0, 1 + (id + n_chars) % 2)) AS t(f)),
-          ctu AS (
-            SELECT fr.*, CAST(t.c AS BIGINT) AS c,
-              CAST(t.c % wctb AS BIGINT) * 32 AS x32,
-              CAST(t.c // wctb AS BIGINT) * 32 AS y32,
-              (id + f + t.c) % 3 = 0 AS split32
-            FROM fr, UNNEST(range(0, wctb * hctb)) AS t(c)),
-          q16 AS (
-            SELECT ctu.*, CAST(t.q AS BIGINT) AS q,
-              x32 + (t.q % 2) * 16 AS qx, y32 + (t.q // 2) * 16 AS qy,
-              (id + f + c + t.q) % 2 = 0 AS split16
-            FROM ctu, UNNEST(range(0, 4)) AS t(q)
-            WHERE split32),
+          $h265Ctu
+          $h265Quads
           -- the coding-quadtree leaves at their three sizes
-          cus AS (
-            SELECT id, f, qp, x32 AS cux, y32 AS cuy,
-              CAST(5 AS BIGINT) AS log2s FROM ctu WHERE NOT split32
-            UNION ALL
-            SELECT id, f, qp, qx, qy, CAST(4 AS BIGINT) FROM q16
-            WHERE NOT split16
-            UNION ALL
-            SELECT q16.id, q16.f, q16.qp,
-              qx + (t.s % 2) * 8, qy + (t.s // 2) * 8, CAST(3 AS BIGINT)
-            FROM q16, UNNEST(range(0, 4)) AS t(s)
-            WHERE split16),
+          $h265Cus
           cuk AS (
             SELECT cus.*, (cuy // 8) * 16 + (cux // 8) AS cukey,
               log2s = 3 AND (id + (cuy // 8) * 16 + (cux // 8)) % 3 = 0
@@ -3387,29 +3203,7 @@ object PipelineQueries extends Registry {
             FROM cuk, UNNEST(range(0, 6)) AS t(s2)
             WHERE (t.s2 >= 4 OR t.s2 < CASE WHEN nxn THEN 4 ELSE 1 END)
               AND (id + cukey + t.s2) % 4 != 3),
-          tuk AS (
-            SELECT tus.*, 1 + (id + tag) % 3 AS step,
-              least(1 + (id + tag) % 8,
-                (ntbs * ntbs - 1) // (1 + (id + tag) % 3) + 1) AS nsig
-            FROM tus),
-          cbfsums AS (
-            SELECT id, f,
-              CAST(sum(tag + 1) AS BIGINT) AS cbf_sum,
-              CAST(sum((step * (nsig - 1)) * (tag + 1)) AS BIGINT)
-                AS last_checksum
-            FROM tuk GROUP BY id, f),
-          lev AS (
-            SELECT tuk.id, tuk.f, tuk.tag, CAST(t.k AS BIGINT) AS k
-            FROM tuk, UNNEST(range(0, 8)) AS t(k)
-            WHERE t.k < nsig),
-          lsums AS (
-            SELECT id, f, CAST(sum(
-              (1 + (id + tag + k) % 5 +
-                CASE WHEN k = 0 AND (id + tag) % 7 = 0 THEN 40 ELSE 0
-                END) *
-              (CASE WHEN (id + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (tag * 31 + k + 1)) AS BIGINT) AS level_checksum
-            FROM lev GROUP BY id, f)
+          $h265Levels
           SELECT fr.id, fr.f AS frame_idx,
             CAST(fr.wctb * 32 AS BIGINT) AS width,
             CAST(fr.hctb * 32 AS BIGINT) AS height,
@@ -3487,38 +3281,13 @@ object PipelineQueries extends Registry {
             "root_cbf_sum", "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(2 + doc_id % 2 AS BIGINT) AS wctb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hctb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 61 = 31),
+      Some(s"""${h265Docs(61, 31)}
           fr AS (
             SELECT id, wctb, hctb, qp, CAST(t.f AS BIGINT) AS f
             FROM d, UNNEST(range(0, 2 + (id + n_chars) % 2)) AS t(f)),
-          ctu AS (
-            SELECT fr.*, CAST(t.c AS BIGINT) AS c,
-              CAST(t.c % wctb AS BIGINT) * 32 AS x32,
-              CAST(t.c // wctb AS BIGINT) * 32 AS y32,
-              (id + f + t.c) % 3 = 0 AS split32
-            FROM fr, UNNEST(range(0, wctb * hctb)) AS t(c)),
-          q16 AS (
-            SELECT ctu.*, CAST(t.q AS BIGINT) AS q,
-              x32 + (t.q % 2) * 16 AS qx, y32 + (t.q // 2) * 16 AS qy,
-              (id + f + c + t.q) % 2 = 0 AS split16
-            FROM ctu, UNNEST(range(0, 4)) AS t(q)
-            WHERE split32),
-          cus AS (
-            SELECT id, f, qp, x32 AS cux, y32 AS cuy,
-              CAST(5 AS BIGINT) AS log2s FROM ctu WHERE NOT split32
-            UNION ALL
-            SELECT id, f, qp, qx, qy, CAST(4 AS BIGINT) FROM q16
-            WHERE NOT split16
-            UNION ALL
-            SELECT q16.id, q16.f, q16.qp,
-              qx + (t.s % 2) * 8, qy + (t.s // 2) * 8, CAST(3 AS BIGINT)
-            FROM q16, UNNEST(range(0, 4)) AS t(s)
-            WHERE split16),
+          $h265Ctu
+          $h265Quads
+          $h265Cus
           -- CU classes: frame 0 is all-intra; P frames split 5 ways
           cuk AS (
             SELECT cus.*, (cuy // 8) * 16 + (cux // 8) AS cukey,
@@ -3533,14 +3302,7 @@ object PipelineQueries extends Registry {
               log2s = 3 AND isintra AND (id + cukey) % 3 = 0 AS nxn,
               cls IN (1, 3, 4) AND (id + f + cukey) % 4 != 3 AS rootcbf
             FROM cuk),
-          splits AS (
-            SELECT id, f, CAST(sum(CASE WHEN split32 THEN c + 1 ELSE 0
-              END) AS BIGINT) AS s32
-            FROM ctu GROUP BY id, f),
-          splits16 AS (
-            SELECT id, f, CAST(sum(CASE WHEN split16 THEN c * 4 + q + 1
-              ELSE 0 END) AS BIGINT) AS s16
-            FROM q16 GROUP BY id, f),
+          $h265InterSplits
           clssums AS (
             SELECT id, f,
               CAST(count(*) AS BIGINT) AS n_cus,
@@ -3563,80 +3325,8 @@ object PipelineQueries extends Registry {
               CAST(sum(CASE WHEN rootcbf THEN cukey + 1 ELSE 0 END)
                 AS BIGINT) AS root_cbf_sum
             FROM cuki GROUP BY id, f),
-          -- intra PU modes (frame 0 + cls-2 CUs in P frames)
-          pus AS (
-            SELECT cuki.*, CAST(t.s2 AS BIGINT) AS s2,
-              (id + f + (cux // 8) + 2 * (cuy // 8) + log2s + 2 * t.s2)
-                % 35 AS pmode
-            FROM cuki, UNNEST(range(0, 4)) AS t(s2)
-            WHERE isintra AND t.s2 < CASE WHEN nxn THEN 4 ELSE 1 END),
-          msums AS (
-            SELECT id, f,
-              CAST(sum(pmode * (cukey * 8 + s2 + 1)) AS BIGINT)
-                AS mode_sum
-            FROM pus GROUP BY id, f),
-          cmodes AS (
-            SELECT cuki.*, icpm,
-              CASE WHEN icpm = 4 THEN pm0
-                   WHEN cand = pm0 THEN 34 ELSE cand END AS cmode
-            FROM (
-              SELECT cuki.*,
-                (id + f + (cux // 8) + (cuy // 8)) % 5 AS icpm,
-                (id + f + (cux // 8) + 2 * (cuy // 8) + log2s) % 35
-                  AS pm0,
-                list_extract([0, 26, 10, 1],
-                  CAST((id + f + (cux // 8) + (cuy // 8)) % 5 AS INT)
-                    % 4 + 1) AS cand
-              FROM cuki WHERE isintra) cuki),
-          csums AS (
-            SELECT id, f,
-              CAST(sum(cmode * (cukey + 1)) AS BIGINT)
-                AS chroma_mode_sum
-            FROM cmodes GROUP BY id, f),
-          -- unified TU table: intra CUs carry the q315 layout; inter
-          -- CUs with rqt_root_cbf carry TU 0/4/5 with the cbf_luma
-          -- inference (both chroma zero -> luma forced on)
-          tus AS (
-            SELECT cuki.*, CAST(t.s2 AS BIGINT) AS s2,
-              cukey * 8 + t.s2 AS tag,
-              CASE WHEN t.s2 >= 4 THEN (1 << (log2s - 1))
-                   WHEN isintra AND nxn THEN 4 ELSE (1 << log2s)
-                   END AS ntbs
-            FROM cuki, UNNEST(range(0, 6)) AS t(s2)
-            WHERE CASE
-              WHEN isintra THEN
-                (t.s2 >= 4 OR t.s2 < CASE WHEN nxn THEN 4 ELSE 1 END)
-                AND (id + cukey + t.s2) % 4 != 3
-              WHEN rootcbf THEN
-                (t.s2 = 4 AND (id + cukey) % 3 != 2) OR
-                (t.s2 = 5 AND (id + 2 * cukey + 1) % 3 != 2) OR
-                (t.s2 = 0 AND (
-                  ((id + cukey) % 3 = 2 AND (id + 2 * cukey + 1) % 3 = 2)
-                  OR (id + cukey) % 4 != 3))
-              ELSE FALSE END),
-          tuk AS (
-            SELECT tus.*, 1 + (id + tag) % 3 AS step,
-              least(1 + (id + tag) % 8,
-                (ntbs * ntbs - 1) // (1 + (id + tag) % 3) + 1) AS nsig
-            FROM tus),
-          cbfsums AS (
-            SELECT id, f,
-              CAST(sum(tag + 1) AS BIGINT) AS cbf_sum,
-              CAST(sum((step * (nsig - 1)) * (tag + 1)) AS BIGINT)
-                AS last_checksum
-            FROM tuk GROUP BY id, f),
-          lev AS (
-            SELECT tuk.id, tuk.f, tuk.tag, CAST(t.k AS BIGINT) AS k
-            FROM tuk, UNNEST(range(0, 8)) AS t(k)
-            WHERE t.k < nsig),
-          lsums AS (
-            SELECT id, f, CAST(sum(
-              (1 + (id + tag + k) % 5 +
-                CASE WHEN k = 0 AND (id + tag) % 7 = 0 THEN 40 ELSE 0
-                END) *
-              (CASE WHEN (id + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (tag * 31 + k + 1)) AS BIGINT) AS level_checksum
-            FROM lev GROUP BY id, f)
+          $h265InterModes
+          $h265Levels
           SELECT fr.id, fr.f AS frame_idx,
             CAST(fr.wctb * 32 AS BIGINT) AS width,
             CAST(fr.hctb * 32 AS BIGINT) AS height,
@@ -3713,38 +3403,13 @@ object PipelineQueries extends Registry {
             "root_cbf_sum", "pred_idc_sum", "recon_exact")
           .orderBy($"id", $"frame_idx")
       },
-      Some("""WITH d AS (
-            SELECT doc_id AS id, n_chars,
-              CAST(2 + doc_id % 2 AS BIGINT) AS wctb,
-              CAST(1 + n_chars % 2 AS BIGINT) AS hctb,
-              CAST(20 + doc_id % 8 AS BIGINT) AS qp
-            FROM documents WHERE doc_id % 67 = 37),
+      Some(s"""${h265Docs(67, 37)}
           fr AS (
             SELECT id, wctb, hctb, qp, CAST(t.f AS BIGINT) AS f
             FROM d, UNNEST(range(0, 3)) AS t(f)),
-          ctu AS (
-            SELECT fr.*, CAST(t.c AS BIGINT) AS c,
-              CAST(t.c % wctb AS BIGINT) * 32 AS x32,
-              CAST(t.c // wctb AS BIGINT) * 32 AS y32,
-              (id + f + t.c) % 3 = 0 AS split32
-            FROM fr, UNNEST(range(0, wctb * hctb)) AS t(c)),
-          q16 AS (
-            SELECT ctu.*, CAST(t.q AS BIGINT) AS q,
-              x32 + (t.q % 2) * 16 AS qx, y32 + (t.q // 2) * 16 AS qy,
-              (id + f + c + t.q) % 2 = 0 AS split16
-            FROM ctu, UNNEST(range(0, 4)) AS t(q)
-            WHERE split32),
-          cus AS (
-            SELECT id, f, qp, x32 AS cux, y32 AS cuy,
-              CAST(5 AS BIGINT) AS log2s FROM ctu WHERE NOT split32
-            UNION ALL
-            SELECT id, f, qp, qx, qy, CAST(4 AS BIGINT) FROM q16
-            WHERE NOT split16
-            UNION ALL
-            SELECT q16.id, q16.f, q16.qp,
-              qx + (t.s % 2) * 8, qy + (t.s // 2) * 8, CAST(3 AS BIGINT)
-            FROM q16, UNNEST(range(0, 4)) AS t(s)
-            WHERE split16),
+          $h265Ctu
+          $h265Quads
+          $h265Cus
           -- CU classes: frame 0 is all-intra; P frames split 5 ways
           cuk AS (
             SELECT cus.*, (cuy // 8) * 16 + (cux // 8) AS cukey,
@@ -3763,14 +3428,7 @@ object PipelineQueries extends Registry {
               NOT isintra AND cls != 0 AND (id + f + cukey) % 4 != 3
                 AS rootcbf
             FROM cukx),
-          splits AS (
-            SELECT id, f, CAST(sum(CASE WHEN split32 THEN c + 1 ELSE 0
-              END) AS BIGINT) AS s32
-            FROM ctu GROUP BY id, f),
-          splits16 AS (
-            SELECT id, f, CAST(sum(CASE WHEN split16 THEN c * 4 + q + 1
-              ELSE 0 END) AS BIGINT) AS s16
-            FROM q16 GROUP BY id, f),
+          $h265InterSplits
           clssums AS (
             SELECT id, f,
               CAST(count(*) AS BIGINT) AS n_cus,
@@ -3807,80 +3465,8 @@ object PipelineQueries extends Registry {
                 THEN (cls - 2) * (cukey + 1) ELSE 0 END) AS BIGINT)
                 AS pred_idc_sum
             FROM cuki GROUP BY id, f),
-          -- intra PU modes (frame 0 + cls-2 CUs in P frames)
-          pus AS (
-            SELECT cuki.*, CAST(t.s2 AS BIGINT) AS s2,
-              (id + f + (cux // 8) + 2 * (cuy // 8) + log2s + 2 * t.s2)
-                % 35 AS pmode
-            FROM cuki, UNNEST(range(0, 4)) AS t(s2)
-            WHERE isintra AND t.s2 < CASE WHEN nxn THEN 4 ELSE 1 END),
-          msums AS (
-            SELECT id, f,
-              CAST(sum(pmode * (cukey * 8 + s2 + 1)) AS BIGINT)
-                AS mode_sum
-            FROM pus GROUP BY id, f),
-          cmodes AS (
-            SELECT cuki.*, icpm,
-              CASE WHEN icpm = 4 THEN pm0
-                   WHEN cand = pm0 THEN 34 ELSE cand END AS cmode
-            FROM (
-              SELECT cuki.*,
-                (id + f + (cux // 8) + (cuy // 8)) % 5 AS icpm,
-                (id + f + (cux // 8) + 2 * (cuy // 8) + log2s) % 35
-                  AS pm0,
-                list_extract([0, 26, 10, 1],
-                  CAST((id + f + (cux // 8) + (cuy // 8)) % 5 AS INT)
-                    % 4 + 1) AS cand
-              FROM cuki WHERE isintra) cuki),
-          csums AS (
-            SELECT id, f,
-              CAST(sum(cmode * (cukey + 1)) AS BIGINT)
-                AS chroma_mode_sum
-            FROM cmodes GROUP BY id, f),
-          -- unified TU table: intra CUs carry the q315 layout; inter
-          -- CUs with rqt_root_cbf carry TU 0/4/5 with the cbf_luma
-          -- inference (both chroma zero -> luma forced on)
-          tus AS (
-            SELECT cuki.*, CAST(t.s2 AS BIGINT) AS s2,
-              cukey * 8 + t.s2 AS tag,
-              CASE WHEN t.s2 >= 4 THEN (1 << (log2s - 1))
-                   WHEN isintra AND nxn THEN 4 ELSE (1 << log2s)
-                   END AS ntbs
-            FROM cuki, UNNEST(range(0, 6)) AS t(s2)
-            WHERE CASE
-              WHEN isintra THEN
-                (t.s2 >= 4 OR t.s2 < CASE WHEN nxn THEN 4 ELSE 1 END)
-                AND (id + cukey + t.s2) % 4 != 3
-              WHEN rootcbf THEN
-                (t.s2 = 4 AND (id + cukey) % 3 != 2) OR
-                (t.s2 = 5 AND (id + 2 * cukey + 1) % 3 != 2) OR
-                (t.s2 = 0 AND (
-                  ((id + cukey) % 3 = 2 AND (id + 2 * cukey + 1) % 3 = 2)
-                  OR (id + cukey) % 4 != 3))
-              ELSE FALSE END),
-          tuk AS (
-            SELECT tus.*, 1 + (id + tag) % 3 AS step,
-              least(1 + (id + tag) % 8,
-                (ntbs * ntbs - 1) // (1 + (id + tag) % 3) + 1) AS nsig
-            FROM tus),
-          cbfsums AS (
-            SELECT id, f,
-              CAST(sum(tag + 1) AS BIGINT) AS cbf_sum,
-              CAST(sum((step * (nsig - 1)) * (tag + 1)) AS BIGINT)
-                AS last_checksum
-            FROM tuk GROUP BY id, f),
-          lev AS (
-            SELECT tuk.id, tuk.f, tuk.tag, CAST(t.k AS BIGINT) AS k
-            FROM tuk, UNNEST(range(0, 8)) AS t(k)
-            WHERE t.k < nsig),
-          lsums AS (
-            SELECT id, f, CAST(sum(
-              (1 + (id + tag + k) % 5 +
-                CASE WHEN k = 0 AND (id + tag) % 7 = 0 THEN 40 ELSE 0
-                END) *
-              (CASE WHEN (id + tag + k) % 2 = 0 THEN 1 ELSE -1 END) *
-              (tag * 31 + k + 1)) AS BIGINT) AS level_checksum
-            FROM lev GROUP BY id, f)
+          $h265InterModes
+          $h265Levels
           SELECT fr.id, fr.f AS frame_idx,
             CAST(fr.wctb * 32 AS BIGINT) AS width,
             CAST(fr.hctb * 32 AS BIGINT) AS height,
@@ -3987,7 +3573,7 @@ object PipelineQueries extends Registry {
             "requant_ok", "pr_ok")
           .orderBy($"id", $"frame_idx", $"ch")
       },
-      Some("""WITH fr AS (
+      Some(s"""WITH fr AS (
             SELECT doc_id AS id, CAST(t.f AS BIGINT) AS frame_idx,
               CAST(c.c AS BIGINT) AS ch,
               doc_id * 2 + c.c AS id2
@@ -4020,11 +3606,7 @@ object PipelineQueries extends Registry {
             FROM cell WHERE nlev > 0),
           code AS (
             SELECT id, frame_idx, ch, sb, t, sfi, nlev,
-              LEAST(CAST(nlev - 1 AS BIGINT), GREATEST(CAST(0 AS BIGINT),
-                CAST(round((u / (pow(2, nb) / nlev)
-                  - (CASE WHEN nlev IN (3, 5, 9) THEN 0.5
-                     ELSE pow(2.0, 1 - nb) END) + 1) * pow(2, nb - 1))
-                  AS BIGINT))) AS c
+              $mp2QuantizeSql
             FROM qc),
           agg AS (
             SELECT id, frame_idx, ch,
@@ -4582,10 +4164,7 @@ object PipelineQueries extends Registry {
           FROM shuf GROUP BY seed, t),
         q AS (
           SELECT s.seed, s.t, 'src:' || s.t || '|tgt:' || s.t AS case_id, 't_' || g.name AS tgt,
-            'Source schema: ' || s.sj || chr(10) ||
-            'Target attribute: "t_' || g.name || '"' || chr(10) ||
-            'Which source column matches the target attribute? Answer as {"matches": [...]}.' || chr(10) ||
-            'Options:' || chr(10) || s.optlines || chr(10) || '- there is no match.' AS prompt
+            ${n2onePrompt("prompt")}
           FROM srcjson s JOIN cols g ON s.t = g.t),
         cands AS (
           SELECT q.seed, q.case_id, q.tgt, c.name AS cand, q.prompt FROM q JOIN cols c ON c.t = q.t
@@ -4663,10 +4242,7 @@ object PipelineQueries extends Registry {
           FROM cols GROUP BY t),
         q AS (
           SELECT s.t, 'src:' || s.t || '|tgt:' || s.t AS case_id, 't_' || g.name AS tgt,
-            'Source schema: ' || s.sj || chr(10) ||
-            'Target attribute: "t_' || g.name || '"' || chr(10) ||
-            'Which source column matches the target attribute? Answer as {"matches": [...]}.' || chr(10) ||
-            'Options:' || chr(10) || s.optlines || chr(10) || '- there is no match.' AS base_prompt
+            ${n2onePrompt("base_prompt")}
           FROM srcjson s JOIN cols g ON s.t = g.t),
         demopool AS (
           SELECT me.t AS case_t,
@@ -4806,25 +4382,15 @@ object PipelineQueries extends Registry {
         // is unchanged), so the shared session's conf is never touched
         val ss = StreamingOps.streamSession(s)
         import ss.implicits._
-        implicit val sqlCtx = ss.sqlContext
         val evts = Tables(ss, dir, "events")
           .select($"ts", $"event_type", $"value", $"event_id")
           .orderBy($"ts", $"event_id").limit(StreamingOps.feedLimit)
           .select($"ts", $"event_type", $"value")
           .as[(java.sql.Timestamp, String, Double)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(java.sql.Timestamp, String, Double)]
-        val qn = s"graft_tumbling_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val query = StreamingOps.tumblingCounts(mem.toDF().toDF("ts", "event_type", "value"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete).start()
-        try {
-          val (b1, b2) = evts.splitAt(evts.length / 2)
-          mem.addData(b1.toSeq); query.processAllAvailable()
-          mem.addData(b2.toSeq); query.processAllAvailable()
-          ss.table(qn)
-            .coalesce(1).localCheckpoint(eager = true) // detach from the stopped stream
-            .orderBy($"window_start", $"event_type")
-        } finally query.stop()
+        StreamingOps.driveTwoBatches(ss, evts.toSeq,
+            org.apache.spark.sql.streaming.OutputMode.Complete())(
+            ds => StreamingOps.tumblingCounts(ds.toDF("ts", "event_type", "value")))
+          .orderBy($"window_start", $"event_type")
       },
       Some("""WITH e AS (SELECT ts, event_type, value FROM events
           ORDER BY ts, event_id LIMIT 2000)
@@ -5071,12 +4637,7 @@ object PipelineQueries extends Registry {
             .orderBy($"purchase_id")
         } finally query.stop()
       },
-      Some("""WITH e AS (SELECT ts, event_id, user_id, event_type FROM events
-            WHERE event_type IN ('purchase', 'click')
-            ORDER BY ts, event_id LIMIT 2000),
-          p AS (SELECT user_id, event_id AS purchase_id, ts AS p_ts
-                FROM e WHERE event_type = 'purchase'),
-          c AS (SELECT user_id, ts AS c_ts FROM e WHERE event_type = 'click')
+      Some(s"""$purchaseClickCtes
           SELECT purchase_id, p_ts, count(*) AS n_prior_clicks,
                  max(c_ts) AS last_click_ts
           FROM p JOIN c ON c.user_id = p.user_id
@@ -5097,27 +4658,16 @@ object PipelineQueries extends Registry {
         // dedicated 4-partition child session (see q41's comment)
         val ss = StreamingOps.streamSession(s)
         import ss.implicits._
-        implicit val sqlCtx = ss.sqlContext
         val evts = Tables(ss, dir, "events")
           .select($"ts", $"event_id", $"user_id")
           .orderBy($"ts", $"event_id").limit(StreamingOps.feedLimit)
           .select($"user_id", $"ts")
           .as[(Long, java.sql.Timestamp)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
-        val qn = s"graft_upd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val query = mem.toDF().toDF("user_id", "ts")
-          .groupBy($"user_id").agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Update).start()
-        try {
-          val (b1, b2) = evts.splitAt(evts.length / 2)
-          mem.addData(b1.toSeq); query.processAllAvailable()
-          mem.addData(b2.toSeq); query.processAllAvailable()
-          ss.table(qn)
-            .coalesce(1).localCheckpoint(eager = true) // detach from the stopped stream
-            .groupBy($"user_id").agg(max($"n").as("n_events"))
-            .orderBy($"user_id")
-        } finally query.stop()
+        StreamingOps.driveTwoBatches(ss, evts.toSeq,
+            org.apache.spark.sql.streaming.OutputMode.Update())(
+            _.toDF("user_id", "ts").groupBy($"user_id").agg(count(lit(1)).as("n")))
+          .groupBy($"user_id").agg(max($"n").as("n_events"))
+          .orderBy($"user_id")
       },
       Some("""WITH e AS (SELECT user_id FROM events
             ORDER BY ts, event_id LIMIT 2000)
@@ -5279,51 +4829,21 @@ object PipelineQueries extends Registry {
         // dedicated 4-partition child session (see q41's comment)
         val ss = StreamingOps.streamSession(s)
         import ss.implicits._
-        implicit val sqlCtx = ss.sqlContext
         val evts = Tables(ss, dir, "events")
           .select($"user_id", $"ts", $"event_id")
           .orderBy($"ts", $"event_id").limit(StreamingOps.feedLimit)
           .select($"user_id", $"ts")
           .as[(Long, java.sql.Timestamp)]
           .collect().map(e => StreamingOps.Evt(e._1, e._2))
-        val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamingOps.Evt]
-        val qn = s"graft_sessions_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val query = StreamingOps.sessionize(mem.toDS(), gapMinutes = 30)
-          .writeStream.format("memory").queryName(qn)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-        try {
-          val (b1, b2) = evts.splitAt(evts.length / 2)
-          mem.addData(b1.toSeq); query.processAllAvailable()
-          mem.addData(b2.toSeq); query.processAllAvailable()
-          ss.table(qn)
-            .coalesce(1).localCheckpoint(eager = true) // detach result from the stopped stream
-            .orderBy($"user_id", $"session_start")
-        } finally query.stop()
+        StreamingOps.driveTwoBatches(ss, evts.toSeq,
+            org.apache.spark.sql.streaming.OutputMode.Append())(
+            StreamingOps.sessionize(_, gapMinutes = 30))
+          .orderBy($"user_id", $"session_start")
       },
       // batch twin: gaps-and-islands sessions over the same prefix (µs gap
       // arithmetic), emitted = non-last session per user OR timeout fired
       // (timeoutTs = end_ms + gap strictly below the final ms watermark)
-      Some("""WITH e AS (SELECT user_id, ts FROM events
-          ORDER BY ts, event_id LIMIT 2000),
-        wm AS (SELECT max(epoch_ms(ts)) - 600000 AS w FROM e),
-        g AS (SELECT user_id, ts,
-            CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                   OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 1800000000
-                 THEN 1 ELSE 0 END AS new_sess
-          FROM e),
-        sess AS (SELECT user_id, ts,
-            sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sess_idx
-          FROM g),
-        agg AS (SELECT user_id, sess_idx,
-            min(ts) AS session_start, max(ts) AS session_end,
-            count(*) AS n_events
-          FROM sess GROUP BY user_id, sess_idx),
-        lst AS (SELECT *, max(sess_idx) OVER (PARTITION BY user_id) AS max_idx FROM agg)
-        SELECT user_id, session_start, session_end, n_events
-        FROM lst, wm
-        WHERE sess_idx < max_idx OR epoch_ms(session_end) + 1800000 < w
-        ORDER BY user_id, session_start""")),
+      Some(closedSessionsOracle)),
 
     // ---- q39's sessionization re-expressed on transformWithState with
     //      EVENT-TIME TIMERS (Spark 4 arbitrary-state API, RocksDB
@@ -5349,27 +4869,7 @@ object PipelineQueries extends Registry {
             StreamingOps.sessionizeTws(_, gapMinutes = 30))
           .orderBy($"user_id", $"session_start")
       },
-      Some("""WITH e AS (SELECT user_id, ts FROM events
-          ORDER BY ts, event_id LIMIT 2000),
-        wm AS (SELECT max(epoch_ms(ts)) - 600000 AS w FROM e),
-        g AS (SELECT user_id, ts,
-            CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                   OR epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) > 1800000000
-                 THEN 1 ELSE 0 END AS new_sess
-          FROM e),
-        sess AS (SELECT user_id, ts,
-            sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sess_idx
-          FROM g),
-        agg AS (SELECT user_id, sess_idx,
-            min(ts) AS session_start, max(ts) AS session_end,
-            count(*) AS n_events
-          FROM sess GROUP BY user_id, sess_idx),
-        lst AS (SELECT *, max(sess_idx) OVER (PARTITION BY user_id) AS max_idx FROM agg)
-        SELECT user_id, session_start, session_end, n_events
-        FROM lst, wm
-        WHERE sess_idx < max_idx OR epoch_ms(session_end) + 1800000 < w
-        ORDER BY user_id, session_start""")),
+      Some(closedSessionsOracle)),
 
     // ---- transformWithState MAPSTATE (the composite-state surface):
     //      per-(user, event_type) running counts where each user's state is
@@ -5470,12 +4970,7 @@ object PipelineQueries extends Registry {
             .orderBy($"purchase_id")
         } finally query.stop()
       },
-      Some("""WITH e AS (SELECT ts, event_id, user_id, event_type FROM events
-            WHERE event_type IN ('purchase', 'click')
-            ORDER BY ts, event_id LIMIT 2000),
-          p AS (SELECT user_id, event_id AS purchase_id, ts AS p_ts
-                FROM e WHERE event_type = 'purchase'),
-          c AS (SELECT user_id, ts AS c_ts FROM e WHERE event_type = 'click')
+      Some(s"""$purchaseClickCtes
           SELECT purchase_id, p_ts
           FROM p
           WHERE NOT EXISTS (SELECT 1 FROM c
@@ -5500,45 +4995,34 @@ object PipelineQueries extends Registry {
         // dedicated 4-partition child session (see q41's comment)
         val ss = StreamingOps.streamSession(s)
         import ss.implicits._
-        implicit val sqlCtx = ss.sqlContext
         val docsAll = Tables(ss, dir, "documents")
         val cut = docsAll.agg(expr("max(doc_id) - max(doc_id) div 10").as("c"))
           .collect()(0).getLong(0)
         val incoming = docsAll.filter($"doc_id" >= cut)
           .select($"doc_id", $"lang").orderBy($"doc_id")
           .as[(Long, String)].collect()
-        val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-        val qn = s"graft_drift_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        val query = mem.toDF().toDF("doc_id", "lang")
-          .groupBy($"lang").agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Update).start()
-        try {
-          val (b1, b2) = incoming.splitAt(incoming.length / 2)
-          mem.addData(b1.toSeq); query.processAllAvailable()
-          mem.addData(b2.toSeq); query.processAllAvailable()
-          val inc = ss.table(qn)
-            .coalesce(1).localCheckpoint(eager = true) // detach from the stopped stream
-            .groupBy($"lang").agg(max($"n").as("n_inc"))
-          val ref = docsAll.filter($"doc_id" < cut)
-            .groupBy($"lang").agg(count(lit(1)).as("n_ref"))
-          val counts = ref.join(inc, Seq("lang"), "full")
-            .select($"lang", coalesce($"n_ref", lit(0L)).as("n_ref"),
-              coalesce($"n_inc", lit(0L)).as("n_inc"))
-          val tot = counts.agg(count(lit(1)).cast("double").as("k"),
-            sum($"n_ref").cast("double").as("tot_ref"),
-            sum($"n_inc").cast("double").as("tot_inc"))
-          counts.join(broadcast(tot))
-            .select($"lang", $"n_ref", $"n_inc",
-              (($"n_ref" + 1) / ($"tot_ref" + $"k")).as("p_ref"),
-              (($"n_inc" + 1) / ($"tot_inc" + $"k")).as("p_inc"))
-            .withColumn("psi_term",
-              round(($"p_ref" - $"p_inc") * log($"p_ref" / $"p_inc"), 6))
-            .select($"lang", $"n_ref", $"n_inc",
-              round($"p_ref", 6).as("p_ref"), round($"p_inc", 6).as("p_inc"),
-              $"psi_term")
-            .orderBy($"lang")
-        } finally query.stop()
+        val inc = StreamingOps.driveTwoBatches(ss, incoming.toSeq,
+            org.apache.spark.sql.streaming.OutputMode.Update())(
+            _.toDF("doc_id", "lang").groupBy($"lang").agg(count(lit(1)).as("n")))
+          .groupBy($"lang").agg(max($"n").as("n_inc"))
+        val ref = docsAll.filter($"doc_id" < cut)
+          .groupBy($"lang").agg(count(lit(1)).as("n_ref"))
+        val counts = ref.join(inc, Seq("lang"), "full")
+          .select($"lang", coalesce($"n_ref", lit(0L)).as("n_ref"),
+            coalesce($"n_inc", lit(0L)).as("n_inc"))
+        val tot = counts.agg(count(lit(1)).cast("double").as("k"),
+          sum($"n_ref").cast("double").as("tot_ref"),
+          sum($"n_inc").cast("double").as("tot_inc"))
+        counts.join(broadcast(tot))
+          .select($"lang", $"n_ref", $"n_inc",
+            (($"n_ref" + 1) / ($"tot_ref" + $"k")).as("p_ref"),
+            (($"n_inc" + 1) / ($"tot_inc" + $"k")).as("p_inc"))
+          .withColumn("psi_term",
+            round(($"p_ref" - $"p_inc") * log($"p_ref" / $"p_inc"), 6))
+          .select($"lang", $"n_ref", $"n_inc",
+            round($"p_ref", 6).as("p_ref"), round($"p_inc", 6).as("p_inc"),
+            $"psi_term")
+          .orderBy($"lang")
       },
       Some("""WITH m AS (SELECT max(doc_id) - max(doc_id) // 10 AS cut FROM documents),
           counts AS (SELECT lang,

@@ -20,6 +20,17 @@ object RelationalQueries extends Registry {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables(s, dir, n)
 
+  /** The (x, y) bounds of `d`, both axes scaled to an 8-bit grid, and the
+    * Hilbert index stage `h` over that grid (q291, q296). */
+  private def hilbertGridCtes(h: String): String =
+    s"""mm AS (SELECT min(x) AS xmin, max(x) AS xmax,
+              min(y) AS ymin, max(y) AS ymax FROM d),
+          n AS (SELECT x, y,
+              ((x - xmin) * 256) // (xmax - xmin + 1) AS x8,
+              ((y - ymin) * 256) // (ymax - ymin + 1) AS y8
+            FROM d, mm),
+          hz AS ($h),"""
+
   override def entries: Seq[Q] = Seq(
 
     // ---- D4 grouped aggregates (ref: eval/eval_dataset.py:399-447) -------
@@ -955,13 +966,7 @@ object RelationalQueries extends Registry {
         s"""WITH d AS (SELECT
               date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE)) AS x,
               l_suppkey % 65536 AS y FROM lineitem),
-          mm AS (SELECT min(x) AS xmin, max(x) AS xmax,
-              min(y) AS ymin, max(y) AS ymax FROM d),
-          n AS (SELECT x, y,
-              ((x - xmin) * 256) // (xmax - xmin + 1) AS x8,
-              ((y - ymin) * 256) // (ymax - ymin + 1) AS y8
-            FROM d, mm),
-          hz AS ($h),
+          ${hilbertGridCtes(h)}
           bk AS (SELECT x, y,
               ((x - xmin) * 48) // (xmax - xmin + 1) AS b_day,
               ((y - ymin) * 48) // (ymax - ymin + 1) AS b_supp,
@@ -1092,13 +1097,7 @@ object RelationalQueries extends Registry {
         s"""WITH d AS (SELECT
               date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE)) AS x,
               CAST(l_suppkey AS BIGINT) AS y FROM lineitem),
-          mm AS (SELECT min(x) AS xmin, max(x) AS xmax,
-              min(y) AS ymin, max(y) AS ymax FROM d),
-          n AS (SELECT x, y,
-              ((x - xmin) * 256) // (xmax - xmin + 1) AS x8,
-              ((y - ymin) * 256) // (ymax - ymin + 1) AS y8
-            FROM d, mm),
-          hz AS ($h),
+          ${hilbertGridCtes(h)}
           hb AS (SELECT x, y, (hd * 48) // 65536 AS hbucket FROM hz),
           st AS (SELECT hbucket, min(x) AS fxmin, max(x) AS fxmax,
               min(y) AS fymin, max(y) AS fymax, count(*) AS nrows

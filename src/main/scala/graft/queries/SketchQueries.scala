@@ -52,6 +52,42 @@ object SketchQueries extends Registry {
     ("lineitem", "l_partkey"), ("orders", "o_custkey"),
     ("customer", "c_name"), ("documents", "text"))
 
+  /** The 60-bit HLL hash of each lineitem's order key (q254, q283). */
+  private val hllOrderKeyHash = graft.functions.TextFunctions.hexPolySql(15,
+    "concat_ws('|', 'hll', l_orderkey)")
+
+  /** HLL registers per return flag from the 60-bit hash `h`: bucket and
+    * rank of each row, max rank per bucket, and per flag the bucket count
+    * and register sums `p` (q254, q283). */
+  private val hllRegisterCtes = {
+    import graft.functions.HyperLogLog.{RhoMax, WordBits}
+    s"""b AS (SELECT l_returnflag, h >> $WordBits AS bkt,
+              h & ${(1L << WordBits) - 1} AS w FROM h),
+          r AS (SELECT l_returnflag, bkt,
+              max(CASE WHEN w = 0 THEN $RhoMax
+                  ELSE CAST(log2(w & (-w)) AS INT) + 1 END) AS reg
+            FROM b GROUP BY 1, 2),
+          p AS (SELECT l_returnflag, count(*) AS n_buckets,
+              sum(CAST(1 AS BIGINT) << ($RhoMax - reg)) AS d_present,
+              sum(reg) AS reg_sum, max(reg) AS reg_max
+            FROM r GROUP BY 1),"""
+  }
+
+  /** Per-flag HLL summary over `p` and the exact distinct count `exact`
+    * from `e`: empty registers, the scaled harmonic denominator and the
+    * register checksums (q254, q283). */
+  private def hllSummaryCte(exact: String): String = {
+    import graft.functions.HyperLogLog.{M, RhoMax}
+    s"""s AS (SELECT p.l_returnflag,
+              CAST($M - n_buckets AS BIGINT) AS v_empty,
+              CAST(d_present + ($M - n_buckets) * (CAST(1 AS BIGINT) << $RhoMax)
+                AS BIGINT) AS d_scaled,
+              CAST(reg_sum AS BIGINT) AS reg_sum,
+              CAST(reg_max AS INT) AS reg_max,
+              CAST($exact AS BIGINT) AS $exact
+            FROM p JOIN e USING (l_returnflag))"""
+  }
+
   override def entries: Seq[Q] = Seq(
 
     // ---- KMV (k-minimum-values) distinct-count sketch, one row per
@@ -360,33 +396,15 @@ object SketchQueries extends Registry {
           .orderBy($"l_returnflag")
       },
       Some {
-        import graft.functions.HyperLogLog.{M, RhoMax, WordBits}
-        val hashSql = graft.functions.TextFunctions.hexPolySql(15,
-          "concat_ws('|', 'hll', l_orderkey)")
+        import graft.functions.HyperLogLog.M
         val estSql = graft.functions.HyperLogLog.estimateSql("d_scaled")
         val relErrSql =
           s"abs($estSql - CAST(exact_distinct AS DOUBLE)) / CAST(exact_distinct AS DOUBLE)"
-        s"""WITH h AS (SELECT l_returnflag, $hashSql AS h FROM lineitem),
-          b AS (SELECT l_returnflag, h >> $WordBits AS bkt,
-              h & ${(1L << WordBits) - 1} AS w FROM h),
-          r AS (SELECT l_returnflag, bkt,
-              max(CASE WHEN w = 0 THEN $RhoMax
-                  ELSE CAST(log2(w & (-w)) AS INT) + 1 END) AS reg
-            FROM b GROUP BY 1, 2),
-          p AS (SELECT l_returnflag, count(*) AS n_buckets,
-              sum(CAST(1 AS BIGINT) << ($RhoMax - reg)) AS d_present,
-              sum(reg) AS reg_sum, max(reg) AS reg_max
-            FROM r GROUP BY 1),
+        s"""WITH h AS (SELECT l_returnflag, $hllOrderKeyHash AS h FROM lineitem),
+          $hllRegisterCtes
           e AS (SELECT l_returnflag, count(DISTINCT l_orderkey) AS exact_distinct
             FROM lineitem GROUP BY 1),
-          s AS (SELECT p.l_returnflag,
-              CAST($M - n_buckets AS BIGINT) AS v_empty,
-              CAST(d_present + ($M - n_buckets) * (CAST(1 AS BIGINT) << $RhoMax)
-                AS BIGINT) AS d_scaled,
-              CAST(reg_sum AS BIGINT) AS reg_sum,
-              CAST(reg_max AS INT) AS reg_max,
-              CAST(exact_distinct AS BIGINT) AS exact_distinct
-            FROM p JOIN e USING (l_returnflag))
+          ${hllSummaryCte("exact_distinct")}
           SELECT l_returnflag, v_empty, d_scaled, reg_sum, reg_max,
             $estSql AS hll_estimate, exact_distinct,
             $relErrSql AS rel_err,
@@ -439,33 +457,14 @@ object SketchQueries extends Registry {
           .orderBy($"l_returnflag")
       },
       Some {
-        import graft.functions.HyperLogLog.{M, RhoMax, WordBits}
-        val hashSql = graft.functions.TextFunctions.hexPolySql(15,
-          "concat_ws('|', 'hll', l_orderkey)")
         val estSql = graft.functions.HyperLogLog.estimateSql("d_scaled")
-        s"""WITH h AS (SELECT l_returnflag, $hashSql AS h FROM lineitem
+        s"""WITH h AS (SELECT l_returnflag, $hllOrderKeyHash AS h FROM lineitem
             WHERE CAST(l_shipdate AS DATE) < DATE '1995-07-01'),
-          b AS (SELECT l_returnflag, h >> $WordBits AS bkt,
-              h & ${(1L << WordBits) - 1} AS w FROM h),
-          r AS (SELECT l_returnflag, bkt,
-              max(CASE WHEN w = 0 THEN $RhoMax
-                  ELSE CAST(log2(w & (-w)) AS INT) + 1 END) AS reg
-            FROM b GROUP BY 1, 2),
-          p AS (SELECT l_returnflag, count(*) AS n_buckets,
-              sum(CAST(1 AS BIGINT) << ($RhoMax - reg)) AS d_present,
-              sum(reg) AS reg_sum, max(reg) AS reg_max
-            FROM r GROUP BY 1),
+          $hllRegisterCtes
           e AS (SELECT l_returnflag, count(DISTINCT l_orderkey) AS exact_after
             FROM lineitem WHERE CAST(l_shipdate AS DATE) < DATE '1995-07-01'
             GROUP BY 1),
-          s AS (SELECT p.l_returnflag,
-              CAST($M - n_buckets AS BIGINT) AS v_empty,
-              CAST(d_present + ($M - n_buckets) * (CAST(1 AS BIGINT) << $RhoMax)
-                AS BIGINT) AS d_scaled,
-              CAST(reg_sum AS BIGINT) AS reg_sum,
-              CAST(reg_max AS INT) AS reg_max,
-              CAST(exact_after AS BIGINT) AS exact_after
-            FROM p JOIN e USING (l_returnflag))
+          ${hllSummaryCte("exact_after")}
           SELECT l_returnflag, v_empty, d_scaled, reg_sum, reg_max,
             $estSql AS hll_estimate, exact_after
           FROM s ORDER BY l_returnflag"""

@@ -581,6 +581,66 @@ object TextQueries extends Registry {
       (5L, "neardup_survivors", s5))
   }
 
+  /** The near-dup graph's components (q73, q197, q176, q103): LSH-scored
+    * pairs at >= half the permutations, made undirected, and their
+    * transitive closure `reach(a, b)`. */
+  private val lshReachCtes = s"""WITH RECURSIVE $lshScoredCte,
+          und AS (SELECT doc_a AS a, doc_b AS b FROM scored WHERE agree >= ${nPerms / 2}
+                  UNION
+                  SELECT doc_b, doc_a FROM scored WHERE agree >= ${nPerms / 2}),
+          reach(a, b) AS (SELECT a, b FROM und
+                          UNION
+                          SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)"""
+
+  /** q122 and q165's incremental-dedup split: the last tenth of doc ids
+    * is the new batch, every document is cut into 20-token chunks hashed
+    * every 10 tokens, and `existing` holds the older documents' chunks. */
+  private val chunkCtes = """WITH m AS (SELECT max(doc_id) - max(doc_id) // 10 AS cut FROM documents),
+          t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+          c AS (SELECT DISTINCT doc_id, unnest(
+              [md5(array_to_string(toks[i:i+19], ' '))
+               for i in range(1, greatest(len(toks) - 19, 0) + 1, 10)]) AS chunk
+            FROM t),
+          existing AS (SELECT DISTINCT chunk FROM c, m WHERE doc_id < cut),"""
+
+  /** The sigmoid of the logistic-regression oracles (q178, q285) in 1e-6
+    * units, for weights row `w` over the features f1..f3. */
+  private def lrPmSql(w: String) =
+    s"""CAST(round(1000000 / (1.0 + exp(-($w.w0 + $w.w1 * f1 + $w.w2 * f2 + $w.w3 * f3)))) AS BIGINT)"""
+
+  /** q178 and q285's features `f` (length, digit ratio, stop-word ratio,
+    * quality label) and two exactly quantized batch gradient steps,
+    * weights wa -> wb -> wc. */
+  private val lrTwoStepCtes = {
+    val digitSql =
+      "((CAST(length(text) AS DOUBLE) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text))"
+    val stopSql =
+      s"""(CAST(len(list_filter(string_split(text, ' '), x -> x IN (${LangLexicon.sqlWordList}))) AS DOUBLE)
+              / len(string_split(text, ' ')))"""
+    def stepSql(prev: String, p: String, g: String, nxt: String) =
+      s"""$p AS (SELECT f.*, ${lrPmSql("w")} AS pm FROM f CROSS JOIN $prev w),
+            $g AS (SELECT
+                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * 1000000) AS BIGINT)) AS g0,
+                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f1 * 1000000) AS BIGINT)) AS g1,
+                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f2 * 1000000) AS BIGINT)) AS g2,
+                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f3 * 1000000) AS BIGINT)) AS g3,
+                count(*) AS n FROM $p),
+            $nxt AS (SELECT w.w0 - CAST(g.g0 AS DOUBLE) / 1000000 / g.n AS w0,
+                            w.w1 - CAST(g.g1 AS DOUBLE) / 1000000 / g.n AS w1,
+                            w.w2 - CAST(g.g2 AS DOUBLE) / 1000000 / g.n AS w2,
+                            w.w3 - CAST(g.g3 AS DOUBLE) / 1000000 / g.n AS w3
+                     FROM $prev w CROSS JOIN $g g)"""
+    s"""WITH f AS (SELECT doc_id,
+                least(1.0, CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0) AS f1,
+                $digitSql AS f2,
+                $stopSql AS f3,
+                CASE WHEN ($qualitySqlExpr) >= 0.4 THEN 1 ELSE 0 END AS y
+              FROM documents),
+            wa AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3),
+            ${stepSql("wa", "p1", "g1", "wb")},
+            ${stepSql("wb", "p2", "g2", "wc")},"""
+  }
+
   override def entries: Seq[Q] = Seq(
 
     // ---- corpus curation: the end-to-end filter chain a training-data
@@ -873,13 +933,7 @@ object TextQueries extends Registry {
           .select(col("node").as("doc_id"), col("comp").as("component"))
           .orderBy($"doc_id")
       },
-      Some(s"""WITH RECURSIVE $lshScoredCte,
-          und AS (SELECT doc_a AS a, doc_b AS b FROM scored WHERE agree >= ${nPerms / 2}
-                  UNION
-                  SELECT doc_b, doc_a FROM scored WHERE agree >= ${nPerms / 2}),
-          reach(a, b) AS (SELECT a, b FROM und
-                          UNION
-                          SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
+      Some(s"""$lshReachCtes
           SELECT a AS doc_id, least(a, min(b)) AS component
           FROM reach GROUP BY a ORDER BY doc_id""")),
 
@@ -903,13 +957,7 @@ object TextQueries extends Registry {
           .select(col("node").as("doc_id"), col("comp").as("component"))
           .orderBy($"doc_id")
       },
-      Some(s"""WITH RECURSIVE $lshScoredCte,
-          und AS (SELECT doc_a AS a, doc_b AS b FROM scored WHERE agree >= ${nPerms / 2}
-                  UNION
-                  SELECT doc_b, doc_a FROM scored WHERE agree >= ${nPerms / 2}),
-          reach(a, b) AS (SELECT a, b FROM und
-                          UNION
-                          SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
+      Some(s"""$lshReachCtes
           SELECT a AS doc_id, least(a, min(b)) AS component
           FROM reach GROUP BY a ORDER BY doc_id""")),
 
@@ -1325,13 +1373,7 @@ object TextQueries extends Registry {
             when(r < 0.90, "train").when(r < 0.95, "val").otherwise("test"))
           .orderBy($"doc_id")
       },
-      Some(s"""WITH RECURSIVE $lshScoredCte,
-          und AS (SELECT doc_a AS a, doc_b AS b FROM scored WHERE agree >= ${nPerms / 2}
-                  UNION
-                  SELECT doc_b, doc_a FROM scored WHERE agree >= ${nPerms / 2}),
-          reach(a, b) AS (SELECT a, b FROM und
-                          UNION
-                          SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+      Some(s"""$lshReachCtes,
           comp AS (SELECT a AS doc_id, least(a, min(b)) AS comp
                    FROM reach GROUP BY a),
           keyed AS (SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS component
@@ -1452,43 +1494,13 @@ object TextQueries extends Registry {
           .crossJoin(broadcast(w2))
           .select($"n_docs", $"w0", $"w1", $"w2", $"w3", $"train_acc")
       },
-      Some {
-        val digitSql =
-          "((CAST(length(text) AS DOUBLE) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text))"
-        val stopSql =
-          s"""(CAST(len(list_filter(string_split(text, ' '), x -> x IN (${LangLexicon.sqlWordList}))) AS DOUBLE)
-              / len(string_split(text, ' ')))"""
-        def pmSql(w: String) =
-          s"""CAST(round(1000000 / (1.0 + exp(-($w.w0 + $w.w1 * f1 + $w.w2 * f2 + $w.w3 * f3)))) AS BIGINT)"""
-        def stepSql(prev: String, p: String, g: String, nxt: String) =
-          s"""$p AS (SELECT f.*, ${pmSql("w")} AS pm FROM f CROSS JOIN $prev w),
-            $g AS (SELECT
-                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * 1000000) AS BIGINT)) AS g0,
-                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f1 * 1000000) AS BIGINT)) AS g1,
-                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f2 * 1000000) AS BIGINT)) AS g2,
-                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f3 * 1000000) AS BIGINT)) AS g3,
-                count(*) AS n FROM $p),
-            $nxt AS (SELECT w.w0 - CAST(g.g0 AS DOUBLE) / 1000000 / g.n AS w0,
-                            w.w1 - CAST(g.g1 AS DOUBLE) / 1000000 / g.n AS w1,
-                            w.w2 - CAST(g.g2 AS DOUBLE) / 1000000 / g.n AS w2,
-                            w.w3 - CAST(g.g3 AS DOUBLE) / 1000000 / g.n AS w3
-                     FROM $prev w CROSS JOIN $g g)"""
-        s"""WITH f AS (SELECT doc_id,
-                least(1.0, CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0) AS f1,
-                $digitSql AS f2,
-                $stopSql AS f3,
-                CASE WHEN ($qualitySqlExpr) >= 0.4 THEN 1 ELSE 0 END AS y
-              FROM documents),
-            wa AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3),
-            ${stepSql("wa", "p1", "g1", "wb")},
-            ${stepSql("wb", "p2", "g2", "wc")},
+      Some(s"""$lrTwoStepCtes
             acc AS (SELECT count(*) AS n_docs,
                 CAST(sum(CASE WHEN (pm >= 500000 AND y = 1) OR (pm < 500000 AND y = 0)
                          THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS train_acc
-              FROM (SELECT f.y, ${pmSql("w")} AS pm FROM f CROSS JOIN wc w))
+              FROM (SELECT f.y, ${lrPmSql("w")} AS pm FROM f CROSS JOIN wc w))
           SELECT CAST(a.n_docs AS BIGINT) AS n_docs, w.w0, w.w1, w.w2, w.w3, a.train_acc
-          FROM acc a CROSS JOIN wc w"""
-      }),
+          FROM acc a CROSS JOIN wc w""")),
 
     // ---- LOSS CURVE of the q178 training loop (VERDICT r12 item 9's
     //      pin): the same two exact-quantized gradient steps, with the
@@ -1549,42 +1561,14 @@ object TextQueries extends Registry {
             when($"loss2" <= $"loss1", 1).otherwise(0).cast("int").as("noninc_12"))
       },
       Some {
-        val digitSql =
-          "((CAST(length(text) AS DOUBLE) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text))"
-        val stopSql =
-          s"""(CAST(len(list_filter(string_split(text, ' '), x -> x IN (${LangLexicon.sqlWordList}))) AS DOUBLE)
-              / len(string_split(text, ' ')))"""
-        def pmSql(w: String) =
-          s"""CAST(round(1000000 / (1.0 + exp(-($w.w0 + $w.w1 * f1 + $w.w2 * f2 + $w.w3 * f3)))) AS BIGINT)"""
-        def stepSql(prev: String, p: String, g: String, nxt: String) =
-          s"""$p AS (SELECT f.*, ${pmSql("w")} AS pm FROM f CROSS JOIN $prev w),
-            $g AS (SELECT
-                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * 1000000) AS BIGINT)) AS g0,
-                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f1 * 1000000) AS BIGINT)) AS g1,
-                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f2 * 1000000) AS BIGINT)) AS g2,
-                sum(CAST(round((CAST(pm AS DOUBLE) / 1000000 - y) * f3 * 1000000) AS BIGINT)) AS g3,
-                count(*) AS n FROM $p),
-            $nxt AS (SELECT w.w0 - CAST(g.g0 AS DOUBLE) / 1000000 / g.n AS w0,
-                            w.w1 - CAST(g.g1 AS DOUBLE) / 1000000 / g.n AS w1,
-                            w.w2 - CAST(g.g2 AS DOUBLE) / 1000000 / g.n AS w2,
-                            w.w3 - CAST(g.g3 AS DOUBLE) / 1000000 / g.n AS w3
-                     FROM $prev w CROSS JOIN $g g)"""
         def lossSql(w: String, tag: String) =
           s"""l$tag AS (SELECT
               sum(CAST(round(-1000000.0 * ln(CASE WHEN y = 1
                   THEN CAST(pm AS DOUBLE) / 1000000.0
                   ELSE 1.0 - CAST(pm AS DOUBLE) / 1000000.0 END)) AS BIGINT)) AS loss$tag,
               count(*) AS n$tag
-            FROM (SELECT f.y, ${pmSql("w")} AS pm FROM f CROSS JOIN $w w))"""
-        s"""WITH f AS (SELECT doc_id,
-                least(1.0, CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0) AS f1,
-                $digitSql AS f2,
-                $stopSql AS f3,
-                CASE WHEN ($qualitySqlExpr) >= 0.4 THEN 1 ELSE 0 END AS y
-              FROM documents),
-            wa AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3),
-            ${stepSql("wa", "p1", "g1", "wb")},
-            ${stepSql("wb", "p2", "g2", "wc")},
+            FROM (SELECT f.y, ${lrPmSql("w")} AS pm FROM f CROSS JOIN $w w))"""
+        s"""$lrTwoStepCtes
             ${lossSql("wa", "0")}, ${lossSql("wb", "1")}, ${lossSql("wc", "2")}
           SELECT CAST(n0 AS BIGINT) AS n_docs,
             CAST(loss0 AS BIGINT) AS loss0_micro,
@@ -2072,13 +2056,7 @@ object TextQueries extends Registry {
               .as("keep"))
           .orderBy($"doc_id")
       },
-      Some(s"""WITH RECURSIVE $lshScoredCte,
-          und AS (SELECT doc_a AS a, doc_b AS b FROM scored WHERE agree >= ${nPerms / 2}
-                  UNION
-                  SELECT doc_b, doc_a FROM scored WHERE agree >= ${nPerms / 2}),
-          reach(a, b) AS (SELECT a, b FROM und
-                          UNION
-                          SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+      Some(s"""$lshReachCtes,
           comp AS (SELECT a AS node, least(a, min(b)) AS component
                    FROM reach GROUP BY a)
           SELECT d.doc_id,
@@ -2559,13 +2537,7 @@ object TextQueries extends Registry {
               .as("verdict"))
           .orderBy($"doc_id")
       },
-      Some("""WITH m AS (SELECT max(doc_id) - max(doc_id) // 10 AS cut FROM documents),
-          t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-          c AS (SELECT DISTINCT doc_id, unnest(
-              [md5(array_to_string(toks[i:i+19], ' '))
-               for i in range(1, greatest(len(toks) - 19, 0) + 1, 10)]) AS chunk
-            FROM t),
-          existing AS (SELECT DISTINCT chunk FROM c, m WHERE doc_id < cut),
+      Some(s"""$chunkCtes
           batch AS (SELECT doc_id FROM documents, m WHERE doc_id >= cut),
           hits AS (SELECT c.doc_id, count(*) AS n_shared
                    FROM c, m WHERE c.doc_id >= m.cut
@@ -2990,13 +2962,7 @@ object TextQueries extends Registry {
       },
       Some {
         val pos = s"(${hexPolySql(12, "'bloom' || j || ':' || chunk")} % 131072)"
-        s"""WITH m AS (SELECT max(doc_id) - max(doc_id) // 10 AS cut FROM documents),
-          t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-          c AS (SELECT DISTINCT doc_id, unnest(
-              [md5(array_to_string(toks[i:i+19], ' '))
-               for i in range(1, greatest(len(toks) - 19, 0) + 1, 10)]) AS chunk
-            FROM t),
-          existing AS (SELECT DISTINCT chunk FROM c, m WHERE doc_id < cut),
+        s"""$chunkCtes
           filt AS (SELECT pos // 32 AS word,
                      bit_or(1::BIGINT << CAST(pos % 32 AS INT)) AS bits
                    FROM (SELECT $pos AS pos

@@ -90,6 +90,103 @@ object VectorQueries extends Registry {
     (scored, q)
   }
 
+  /** IVF assignment of every embedding to its max-cosine centroid in
+    * `centsRel`, ties on cid (q163, q261). */
+  private def assignCte(name: String, centsRel: String, centsCol: String) =
+    s"""$name AS (SELECT vec_id, embedding, cid FROM (
+               SELECT e.vec_id, e.embedding, t.cid,
+                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
+                   ${dotSql(s"t.$centsCol", "e.embedding")}
+                     / (sqrt(${dotSql(s"t.$centsCol", s"t.$centsCol")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
+                   t.cid) AS arn
+               FROM embeddings e, $centsRel t) WHERE arn = 1)"""
+
+  /** Two Lloyd rounds from the 8 seed centroids: assignments a0, a1 and
+    * the updated centroid sets tc1, tc2 (q163, q261). */
+  private val lloydTwoRounds = {
+    // per-cluster centroid means over `from`, from 1e-3-quantized long sums
+    def meansCte(name: String, from: String) =
+      s"""${name}_m AS (SELECT cid, dim,
+                 CAST(sum(CAST(round(CAST(embedding[dim + 1] AS DOUBLE) * 1000.0) AS BIGINT)) AS DOUBLE)
+                   / 1000.0 / count(*) AS m
+               FROM $from, UNNEST(range(0, 64)) AS t(dim)
+               GROUP BY cid, dim),
+             $name AS (SELECT cid, list(m ORDER BY dim) AS cv
+                       FROM ${name}_m GROUP BY cid)"""
+    s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
+              FROM embeddings WHERE vec_id < 8),
+          ${assignCte("a0", "cents", "cv")},
+          ${meansCte("tc1", "a0")},
+          ${assignCte("a1", "tc1", "cv")},
+          ${meansCte("tc2", "a1")},"""
+  }
+
+  /** The IVF-PQ oracles' shared front (q109, q154, q183): coarse
+    * assignment to the 8 centroids, 4 x 16-dim PQ encoding against the
+    * same codebook, and each query's approximate L2 to its cluster-mates
+    * from the lookup table. */
+  private val ivfPqScored = {
+    // squared L2 between the 16-dim slice `t.s` of `v` and of codeword `c.cv`
+    def sliceDistSql(v: String) =
+      "list_reduce(list_transform(range(0, 16), i -> " +
+        s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE)) * " +
+        s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE))), " +
+        "(acc, x) -> acc + x)"
+    s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
+              FROM embeddings WHERE vec_id < 8),
+          assign AS (SELECT vec_id, embedding, cid FROM (
+                SELECT e.vec_id, e.embedding, c.cid,
+                  row_number() OVER (PARTITION BY e.vec_id ORDER BY
+                    ${dotSql("c.cv", "e.embedding")}
+                      / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
+                    c.cid) AS arn
+                FROM embeddings e, cents c)
+              WHERE arn = 1),
+          codes AS (SELECT vec_id AS code, embedding AS cv
+              FROM embeddings WHERE vec_id < 8),
+          encd AS (SELECT a.vec_id, a.cid, c.code, t.s, ${sliceDistSql("a.embedding")} AS dist
+                   FROM assign a CROSS JOIN codes c
+                   CROSS JOIN (SELECT unnest(range(0, 4)) AS s) t),
+          enc AS (SELECT vec_id, cid, s, code FROM (
+                SELECT *, row_number() OVER (PARTITION BY vec_id, s
+                  ORDER BY dist, code) AS rn FROM encd)
+              WHERE rn = 1),
+          q AS (SELECT vec_id AS query_id, embedding AS qv, cid
+                FROM assign WHERE vec_id % 100 = 0),
+          lutd AS (SELECT q.query_id, c.code, t.s, ${sliceDistSql("q.qv")} AS d
+                   FROM q CROSS JOIN codes c
+                   CROSS JOIN (SELECT unnest(range(0, 4)) AS s) t),
+          scored AS (SELECT q.query_id, e.vec_id,
+                CAST(sum(CAST(round(l.d * 1000000) AS BIGINT)) AS DOUBLE) / 1000000.0
+                  AS approx_l2
+              FROM q JOIN enc e ON e.cid = q.cid AND e.vec_id <> q.query_id
+              JOIN lutd l ON l.query_id = q.query_id AND l.s = e.s AND l.code = e.code
+              GROUP BY q.query_id, e.vec_id)"""
+  }
+
+  /** q31 and q140's coarse quantizer: the 8 centroids (vec_id < 8) and
+    * each vector's max-cosine centroid (ties on cid). */
+  private val ivfAssignCtes = s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
+                    FROM embeddings WHERE vec_id < 8),
+        assign AS (SELECT vec_id, embedding, cid FROM (
+                     SELECT e.vec_id, e.embedding, c.cid,
+                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
+                         ${dotSql("c.cv", "e.embedding")}
+                           / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
+                         c.cid) AS arn
+                     FROM embeddings e, cents c)
+                   WHERE arn = 1),"""
+
+  /** Top-3 cosine neighbours of each query `q` among its cluster-mates
+    * in `assign`, ranked by cosine then id (q31, q140). */
+  private val ivfTop3Cosine = s"""scored AS (SELECT q.query_id, a.vec_id AS neighbor_id,
+                     ${dotSql("q.qv", "a.embedding")}
+                       / (sqrt(${dotSql("q.qv", "q.qv")}) * sqrt(${dotSql("a.embedding", "a.embedding")})) AS cosine
+                   FROM q JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.query_id)
+        SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, cosine FROM (
+          SELECT *, row_number() OVER (PARTITION BY query_id
+            ORDER BY cosine DESC, neighbor_id) AS rn FROM scored)"""
+
   override def entries: Seq[Q] = Seq(
 
     // ---- brute-force cosine top-k (baseline; exact) ----------------------
@@ -141,25 +238,10 @@ object VectorQueries extends Registry {
           .select($"query_id", $"rank", $"neighbor_id", $"cosine")
           .orderBy($"query_id", $"rank")
       },
-      Some(s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-                    FROM embeddings WHERE vec_id < 8),
-        assign AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT e.vec_id, e.embedding, c.cid,
-                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                         ${dotSql("c.cv", "e.embedding")}
-                           / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                         c.cid) AS arn
-                     FROM embeddings e, cents c)
-                   WHERE arn = 1),
+      Some(s"""$ivfAssignCtes
         q AS (SELECT vec_id AS query_id, embedding AS qv, cid
               FROM assign WHERE vec_id % 100 = 0),
-        scored AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-                     ${dotSql("q.qv", "a.embedding")}
-                       / (sqrt(${dotSql("q.qv", "q.qv")}) * sqrt(${dotSql("a.embedding", "a.embedding")})) AS cosine
-                   FROM q JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.query_id)
-        SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, cosine FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rn FROM scored)
+        $ivfTop3Cosine
         WHERE rn <= 3 ORDER BY query_id, rank""")),
 
     // ---- embedding-cosine near-dup: the dedup variant — candidate pairs
@@ -375,47 +457,11 @@ object VectorQueries extends Registry {
           .select($"query_id", $"rank", $"vec_id".as("neighbor_id"), $"approx_l2")
           .orderBy($"query_id", $"rank")
       },
-      Some {
-        def sliceDistSql(v: String) =
-          "list_reduce(list_transform(range(0, 16), i -> " +
-            s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE)) * " +
-            s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE))), " +
-            "(acc, x) -> acc + x)"
-        s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          assign AS (SELECT vec_id, embedding, cid FROM (
-                SELECT e.vec_id, e.embedding, c.cid,
-                  row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                    ${dotSql("c.cv", "e.embedding")}
-                      / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                    c.cid) AS arn
-                FROM embeddings e, cents c)
-              WHERE arn = 1),
-          codes AS (SELECT vec_id AS code, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          encd AS (SELECT a.vec_id, a.cid, c.code, t.s, ${sliceDistSql("a.embedding")} AS dist
-                   FROM assign a CROSS JOIN codes c
-                   CROSS JOIN (SELECT unnest(range(0, 4)) AS s) t),
-          enc AS (SELECT vec_id, cid, s, code FROM (
-                SELECT *, row_number() OVER (PARTITION BY vec_id, s
-                  ORDER BY dist, code) AS rn FROM encd)
-              WHERE rn = 1),
-          q AS (SELECT vec_id AS query_id, embedding AS qv, cid
-                FROM assign WHERE vec_id % 100 = 0),
-          lutd AS (SELECT q.query_id, c.code, t.s, ${sliceDistSql("q.qv")} AS d
-                   FROM q CROSS JOIN codes c
-                   CROSS JOIN (SELECT unnest(range(0, 4)) AS s) t),
-          scored AS (SELECT q.query_id, e.vec_id,
-                CAST(sum(CAST(round(l.d * 1000000) AS BIGINT)) AS DOUBLE) / 1000000.0
-                  AS approx_l2
-              FROM q JOIN enc e ON e.cid = q.cid AND e.vec_id <> q.query_id
-              JOIN lutd l ON l.query_id = q.query_id AND l.s = e.s AND l.code = e.code
-              GROUP BY q.query_id, e.vec_id)
+      Some(s"""$ivfPqScored
           SELECT query_id, CAST(rn AS INT) AS rank, vec_id AS neighbor_id, approx_l2
           FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                   ORDER BY approx_l2, vec_id) AS rn FROM scored)
-          WHERE rn <= 3 ORDER BY query_id, rank"""
-      }),
+          WHERE rn <= 3 ORDER BY query_id, rank""")),
 
     // ---- cross-modal metadata join: documents (text metadata) × embeddings
     //      (vectors) on the shared id — the join every curation decision
@@ -582,16 +628,7 @@ object VectorQueries extends Registry {
           .select($"query_id", $"rank", $"neighbor_id", $"cosine")
           .orderBy($"query_id", $"rank")
       },
-      Some(s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-                    FROM embeddings WHERE vec_id < 8),
-        assign AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT e.vec_id, e.embedding, c.cid,
-                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                         ${dotSql("c.cv", "e.embedding")}
-                           / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                         c.cid) AS arn
-                     FROM embeddings e, cents c)
-                   WHERE arn = 1),
+      Some(s"""$ivfAssignCtes
         q AS (SELECT vec_id AS query_id, embedding AS qv, cid FROM (
                 SELECT e.vec_id, e.embedding, c.cid,
                   row_number() OVER (PARTITION BY e.vec_id ORDER BY
@@ -600,13 +637,7 @@ object VectorQueries extends Registry {
                     c.cid) AS arn
                 FROM embeddings e, cents c WHERE e.vec_id % 100 = 0)
               WHERE arn <= 2),
-        scored AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-                     ${dotSql("q.qv", "a.embedding")}
-                       / (sqrt(${dotSql("q.qv", "q.qv")}) * sqrt(${dotSql("a.embedding", "a.embedding")})) AS cosine
-                   FROM q JOIN assign a ON a.cid = q.cid AND a.vec_id <> q.query_id)
-        SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, cosine FROM (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY cosine DESC, neighbor_id) AS rn FROM scored)
+        $ivfTop3Cosine
         WHERE rn <= 3 ORDER BY query_id, rank""")),
 
     // ---- semantic decontamination: q104's shingle check misses
@@ -864,29 +895,7 @@ object VectorQueries extends Registry {
           .select($"query_id", $"rank", $"neighbor_id", $"cosine")
           .orderBy($"query_id", $"rank")
       },
-      Some {
-        def assignCte(name: String, centsRel: String, centsCol: String) =
-          s"""$name AS (SELECT vec_id, embedding, cid FROM (
-               SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   ${dotSql(s"t.$centsCol", "e.embedding")}
-                     / (sqrt(${dotSql(s"t.$centsCol", s"t.$centsCol")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                   t.cid) AS arn
-               FROM embeddings e, $centsRel t) WHERE arn = 1)"""
-        def meansCte(name: String, from: String) =
-          s"""${name}_m AS (SELECT cid, dim,
-                 CAST(sum(CAST(round(CAST(embedding[dim + 1] AS DOUBLE) * 1000.0) AS BIGINT)) AS DOUBLE)
-                   / 1000.0 / count(*) AS m
-               FROM $from, UNNEST(range(0, 64)) AS t(dim)
-               GROUP BY cid, dim),
-             $name AS (SELECT cid, list(m ORDER BY dim) AS cv
-                       FROM ${name}_m GROUP BY cid)"""
-        s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          ${assignCte("a0", "cents", "cv")},
-          ${meansCte("tc1", "a0")},
-          ${assignCte("a1", "tc1", "cv")},
-          ${meansCte("tc2", "a1")},
+      Some(s"""$lloydTwoRounds
           ${assignCte("a2", "tc2", "cv")},
           q AS (SELECT vec_id AS query_id, embedding AS qv, cid
                 FROM a2 WHERE vec_id % 100 = 0),
@@ -897,8 +906,7 @@ object VectorQueries extends Registry {
           SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, cosine FROM (
             SELECT *, row_number() OVER (PARTITION BY query_id
               ORDER BY cosine DESC, neighbor_id) AS rn FROM scored)
-          WHERE rn <= 3 ORDER BY query_id, rank"""
-      }),
+          WHERE rn <= 3 ORDER BY query_id, rank""")),
 
     // ---- two-stage retrieval (the production ANN pattern): IVF-PQ
     //      generates a WIDE candidate set (top-10 by approx distance, the
@@ -927,42 +935,7 @@ object VectorQueries extends Registry {
           .select($"query_id", $"rank", $"neighbor_id", $"cosine", $"approx_l2")
           .orderBy($"query_id", $"rank")
       },
-      Some {
-        def sliceDistSql(v: String) =
-          "list_reduce(list_transform(range(0, 16), i -> " +
-            s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE)) * " +
-            s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE))), " +
-            "(acc, x) -> acc + x)"
-        s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          assign AS (SELECT vec_id, embedding, cid FROM (
-                SELECT e.vec_id, e.embedding, c.cid,
-                  row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                    ${dotSql("c.cv", "e.embedding")}
-                      / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                    c.cid) AS arn
-                FROM embeddings e, cents c)
-              WHERE arn = 1),
-          codes AS (SELECT vec_id AS code, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          encd AS (SELECT a.vec_id, a.cid, c.code, t.s, ${sliceDistSql("a.embedding")} AS dist
-                   FROM assign a CROSS JOIN codes c
-                   CROSS JOIN (SELECT unnest(range(0, 4)) AS s) t),
-          enc AS (SELECT vec_id, cid, s, code FROM (
-                SELECT *, row_number() OVER (PARTITION BY vec_id, s
-                  ORDER BY dist, code) AS rn FROM encd)
-              WHERE rn = 1),
-          q AS (SELECT vec_id AS query_id, embedding AS qv, cid
-                FROM assign WHERE vec_id % 100 = 0),
-          lutd AS (SELECT q.query_id, c.code, t.s, ${sliceDistSql("q.qv")} AS d
-                   FROM q CROSS JOIN codes c
-                   CROSS JOIN (SELECT unnest(range(0, 4)) AS s) t),
-          scored AS (SELECT q.query_id, e.vec_id,
-                CAST(sum(CAST(round(l.d * 1000000) AS BIGINT)) AS DOUBLE) / 1000000.0
-                  AS approx_l2
-              FROM q JOIN enc e ON e.cid = q.cid AND e.vec_id <> q.query_id
-              JOIN lutd l ON l.query_id = q.query_id AND l.s = e.s AND l.code = e.code
-              GROUP BY q.query_id, e.vec_id),
+      Some(s"""$ivfPqScored,
           cand AS (SELECT query_id, vec_id, approx_l2
               FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                       ORDER BY approx_l2, vec_id) AS rn FROM scored)
@@ -975,8 +948,7 @@ object VectorQueries extends Registry {
           SELECT query_id, CAST(rn AS INT) AS rank, neighbor_id, cosine, approx_l2
           FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                   ORDER BY cosine DESC, neighbor_id) AS rn FROM rer)
-          WHERE rn <= 3 ORDER BY query_id, rank"""
-      }),
+          WHERE rn <= 3 ORDER BY query_id, rank""")),
 
     // ---- nDCG@10 audit of the IVF-PQ stack ("measure, don't guess" for
     //      ANN ranking QUALITY, complementing q179's recall-of-candidates):
@@ -1028,42 +1000,7 @@ object VectorQueries extends Registry {
             ($"dcg_micro".cast("double") / $"idcg_micro".cast("double")).as("ndcg"))
           .orderBy($"query_id")
       },
-      Some {
-        def sliceDistSql(v: String) =
-          "list_reduce(list_transform(range(0, 16), i -> " +
-            s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE)) * " +
-            s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE))), " +
-            "(acc, x) -> acc + x)"
-        s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          assign AS (SELECT vec_id, embedding, cid FROM (
-                SELECT e.vec_id, e.embedding, c.cid,
-                  row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                    ${dotSql("c.cv", "e.embedding")}
-                      / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                    c.cid) AS arn
-                FROM embeddings e, cents c)
-              WHERE arn = 1),
-          codes AS (SELECT vec_id AS code, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          encd AS (SELECT a.vec_id, a.cid, c.code, t.s, ${sliceDistSql("a.embedding")} AS dist
-                   FROM assign a CROSS JOIN codes c
-                   CROSS JOIN (SELECT unnest(range(0, 4)) AS s) t),
-          enc AS (SELECT vec_id, cid, s, code FROM (
-                SELECT *, row_number() OVER (PARTITION BY vec_id, s
-                  ORDER BY dist, code) AS rn FROM encd)
-              WHERE rn = 1),
-          q AS (SELECT vec_id AS query_id, embedding AS qv, cid
-                FROM assign WHERE vec_id % 100 = 0),
-          lutd AS (SELECT q.query_id, c.code, t.s, ${sliceDistSql("q.qv")} AS d
-                   FROM q CROSS JOIN codes c
-                   CROSS JOIN (SELECT unnest(range(0, 4)) AS s) t),
-          scored AS (SELECT q.query_id, e.vec_id,
-                CAST(sum(CAST(round(l.d * 1000000) AS BIGINT)) AS DOUBLE) / 1000000.0
-                  AS approx_l2
-              FROM q JOIN enc e ON e.cid = q.cid AND e.vec_id <> q.query_id
-              JOIN lutd l ON l.query_id = q.query_id AND l.s = e.s AND l.code = e.code
-              GROUP BY q.query_id, e.vec_id),
+      Some(s"""$ivfPqScored,
           approx AS (SELECT query_id, vec_id, rn AS arank
               FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                       ORDER BY approx_l2, vec_id) AS rn FROM scored)
@@ -1092,8 +1029,7 @@ object VectorQueries extends Registry {
             CAST(dcg_micro AS DOUBLE) / 1000000.0 AS dcg,
             CAST(dcg_micro AS DOUBLE) / CAST(idcg_micro AS DOUBLE) AS ndcg
           FROM dcg CROSS JOIN idcg
-          ORDER BY query_id"""
-      }),
+          ORDER BY query_id""")),
 
     // ---- distributed PCA power iteration (embedding whitening / energy
     //      audit — the training side of q124's matryoshka truncation
@@ -1411,36 +1347,15 @@ object VectorQueries extends Registry {
               1L).otherwise(0L).as("non_increasing"))
       },
       Some {
-        // same CTE shapes as q163's oracle: assignment by max cosine
-        // (ties on cid) and per-dim means from 1e-3-quantized long sums
-        def assignCte(name: String, centsRel: String, centsCol: String) =
-          s"""$name AS (SELECT vec_id, embedding, cid FROM (
-               SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   ${dotSql(s"t.$centsCol", "e.embedding")}
-                     / (sqrt(${dotSql(s"t.$centsCol", s"t.$centsCol")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                   t.cid) AS arn
-               FROM embeddings e, $centsRel t) WHERE arn = 1)"""
-        def meansCte(name: String, from: String) =
-          s"""${name}_m AS (SELECT cid, dim,
-                 CAST(sum(CAST(round(CAST(embedding[dim + 1] AS DOUBLE) * 1000.0) AS BIGINT)) AS DOUBLE)
-                   / 1000.0 / count(*) AS m
-               FROM $from, UNNEST(range(0, 64)) AS t(dim)
-               GROUP BY cid, dim),
-             $name AS (SELECT cid, list(m ORDER BY dim) AS cv
-                       FROM ${name}_m GROUP BY cid)"""
+        // q163's assignment and mean-update CTEs, plus each centroid
+        // set's quantized inertia
         def inertiaCte(name: String, centsRel: String, centsCol: String) =
           s"""$name AS (SELECT CAST(sum(CAST(round((1.0 - mc) * 1000000000.0) AS BIGINT)) AS BIGINT) AS iq
                FROM (SELECT e.vec_id, max(
                    ${dotSql(s"t.$centsCol", "e.embedding")}
                      / (sqrt(${dotSql(s"t.$centsCol", s"t.$centsCol")}) * sqrt(${dotSql("e.embedding", "e.embedding")}))) AS mc
                  FROM embeddings e, $centsRel t GROUP BY e.vec_id))"""
-        s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          ${assignCte("a0", "cents", "cv")},
-          ${meansCte("tc1", "a0")},
-          ${assignCte("a1", "tc1", "cv")},
-          ${meansCte("tc2", "a1")},
+        s"""$lloydTwoRounds
           ${inertiaCte("i0", "cents", "cv")},
           ${inertiaCte("i1", "tc1", "cv")},
           ${inertiaCte("i2", "tc2", "cv")}

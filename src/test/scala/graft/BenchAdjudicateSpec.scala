@@ -16,10 +16,10 @@ class BenchAdjudicateSpec extends AnyFunSuite {
       |"sf":"/root/testdata/sf0.1"}""".stripMargin
 
   test("parses prior warm timings") {
-    val warm = BenchAdjudicate.queriesWarm(art(priorArtifact))
+    val warm = BenchAdjudicate.numbers("queries_warm", art(priorArtifact).obj("queries_warm"))
     assert(warm == Map("q01_agg" -> 0.512, "q02_filter" -> 1.25, "q74_stream" -> 2.0))
-    assert(BenchAdjudicate.queriesWarm(art("")) == Map.empty[String, Double])
-    assert(BenchAdjudicate.queriesWarm(art("{}")) == Map.empty[String, Double])
+    assert(BenchAdjudicate.numbers("queries_warm", JNull) == Map.empty[String, Double])
+    assert(BenchAdjudicate.numbers("queries_warm", art("{}")) == Map.empty[String, Double])
   }
 
   test("host fingerprint round-trips through the artifact; a drifted value type throws naming its key") {
@@ -30,14 +30,14 @@ class BenchAdjudicateSpec extends AnyFunSuite {
     val written = parse(fullArtifact(Seq("q01"), "/data/sf0.1", fp).render)
     assert(written.obj("host_fingerprint") == JStr(fp))
     // a writer change to units-in-strings must not read as "no entries"
-    // (vs_sf01 would silently compare nothing): it stops the run instead
+    // (a reader would silently compare nothing): it stops the run instead
+    def warm(txt: String) = BenchAdjudicate.numbers("queries_warm", art(txt).obj("queries_warm"))
     val drifted = """{"queries_warm":{"q01":"1.234s"}}"""
-    val e = intercept[IllegalArgumentException](
-      BenchAdjudicate.queriesWarm(art(drifted)))
+    val e = intercept[IllegalArgumentException](warm(drifted))
     assert(e.getMessage.contains("queries_warm"), e.getMessage)
     // healthy artifact and empty prior read normally
-    assert(BenchAdjudicate.queriesWarm(art("""{"queries_warm":{"q01":1.0}}""")) == Map("q01" -> 1.0))
-    assert(BenchAdjudicate.queriesWarm(art("")).isEmpty)
+    assert(warm("""{"queries_warm":{"q01":1.0}}""") == Map("q01" -> 1.0))
+    assert(warm("""{"queries_warm":{}}""").isEmpty)
   }
 
   test("host fingerprint keys on the session core count: 8- and 32-core runs do not match") {

@@ -124,7 +124,7 @@ class LadderAdjudicateSpec extends AnyFunSuite {
     }
     for (name <- Seq("BENCH_FULL.json", "BENCH_QUIET.json", "BENCH_SF1.json",
         "BENCH_SF1_FULL.json")) {
-      assert(finite(BenchAdjudicate.queriesWarm(read(name))), name)
+      assert(finite(BenchAdjudicate.numbers("queries_warm", read(name).obj("queries_warm"))), name)
     }
     val ladder = read("BENCH_LADDER.json")
     val rungs = LadderAdjudicate.parsePrior(ladder)
