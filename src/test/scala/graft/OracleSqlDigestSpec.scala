@@ -23,7 +23,7 @@ class OracleSqlDigestSpec extends AnyFunSuite {
     val removed = (want.keySet -- got.keySet).toSeq.sorted
       .map(n => s"$n (no oracle now)")
     val diff = changed ++ added ++ removed
-    assert(diff.isEmpty, s"oracle SQL changed for ${diff.size} quer" +
+    if (diff.nonEmpty) fail(s"oracle SQL changed for ${diff.size} quer" +
       s"${if (diff.size == 1) "y" else "ies"}:\n${diff.mkString("\n")}")
   }
 }
