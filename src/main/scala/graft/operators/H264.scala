@@ -627,6 +627,25 @@ object H264 {
       }
       out
     }
+
+    /** One MB's [[blockLevels]]: luma 4x4 blocks of `lumaLen`
+      * coefficients in the 8x8 quadrants set in the `cbpL` mask, chroma
+      * DC when `cbpC` > 0, chroma AC when `cbpC` == 2; uncoded blocks
+      * are zero.
+      */
+    def mbLevels(id: Long, f: Int, mb: Int, cbpL: Int, lumaLen: Int,
+        cbpC: Int): MbLevels = {
+      val ac = Array.tabulate(16)(b =>
+        if ((cbpL >> (b / 4) & 1) != 0) blockLevels(id, f, mb, 1 + b, lumaLen)
+        else new Array[Int](lumaLen))
+      val cdc = Array.tabulate(2)(c =>
+        if (cbpC > 0) blockLevels(id, f, mb, 17 + c, 4)
+        else new Array[Int](4))
+      val cac = Array.tabulate(2, 4)((c, b) =>
+        if (cbpC == 2) blockLevels(id, f, mb, 19 + 4 * c + b, 15)
+        else new Array[Int](15))
+      (ac, cdc, cac)
+    }
   }
 
   /** (x4, y4) → luma4x4BlkIdx (inverse of [[blkPos]]). */
@@ -926,10 +945,16 @@ object H264 {
   }
 
   // -------------------------------------------------------------------
-  // stream encode / decode
+  // bitstream core shared by the CAVLC (this object) and CABAC
+  // ([[H264Cabac]], [[H264CabacInter]]) coders: NAL units, parameter
+  // sets, picture planes, the level checksum
   // -------------------------------------------------------------------
 
-  private def nal(typ: Int, rbsp: Array[Byte], refIdc: Int = 3): Array[Byte] = {
+  /** Annex B NAL unit: 4-byte start code, the 1-byte header and the
+    * emulation-prevented RBSP.
+    */
+  private[operators] def nal(typ: Int, rbsp: Array[Byte],
+      refIdc: Int = 3): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array[Byte](0, 0, 0, 1))
     out.write((refIdc << 5) | typ)
@@ -937,10 +962,41 @@ object H264 {
     out.toByteArray
   }
 
-  private def spsRbsp(wMb: Int, hMb: Int, maxRef: Int = 1,
-      pocType: Int = 2): Array[Byte] = {
+  /** Splits an Annex B stream on 3- or 4-byte start codes into (first
+    * header byte, RBSP) pairs; `headerBytes` is 1 for H.264 and 2 for
+    * H.265. A start code too close to the end throws.
+    */
+  private[operators] def splitNals(bytes: Array[Byte],
+      headerBytes: Int = 1): Vector[(Int, Array[Byte])] = {
+    val nals = Vector.newBuilder[(Int, Array[Byte])]
+    var i = 0
+    var start = -1
+    var hdr = -1
+    while (i + 2 < bytes.length) {
+      if (bytes(i) == 0 && bytes(i + 1) == 0 && bytes(i + 2) == 1) {
+        if (start >= 0) {
+          val end = if (i > 0 && bytes(i - 1) == 0) i - 1 else i
+          nals += ((hdr, emulationStrip(
+            java.util.Arrays.copyOfRange(bytes, start, end))))
+        }
+        hdr = bytes(i + 3) & 0xff
+        start = i + 3 + headerBytes
+        i += 3 + headerBytes
+      } else i += 1
+    }
+    if (start >= 0 && start <= bytes.length)
+      nals += ((hdr, emulationStrip(
+        java.util.Arrays.copyOfRange(bytes, start, bytes.length))))
+    nals.result()
+  }
+
+  /** Sequence parameter set: `profileIdc` 66 (Baseline, CAVLC) or 77
+    * (Main, CABAC); POC type 2, or 0 with an 8-bit pic_order_cnt_lsb.
+    */
+  private[operators] def spsRbsp(wMb: Int, hMb: Int, profileIdc: Int = 66,
+      maxRef: Int = 1, pocType: Int = 2): Array[Byte] = {
     val w = new BitWriter
-    w.put(66, 8) // profile_idc: baseline
+    w.put(profileIdc, 8) // profile_idc
     w.put(0, 8) // constraint flags + reserved
     w.put(10, 8) // level_idc
     w.ue(0) // sps_id
@@ -958,13 +1014,42 @@ object H264 {
     w.result()
   }
 
-  private def ppsRbsp(): Array[Byte] = {
+  /** The SPS fields the decoders use. */
+  private[operators] final case class Sps(wMb: Int, hMb: Int, pocType: Int,
+      maxRef: Int)
+
+  /** Parses an SPS that [[spsRbsp]] could have written with this
+    * `profileIdc`; None for anything else.
+    */
+  private[operators] def readSps(rbsp: Array[Byte],
+      profileIdc: Int): Option[Sps] = {
+    val r = new BitReader(rbsp)
+    if (r.get(8) != profileIdc) return None
+    r.get(16) // constraints + level
+    if (r.ue() != 0) return None // sps_id
+    if (r.ue() != 0) return None // log2_max_frame_num_minus4
+    val pocType = r.ue() // pic_order_cnt_type
+    if (pocType == 0) {
+      if (r.ue() != 4) return None // log2_max_pic_order_cnt_lsb: 8 bits
+    } else if (pocType != 2) return None
+    val maxRef = r.ue() // max_num_ref_frames
+    r.get(1)
+    val wMb = r.ue() + 1; val hMb = r.ue() + 1
+    if (r.get(1) != 1) return None // frame_mbs_only
+    r.get(1); r.get(1); r.get(1) // direct_8x8_inference, cropping, vui
+    Some(Sps(wMb, hMb, pocType, maxRef))
+  }
+
+  /** Picture parameter set: CAVLC or CABAC entropy coding, one slice
+    * group, QP 26 defaults, deblocking control present.
+    */
+  private[operators] def ppsRbsp(cabac: Boolean = false): Array[Byte] = {
     val w = new BitWriter
     w.ue(0); w.ue(0) // pps_id, sps_id
-    w.put(0, 1) // CAVLC
+    w.put(if (cabac) 1 else 0, 1) // entropy_coding_mode_flag
     w.put(0, 1) // bottom_field_pic_order
     w.ue(0) // one slice group
-    w.ue(0); w.ue(0) // num_ref_idx defaults
+    w.ue(0); w.ue(0) // num_ref_idx defaults: one active ref per list
     w.put(0, 1); w.put(0, 2) // weighted pred/bipred
     w.se(0); w.se(0) // pic_init_qp/qs - 26
     w.se(0) // chroma_qp_index_offset
@@ -973,6 +1058,134 @@ object H264 {
     w.put(0, 1) // redundant_pic_cnt_present
     w.rbspTrailing()
     w.result()
+  }
+
+  /** True when `rbsp` is a PPS [[ppsRbsp]] could have written with this
+    * entropy coding mode.
+    */
+  private[operators] def readPps(rbsp: Array[Byte], cabac: Boolean): Boolean = {
+    val r = new BitReader(rbsp)
+    if (r.ue() != 0 || r.ue() != 0) return false
+    if (r.get(1) != (if (cabac) 1 else 0)) return false
+    r.get(1); r.ue(); r.ue(); r.ue(); r.get(1); r.get(2)
+    r.se(); r.se(); r.se()
+    if (r.get(1) != 1) return false // deblocking control present
+    r.get(1); r.get(1)
+    true
+  }
+
+  /** Zeroed Y, Cb, Cr planes of a wMb x hMb picture (4:2:0). */
+  private[operators] def newPlanes(wMb: Int, hMb: Int): Planes =
+    (new Array[Int](wMb * 16 * hMb * 16), new Array[Int](wMb * 8 * hMb * 8),
+      new Array[Int](wMb * 8 * hMb * 8))
+
+  /** predIntra4x4PredMode (§8.3.1.1) of the 4x4 block at (gx, gy) from
+    * the per-4x4 mode store: DC (2) when the left or top block is
+    * outside the picture, else the smaller neighbor mode (non-I_4x4 MBs
+    * store 2).
+    */
+  private[operators] def predI4Mode(store: Array[Array[Int]], gx: Int,
+      gy: Int): Int =
+    if (gx == 0 || gy == 0) 2
+    else math.min(store(gy)(gx - 1), store(gy - 1)(gx))
+
+  /** The level checksum of one slice, which the `h264Levels` oracle
+    * fragment replays: Σ level(s) · (mbIdx·131 + tag·17 + s + 1) over
+    * the nonzero levels of every coded block. Tags: luma DC 0, luma 4x4
+    * block b 1+b, chroma DC comp c 17+c, chroma AC comp c block b
+    * 19+4c+b.
+    */
+  private[operators] final class LevelSum {
+    var value = 0L
+    def add(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
+      var s = 0
+      while (s < levels.length) {
+        if (levels(s) != 0)
+          value += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
+        s += 1
+      }
+    }
+  }
+
+  /** Luma 4x4 (`ac`, one array per blkIdx), chroma DC and chroma AC
+    * level blocks of one MB.
+    */
+  private[operators] type MbLevels =
+    (Array[Array[Int]], Array[Array[Int]], Array[Array[Array[Int]]])
+
+  /** Per-slice CAVLC state: the per-4x4 TotalCoeff grids the nC
+    * contexts read (§9.2.1) and the level checksum. The block coders
+    * take the luma CBP as a per-8x8 bit mask and the chroma CBP as
+    * 0 (none), 1 (DC) or 2 (DC + AC).
+    */
+  private final class CavlcCtx(wMb: Int, hMb: Int) {
+    val tcY: Array[Array[Int]] = Array.ofDim[Int](hMb * 4, wMb * 4)
+    val tcC: Array[Array[Array[Int]]] = Array.fill(2)(Array.ofDim[Int](hMb * 2, wMb * 2))
+    val levels = new LevelSum
+
+    def lumaDcNc(mbX: Int, mbY: Int): Int = nCOf(tcY, mbX * 4, mbY * 4)
+
+    /** An I_PCM MB: every block counts TotalCoeff 16 for its neighbors. */
+    def markPcm(mbX: Int, mbY: Int): Unit = {
+      for (x4 <- 0 until 4; y4 <- 0 until 4)
+        tcY(mbY * 4 + y4)(mbX * 4 + x4) = 16
+      for (c <- 0 until 2; x2 <- 0 until 2; y2 <- 0 until 2)
+        tcC(c)(mbY * 2 + y2)(mbX * 2 + x2) = 16
+    }
+
+    /** Writes one MB's luma 4x4, chroma DC and chroma AC blocks in
+      * syntax order (§7.3.5.3) and adds them to the level checksum.
+      */
+    def write(w: BitWriter, mbIdx: Int, mbX: Int, mbY: Int, cbpL: Int,
+        cbpC: Int, lv: MbLevels): Unit = {
+      val (ac, cdc, cac) = lv
+      for (b <- 0 until 16 if (cbpL >> (b / 4) & 1) != 0) {
+        levels.add(mbIdx, 1 + b, ac(b))
+        val (x4, y4) = blkPos(b)
+        writeResidual(w, ac(b), nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
+        tcY(mbY * 4 + y4)(mbX * 4 + x4) = ac(b).count(_ != 0)
+      }
+      if (cbpC > 0) for (c <- 0 until 2) {
+        levels.add(mbIdx, 17 + c, cdc(c))
+        writeResidual(w, cdc(c), -1)
+      }
+      if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
+        levels.add(mbIdx, 19 + 4 * c + b, cac(c)(b))
+        writeResidual(w, cac(c)(b),
+          nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
+        tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cac(c)(b).count(_ != 0)
+      }
+    }
+
+    /** Reads what [[write]] wrote; luma blocks hold `lumaLen` (16, or 15
+      * for Intra_16x16 AC) coefficients. Uncoded blocks are zero.
+      */
+    def read(r: BitReader, mbIdx: Int, mbX: Int, mbY: Int, cbpL: Int,
+        lumaLen: Int, cbpC: Int): MbLevels = {
+      val ac = Array.fill(16)(new Array[Int](lumaLen))
+      for (b <- 0 until 16 if (cbpL >> (b / 4) & 1) != 0) {
+        val (x4, y4) = blkPos(b)
+        val (cf, tc) = readResidual(r, lumaLen,
+          nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
+        ac(b) = cf
+        tcY(mbY * 4 + y4)(mbX * 4 + x4) = tc
+        levels.add(mbIdx, 1 + b, cf)
+      }
+      val cdc = Array.fill(2)(new Array[Int](4))
+      if (cbpC > 0) for (c <- 0 until 2) {
+        cdc(c) = readResidual(r, 4, -1)._1
+        levels.add(mbIdx, 17 + c, cdc(c))
+      }
+      val cac = Array.fill(2, 4)(new Array[Int](15))
+      if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
+        val (cf, tc) = readResidual(r, 15,
+          nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
+        cac(c)(b) = cf
+        tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = tc
+        levels.add(mbIdx, 19 + 4 * c + b, cf)
+      }
+      (ac, cdc, cac)
+    }
   }
 
   /** Encode one stream; returns (bytes, per-frame reconstructions +
@@ -1009,16 +1222,12 @@ object H264 {
       w.put(0, 1); w.put(0, 1) // no_output_of_prior_pics, long_term_ref
       w.se(qp - 26) // slice_qp_delta
       w.ue(1) // disable_deblocking_filter_idc = 1 (no loop filter)
-      val y = new Array[Int](wMb * 16 * hMb * 16)
-      val cb = new Array[Int](wMb * 8 * hMb * 8)
-      val cr = new Array[Int](wMb * 8 * hMb * 8)
-      val tcY = Array.ofDim[Int](hMb * 4, wMb * 4)
-      val tcC = Array(Array.ofDim[Int](hMb * 2, wMb * 2),
-        Array.ofDim[Int](hMb * 2, wMb * 2))
+      val (y, cb, cr) = newPlanes(wMb, hMb)
+      val vlc = new CavlcCtx(wMb, hMb)
       // per-4x4 Intra4x4PredMode store for predicted-mode coding; 2
       // ("inferred DC") for non-I_4x4 MBs per §8.3.1.1
       val modeStore = Array.fill(hMb * 4, wMb * 4)(2)
-      var checksum = 0L; var modeSum = 0L; var cModeSum = 0L
+      var modeSum = 0L; var cModeSum = 0L
       var i4ModeSum = 0L; var nI4 = 0L
       var nPcm = 0L; var pcmSum = 0L
       for (mbIdx <- 0 until wMb * hMb) {
@@ -1027,14 +1236,6 @@ object H264 {
         val isI4 =
           if (pcmMode) !isPcm && mbX > 0
           else mixed && ConstructH.isI4(id, mbIdx)
-        def sumBlock(tag: Int, levels: Array[Int]): Unit = {
-          var s = 0
-          while (s < levels.length) {
-            if (levels(s) != 0)
-              checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-            s += 1
-          }
-        }
         if (isPcm) {
           // I_PCM (§7.3.5/§7.4.5): mb_type 25, byte alignment, raw
           // samples; every block's TotalCoeff counts as 16 for the
@@ -1055,10 +1256,7 @@ object H264 {
             pcmSum += v.toLong * (mbIdx * 389 + 256 + c * 64 + i + 1)
             (if (c == 0) cb else cr)((mbY * 8 + i / 8) * wC + mbX * 8 + i % 8) = v
           }
-          for (x4 <- 0 until 4; y4 <- 0 until 4)
-            tcY(mbY * 4 + y4)(mbX * 4 + x4) = 16
-          for (c <- 0 until 2; x2 <- 0 until 2; y2 <- 0 until 2)
-            tcC(c)(mbY * 2 + y2)(mbX * 2 + x2) = 16
+          vlc.markPcm(mbX, mbY)
         } else {
         val cm = ConstructH.chromaMode(id, mbIdx, mbX, mbY)
         cModeSum += cm
@@ -1079,31 +1277,15 @@ object H264 {
             i4ModeSum += m
             m
           }
-          val ac = Array.tabulate(16) { b =>
-            val (x4b, _) = blkPos(b)
-            if (leftPcm && x4b == 0 && cbpL)
-              ConstructH.denseLevels(id, mbIdx, b)
-            else if (cbpL) ConstructH.blockLevels(id, f, mbIdx, 1 + b, 16)
-            else new Array[Int](16)
-          }
-          val cdc = Array.tabulate(2)(c =>
-            if (cbpC > 0) ConstructH.blockLevels(id, f, mbIdx, 17 + c, 4)
-            else new Array[Int](4))
-          val cac = Array.tabulate(2, 4)((c, b) =>
-            if (cbpC == 2) ConstructH.blockLevels(id, f, mbIdx, 19 + 4 * c + b, 15)
-            else new Array[Int](15))
-          if (cbpL) (0 until 16).foreach(b => sumBlock(1 + b, ac(b)))
-          if (cbpC > 0) (0 until 2).foreach(c => sumBlock(17 + c, cdc(c)))
-          if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4)
-            sumBlock(19 + 4 * c + b, cac(c)(b))
+          val lv = ConstructH.mbLevels(id, f, mbIdx, cbp & 15, 16, cbpC)
+          if (leftPcm && cbpL) for (b <- 0 until 16 if blkPos(b)._1 == 0)
+            lv._1(b) = ConstructH.denseLevels(id, mbIdx, b)
           w.ue(0) // mb_type: I_NxN
           // per-block predicted-mode coding (§8.3.1.1)
           for (b <- 0 until 16) {
             val (x4, y4) = blkPos(b)
             val gx = mbX * 4 + x4; val gy = mbY * 4 + y4
-            val mA = if (gx > 0) modeStore(gy)(gx - 1) else -1
-            val mB = if (gy > 0) modeStore(gy - 1)(gx) else -1
-            val predM = if (mA < 0 || mB < 0) 2 else math.min(mA, mB)
+            val predM = predI4Mode(modeStore, gx, gy)
             val m = i4Modes(b)
             if (m == predM) w.put(1, 1)
             else { w.put(0, 1); w.put(if (m < predM) m else m - 1, 3) }
@@ -1112,64 +1294,34 @@ object H264 {
           w.ue(cm)
           w.ue(CbpIntraSubset.indexOf(cbp)) // me(v): the transcribed subset
           if (cbp != 0) w.se(0) // mb_qp_delta only when coded
-          if (cbpL) for (b <- 0 until 16) {
-            val (x4, y4) = blkPos(b)
-            writeResidual(w, ac(b), nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
-            tcY(mbY * 4 + y4)(mbX * 4 + x4) = ac(b).count(_ != 0)
-          }
-          if (cbpC > 0) for (c <- 0 until 2) writeResidual(w, cdc(c), -1)
-          if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-            writeResidual(w, cac(c)(b),
-              nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
-            tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cac(c)(b).count(_ != 0)
-          }
+          vlc.write(w, mbIdx, mbX, mbY, cbp & 15, cbpC, lv)
           reconstructMb(MbData(isI4 = true, 0, i4Modes, cm, cbpL, cbpC,
-            new Array[Int](16), ac, cdc, cac), qp, mbX, mbY, y, cb, cr, wMb)
+            new Array[Int](16), lv._1, lv._2, lv._3), qp, mbX, mbY, y, cb,
+            cr, wMb)
         } else {
           val pm = ConstructH.predMode(id, mbIdx, mbX, mbY)
           val cbpL = ConstructH.cbpLuma15(id, mbIdx)
           val cbpC = ConstructH.cbpChroma(id, mbIdx)
           modeSum += pm
           val dc = ConstructH.blockLevels(id, f, mbIdx, 0, 16)
-          val ac = Array.tabulate(16)(b =>
-            if (cbpL) ConstructH.blockLevels(id, f, mbIdx, 1 + b, 15)
-            else new Array[Int](15))
-          val cdc = Array.tabulate(2)(c =>
-            if (cbpC > 0) ConstructH.blockLevels(id, f, mbIdx, 17 + c, 4)
-            else new Array[Int](4))
-          val cac = Array.tabulate(2, 4)((c, b) =>
-            if (cbpC == 2) ConstructH.blockLevels(id, f, mbIdx, 19 + 4 * c + b, 15)
-            else new Array[Int](15))
-          sumBlock(0, dc)
-          if (cbpL) (0 until 16).foreach(b => sumBlock(1 + b, ac(b)))
-          if (cbpC > 0) (0 until 2).foreach(c => sumBlock(17 + c, cdc(c)))
-          if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4)
-            sumBlock(19 + 4 * c + b, cac(c)(b))
+          val lv = ConstructH.mbLevels(id, f, mbIdx, if (cbpL) 15 else 0,
+            15, cbpC)
           // mb_type: 1 + pm + 4·cbpC + 12·(cbp luma 15)
           w.ue(1 + pm + 4 * cbpC + (if (cbpL) 12 else 0))
           w.ue(cm) // intra_chroma_pred_mode
           w.se(0) // mb_qp_delta
           // residual order (§7.4.5.3.3): luma DC, luma AC ×16, chroma DC
           // Cb+Cr, chroma AC Cb ×4 then Cr ×4
-          writeResidual(w, dc, nCOf(tcY, mbX * 4, mbY * 4))
-          if (cbpL) for (b <- 0 until 16) {
-            val (x4, y4) = blkPos(b)
-            writeResidual(w, ac(b), nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
-            tcY(mbY * 4 + y4)(mbX * 4 + x4) = ac(b).count(_ != 0)
-          }
-          if (cbpC > 0) for (c <- 0 until 2) writeResidual(w, cdc(c), -1)
-          if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-            writeResidual(w, cac(c)(b),
-              nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
-            tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cac(c)(b).count(_ != 0)
-          }
+          vlc.levels.add(mbIdx, 0, dc)
+          writeResidual(w, dc, vlc.lumaDcNc(mbX, mbY))
+          vlc.write(w, mbIdx, mbX, mbY, if (cbpL) 15 else 0, cbpC, lv)
           reconstructMb(MbData(isI4 = false, pm, Array.empty, cm, cbpL,
-            cbpC, dc, ac, cdc, cac), qp, mbX, mbY, y, cb, cr, wMb)
+            cbpC, dc, lv._1, lv._2, lv._3), qp, mbX, mbY, y, cb, cr, wMb)
         }
         }
       }
       w.rbspTrailing()
-      (w.result(), H264Frame(y, cb, cr, checksum, modeSum, cModeSum,
+      (w.result(), H264Frame(y, cb, cr, vlc.levels.value, modeSum, cModeSum,
         i4ModeSum, nI4, nPcm = nPcm, pcmChecksum = pcmSum))
   }
 
@@ -1179,29 +1331,9 @@ object H264 {
     */
   def decode(bytes: Array[Byte]): Option[H264Stream] = {
     try {
-      // split on 3- or 4-byte start codes; keep (type, nal_ref_idc)
-      val nals = Vector.newBuilder[(Int, Int, Array[Byte])]
-      var i = 0
-      var start = -1
-      var typ = -1
-      var refIdc = 0
-      while (i + 2 < bytes.length) {
-        if (bytes(i) == 0 && bytes(i + 1) == 0 && bytes(i + 2) == 1) {
-          if (start >= 0) {
-            val end = if (i > 0 && bytes(i - 1) == 0) i - 1 else i
-            nals += ((typ, refIdc, emulationStrip(
-              java.util.Arrays.copyOfRange(bytes, start, end))))
-          }
-          typ = bytes(i + 3) & 0x1f
-          refIdc = (bytes(i + 3) >> 5) & 3
-          start = i + 4
-          i += 4
-        } else i += 1
-      }
-      if (start >= 0 && start <= bytes.length)
-        nals += ((typ, refIdc, emulationStrip(
-          java.util.Arrays.copyOfRange(bytes, start, bytes.length))))
-      val all = nals.result()
+      // (type, nal_ref_idc, rbsp)
+      val all = splitNals(bytes).map { case (h, rbsp) =>
+        (h & 0x1f, (h >> 5) & 3, rbsp) }
       if (all.isEmpty) return None
       var wMb = -1; var hMb = -1
       var sawPps = false
@@ -1217,28 +1349,12 @@ object H264 {
       val frames = Vector.newBuilder[H264Frame]
       all.foreach {
         case (7, _, rbsp) =>
-          val r = new BitReader(rbsp)
-          if (r.get(8) != 66) return None // baseline only
-          r.get(16) // constraints + level
-          if (r.ue() != 0) return None // sps_id
-          if (r.ue() != 0) return None // log2_max_frame_num_minus4
-          pocType = r.ue() // pic_order_cnt_type
-          if (pocType == 0) {
-            if (r.ue() != 4) return None // log2_max_pic_order_cnt_lsb: 8 bits
-          } else if (pocType != 2) return None
-          maxRef = math.max(1, r.ue()) // max_num_ref_frames
-          r.get(1)
-          wMb = r.ue() + 1; hMb = r.ue() + 1
-          if (r.get(1) != 1) return None // frame_mbs_only
-          r.get(1); r.get(1); r.get(1)
+          val sps = readSps(rbsp, 66).getOrElse(return None) // baseline only
+          wMb = sps.wMb; hMb = sps.hMb
+          pocType = sps.pocType
+          maxRef = math.max(1, sps.maxRef)
         case (8, _, rbsp) =>
-          val r = new BitReader(rbsp)
-          if (r.ue() != 0 || r.ue() != 0) return None
-          if (r.get(1) != 0) return None // CAVLC only
-          r.get(1); r.ue(); r.ue(); r.ue(); r.get(1); r.get(2)
-          r.se(); r.se(); r.se()
-          if (r.get(1) != 1) return None // deblocking control present
-          r.get(1); r.get(1)
+          if (!readPps(rbsp, cabac = false)) return None
           sawPps = true
         case (5, _, rbsp) =>
           if (wMb < 0 || !sawPps) return None
@@ -1253,28 +1369,16 @@ object H264 {
           qp = 26 + r.se()
           if (qp > 29) return None // construction bound (QPc = QP)
           if (r.ue() != 1) return None // deblocking must be disabled
-          val y = new Array[Int](wMb * 16 * hMb * 16)
-          val cb = new Array[Int](wMb * 8 * hMb * 8)
-          val cr = new Array[Int](wMb * 8 * hMb * 8)
-          val tcY = Array.ofDim[Int](hMb * 4, wMb * 4)
-          val tcC = Array(Array.ofDim[Int](hMb * 2, wMb * 2),
-            Array.ofDim[Int](hMb * 2, wMb * 2))
+          val (y, cb, cr) = newPlanes(wMb, hMb)
+          val vlc = new CavlcCtx(wMb, hMb)
           val modeStore = Array.fill(hMb * 4, wMb * 4)(2)
-          var checksum = 0L; var modeSum = 0L; var cModeSum = 0L
+          var modeSum = 0L; var cModeSum = 0L
           var i4ModeSum = 0L; var nI4 = 0L
           var nPcm = 0L; var pcmSum = 0L
           for (mbIdx <- 0 until wMb * hMb) {
             val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
             val mbType = r.ue()
             if (mbType > 25) return None // I_NxN/I_16x16/I_PCM only
-            def sumBlock(tag: Int, levels: Array[Int]): Unit = {
-              var s = 0
-              while (s < levels.length) {
-                if (levels(s) != 0)
-                  checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-                s += 1
-              }
-            }
             if (mbType == 25) { // I_PCM: aligned raw samples
               nPcm += 1
               r.alignByte()
@@ -1297,20 +1401,14 @@ object H264 {
                 }
                 c += 1
               }
-              // neighbors' CAVLC contexts see TotalCoeff 16 everywhere
-              for (x4 <- 0 until 4; y4 <- 0 until 4)
-                tcY(mbY * 4 + y4)(mbX * 4 + x4) = 16
-              for (cc <- 0 until 2; x2 <- 0 until 2; y2 <- 0 until 2)
-                tcC(cc)(mbY * 2 + y2)(mbX * 2 + x2) = 16
+              vlc.markPcm(mbX, mbY)
             } else if (mbType == 0) { // I_4x4
               nI4 += 1
               val i4Modes = new Array[Int](16)
               for (b <- 0 until 16) {
                 val (x4, y4) = blkPos(b)
                 val gx = mbX * 4 + x4; val gy = mbY * 4 + y4
-                val mA = if (gx > 0) modeStore(gy)(gx - 1) else -1
-                val mB = if (gy > 0) modeStore(gy - 1)(gx) else -1
-                val predM = if (mA < 0 || mB < 0) 2 else math.min(mA, mB)
+                val predM = predI4Mode(modeStore, gx, gy)
                 val m =
                   if (r.get(1) == 1) predM
                   else {
@@ -1329,33 +1427,12 @@ object H264 {
               if (cbpCode >= CbpIntraSubset.length)
                 return None // outside the transcribed Table 9-4 subset
               val cbp = CbpIntraSubset(cbpCode)
-              val cbpL = (cbp & 15) != 0
               val cbpC = cbp >> 4
               if (cbp != 0 && r.se() != 0) return None // mb_qp_delta
-              val ac = Array.fill(16)(new Array[Int](16))
-              if (cbpL) for (b <- 0 until 16) {
-                val (x4, y4) = blkPos(b)
-                val (cf, tc) = readResidual(r, 16,
-                  nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
-                ac(b) = cf
-                tcY(mbY * 4 + y4)(mbX * 4 + x4) = tc
-              }
-              val cdc = Array.fill(2)(new Array[Int](4))
-              if (cbpC > 0) for (c <- 0 until 2)
-                cdc(c) = readResidual(r, 4, -1)._1
-              val cac = Array.fill(2, 4)(new Array[Int](15))
-              if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-                val (cf, tc) = readResidual(r, 15,
-                  nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
-                cac(c)(b) = cf
-                tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = tc
-              }
-              if (cbpL) (0 until 16).foreach(b => sumBlock(1 + b, ac(b)))
-              if (cbpC > 0) (0 until 2).foreach(c => sumBlock(17 + c, cdc(c)))
-              if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4)
-                sumBlock(19 + 4 * c + b, cac(c)(b))
-              reconstructMb(MbData(isI4 = true, 0, i4Modes, cm, cbpL,
-                cbpC, new Array[Int](16), ac, cdc, cac),
+              val (ac, cdc, cac) = vlc.read(r, mbIdx, mbX, mbY, cbp & 15, 16,
+                cbpC)
+              reconstructMb(MbData(isI4 = true, 0, i4Modes, cm,
+                (cbp & 15) != 0, cbpC, new Array[Int](16), ac, cdc, cac),
                 qp, mbX, mbY, y, cb, cr, wMb)
             } else {
               val pm = (mbType - 1) % 4
@@ -1365,35 +1442,15 @@ object H264 {
               if (cm > 3) return None
               if (r.se() != 0) return None // mb_qp_delta (construction)
               modeSum += pm; cModeSum += cm
-              val (dc, _) = readResidual(r, 16, nCOf(tcY, mbX * 4, mbY * 4))
-              val ac = Array.fill(16)(new Array[Int](15))
-              if (cbpL) for (b <- 0 until 16) {
-                val (x4, y4) = blkPos(b)
-                val (cf, tc) = readResidual(r, 15,
-                  nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
-                ac(b) = cf
-                tcY(mbY * 4 + y4)(mbX * 4 + x4) = tc
-              }
-              val cdc = Array.fill(2)(new Array[Int](4))
-              if (cbpC > 0) for (c <- 0 until 2)
-                cdc(c) = readResidual(r, 4, -1)._1
-              val cac = Array.fill(2, 4)(new Array[Int](15))
-              if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-                val (cf, tc) = readResidual(r, 15,
-                  nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
-                cac(c)(b) = cf
-                tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = tc
-              }
-              sumBlock(0, dc)
-              if (cbpL) (0 until 16).foreach(b => sumBlock(1 + b, ac(b)))
-              if (cbpC > 0) (0 until 2).foreach(c => sumBlock(17 + c, cdc(c)))
-              if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4)
-                sumBlock(19 + 4 * c + b, cac(c)(b))
+              val (dc, _) = readResidual(r, 16, vlc.lumaDcNc(mbX, mbY))
+              vlc.levels.add(mbIdx, 0, dc)
+              val (ac, cdc, cac) = vlc.read(r, mbIdx, mbX, mbY,
+                if (cbpL) 15 else 0, 15, cbpC)
               reconstructMb(MbData(isI4 = false, pm, Array.empty, cm,
                 cbpL, cbpC, dc, ac, cdc, cac), qp, mbX, mbY, y, cb, cr, wMb)
             }
           }
-          frames += H264Frame(y, cb, cr, checksum, modeSum, cModeSum,
+          frames += H264Frame(y, cb, cr, vlc.levels.value, modeSum, cModeSum,
             i4ModeSum, nI4, nPcm = nPcm, pcmChecksum = pcmSum,
             poc = lastPoc)
           dpb = List((lastPoc, (y, cb, cr), None)) // IDR resets the DPB
@@ -1423,23 +1480,11 @@ object H264 {
           if (qp > 29) return None
           if (r.ue() != 1) return None // deblocking must be disabled
           val refs = dpb.take(2).map(_._2).toIndexedSeq
-          val y = new Array[Int](wMb * 16 * hMb * 16)
-          val cb = new Array[Int](wMb * 8 * hMb * 8)
-          val cr = new Array[Int](wMb * 8 * hMb * 8)
+          val (y, cb, cr) = newPlanes(wMb, hMb)
           val grid = new MotionGrid(wMb * 4, hMb * 4)
-          val tcY = Array.ofDim[Int](hMb * 4, wMb * 4)
-          val tcC = Array(Array.ofDim[Int](hMb * 2, wMb * 2),
-            Array.ofDim[Int](hMb * 2, wMb * 2))
-          var checksum = 0L; var mvdSum = 0L; var refSum = 0L
+          val vlc = new CavlcCtx(wMb, hMb)
+          var mvdSum = 0L; var refSum = 0L
           var nSkip = 0L; var typeSum = 0L
-          def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-            var s = 0
-            while (s < levels.length) {
-              if (levels(s) != 0)
-                checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-              s += 1
-            }
-          }
           def decodeSkip(mbIdx: Int): Unit = {
             val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
             val (mx, my) = skipMv(grid, mbX * 4, mbY * 4)
@@ -1495,34 +1540,13 @@ object H264 {
               val cbp = CbpInterSubset(cbpCode)
               val cbpL = cbp & 15; val cbpC = cbp >> 4
               if (cbp != 0 && r.se() != 0) return None // mb_qp_delta
-              val ac = Array.fill(16)(new Array[Int](16))
-              for (b <- 0 until 16 if (cbpL >> (b / 4) & 1) != 0) {
-                val (x4, y4) = blkPos(b)
-                val (cf, tc) = readResidual(r, 16,
-                  nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
-                ac(b) = cf
-                tcY(mbY * 4 + y4)(mbX * 4 + x4) = tc
-                sumBlock(mbIdx, 1 + b, cf)
-              }
-              val cdc = Array.fill(2)(new Array[Int](4))
-              if (cbpC > 0) for (c <- 0 until 2) {
-                cdc(c) = readResidual(r, 4, -1)._1
-                sumBlock(mbIdx, 17 + c, cdc(c))
-              }
-              val cac = Array.fill(2, 4)(new Array[Int](15))
-              if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-                val (cf, tc) = readResidual(r, 15,
-                  nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
-                cac(c)(b) = cf
-                tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = tc
-                sumBlock(mbIdx, 19 + 4 * c + b, cf)
-              }
+              val (ac, cdc, cac) = vlc.read(r, mbIdx, mbX, mbY, cbpL, 16, cbpC)
               reconstructInterMb(InterMb(pt, refIdxArr, mvs, cbpL, cbpC,
                 ac, cdc, cac), qp, mbX, mbY, refs, y, cb, cr, wMb, hMb)
               mbIdx += 1
             }
           }
-          frames += H264Frame(y, cb, cr, checksum, 0L, 0L, 0L, 0L,
+          frames += H264Frame(y, cb, cr, vlc.levels.value, 0L, 0L, 0L, 0L,
             mvdSum, refSum, nSkip, typeSum, poc = lastPoc)
           dpb = ((lastPoc, (y, cb, cr), Some(grid)) :: dpb)
             .take(math.max(maxRef, 1))
@@ -1754,8 +1778,18 @@ object H264 {
     case _ => PartKind.Full
   }
 
+  /** A P_Skip MB's stand-in (the caller sets `mv`); with no CBP bits it
+    * also serves as the empty residual of B_Skip.
+    */
   private[operators] val skipMb = InterMb(0, Array(0), Array((0, 0)), 0, 0,
     Array.empty, Array.empty, Array.empty)
+
+  /** The residual of an MB whose motion is handled by the caller (B and
+    * direct MBs): an [[InterMb]] with no partitions of its own.
+    */
+  private[operators] def residualMb(cbpL: Int, cbpC: Int,
+      lv: MbLevels): InterMb =
+    InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, lv._1, lv._2, lv._3)
 
   /** Shared encoder/decoder inter-MB reconstruction: per-partition MC
     * from the selected reference, then CBP-gated residual add. Bit-exact
@@ -1844,24 +1878,12 @@ object H264 {
     w.put(0, 1) // adaptive_ref_pic_marking_mode_flag (sliding window)
     w.se(qp - 26) // slice_qp_delta
     w.ue(1) // disable_deblocking_filter_idc
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
+    val (y, cb, cr) = newPlanes(wMb, hMb)
     val grid = new MotionGrid(wMb * 4, hMb * 4)
-    val tcY = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val tcC = Array(Array.ofDim[Int](hMb * 2, wMb * 2),
-      Array.ofDim[Int](hMb * 2, wMb * 2))
-    var checksum = 0L; var mvdSum = 0L; var refSum = 0L
+    val vlc = new CavlcCtx(wMb, hMb)
+    var mvdSum = 0L; var refSum = 0L
     var nSkip = 0L; var typeSum = 0L
     var skipRun = 0
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
-    }
     for (mbIdx <- 0 until wMb * hMb) {
       val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
       val gx0 = mbX * 4; val gy0 = mbY * 4
@@ -1906,39 +1928,15 @@ object H264 {
         w.ue(cbpCode) // me(v) via the transcribed subset (head: idx = codeNum)
         val cbpL = cbp & 15; val cbpC = cbp >> 4
         if (cbp != 0) w.se(0) // mb_qp_delta
-        val ac = Array.tabulate(16)(b =>
-          if ((cbpL >> (b / 4) & 1) != 0)
-            ConstructH.blockLevels(id, f, mbIdx, 1 + b, 16)
-          else new Array[Int](16))
-        val cdc = Array.tabulate(2)(c =>
-          if (cbpC > 0) ConstructH.blockLevels(id, f, mbIdx, 17 + c, 4)
-          else new Array[Int](4))
-        val cac = Array.tabulate(2, 4)((c, b) =>
-          if (cbpC == 2) ConstructH.blockLevels(id, f, mbIdx, 19 + 4 * c + b, 15)
-          else new Array[Int](15))
-        for (b <- 0 until 16 if (cbpL >> (b / 4) & 1) != 0) {
-          sumBlock(mbIdx, 1 + b, ac(b))
-          val (x4, y4) = blkPos(b)
-          writeResidual(w, ac(b), nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
-          tcY(mbY * 4 + y4)(mbX * 4 + x4) = ac(b).count(_ != 0)
-        }
-        if (cbpC > 0) for (c <- 0 until 2) {
-          sumBlock(mbIdx, 17 + c, cdc(c))
-          writeResidual(w, cdc(c), -1)
-        }
-        if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-          sumBlock(mbIdx, 19 + 4 * c + b, cac(c)(b))
-          writeResidual(w, cac(c)(b),
-            nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
-          tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cac(c)(b).count(_ != 0)
-        }
+        val (ac, cdc, cac) = ConstructH.mbLevels(id, f, mbIdx, cbpL, 16, cbpC)
+        vlc.write(w, mbIdx, mbX, mbY, cbpL, cbpC, (ac, cdc, cac))
         reconstructInterMb(InterMb(pt, refIdxArr, mvs, cbpL, cbpC, ac,
           cdc, cac), qp, mbX, mbY, refs, y, cb, cr, wMb, hMb)
       }
     }
     if (skipRun > 0) w.ue(skipRun) // trailing skips
     w.rbspTrailing()
-    (w.result(), H264Frame(y, cb, cr, checksum, 0L, 0L, 0L, 0L,
+    (w.result(), H264Frame(y, cb, cr, vlc.levels.value, 0L, 0L, 0L, 0L,
       mvdSum, refSum, nSkip, typeSum), grid)
   }
 
@@ -2166,62 +2164,24 @@ object H264 {
     // non-reference picture: NO dec_ref_pic_marking
     w.se(qp - 26)
     w.ue(1) // disable_deblocking_filter_idc
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
+    val (y, cb, cr) = newPlanes(wMb, hMb)
     val gridL0 = new MotionGrid(wMb * 4, hMb * 4)
     val gridL1 = new MotionGrid(wMb * 4, hMb * 4)
-    val tcY = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val tcC = Array(Array.ofDim[Int](hMb * 2, wMb * 2),
-      Array.ofDim[Int](hMb * 2, wMb * 2))
-    var checksum = 0L; var mvdSum = 0L; var typeSum = 0L
+    val vlc = new CavlcCtx(wMb, hMb)
+    var mvdSum = 0L; var typeSum = 0L
     var nSkip = 0L; var nDirect = 0L
     var skipRun = 0
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
+    // CBP + residual, shared by the direct and explicit paths
+    def writeResiduals(mbIdx: Int, mbX: Int, mbY: Int): InterMb = {
+      val cbpCode = ConstructB.cbpIdx(id, f, mbIdx)
+      val cbp = CbpInterSubset(cbpCode)
+      w.ue(cbpCode)
+      val cbpL = cbp & 15; val cbpC = cbp >> 4
+      if (cbp != 0) w.se(0) // mb_qp_delta
+      val lv = ConstructH.mbLevels(id, f, mbIdx, cbpL, 16, cbpC)
+      vlc.write(w, mbIdx, mbX, mbY, cbpL, cbpC, lv)
+      residualMb(cbpL, cbpC, lv)
     }
-    // residual write shared by the direct and explicit paths
-    def writeResiduals(mbIdx: Int, mbX: Int, mbY: Int, cbpL: Int,
-        cbpC: Int, ac: Array[Array[Int]], cdc: Array[Array[Int]],
-        cac: Array[Array[Array[Int]]]): Unit = {
-      for (b <- 0 until 16 if (cbpL >> (b / 4) & 1) != 0) {
-        sumBlock(mbIdx, 1 + b, ac(b))
-        val (x4, y4) = blkPos(b)
-        writeResidual(w, ac(b), nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
-        tcY(mbY * 4 + y4)(mbX * 4 + x4) = ac(b).count(_ != 0)
-      }
-      if (cbpC > 0) for (c <- 0 until 2) {
-        sumBlock(mbIdx, 17 + c, cdc(c))
-        writeResidual(w, cdc(c), -1)
-      }
-      if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-        sumBlock(mbIdx, 19 + 4 * c + b, cac(c)(b))
-        writeResidual(w, cac(c)(b),
-          nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
-        tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cac(c)(b).count(_ != 0)
-      }
-    }
-    def constructLevels(mbIdx: Int, cbpL: Int, cbpC: Int) = {
-      val ac = Array.tabulate(16)(b =>
-        if ((cbpL >> (b / 4) & 1) != 0)
-          ConstructH.blockLevels(id, f, mbIdx, 1 + b, 16)
-        else new Array[Int](16))
-      val cdc = Array.tabulate(2)(c =>
-        if (cbpC > 0) ConstructH.blockLevels(id, f, mbIdx, 17 + c, 4)
-        else new Array[Int](4))
-      val cac = Array.tabulate(2, 4)((c, b) =>
-        if (cbpC == 2) ConstructH.blockLevels(id, f, mbIdx, 19 + 4 * c + b, 15)
-        else new Array[Int](15))
-      (ac, cdc, cac)
-    }
-    val emptyResidual = InterMb(0, Array(0), Array((0, 0)), 0, 0,
-      Array.fill(16)(new Array[Int](16)), Array.fill(2)(new Array[Int](4)),
-      Array.fill(2, 4)(new Array[Int](15)))
     for (mbIdx <- 0 until wMb * hMb) {
       val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
       val gx0 = mbX * 4; val gy0 = mbY * 4
@@ -2231,7 +2191,7 @@ object H264 {
         skipRun += 1
         val dm = directMotion(gridL0, gridL1, gx0, gy0, colGrid)
         fillDirect(gridL0, gridL1, dm, gx0, gy0)
-        reconstructDirectMb(dm, l0, l1, emptyResidual, qp, mbX, mbY,
+        reconstructDirectMb(dm, l0, l1, skipMb, qp, mbX, mbY,
           y, cb, cr, wMb, hMb)
       } else {
         w.ue(skipRun); skipRun = 0
@@ -2241,15 +2201,7 @@ object H264 {
           w.ue(0)
           val dm = directMotion(gridL0, gridL1, gx0, gy0, colGrid)
           fillDirect(gridL0, gridL1, dm, gx0, gy0)
-          val cbpCode = ConstructB.cbpIdx(id, f, mbIdx)
-          val cbp = CbpInterSubset(cbpCode)
-          w.ue(cbpCode)
-          val cbpL = cbp & 15; val cbpC = cbp >> 4
-          if (cbp != 0) w.se(0) // mb_qp_delta
-          val (ac, cdc, cac) = constructLevels(mbIdx, cbpL, cbpC)
-          writeResiduals(mbIdx, mbX, mbY, cbpL, cbpC, ac, cdc, cac)
-          reconstructDirectMb(dm, l0, l1,
-            InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, ac, cdc, cac),
+          reconstructDirectMb(dm, l0, l1, writeResiduals(mbIdx, mbX, mbY),
             qp, mbX, mbY, y, cb, cr, wMb, hMb)
         } else {
           val bt = ConstructB.btype(id, f, mbIdx) // 1 L0 / 2 L1 / 3 Bi
@@ -2277,22 +2229,15 @@ object H264 {
           }
           gridL0.fill(gx0, gy0, 4, 4, mvL0._1, mvL0._2, if (useL0) 0 else -1)
           gridL1.fill(gx0, gy0, 4, 4, mvL1._1, mvL1._2, if (useL1) 0 else -1)
-          val cbpCode = ConstructB.cbpIdx(id, f, mbIdx)
-          val cbp = CbpInterSubset(cbpCode)
-          w.ue(cbpCode)
-          val cbpL = cbp & 15; val cbpC = cbp >> 4
-          if (cbp != 0) w.se(0) // mb_qp_delta
-          val (ac, cdc, cac) = constructLevels(mbIdx, cbpL, cbpC)
-          writeResiduals(mbIdx, mbX, mbY, cbpL, cbpC, ac, cdc, cac)
           reconstructBMb(useL0, useL1, mvL0, mvL1, l0, l1,
-            InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, ac, cdc, cac),
-            qp, mbX, mbY, y, cb, cr, wMb, hMb)
+            writeResiduals(mbIdx, mbX, mbY), qp, mbX, mbY, y, cb, cr, wMb,
+            hMb)
         }
       }
     }
     if (skipRun > 0) w.ue(skipRun) // trailing skips
     w.rbspTrailing()
-    (w.result(), H264Frame(y, cb, cr, checksum, 0L, 0L, 0L, 0L,
+    (w.result(), H264Frame(y, cb, cr, vlc.levels.value, 0L, 0L, 0L, 0L,
       mvdSum, 0L, nSkip, typeSum, nDirect = nDirect))
   }
 
@@ -2322,60 +2267,27 @@ object H264 {
     val l0 = past.head._2
     val l1 = future.head._2
     val colGrid = future.head._3 // co-located picture = RefPicList1[0]
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
+    val (y, cb, cr) = newPlanes(wMb, hMb)
     val gridL0 = new MotionGrid(wMb * 4, hMb * 4)
     val gridL1 = new MotionGrid(wMb * 4, hMb * 4)
-    val tcY = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val tcC = Array(Array.ofDim[Int](hMb * 2, wMb * 2),
-      Array.ofDim[Int](hMb * 2, wMb * 2))
-    var checksum = 0L; var mvdSum = 0L; var typeSum = 0L
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
-    }
+    val vlc = new CavlcCtx(wMb, hMb)
+    var mvdSum = 0L; var typeSum = 0L
     var nSkip = 0L; var nDirect = 0L
-    // residual read shared by the direct and explicit paths
-    def readResiduals(mbIdx: Int, mbX: Int, mbY: Int, cbpL: Int,
-        cbpC: Int): (Array[Array[Int]], Array[Array[Int]], Array[Array[Array[Int]]]) = {
-      val ac = Array.fill(16)(new Array[Int](16))
-      for (b <- 0 until 16 if (cbpL >> (b / 4) & 1) != 0) {
-        val (x4, y4) = blkPos(b)
-        val (cf, tc) = readResidual(r, 16,
-          nCOf(tcY, mbX * 4 + x4, mbY * 4 + y4))
-        ac(b) = cf
-        tcY(mbY * 4 + y4)(mbX * 4 + x4) = tc
-        sumBlock(mbIdx, 1 + b, cf)
-      }
-      val cdc = Array.fill(2)(new Array[Int](4))
-      if (cbpC > 0) for (c <- 0 until 2) {
-        cdc(c) = readResidual(r, 4, -1)._1
-        sumBlock(mbIdx, 17 + c, cdc(c))
-      }
-      val cac = Array.fill(2, 4)(new Array[Int](15))
-      if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-        val (cf, tc) = readResidual(r, 15,
-          nCOf(tcC(c), mbX * 2 + b % 2, mbY * 2 + b / 2))
-        cac(c)(b) = cf
-        tcC(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = tc
-        sumBlock(mbIdx, 19 + 4 * c + b, cf)
-      }
-      (ac, cdc, cac)
+    // CBP + residual read, shared by the direct and explicit paths
+    def readResiduals(mbIdx: Int, mbX: Int, mbY: Int): InterMb = {
+      val cbpCode = r.ue()
+      if (cbpCode >= CbpInterSubset.length) bad("CBP outside subset")
+      val cbp = CbpInterSubset(cbpCode)
+      val cbpL = cbp & 15; val cbpC = cbp >> 4
+      if (cbp != 0 && r.se() != 0) bad("mb_qp_delta")
+      residualMb(cbpL, cbpC, vlc.read(r, mbIdx, mbX, mbY, cbpL, 16, cbpC))
     }
-    val emptyResidual = InterMb(0, Array(0), Array((0, 0)), 0, 0,
-      Array.fill(16)(new Array[Int](16)), Array.fill(2)(new Array[Int](4)),
-      Array.fill(2, 4)(new Array[Int](15)))
     def decodeSkipB(mbIdx: Int): Unit = {
       val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
       val dm = directMotion(gridL0, gridL1, mbX * 4, mbY * 4, colGrid)
       fillDirect(gridL0, gridL1, dm, mbX * 4, mbY * 4)
       nSkip += 1
-      reconstructDirectMb(dm, l0, l1, emptyResidual, qp, mbX, mbY,
+      reconstructDirectMb(dm, l0, l1, skipMb, qp, mbX, mbY,
         y, cb, cr, wMb, hMb)
     }
     val total = wMb * hMb
@@ -2395,14 +2307,7 @@ object H264 {
           nDirect += 1
           val dm = directMotion(gridL0, gridL1, gx0, gy0, colGrid)
           fillDirect(gridL0, gridL1, dm, gx0, gy0)
-          val cbpCode = r.ue()
-          if (cbpCode >= CbpInterSubset.length) bad("CBP outside subset")
-          val cbp = CbpInterSubset(cbpCode)
-          val cbpL = cbp & 15; val cbpC = cbp >> 4
-          if (cbp != 0 && r.se() != 0) bad("mb_qp_delta")
-          val (ac, cdc, cac) = readResiduals(mbIdx, mbX, mbY, cbpL, cbpC)
-          reconstructDirectMb(dm, l0, l1,
-            InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, ac, cdc, cac),
+          reconstructDirectMb(dm, l0, l1, readResiduals(mbIdx, mbX, mbY),
             qp, mbX, mbY, y, cb, cr, wMb, hMb)
         } else {
           typeSum += bt.toLong * (mbIdx + 1)
@@ -2423,20 +2328,14 @@ object H264 {
           }
           gridL0.fill(gx0, gy0, 4, 4, mvL0._1, mvL0._2, if (useL0) 0 else -1)
           gridL1.fill(gx0, gy0, 4, 4, mvL1._1, mvL1._2, if (useL1) 0 else -1)
-          val cbpCode = r.ue()
-          if (cbpCode >= CbpInterSubset.length) bad("CBP outside subset")
-          val cbp = CbpInterSubset(cbpCode)
-          val cbpL = cbp & 15; val cbpC = cbp >> 4
-          if (cbp != 0 && r.se() != 0) bad("mb_qp_delta")
-          val (ac, cdc, cac) = readResiduals(mbIdx, mbX, mbY, cbpL, cbpC)
           reconstructBMb(useL0, useL1, mvL0, mvL1, l0, l1,
-            InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, ac, cdc, cac),
-            qp, mbX, mbY, y, cb, cr, wMb, hMb)
+            readResiduals(mbIdx, mbX, mbY), qp, mbX, mbY, y, cb, cr, wMb,
+            hMb)
         }
         mbIdx += 1
       }
     }
-    frames += H264Frame(y, cb, cr, checksum, 0L, 0L, 0L, 0L,
+    frames += H264Frame(y, cb, cr, vlc.levels.value, 0L, 0L, 0L, 0L,
       mvdSum, 0L, nSkip, typeSum, poc = poc, nDirect = nDirect)
   }
 
