@@ -51,7 +51,8 @@ package graft.operators
   */
 object H264Cabac {
 
-  import H264.{ConstructH, H264Frame, H264Stream, MbData, blkPos}
+  import H264.{ConstructH, H264Frame, H264Stream, LevelSum, MbData, MbLevels,
+    blkPos, newPlanes, predI4Mode}
 
   // -------------------------------------------------------------------
   // engine tables (Table 9-35 / 9-36)
@@ -302,6 +303,7 @@ object H264Cabac {
     val lumaCbf = Array.ofDim[Int](hMb * 4, wMb * 4)
     val chromaDcCbf = Array.ofDim[Int](2, wMb * hMb)
     val chromaAcCbf = Array.ofDim[Int](2, hMb * 2, wMb * 2)
+    val levels = new LevelSum
 
     def avail(mbX: Int, mbY: Int): Boolean =
       mbX >= 0 && mbY >= 0 && mbX < wMb && mbY < hMb &&
@@ -377,6 +379,105 @@ object H264Cabac {
           val gx = mbX * 2 + blk % 2; val gy = mbY * 2 + blk / 2
           chroma4At(gx - 1, gy) + 2 * chroma4At(gx, gy - 1)
       }
+    }
+
+    /** coded_block_pattern as bins (§9.3.2.6): four luma bits, one per
+      * 8x8, then the chroma prefix/suffix; records both parts for the
+      * neighbors' increments.
+      */
+    def encodeCbp(e: Encoder, mbIdx: Int, mbX: Int, mbY: Int,
+        cbp: Int): Unit = {
+      val cbpL = cbp & 15; val cbpC = cbp >> 4
+      for (b8 <- 0 until 4) {
+        val bx = b8 % 2; val by = b8 / 2
+        e.decision(CtxCbpLuma + cbpLumaInc(mbX, mbY, bx, by),
+          (cbpL >> b8) & 1)
+        cbpLumaBit(mbY * 2 + by)(mbX * 2 + bx) = (cbpL >> b8) & 1
+      }
+      e.decision(CtxCbpChroma + cbpChromaInc(mbX, mbY, 0),
+        if (cbpC > 0) 1 else 0)
+      if (cbpC > 0)
+        e.decision(CtxCbpChroma + 4 + cbpChromaInc(mbX, mbY, 1),
+          if (cbpC == 2) 1 else 0)
+      cbpChroma(mbIdx) = cbpC
+    }
+
+    /** Reads what [[encodeCbp]] wrote. */
+    def decodeCbp(d: Decoder, mbIdx: Int, mbX: Int, mbY: Int): Int = {
+      var cbpL = 0
+      for (b8 <- 0 until 4) {
+        val bx = b8 % 2; val by = b8 / 2
+        val bit = d.decision(CtxCbpLuma + cbpLumaInc(mbX, mbY, bx, by))
+        cbpL |= bit << b8
+        cbpLumaBit(mbY * 2 + by)(mbX * 2 + bx) = bit
+      }
+      var cbpC = 0
+      if (d.decision(CtxCbpChroma + cbpChromaInc(mbX, mbY, 0)) == 1)
+        cbpC = 1 + d.decision(CtxCbpChroma + 4 + cbpChromaInc(mbX, mbY, 1))
+      cbpChroma(mbIdx) = cbpC
+      cbpL | (cbpC << 4)
+    }
+
+    /** One MB's luma 4x4 (category `lumaCat`, in the 8x8 quadrants set
+      * in the `cbpL` mask), chroma DC and chroma AC blocks in syntax
+      * order, storing each coded_block_flag and adding the levels to
+      * the checksum.
+      */
+    def encodeBlocks(e: Encoder, mbIdx: Int, mbX: Int, mbY: Int,
+        lumaCat: Int, cbpL: Int, cbpC: Int, lv: MbLevels,
+        curIntra: Boolean): Unit = {
+      val (ac, cdc, cac) = lv
+      for (b <- 0 until 16 if ((cbpL >> (b / 4)) & 1) != 0) {
+        levels.add(mbIdx, 1 + b, ac(b))
+        val (x4, y4) = blkPos(b)
+        lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = encodeResidual(e, this,
+          lumaCat, mbX, mbY, b, 0, ac(b), curIntra)
+      }
+      if (cbpC > 0) for (c <- 0 until 2) {
+        levels.add(mbIdx, 17 + c, cdc(c))
+        chromaDcCbf(c)(mbIdx) = encodeResidual(e, this, CatChromaDc,
+          mbX, mbY, 0, c, cdc(c), curIntra)
+      }
+      if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
+        levels.add(mbIdx, 19 + 4 * c + b, cac(c)(b))
+        chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) =
+          encodeResidual(e, this, CatChromaAc, mbX, mbY, b, c, cac(c)(b),
+            curIntra)
+      }
+    }
+
+    /** Reads what [[encodeBlocks]] wrote; luma blocks hold `lumaLen`
+      * coefficients. Uncoded blocks are zero.
+      */
+    def decodeBlocks(d: Decoder, mbIdx: Int, mbX: Int, mbY: Int,
+        lumaCat: Int, lumaLen: Int, cbpL: Int, cbpC: Int,
+        curIntra: Boolean): MbLevels = {
+      val ac = Array.fill(16)(new Array[Int](lumaLen))
+      for (b <- 0 until 16 if ((cbpL >> (b / 4)) & 1) != 0) {
+        val (x4, y4) = blkPos(b)
+        val (cf, cbf) = decodeResidual(d, this, lumaCat, mbX, mbY, b, 0,
+          lumaLen, curIntra)
+        ac(b) = cf
+        lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = cbf
+        levels.add(mbIdx, 1 + b, cf)
+      }
+      val cdc = Array.fill(2)(new Array[Int](4))
+      if (cbpC > 0) for (c <- 0 until 2) {
+        val (cf, cbf) = decodeResidual(d, this, CatChromaDc, mbX, mbY, 0,
+          c, 4, curIntra)
+        cdc(c) = cf
+        chromaDcCbf(c)(mbIdx) = cbf
+        levels.add(mbIdx, 17 + c, cf)
+      }
+      val cac = Array.fill(2, 4)(new Array[Int](15))
+      if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
+        val (cf, cbf) = decodeResidual(d, this, CatChromaAc, mbX, mbY, b,
+          c, 15, curIntra)
+        cac(c)(b) = cf
+        chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cbf
+        levels.add(mbIdx, 19 + 4 * c + b, cf)
+      }
+      (ac, cdc, cac)
     }
   }
 
@@ -494,43 +595,6 @@ object H264Cabac {
   // stream encode / decode
   // -------------------------------------------------------------------
 
-  private def nal(typ: Int, rbsp: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array[Byte](0, 0, 0, 1))
-    out.write((3 << 5) | typ)
-    out.write(H264.emulationPrevent(rbsp))
-    out.toByteArray
-  }
-
-  private def spsRbsp(wMb: Int, hMb: Int): Array[Byte] = {
-    val w = new H264.BitWriter
-    w.put(77, 8) // profile_idc: Main (CABAC requires Main/High)
-    w.put(0, 8); w.put(10, 8) // constraints, level
-    w.ue(0); w.ue(0) // sps_id, log2_max_frame_num_minus4
-    w.ue(2) // pic_order_cnt_type 2
-    w.ue(1) // max_num_ref_frames
-    w.put(0, 1)
-    w.ue(wMb - 1); w.ue(hMb - 1)
-    w.put(1, 1) // frame_mbs_only
-    w.put(0, 1); w.put(0, 1); w.put(0, 1)
-    w.rbspTrailing()
-    w.result()
-  }
-
-  private def ppsRbsp(): Array[Byte] = {
-    val w = new H264.BitWriter
-    w.ue(0); w.ue(0) // pps_id, sps_id
-    w.put(1, 1) // entropy_coding_mode_flag = 1: CABAC
-    w.put(0, 1)
-    w.ue(0); w.ue(0); w.ue(0)
-    w.put(0, 1); w.put(0, 2)
-    w.se(0); w.se(0); w.se(0)
-    w.put(1, 1) // deblocking_filter_control_present
-    w.put(0, 1); w.put(0, 1)
-    w.rbspTrailing()
-    w.result()
-  }
-
   /** Encode one CABAC intra stream (q314): mixed I_16x16 / I_NxN with
     * the full 48-value CBP sweep. Returns (bytes, per-frame expected
     * reconstructions + gate sums) — the decoder must reproduce every
@@ -539,11 +603,11 @@ object H264Cabac {
   def encode(id: Long, wMb: Int, hMb: Int, nFrames: Int,
       qp: Int): (Array[Byte], Vector[H264Frame]) = {
     val out = new java.io.ByteArrayOutputStream()
-    out.write(nal(7, spsRbsp(wMb, hMb)))
-    out.write(nal(8, ppsRbsp()))
+    out.write(H264.nal(7, H264.spsRbsp(wMb, hMb, profileIdc = 77)))
+    out.write(H264.nal(8, H264.ppsRbsp(cabac = true)))
     val frames = Vector.newBuilder[H264Frame]
     for (f <- 0 until nFrames) {
-      out.write(nal(5, encodeSlice(id, f, wMb, hMb, qp, frames)))
+      out.write(H264.nal(5, encodeSlice(id, f, wMb, hMb, qp, frames)))
     }
     (out.toByteArray, frames.result())
   }
@@ -564,20 +628,10 @@ object H264Cabac {
     w.alignByteOnes() // cabac_alignment_one_bit
     val e = new Encoder(w)
     val sc = new SliceCtx(wMb, hMb)
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
+    val (y, cb, cr) = newPlanes(wMb, hMb)
     val modeStore = Array.fill(hMb * 4, wMb * 4)(2)
-    var checksum = 0L; var modeSum = 0L; var cModeSum = 0L
+    var modeSum = 0L; var cModeSum = 0L
     var i4ModeSum = 0L; var nI4 = 0L; var cbpSum = 0L; var binSum = 0L
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
-    }
     val total = wMb * hMb
     for (mbIdx <- 0 until total) {
       val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
@@ -604,9 +658,7 @@ object H264Cabac {
         for (b <- 0 until 16) {
           val (x4, y4) = blkPos(b)
           val gx = mbX * 4 + x4; val gy = mbY * 4 + y4
-          val mA = if (gx > 0) modeStore(gy)(gx - 1) else -1
-          val mB = if (gy > 0) modeStore(gy - 1)(gx) else -1
-          val predM = if (mA < 0 || mB < 0) 2 else math.min(mA, mB)
+          val predM = predI4Mode(modeStore, gx, gy)
           val m = i4Modes(b)
           if (m == predM) e.decision(CtxPrevI4Mode, 1)
           else {
@@ -625,50 +677,14 @@ object H264Cabac {
           if (cm > 1) e.decision(CtxIntraChroma + 3, if (cm > 2) 1 else 0)
         }
         sc.chromaMode(mbIdx) = cm
-        // coded_block_pattern: 4 luma bins + 2 chroma bins
-        for (b8 <- 0 until 4) {
-          val bx = b8 % 2; val by = b8 / 2
-          e.decision(CtxCbpLuma + sc.cbpLumaInc(mbX, mbY, bx, by),
-            (cbpL >> b8) & 1)
-          sc.cbpLumaBit(mbY * 2 + by)(mbX * 2 + bx) = (cbpL >> b8) & 1
-        }
-        e.decision(CtxCbpChroma + sc.cbpChromaInc(mbX, mbY, 0),
-          if (cbpC > 0) 1 else 0)
-        if (cbpC > 0)
-          e.decision(CtxCbpChroma + 4 + sc.cbpChromaInc(mbX, mbY, 1),
-            if (cbpC == 2) 1 else 0)
-        sc.cbpChroma(mbIdx) = cbpC
+        sc.encodeCbp(e, mbIdx, mbX, mbY, cbp)
         if (cbp != 0) e.decision(CtxMbQpDelta, 0) // mb_qp_delta = 0
         // residuals: luma 4x4 per coded 8x8, then chroma
-        val ac = Array.tabulate(16) { b =>
-          if (((cbpL >> (b / 4)) & 1) != 0)
-            ConstructH.blockLevels(id, f, mbIdx, 1 + b, 16)
-          else new Array[Int](16)
-        }
-        for (b <- 0 until 16 if ((cbpL >> (b / 4)) & 1) != 0) {
-          sumBlock(mbIdx, 1 + b, ac(b))
-          val (x4, y4) = blkPos(b)
-          val cbf = encodeResidual(e, sc, CatLuma4, mbX, mbY, b, 0, ac(b))
-          sc.lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = cbf
-        }
-        val cdc = Array.tabulate(2)(c =>
-          if (cbpC > 0) ConstructH.blockLevels(id, f, mbIdx, 17 + c, 4)
-          else new Array[Int](4))
-        if (cbpC > 0) for (c <- 0 until 2) {
-          sumBlock(mbIdx, 17 + c, cdc(c))
-          sc.chromaDcCbf(c)(mbIdx) =
-            encodeResidual(e, sc, CatChromaDc, mbX, mbY, 0, c, cdc(c))
-        }
-        val cac = Array.tabulate(2, 4)((c, b) =>
-          if (cbpC == 2) ConstructH.blockLevels(id, f, mbIdx, 19 + 4 * c + b, 15)
-          else new Array[Int](15))
-        if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-          sumBlock(mbIdx, 19 + 4 * c + b, cac(c)(b))
-          sc.chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) =
-            encodeResidual(e, sc, CatChromaAc, mbX, mbY, b, c, cac(c)(b))
-        }
+        val lv = ConstructH.mbLevels(id, f, mbIdx, cbpL, 16, cbpC)
+        sc.encodeBlocks(e, mbIdx, mbX, mbY, CatLuma4, cbpL, cbpC, lv,
+          curIntra = true)
         H264.reconstructMb(MbData(isI4 = true, 0, i4Modes, cm,
-          cbpL != 0, cbpC, new Array[Int](16), ac, cdc, cac),
+          cbpL != 0, cbpC, new Array[Int](16), lv._1, lv._2, lv._3),
           qp, mbX, mbY, y, cb, cr, wMb)
       } else {
         val pm = ConstructH.predMode(id, mbIdx, mbX, mbY)
@@ -707,41 +723,21 @@ object H264Cabac {
         e.decision(CtxMbQpDelta, 0) // mb_qp_delta (always present for I16)
         // residuals: WIDE DC (cat 0), AC per CBP, chroma
         val dc = ConstructC.wideDc(id, f, mbIdx)
-        sumBlock(mbIdx, 0, dc)
+        sc.levels.add(mbIdx, 0, dc)
         sc.lumaDcCbf(mbIdx) =
           encodeResidual(e, sc, CatI16Dc, mbX, mbY, 0, 0, dc)
-        val ac = Array.tabulate(16)(b =>
-          if (cbpL15) ConstructH.blockLevels(id, f, mbIdx, 1 + b, 15)
-          else new Array[Int](15))
-        if (cbpL15) for (b <- 0 until 16) {
-          sumBlock(mbIdx, 1 + b, ac(b))
-          val (x4, y4) = blkPos(b)
-          sc.lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) =
-            encodeResidual(e, sc, CatI16Ac, mbX, mbY, b, 0, ac(b))
-        }
-        val cdc = Array.tabulate(2)(c =>
-          if (cbpC > 0) ConstructH.blockLevels(id, f, mbIdx, 17 + c, 4)
-          else new Array[Int](4))
-        if (cbpC > 0) for (c <- 0 until 2) {
-          sumBlock(mbIdx, 17 + c, cdc(c))
-          sc.chromaDcCbf(c)(mbIdx) =
-            encodeResidual(e, sc, CatChromaDc, mbX, mbY, 0, c, cdc(c))
-        }
-        val cac = Array.tabulate(2, 4)((c, b) =>
-          if (cbpC == 2) ConstructH.blockLevels(id, f, mbIdx, 19 + 4 * c + b, 15)
-          else new Array[Int](15))
-        if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-          sumBlock(mbIdx, 19 + 4 * c + b, cac(c)(b))
-          sc.chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) =
-            encodeResidual(e, sc, CatChromaAc, mbX, mbY, b, c, cac(c)(b))
-        }
+        val cbpL = if (cbpL15) 15 else 0
+        val lv = ConstructH.mbLevels(id, f, mbIdx, cbpL, 15, cbpC)
+        sc.encodeBlocks(e, mbIdx, mbX, mbY, CatI16Ac, cbpL, cbpC, lv,
+          curIntra = true)
         H264.reconstructMb(MbData(isI4 = false, pm, Array.empty, cm,
-          cbpL15, cbpC, dc, ac, cdc, cac), qp, mbX, mbY, y, cb, cr, wMb)
+          cbpL15, cbpC, dc, lv._1, lv._2, lv._3), qp, mbX, mbY, y, cb, cr,
+          wMb)
       }
       e.terminate(if (mbIdx == total - 1) 1 else 0) // end_of_slice_flag
     }
     w.alignByte() // trailing alignment zeros (stop bit is in the flush)
-    frames += H264Frame(y, cb, cr, checksum, modeSum, cModeSum,
+    frames += H264Frame(y, cb, cr, sc.levels.value, modeSum, cModeSum,
       i4ModeSum, nI4, cbpSum = cbpSum, binChecksum = binSum)
     w.result()
   }
@@ -752,47 +748,17 @@ object H264Cabac {
     */
   def decode(bytes: Array[Byte]): Option[H264Stream] = {
     try {
-      val nals = Vector.newBuilder[(Int, Array[Byte])]
-      var i = 0
-      var start = -1
-      var typ = -1
-      while (i + 2 < bytes.length) {
-        if (bytes(i) == 0 && bytes(i + 1) == 0 && bytes(i + 2) == 1) {
-          if (start >= 0) {
-            val end = if (i > 0 && bytes(i - 1) == 0) i - 1 else i
-            nals += ((typ, H264.emulationStrip(
-              java.util.Arrays.copyOfRange(bytes, start, end))))
-          }
-          typ = bytes(i + 3) & 0x1f
-          start = i + 4
-          i += 4
-        } else i += 1
-      }
-      if (start >= 0 && start <= bytes.length)
-        nals += ((typ, H264.emulationStrip(
-          java.util.Arrays.copyOfRange(bytes, start, bytes.length))))
       var wMb = -1; var hMb = -1
       var sawPps = false
       var qp = -1
       val frames = Vector.newBuilder[H264Frame]
-      nals.result().foreach {
+      H264.splitNals(bytes).map { case (h, rbsp) => (h & 0x1f, rbsp) }.foreach {
         case (7, rbsp) =>
-          val r = new H264.BitReader(rbsp)
-          if (r.get(8) != 77) return None // Main profile
-          r.get(16)
-          if (r.ue() != 0 || r.ue() != 0) return None
-          if (r.ue() != 2) return None // POC type 2
-          r.ue(); r.get(1)
-          wMb = r.ue() + 1; hMb = r.ue() + 1
-          if (r.get(1) != 1) return None
+          val sps = H264.readSps(rbsp, 77).getOrElse(return None) // Main
+          if (sps.pocType != 2) return None // POC type 2
+          wMb = sps.wMb; hMb = sps.hMb
         case (8, rbsp) =>
-          val r = new H264.BitReader(rbsp)
-          if (r.ue() != 0 || r.ue() != 0) return None
-          if (r.get(1) != 1) return None // CABAC only here
-          r.get(1); r.ue(); r.ue(); r.ue(); r.get(1); r.get(2)
-          r.se(); r.se(); r.se()
-          if (r.get(1) != 1) return None
-          r.get(1); r.get(1)
+          if (!H264.readPps(rbsp, cabac = true)) return None // CABAC only
           sawPps = true
         case (5, rbsp) =>
           if (wMb < 0 || !sawPps) return None
@@ -822,20 +788,10 @@ object H264Cabac {
     def bad(msg: String): Nothing = throw new IllegalStateException(msg)
     val d = new Decoder(rbsp, startBit)
     val sc = new SliceCtx(wMb, hMb)
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
+    val (y, cb, cr) = newPlanes(wMb, hMb)
     val modeStore = Array.fill(hMb * 4, wMb * 4)(2)
-    var checksum = 0L; var modeSum = 0L; var cModeSum = 0L
+    var modeSum = 0L; var cModeSum = 0L
     var i4ModeSum = 0L; var nI4 = 0L; var cbpSum = 0L; var binSum = 0L
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
-    }
     def decodeChromaMode(mbX: Int, mbY: Int): Int = {
       if (d.decision(CtxIntraChroma + sc.chromaInc(mbX, mbY)) == 0) 0
       else if (d.decision(CtxIntraChroma + 3) == 0) 1
@@ -853,9 +809,7 @@ object H264Cabac {
         for (b <- 0 until 16) {
           val (x4, y4) = blkPos(b)
           val gx = mbX * 4 + x4; val gy = mbY * 4 + y4
-          val mA = if (gx > 0) modeStore(gy)(gx - 1) else -1
-          val mB = if (gy > 0) modeStore(gy - 1)(gx) else -1
-          val predM = if (mA < 0 || mB < 0) 2 else math.min(mA, mB)
+          val predM = predI4Mode(modeStore, gx, gy)
           val m =
             if (d.decision(CtxPrevI4Mode) == 1) predM
             else {
@@ -871,43 +825,13 @@ object H264Cabac {
         val cm = decodeChromaMode(mbX, mbY)
         cModeSum += cm
         sc.chromaMode(mbIdx) = cm
-        var cbpL = 0
-        for (b8 <- 0 until 4) {
-          val bx = b8 % 2; val by = b8 / 2
-          val bit = d.decision(CtxCbpLuma + sc.cbpLumaInc(mbX, mbY, bx, by))
-          cbpL |= bit << b8
-          sc.cbpLumaBit(mbY * 2 + by)(mbX * 2 + bx) = bit
-        }
-        var cbpC = 0
-        if (d.decision(CtxCbpChroma + sc.cbpChromaInc(mbX, mbY, 0)) == 1)
-          cbpC = 1 + d.decision(CtxCbpChroma + 4 + sc.cbpChromaInc(mbX, mbY, 1))
-        sc.cbpChroma(mbIdx) = cbpC
-        val cbp = cbpL | (cbpC << 4)
+        val cbp = sc.decodeCbp(d, mbIdx, mbX, mbY)
+        val cbpL = cbp & 15; val cbpC = cbp >> 4
         cbpSum += cbp.toLong * (mbIdx + 1)
         if (cbp != 0 && d.decision(CtxMbQpDelta) != 0)
           bad("nonzero mb_qp_delta out of scope")
-        val ac = Array.fill(16)(new Array[Int](16))
-        for (b <- 0 until 16 if ((cbpL >> (b / 4)) & 1) != 0) {
-          val (x4, y4) = blkPos(b)
-          val (cf, cbf) = decodeResidual(d, sc, CatLuma4, mbX, mbY, b, 0, 16)
-          ac(b) = cf
-          sc.lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = cbf
-          sumBlock(mbIdx, 1 + b, cf)
-        }
-        val cdc = Array.fill(2)(new Array[Int](4))
-        if (cbpC > 0) for (c <- 0 until 2) {
-          val (cf, cbf) = decodeResidual(d, sc, CatChromaDc, mbX, mbY, 0, c, 4)
-          cdc(c) = cf
-          sc.chromaDcCbf(c)(mbIdx) = cbf
-          sumBlock(mbIdx, 17 + c, cf)
-        }
-        val cac = Array.fill(2, 4)(new Array[Int](15))
-        if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-          val (cf, cbf) = decodeResidual(d, sc, CatChromaAc, mbX, mbY, b, c, 15)
-          cac(c)(b) = cf
-          sc.chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cbf
-          sumBlock(mbIdx, 19 + 4 * c + b, cf)
-        }
+        val (ac, cdc, cac) = sc.decodeBlocks(d, mbIdx, mbX, mbY, CatLuma4, 16,
+          cbpL, cbpC, curIntra = true)
         H264.reconstructMb(MbData(isI4 = true, 0, i4Modes, cm,
           cbpL != 0, cbpC, new Array[Int](16), ac, cdc, cac),
           qp, mbX, mbY, y, cb, cr, wMb)
@@ -943,29 +867,9 @@ object H264Cabac {
         if (d.decision(CtxMbQpDelta) != 0) bad("nonzero mb_qp_delta")
         val (dc, dcCbf) = decodeResidual(d, sc, CatI16Dc, mbX, mbY, 0, 0, 16)
         sc.lumaDcCbf(mbIdx) = dcCbf
-        sumBlock(mbIdx, 0, dc)
-        val ac = Array.fill(16)(new Array[Int](15))
-        if (cbpL15) for (b <- 0 until 16) {
-          val (x4, y4) = blkPos(b)
-          val (cf, cbf) = decodeResidual(d, sc, CatI16Ac, mbX, mbY, b, 0, 15)
-          ac(b) = cf
-          sc.lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = cbf
-          sumBlock(mbIdx, 1 + b, cf)
-        }
-        val cdc = Array.fill(2)(new Array[Int](4))
-        if (cbpC > 0) for (c <- 0 until 2) {
-          val (cf, cbf) = decodeResidual(d, sc, CatChromaDc, mbX, mbY, 0, c, 4)
-          cdc(c) = cf
-          sc.chromaDcCbf(c)(mbIdx) = cbf
-          sumBlock(mbIdx, 17 + c, cf)
-        }
-        val cac = Array.fill(2, 4)(new Array[Int](15))
-        if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-          val (cf, cbf) = decodeResidual(d, sc, CatChromaAc, mbX, mbY, b, c, 15)
-          cac(c)(b) = cf
-          sc.chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cbf
-          sumBlock(mbIdx, 19 + 4 * c + b, cf)
-        }
+        sc.levels.add(mbIdx, 0, dc)
+        val (ac, cdc, cac) = sc.decodeBlocks(d, mbIdx, mbX, mbY, CatI16Ac, 15,
+          if (cbpL15) 15 else 0, cbpC, curIntra = true)
         H264.reconstructMb(MbData(isI4 = false, pm, Array.empty, cm,
           cbpL15, cbpC, dc, ac, cdc, cac), qp, mbX, mbY, y, cb, cr, wMb)
       }
@@ -973,7 +877,7 @@ object H264Cabac {
       if (eos != (if (mbIdx == total - 1) 1 else 0))
         bad("end_of_slice_flag at the wrong macroblock")
     }
-    H264Frame(y, cb, cr, checksum, modeSum, cModeSum, i4ModeSum, nI4,
-      cbpSum = cbpSum, binChecksum = binSum)
+    H264Frame(y, cb, cr, sc.levels.value, modeSum, cModeSum, i4ModeSum,
+      nI4, cbpSum = cbpSum, binChecksum = binSum)
   }
 }

@@ -54,12 +54,10 @@ object H264CabacInter {
 
   import H264.{BitReader, BitWriter, ConstructB, ConstructH, ConstructP,
     DirectMotion, H264Frame, H264Stream, InterMb, MotionGrid, PartKind,
-    Planes, blkPos, directMotion, fillDirect, mvPred, skipMv, nPartsOf,
-    partKindOf, partRect, reconstructBMb, reconstructDirectMb,
-    reconstructInterMb, skipMb}
-  import H264Cabac.{CatChromaAc, CatChromaDc, CatLuma4, CtxCbpChroma,
-    CtxCbpLuma, CtxMbQpDelta, Decoder, Encoder, SliceCtx,
-    encodeResidual, decodeResidual}
+    Planes, directMotion, fillDirect, mvPred, nal, newPlanes, ppsRbsp,
+    skipMv, nPartsOf, partKindOf, partRect, reconstructBMb,
+    reconstructDirectMb, reconstructInterMb, residualMb, skipMb, spsRbsp}
+  import H264Cabac.{CatLuma4, CtxMbQpDelta, Decoder, Encoder, SliceCtx}
 
   // -------------------------------------------------------------------
   // context map extension (appended after H264Cabac's intra space)
@@ -115,8 +113,8 @@ object H264CabacInter {
   def encodeInter(id: Long, wMb: Int, hMb: Int, nFrames: Int,
       qp: Int): (Array[Byte], Vector[H264Frame]) = {
     val out = new java.io.ByteArrayOutputStream()
-    out.write(nal(7, spsRbsp(wMb, hMb)))
-    out.write(nal(8, ppsRbsp()))
+    out.write(nal(7, spsRbsp(wMb, hMb, profileIdc = 77, maxRef = 2)))
+    out.write(nal(8, ppsRbsp(cabac = true)))
     val frames = Vector.newBuilder[H264Frame]
     val b0 = Vector.newBuilder[H264Frame]
     val rbsp0 = H264Cabac.encodeSlice(id, 0, wMb, hMb, qp, b0)
@@ -132,46 +130,6 @@ object H264CabacInter {
       dpb = ((fr.y, fr.cb, fr.cr) :: dpb).take(2)
     }
     (out.toByteArray, frames.result())
-  }
-
-  private def nal(typ: Int, rbsp: Array[Byte],
-      refIdc: Int = 3): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array[Byte](0, 0, 0, 1))
-    out.write((refIdc << 5) | typ)
-    out.write(H264.emulationPrevent(rbsp))
-    out.toByteArray
-  }
-
-  private def spsRbsp(wMb: Int, hMb: Int,
-      pocType: Int = 2): Array[Byte] = {
-    val w = new BitWriter
-    w.put(77, 8) // profile_idc: Main
-    w.put(0, 8); w.put(10, 8)
-    w.ue(0); w.ue(0) // sps_id, log2_max_frame_num_minus4
-    w.ue(pocType) // pic_order_cnt_type (0 for the B stream's reorder)
-    if (pocType == 0) w.ue(4) // log2_max_pic_order_cnt_lsb_minus4 -> 8 bits
-    w.ue(2) // max_num_ref_frames: two-frame sliding window (after pocType)
-    w.put(0, 1)
-    w.ue(wMb - 1); w.ue(hMb - 1)
-    w.put(1, 1) // frame_mbs_only
-    w.put(0, 1); w.put(0, 1); w.put(0, 1)
-    w.rbspTrailing()
-    w.result()
-  }
-
-  private def ppsRbsp(): Array[Byte] = {
-    val w = new BitWriter
-    w.ue(0); w.ue(0)
-    w.put(1, 1) // entropy_coding_mode_flag = 1: CABAC
-    w.put(0, 1)
-    w.ue(0); w.ue(0); w.ue(0) // one slice group, 1 active ref per list
-    w.put(0, 1); w.put(0, 2)
-    w.se(0); w.se(0); w.se(0)
-    w.put(1, 1) // deblocking_filter_control_present
-    w.put(0, 1); w.put(0, 1)
-    w.rbspTrailing()
-    w.result()
   }
 
   /** mb_skip_flag ctxInc: available neighbors that are NOT skipped
@@ -247,6 +205,61 @@ object H264CabacInter {
   private[operators] def testDecodeMvd(d: Decoder): Int =
     decodeMvd(d, CtxMvdX, 0)
 
+  /** Per-slice state of the CABAC P and B coders: neighbor contexts
+    * (with the level checksum), output planes, per-list motion grids,
+    * per-list |mvd| grids for the mvd bin-0 contexts, and the gate sums.
+    */
+  private final class InterSlice(wMb: Int, hMb: Int) {
+    val sc = new SliceCtx(wMb, hMb)
+    val (y, cb, cr) = newPlanes(wMb, hMb)
+    val grid: Array[MotionGrid] =
+      Array.fill(2)(new MotionGrid(wMb * 4, hMb * 4))
+    val amx, amy: Array[Array[Array[Int]]] =
+      Array.fill(2)(Array.ofDim[Int](hMb * 4, wMb * 4))
+    var mvdSum = 0L; var refSum = 0L; var nSkip = 0L; var typeSum = 0L
+    var nDirect = 0L; var cbpSum = 0L
+
+    /** Records list `l`'s |mvd| over a w4 x h4 block of 4x4 cells. */
+    def markMvd(l: Int, gx0: Int, gy0: Int, w4: Int, h4: Int, dx: Int,
+        dy: Int): Unit =
+      for (yy <- gy0 until gy0 + h4; xx <- gx0 until gx0 + w4) {
+        amx(l)(yy)(xx) = math.abs(dx)
+        amy(l)(yy)(xx) = math.abs(dy)
+      }
+
+    def frame(poc: Long): H264Frame =
+      H264Frame(y, cb, cr, sc.levels.value, 0L, 0L, 0L, 0L, mvdSum, refSum,
+        nSkip, typeSum, poc = poc, nDirect = nDirect, cbpSum = cbpSum)
+  }
+
+  /** The full-sweep CBP, mb_qp_delta and residual blocks of one inter
+    * MB, shared by the P and B encoders.
+    */
+  private def encodeResidualMb(e: Encoder, s: InterSlice, id: Long, f: Int,
+      mbIdx: Int, mbX: Int, mbY: Int): InterMb = {
+    val cbp = ConstructPC.cbp48(id, f, mbIdx)
+    s.cbpSum += cbp.toLong * (mbIdx + 1)
+    val cbpL = cbp & 15; val cbpC = cbp >> 4
+    s.sc.encodeCbp(e, mbIdx, mbX, mbY, cbp)
+    if (cbp != 0) e.decision(CtxMbQpDelta, 0) // mb_qp_delta = 0
+    val lv = ConstructH.mbLevels(id, f, mbIdx, cbpL, 16, cbpC)
+    s.sc.encodeBlocks(e, mbIdx, mbX, mbY, CatLuma4, cbpL, cbpC, lv,
+      curIntra = false)
+    residualMb(cbpL, cbpC, lv)
+  }
+
+  /** Reads what [[encodeResidualMb]] wrote. */
+  private def decodeResidualMb(d: Decoder, s: InterSlice, mbIdx: Int,
+      mbX: Int, mbY: Int): InterMb = {
+    val cbp = s.sc.decodeCbp(d, mbIdx, mbX, mbY)
+    s.cbpSum += cbp.toLong * (mbIdx + 1)
+    if (cbp != 0 && d.decision(CtxMbQpDelta) != 0)
+      throw new IllegalStateException("nonzero mb_qp_delta out of scope")
+    val cbpL = cbp & 15; val cbpC = cbp >> 4
+    residualMb(cbpL, cbpC, s.sc.decodeBlocks(d, mbIdx, mbX, mbY, CatLuma4,
+      16, cbpL, cbpC, curIntra = false))
+  }
+
   private def encodePSlice(id: Long, f: Int, wMb: Int, hMb: Int,
       qp: Int, refs: IndexedSeq[(Array[Int], Array[Int], Array[Int])],
       pocLsb: Option[Int] = None)
@@ -266,23 +279,8 @@ object H264CabacInter {
     w.ue(1) // disable_deblocking_filter_idc
     w.alignByteOnes() // cabac_alignment_one_bit
     val e = new Encoder(w, CtxCountP)
-    val sc = new SliceCtx(wMb, hMb)
-    val grid = new MotionGrid(wMb * 4, hMb * 4)
-    val amx = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val amy = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
-    var checksum = 0L; var mvdSum = 0L; var refSum = 0L
-    var nSkip = 0L; var typeSum = 0L; var cbpSum = 0L
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
-    }
+    val s = new InterSlice(wMb, hMb)
+    val sc = s.sc; val grid = s.grid(0)
     val total = wMb * hMb
     for (mbIdx <- 0 until total) {
       val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
@@ -290,16 +288,16 @@ object H264CabacInter {
       val skip = ConstructP.isSkip(id, f, mbIdx)
       e.decision(CtxSkipP + skipInc(sc, wMb, mbX, mbY), if (skip) 1 else 0)
       if (skip) {
-        nSkip += 1
+        s.nSkip += 1
         sc.mbKind(mbIdx) = KindSkip
         val (mx, my) = skipMv(grid, gx0, gy0)
         grid.fill(gx0, gy0, 4, 4, mx, my, 0)
         reconstructInterMb(skipMb.copy(mv = Array((mx, my))), qp, mbX,
-          mbY, refs, y, cb, cr, wMb, hMb)
+          mbY, refs, s.y, s.cb, s.cr, wMb, hMb)
       } else {
         sc.mbKind(mbIdx) = KindInter
         val pt = ConstructP.ptype(id, f, mbIdx)
-        typeSum += (pt + 1L) * (mbIdx + 1)
+        s.typeSum += (pt + 1L) * (mbIdx + 1)
         // mb_type tree: '0' inter prefix, then (b1, b2)
         e.decision(CtxMbTypeP + 0, 0)
         val b1 = if (pt == 1 || pt == 2) 1 else 0
@@ -311,8 +309,6 @@ object H264CabacInter {
           for (_ <- 0 until np) e.decision(CtxSubMbTypeP + 0, 1) // P_L0_8x8
         val refIdxArr = Array.tabulate(np)(p =>
           ConstructP.refIdx(id, mbIdx, p, nRefs))
-        val mvds = Array.tabulate(np)(p =>
-          (ConstructPC.mvdX(id, f, mbIdx, p), ConstructPC.mvdY(id, f, mbIdx, p)))
         val mvs = new Array[(Int, Int)](np)
         for (p <- 0 until np) {
           val (cx, cy, cw, ch) = partRect(pt, p)
@@ -320,77 +316,40 @@ object H264CabacInter {
             val inc = refInc(grid, gx0 + cx, gy0 + cy)
             e.decision(CtxRefIdx + inc, if (refIdxArr(p) > 0) 1 else 0)
             if (refIdxArr(p) > 0) e.decision(CtxRefIdx + 4, 0) // unary stop
-            refSum += refIdxArr(p).toLong * (mbIdx + 1)
+            s.refSum += refIdxArr(p).toLong * (mbIdx + 1)
           }
-          encodeMvd(e, CtxMvdX, mvdInc(amx, gx0 + cx, gy0 + cy), mvds(p)._1)
-          encodeMvd(e, CtxMvdY, mvdInc(amy, gx0 + cx, gy0 + cy), mvds(p)._2)
-          mvdSum += (mbIdx * 64L + p * 8 + 1) * mvds(p)._1 +
-            (mbIdx * 64L + p * 8 + 3) * mvds(p)._2
-          val (mpx, mpy) = mvPred(grid, gx0 + cx, gy0 + cy, cw,
-            refIdxArr(p), partKindOf(pt, p))
-          mvs(p) = (mpx + mvds(p)._1, mpy + mvds(p)._2)
-          grid.fill(gx0 + cx, gy0 + cy, cw, ch, mvs(p)._1, mvs(p)._2,
-            refIdxArr(p))
-          for (yy <- gy0 + cy until gy0 + cy + ch;
-              xx <- gx0 + cx until gx0 + cx + cw) {
-            amx(yy)(xx) = math.abs(mvds(p)._1)
-            amy(yy)(xx) = math.abs(mvds(p)._2)
-          }
+          val mvdx = ConstructPC.mvdX(id, f, mbIdx, p)
+          val mvdy = ConstructPC.mvdY(id, f, mbIdx, p)
+          encodeMvd(e, CtxMvdX, mvdInc(s.amx(0), gx0 + cx, gy0 + cy), mvdx)
+          encodeMvd(e, CtxMvdY, mvdInc(s.amy(0), gx0 + cx, gy0 + cy), mvdy)
+          mvs(p) = partMv(s, mbIdx, pt, p, refIdxArr(p), mvdx, mvdy)
         }
-        val cbp = ConstructPC.cbp48(id, f, mbIdx)
-        cbpSum += cbp.toLong * (mbIdx + 1)
-        val cbpL = cbp & 15; val cbpC = cbp >> 4
-        for (b8 <- 0 until 4) {
-          val bx = b8 % 2; val by = b8 / 2
-          e.decision(CtxCbpLuma + sc.cbpLumaInc(mbX, mbY, bx, by),
-            (cbpL >> b8) & 1)
-          sc.cbpLumaBit(mbY * 2 + by)(mbX * 2 + bx) = (cbpL >> b8) & 1
-        }
-        e.decision(CtxCbpChroma + sc.cbpChromaInc(mbX, mbY, 0),
-          if (cbpC > 0) 1 else 0)
-        if (cbpC > 0)
-          e.decision(CtxCbpChroma + 4 + sc.cbpChromaInc(mbX, mbY, 1),
-            if (cbpC == 2) 1 else 0)
-        sc.cbpChroma(mbIdx) = cbpC
-        if (cbp != 0) e.decision(CtxMbQpDelta, 0) // mb_qp_delta = 0
-        val ac = Array.tabulate(16) { b =>
-          if (((cbpL >> (b / 4)) & 1) != 0)
-            ConstructH.blockLevels(id, f, mbIdx, 1 + b, 16)
-          else new Array[Int](16)
-        }
-        for (b <- 0 until 16 if ((cbpL >> (b / 4)) & 1) != 0) {
-          sumBlock(mbIdx, 1 + b, ac(b))
-          val (x4, y4) = blkPos(b)
-          val cbf = encodeResidual(e, sc, CatLuma4, mbX, mbY, b, 0,
-            ac(b), curIntra = false)
-          sc.lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = cbf
-        }
-        val cdc = Array.tabulate(2)(c =>
-          if (cbpC > 0) ConstructH.blockLevels(id, f, mbIdx, 17 + c, 4)
-          else new Array[Int](4))
-        if (cbpC > 0) for (c <- 0 until 2) {
-          sumBlock(mbIdx, 17 + c, cdc(c))
-          sc.chromaDcCbf(c)(mbIdx) = encodeResidual(e, sc, CatChromaDc,
-            mbX, mbY, 0, c, cdc(c), curIntra = false)
-        }
-        val cac = Array.tabulate(2, 4)((c, b) =>
-          if (cbpC == 2) ConstructH.blockLevels(id, f, mbIdx, 19 + 4 * c + b, 15)
-          else new Array[Int](15))
-        if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-          sumBlock(mbIdx, 19 + 4 * c + b, cac(c)(b))
-          sc.chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) =
-            encodeResidual(e, sc, CatChromaAc, mbX, mbY, b, c,
-              cac(c)(b), curIntra = false)
-        }
-        reconstructInterMb(InterMb(pt, refIdxArr, mvs, cbpL, cbpC, ac,
-          cdc, cac), qp, mbX, mbY, refs, y, cb, cr, wMb, hMb)
+        reconstructInterMb(encodeResidualMb(e, s, id, f, mbIdx, mbX, mbY)
+          .copy(ptype = pt, refIdx = refIdxArr, mv = mvs), qp, mbX, mbY,
+          refs, s.y, s.cb, s.cr, wMb, hMb)
       }
       e.terminate(if (mbIdx == total - 1) 1 else 0) // end_of_slice_flag
     }
     w.alignByte()
-    (w.result(), H264Frame(y, cb, cr, checksum, 0L, 0L, 0L, 0L,
-      mvdSum, refSum, nSkip, typeSum, cbpSum = cbpSum,
-      poc = pocLsb.map(_.toLong).getOrElse(-1L)), grid)
+    (w.result(), s.frame(pocLsb.map(_.toLong).getOrElse(-1L)), grid)
+  }
+
+  /** One P partition's motion once its mvd is coded: mvd sum, median
+    * prediction + mvd into the L0 grid, and the |mvd| context grid.
+    */
+  private def partMv(s: InterSlice, mbIdx: Int, pt: Int, p: Int,
+      refIdx: Int, mvdx: Int, mvdy: Int): (Int, Int) = {
+    val wMb = s.grid(0).w4 / 4
+    val gx0 = (mbIdx % wMb) * 4; val gy0 = (mbIdx / wMb) * 4
+    val (cx, cy, cw, ch) = partRect(pt, p)
+    s.mvdSum += (mbIdx * 64L + p * 8 + 1) * mvdx +
+      (mbIdx * 64L + p * 8 + 3) * mvdy
+    val (mpx, mpy) = mvPred(s.grid(0), gx0 + cx, gy0 + cy, cw, refIdx,
+      partKindOf(pt, p))
+    val mv = (mpx + mvdx, mpy + mvdy)
+    s.grid(0).fill(gx0 + cx, gy0 + cy, cw, ch, mv._1, mv._2, refIdx)
+    s.markMvd(0, gx0 + cx, gy0 + cy, cw, ch, mvdx, mvdy)
+    mv
   }
 
   // -------------------------------------------------------------------
@@ -452,8 +411,9 @@ object H264CabacInter {
   def encodeBi(id: Long, wMb: Int, hMb: Int, qp: Int,
       spatial: Boolean = true): (Array[Byte], Vector[H264Frame]) = {
     val out = new java.io.ByteArrayOutputStream()
-    out.write(nal(7, spsRbsp(wMb, hMb, pocType = 0)))
-    out.write(nal(8, ppsRbsp()))
+    out.write(nal(7, spsRbsp(wMb, hMb, profileIdc = 77, maxRef = 2,
+      pocType = 0)))
+    out.write(nal(8, ppsRbsp(cabac = true)))
     val frames = Vector.newBuilder[H264Frame]
     val b0 = Vector.newBuilder[H264Frame]
     val rbsp0 = H264Cabac.encodeSlice(id, 0, wMb, hMb, qp, b0,
@@ -477,20 +437,27 @@ object H264CabacInter {
     (out.toByteArray, frames.result())
   }
 
-  private def emptyResidual: InterMb =
-    InterMb(0, Array(0), Array((0, 0)), 0, 0,
-      Array.fill(16)(new Array[Int](16)), Array.fill(2)(new Array[Int](4)),
-      Array.fill(2, 4)(new Array[Int](15)))
+  /** One B list's 16x16 motion once its mvd is coded (`l` 0 or 1): mvd
+    * sum, median prediction + mvd, and the list's |mvd| context grid.
+    */
+  private def listMv(s: InterSlice, mbIdx: Int, gx0: Int, gy0: Int, l: Int,
+      dx: Int, dy: Int): (Int, Int) = {
+    s.mvdSum += (mbIdx * 64L + 16 * l + 1) * dx +
+      (mbIdx * 64L + 16 * l + 3) * dy
+    val (px, py) = mvPred(s.grid(l), gx0, gy0, 4, 0, PartKind.Full)
+    s.markMvd(l, gx0, gy0, 4, 4, dx, dy)
+    (px + dx, py + dy)
+  }
+
+  /** mvd_l0 / mvd_l1 context bases (x, y). */
+  private def mvdCtxs(l: Int): (Int, Int) =
+    if (l == 0) (CtxMvdX, CtxMvdY) else (CtxMvdX1, CtxMvdY1)
 
   private def encodeBSlice(id: Long, f: Int, wMb: Int, hMb: Int,
       qp: Int, l0: Planes, l1: Planes, colGrid: Option[MotionGrid],
       pocLsb: Int, spatial: Boolean): (Array[Byte], H264Frame) = {
     // the Bi plan's fixed reference POCs (I past, P future)
     val pocL0 = ConstructB.Pocs(0); val pocL1 = ConstructB.Pocs(1)
-    def derive(gridL0: MotionGrid, gridL1: MotionGrid, gx0: Int,
-        gy0: Int): DirectMotion =
-      if (spatial) directMotion(gridL0, gridL1, gx0, gy0, colGrid)
-      else directMotionTemporal(colGrid, gx0, gy0, pocLsb, pocL0, pocL1)
     val w = new BitWriter
     w.ue(0) // first_mb_in_slice
     w.ue(6) // slice_type: B (all slices in pic)
@@ -506,78 +473,8 @@ object H264CabacInter {
     w.ue(1) // disable_deblocking_filter_idc
     w.alignByteOnes() // cabac_alignment_one_bit
     val e = new Encoder(w, CtxCountP)
-    val sc = new SliceCtx(wMb, hMb)
-    val gridL0 = new MotionGrid(wMb * 4, hMb * 4)
-    val gridL1 = new MotionGrid(wMb * 4, hMb * 4)
-    val amx0 = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val amy0 = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val amx1 = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val amy1 = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
-    var checksum = 0L; var mvdSum = 0L; var typeSum = 0L
-    var nSkip = 0L; var nDirect = 0L; var cbpSum = 0L
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
-    }
-    def constructLevels(mbIdx: Int, cbpL: Int, cbpC: Int) = {
-      val ac = Array.tabulate(16)(b =>
-        if ((cbpL >> (b / 4) & 1) != 0)
-          ConstructH.blockLevels(id, f, mbIdx, 1 + b, 16)
-        else new Array[Int](16))
-      val cdc = Array.tabulate(2)(c =>
-        if (cbpC > 0) ConstructH.blockLevels(id, f, mbIdx, 17 + c, 4)
-        else new Array[Int](4))
-      val cac = Array.tabulate(2, 4)((c, b) =>
-        if (cbpC == 2) ConstructH.blockLevels(id, f, mbIdx, 19 + 4 * c + b, 15)
-        else new Array[Int](15))
-      (ac, cdc, cac)
-    }
-    // CBP bins + qp_delta + residual, shared by direct/explicit paths
-    def encodeCbpResiduals(mbIdx: Int, mbX: Int, mbY: Int)
-      : (Int, Int, Array[Array[Int]], Array[Array[Int]], Array[Array[Array[Int]]]) = {
-      val cbp = ConstructPC.cbp48(id, f, mbIdx)
-      cbpSum += cbp.toLong * (mbIdx + 1)
-      val cbpL = cbp & 15; val cbpC = cbp >> 4
-      for (b8 <- 0 until 4) {
-        val bx = b8 % 2; val by = b8 / 2
-        e.decision(CtxCbpLuma + sc.cbpLumaInc(mbX, mbY, bx, by),
-          (cbpL >> b8) & 1)
-        sc.cbpLumaBit(mbY * 2 + by)(mbX * 2 + bx) = (cbpL >> b8) & 1
-      }
-      e.decision(CtxCbpChroma + sc.cbpChromaInc(mbX, mbY, 0),
-        if (cbpC > 0) 1 else 0)
-      if (cbpC > 0)
-        e.decision(CtxCbpChroma + 4 + sc.cbpChromaInc(mbX, mbY, 1),
-          if (cbpC == 2) 1 else 0)
-      sc.cbpChroma(mbIdx) = cbpC
-      if (cbp != 0) e.decision(CtxMbQpDelta, 0) // mb_qp_delta = 0
-      val (ac, cdc, cac) = constructLevels(mbIdx, cbpL, cbpC)
-      for (b <- 0 until 16 if ((cbpL >> (b / 4)) & 1) != 0) {
-        sumBlock(mbIdx, 1 + b, ac(b))
-        val (x4, y4) = blkPos(b)
-        sc.lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = encodeResidual(e, sc,
-          CatLuma4, mbX, mbY, b, 0, ac(b), curIntra = false)
-      }
-      if (cbpC > 0) for (c <- 0 until 2) {
-        sumBlock(mbIdx, 17 + c, cdc(c))
-        sc.chromaDcCbf(c)(mbIdx) = encodeResidual(e, sc, CatChromaDc,
-          mbX, mbY, 0, c, cdc(c), curIntra = false)
-      }
-      if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-        sumBlock(mbIdx, 19 + 4 * c + b, cac(c)(b))
-        sc.chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) =
-          encodeResidual(e, sc, CatChromaAc, mbX, mbY, b, c,
-            cac(c)(b), curIntra = false)
-      }
-      (cbpL, cbpC, ac, cdc, cac)
-    }
+    val s = new InterSlice(wMb, hMb)
+    val sc = s.sc
     val total = wMb * hMb
     for (mbIdx <- 0 until total) {
       val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
@@ -585,25 +482,22 @@ object H264CabacInter {
       val skip = ConstructB.isSkipB(id, f, mbIdx)
       e.decision(CtxSkipB + skipInc(sc, wMb, mbX, mbY), if (skip) 1 else 0)
       if (skip) {
-        nSkip += 1
+        s.nSkip += 1
         sc.mbKind(mbIdx) = KindSkip
-        val dm = derive(gridL0, gridL1, gx0, gy0)
-        fillDirect(gridL0, gridL1, dm, gx0, gy0)
-        reconstructDirectMb(dm, l0, l1, emptyResidual, qp, mbX, mbY,
-          y, cb, cr, wMb, hMb)
+        reconstructDirectMb(direct(s, gx0, gy0, colGrid, spatial, pocLsb,
+          pocL0, pocL1), l0, l1, skipMb, qp, mbX, mbY, s.y, s.cb, s.cr,
+          wMb, hMb)
       } else if (ConstructB.isDirectB(id, f, mbIdx)) {
-        nDirect += 1
+        s.nDirect += 1
         e.decision(CtxMbTypeB + btypeInc(sc, wMb, mbX, mbY), 0) // '0'
         sc.mbKind(mbIdx) = KindDirect
-        val dm = derive(gridL0, gridL1, gx0, gy0)
-        fillDirect(gridL0, gridL1, dm, gx0, gy0)
-        val (cbpL, cbpC, ac, cdc, cac) = encodeCbpResiduals(mbIdx, mbX, mbY)
+        val dm = direct(s, gx0, gy0, colGrid, spatial, pocLsb, pocL0, pocL1)
         reconstructDirectMb(dm, l0, l1,
-          InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, ac, cdc, cac),
-          qp, mbX, mbY, y, cb, cr, wMb, hMb)
+          encodeResidualMb(e, s, id, f, mbIdx, mbX, mbY),
+          qp, mbX, mbY, s.y, s.cb, s.cr, wMb, hMb)
       } else {
         val bt = ConstructB.btype(id, f, mbIdx) // 1 L0 / 2 L1 / 3 Bi
-        typeSum += bt.toLong * (mbIdx + 1)
+        s.typeSum += bt.toLong * (mbIdx + 1)
         e.decision(CtxMbTypeB + btypeInc(sc, wMb, mbX, mbY), 1)
         // '100' L0 / '101' L1 / '110000' Bi
         if (bt == 3) {
@@ -614,45 +508,51 @@ object H264CabacInter {
           e.decision(CtxMbTypeB + 4, if (bt == 2) 1 else 0)
         }
         sc.mbKind(mbIdx) = KindInter
-        val useL0 = bt == 1 || bt == 3
-        val useL1 = bt == 2 || bt == 3
-        var mvL0 = (0, 0); var mvL1 = (0, 0)
-        if (useL0) {
-          val (dx, dy) = (ConstructB.mvdX(id, f, mbIdx, 0),
-            ConstructB.mvdY(id, f, mbIdx, 0))
-          encodeMvd(e, CtxMvdX, mvdInc(amx0, gx0, gy0), dx)
-          encodeMvd(e, CtxMvdY, mvdInc(amy0, gx0, gy0), dy)
-          mvdSum += (mbIdx * 64L + 1) * dx + (mbIdx * 64L + 3) * dy
-          val (px, py) = mvPred(gridL0, gx0, gy0, 4, 0, PartKind.Full)
-          mvL0 = (px + dx, py + dy)
-          for (yy <- gy0 until gy0 + 4; xx <- gx0 until gx0 + 4) {
-            amx0(yy)(xx) = math.abs(dx); amy0(yy)(xx) = math.abs(dy)
+        val use = Array(bt == 1 || bt == 3, bt == 2 || bt == 3)
+        val mv = Array.tabulate(2) { l =>
+          if (!use(l)) (0, 0)
+          else {
+            val dx = ConstructB.mvdX(id, f, mbIdx, l)
+            val dy = ConstructB.mvdY(id, f, mbIdx, l)
+            val (ctxX, ctxY) = mvdCtxs(l)
+            encodeMvd(e, ctxX, mvdInc(s.amx(l), gx0, gy0), dx)
+            encodeMvd(e, ctxY, mvdInc(s.amy(l), gx0, gy0), dy)
+            listMv(s, mbIdx, gx0, gy0, l, dx, dy)
           }
         }
-        if (useL1) {
-          val (dx, dy) = (ConstructB.mvdX(id, f, mbIdx, 1),
-            ConstructB.mvdY(id, f, mbIdx, 1))
-          encodeMvd(e, CtxMvdX1, mvdInc(amx1, gx0, gy0), dx)
-          encodeMvd(e, CtxMvdY1, mvdInc(amy1, gx0, gy0), dy)
-          mvdSum += (mbIdx * 64L + 17) * dx + (mbIdx * 64L + 19) * dy
-          val (px, py) = mvPred(gridL1, gx0, gy0, 4, 0, PartKind.Full)
-          mvL1 = (px + dx, py + dy)
-          for (yy <- gy0 until gy0 + 4; xx <- gx0 until gx0 + 4) {
-            amx1(yy)(xx) = math.abs(dx); amy1(yy)(xx) = math.abs(dy)
-          }
-        }
-        gridL0.fill(gx0, gy0, 4, 4, mvL0._1, mvL0._2, if (useL0) 0 else -1)
-        gridL1.fill(gx0, gy0, 4, 4, mvL1._1, mvL1._2, if (useL1) 0 else -1)
-        val (cbpL, cbpC, ac, cdc, cac) = encodeCbpResiduals(mbIdx, mbX, mbY)
-        reconstructBMb(useL0, useL1, mvL0, mvL1, l0, l1,
-          InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, ac, cdc, cac),
-          qp, mbX, mbY, y, cb, cr, wMb, hMb)
+        reconstructB(s, use, mv, l0, l1,
+          encodeResidualMb(e, s, id, f, mbIdx, mbX, mbY), qp, mbX, mbY)
       }
       e.terminate(if (mbIdx == total - 1) 1 else 0)
     }
     w.alignByte()
-    (w.result(), H264Frame(y, cb, cr, checksum, 0L, 0L, 0L, 0L,
-      mvdSum, 0L, nSkip, typeSum, nDirect = nDirect, cbpSum = cbpSum))
+    (w.result(), s.frame(-1L))
+  }
+
+  /** Spatial or temporal direct motion of the MB at (gx0, gy0), recorded
+    * in both list grids.
+    */
+  private def direct(s: InterSlice, gx0: Int, gy0: Int,
+      colGrid: Option[MotionGrid], spatial: Boolean, poc: Int, pocL0: Int,
+      pocL1: Int): DirectMotion = {
+    val dm =
+      if (spatial) directMotion(s.grid(0), s.grid(1), gx0, gy0, colGrid)
+      else directMotionTemporal(colGrid, gx0, gy0, poc, pocL0, pocL1)
+    fillDirect(s.grid(0), s.grid(1), dm, gx0, gy0)
+    dm
+  }
+
+  /** An explicit 16x16 B MB: both list grids take its motion, then the
+    * uni/bi-predicted reconstruction.
+    */
+  private def reconstructB(s: InterSlice, use: Array[Boolean],
+      mv: Array[(Int, Int)], l0: Planes, l1: Planes, residual: InterMb,
+      qp: Int, mbX: Int, mbY: Int): Unit = {
+    for (l <- 0 until 2)
+      s.grid(l).fill(mbX * 4, mbY * 4, 4, 4, mv(l)._1, mv(l)._2,
+        if (use(l)) 0 else -1)
+    reconstructBMb(use(0), use(1), mv(0), mv(1), l0, l1, residual, qp, mbX,
+      mbY, s.y, s.cb, s.cr, s.grid(0).w4 / 4, s.grid(0).h4 / 4)
   }
 
   // -------------------------------------------------------------------
@@ -668,27 +568,6 @@ object H264CabacInter {
     */
   def decode(bytes: Array[Byte]): Option[H264Stream] = {
     try {
-      val nals = Vector.newBuilder[(Int, Int, Array[Byte])]
-      var i = 0
-      var start = -1
-      var typ = -1
-      var refIdc = 0
-      while (i + 2 < bytes.length) {
-        if (bytes(i) == 0 && bytes(i + 1) == 0 && bytes(i + 2) == 1) {
-          if (start >= 0) {
-            val end = if (i > 0 && bytes(i - 1) == 0) i - 1 else i
-            nals += ((typ, refIdc, H264.emulationStrip(
-              java.util.Arrays.copyOfRange(bytes, start, end))))
-          }
-          typ = bytes(i + 3) & 0x1f
-          refIdc = (bytes(i + 3) >> 5) & 3
-          start = i + 4
-          i += 4
-        } else i += 1
-      }
-      if (start >= 0 && start <= bytes.length)
-        nals += ((typ, refIdc, H264.emulationStrip(
-          java.util.Arrays.copyOfRange(bytes, start, bytes.length))))
       var wMb = -1; var hMb = -1
       var sawPps = false
       var qp = -1
@@ -698,26 +577,14 @@ object H264CabacInter {
       // the co-located field by spatial direct
       var dpb: List[(Int, Planes, Option[MotionGrid])] = Nil
       val frames = Vector.newBuilder[H264Frame]
-      nals.result().foreach {
+      H264.splitNals(bytes).map { case (h, rbsp) =>
+        (h & 0x1f, (h >> 5) & 3, rbsp) }.foreach {
         case (7, _, rbsp) =>
-          val r = new BitReader(rbsp)
-          if (r.get(8) != 77) return None // Main profile
-          r.get(16)
-          if (r.ue() != 0 || r.ue() != 0) return None
-          pocType = r.ue()
-          if (pocType == 0) { if (r.ue() != 4) return None }
-          else if (pocType != 2) return None
-          r.ue(); r.get(1) // max_num_ref_frames, gaps flag
-          wMb = r.ue() + 1; hMb = r.ue() + 1
-          if (r.get(1) != 1) return None
+          val sps = H264.readSps(rbsp, 77).getOrElse(return None) // Main
+          wMb = sps.wMb; hMb = sps.hMb
+          pocType = sps.pocType
         case (8, _, rbsp) =>
-          val r = new BitReader(rbsp)
-          if (r.ue() != 0 || r.ue() != 0) return None
-          if (r.get(1) != 1) return None // CABAC only here
-          r.get(1); r.ue(); r.ue(); r.ue(); r.get(1); r.get(2)
-          r.se(); r.se(); r.se()
-          if (r.get(1) != 1) return None
-          r.get(1); r.get(1)
+          if (!H264.readPps(rbsp, cabac = true)) return None // CABAC only
           sawPps = true
         case (5, _, rbsp) =>
           if (wMb < 0 || !sawPps) return None
@@ -806,35 +673,20 @@ object H264CabacInter {
     : (H264Frame, MotionGrid) = {
     def bad(msg: String): Nothing = throw new IllegalStateException(msg)
     val d = new Decoder(rbsp, startBit, CtxCountP)
-    val sc = new SliceCtx(wMb, hMb)
-    val grid = new MotionGrid(wMb * 4, hMb * 4)
-    val amx = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val amy = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
-    var checksum = 0L; var mvdSum = 0L; var refSum = 0L
-    var nSkip = 0L; var typeSum = 0L; var cbpSum = 0L
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
-    }
+    val s = new InterSlice(wMb, hMb)
+    val sc = s.sc; val grid = s.grid(0)
     val total = wMb * hMb
     for (mbIdx <- 0 until total) {
       val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
       val gx0 = mbX * 4; val gy0 = mbY * 4
       val skip = d.decision(CtxSkipP + skipInc(sc, wMb, mbX, mbY)) == 1
       if (skip) {
-        nSkip += 1
+        s.nSkip += 1
         sc.mbKind(mbIdx) = KindSkip
         val (mx, my) = skipMv(grid, gx0, gy0)
         grid.fill(gx0, gy0, 4, 4, mx, my, 0)
         reconstructInterMb(skipMb.copy(mv = Array((mx, my))), qp, mbX,
-          mbY, refs, y, cb, cr, wMb, hMb)
+          mbY, refs, s.y, s.cb, s.cr, wMb, hMb)
       } else {
         sc.mbKind(mbIdx) = KindInter
         if (d.decision(CtxMbTypeP + 0) != 0) bad("intra MB in P slice")
@@ -843,7 +695,7 @@ object H264CabacInter {
         val pt =
           if (b1 == 0) { if (b2 == 0) 0 else 3 }
           else { if (b2 == 0) 2 else 1 }
-        typeSum += (pt + 1L) * (mbIdx + 1)
+        s.typeSum += (pt + 1L) * (mbIdx + 1)
         val np = nPartsOf(pt)
         if (pt == 3) for (_ <- 0 until np)
           if (d.decision(CtxSubMbTypeP + 0) != 1)
@@ -851,7 +703,7 @@ object H264CabacInter {
         val refIdxArr = new Array[Int](np)
         val mvs = new Array[(Int, Int)](np)
         for (p <- 0 until np) {
-          val (cx, cy, cw, ch) = partRect(pt, p)
+          val (cx, cy, _, _) = partRect(pt, p)
           refIdxArr(p) =
             if (nRefs == 2) {
               val inc = refInc(grid, gx0 + cx, gy0 + cy)
@@ -862,71 +714,20 @@ object H264CabacInter {
                 1
               }
             } else 0
-          if (nRefs == 2) refSum += refIdxArr(p).toLong * (mbIdx + 1)
-          val mvdx = decodeMvd(d, CtxMvdX, mvdInc(amx, gx0 + cx, gy0 + cy))
-          val mvdy = decodeMvd(d, CtxMvdY, mvdInc(amy, gx0 + cx, gy0 + cy))
-          mvdSum += (mbIdx * 64L + p * 8 + 1) * mvdx +
-            (mbIdx * 64L + p * 8 + 3) * mvdy
-          val (mpx, mpy) = mvPred(grid, gx0 + cx, gy0 + cy, cw,
-            refIdxArr(p), partKindOf(pt, p))
-          mvs(p) = (mpx + mvdx, mpy + mvdy)
-          grid.fill(gx0 + cx, gy0 + cy, cw, ch, mvs(p)._1, mvs(p)._2,
-            refIdxArr(p))
-          for (yy <- gy0 + cy until gy0 + cy + ch;
-              xx <- gx0 + cx until gx0 + cx + cw) {
-            amx(yy)(xx) = math.abs(mvdx)
-            amy(yy)(xx) = math.abs(mvdy)
-          }
+          if (nRefs == 2) s.refSum += refIdxArr(p).toLong * (mbIdx + 1)
+          val mvdx = decodeMvd(d, CtxMvdX, mvdInc(s.amx(0), gx0 + cx, gy0 + cy))
+          val mvdy = decodeMvd(d, CtxMvdY, mvdInc(s.amy(0), gx0 + cx, gy0 + cy))
+          mvs(p) = partMv(s, mbIdx, pt, p, refIdxArr(p), mvdx, mvdy)
         }
-        var cbpL = 0
-        for (b8 <- 0 until 4) {
-          val bx = b8 % 2; val by = b8 / 2
-          val bit = d.decision(CtxCbpLuma + sc.cbpLumaInc(mbX, mbY, bx, by))
-          cbpL |= bit << b8
-          sc.cbpLumaBit(mbY * 2 + by)(mbX * 2 + bx) = bit
-        }
-        var cbpC = 0
-        if (d.decision(CtxCbpChroma + sc.cbpChromaInc(mbX, mbY, 0)) == 1)
-          cbpC = 1 + d.decision(CtxCbpChroma + 4 + sc.cbpChromaInc(mbX, mbY, 1))
-        sc.cbpChroma(mbIdx) = cbpC
-        val cbp = cbpL | (cbpC << 4)
-        cbpSum += cbp.toLong * (mbIdx + 1)
-        if (cbp != 0 && d.decision(CtxMbQpDelta) != 0)
-          bad("nonzero mb_qp_delta out of scope")
-        val ac = Array.fill(16)(new Array[Int](16))
-        for (b <- 0 until 16 if ((cbpL >> (b / 4)) & 1) != 0) {
-          val (blk, cbf) = decodeResidual(d, sc, CatLuma4, mbX, mbY, b,
-            0, 16, curIntra = false)
-          ac(b) = blk
-          sumBlock(mbIdx, 1 + b, blk)
-          val (x4, y4) = blkPos(b)
-          sc.lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = cbf
-        }
-        val cdc = Array.fill(2)(new Array[Int](4))
-        if (cbpC > 0) for (c <- 0 until 2) {
-          val (blk, cbf) = decodeResidual(d, sc, CatChromaDc, mbX, mbY,
-            0, c, 4, curIntra = false)
-          cdc(c) = blk
-          sumBlock(mbIdx, 17 + c, blk)
-          sc.chromaDcCbf(c)(mbIdx) = cbf
-        }
-        val cac = Array.fill(2, 4)(new Array[Int](15))
-        if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-          val (blk, cbf) = decodeResidual(d, sc, CatChromaAc, mbX, mbY,
-            b, c, 15, curIntra = false)
-          cac(c)(b) = blk
-          sumBlock(mbIdx, 19 + 4 * c + b, blk)
-          sc.chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cbf
-        }
-        reconstructInterMb(InterMb(pt, refIdxArr, mvs, cbpL, cbpC, ac,
-          cdc, cac), qp, mbX, mbY, refs, y, cb, cr, wMb, hMb)
+        reconstructInterMb(decodeResidualMb(d, s, mbIdx, mbX, mbY)
+          .copy(ptype = pt, refIdx = refIdxArr, mv = mvs), qp, mbX, mbY,
+          refs, s.y, s.cb, s.cr, wMb, hMb)
       }
       val end = d.terminate() == 1
       if (mbIdx == total - 1) { if (!end) bad("missing end_of_slice") }
       else if (end) bad("early end_of_slice")
     }
-    (H264Frame(y, cb, cr, checksum, 0L, 0L, 0L, 0L, mvdSum, refSum,
-      nSkip, typeSum, cbpSum = cbpSum), grid)
+    (s.frame(-1L), grid)
   }
 
   private def decodeBSlice(rbsp: Array[Byte], startBit: Int, wMb: Int,
@@ -934,97 +735,28 @@ object H264CabacInter {
       l1: Planes, colGrid: Option[MotionGrid],
       spatial: Boolean): H264Frame = {
     def bad(msg: String): Nothing = throw new IllegalStateException(msg)
-    def derive(gridL0: MotionGrid, gridL1: MotionGrid, gx0: Int,
-        gy0: Int): DirectMotion =
-      if (spatial) directMotion(gridL0, gridL1, gx0, gy0, colGrid)
-      else directMotionTemporal(colGrid, gx0, gy0, poc, pocL0, pocL1)
     val d = new Decoder(rbsp, startBit, CtxCountP)
-    val sc = new SliceCtx(wMb, hMb)
-    val gridL0 = new MotionGrid(wMb * 4, hMb * 4)
-    val gridL1 = new MotionGrid(wMb * 4, hMb * 4)
-    val amx0 = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val amy0 = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val amx1 = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val amy1 = Array.ofDim[Int](hMb * 4, wMb * 4)
-    val y = new Array[Int](wMb * 16 * hMb * 16)
-    val cb = new Array[Int](wMb * 8 * hMb * 8)
-    val cr = new Array[Int](wMb * 8 * hMb * 8)
-    var checksum = 0L; var mvdSum = 0L; var typeSum = 0L
-    var nSkip = 0L; var nDirect = 0L; var cbpSum = 0L
-    def sumBlock(mbIdx: Int, tag: Int, levels: Array[Int]): Unit = {
-      var s = 0
-      while (s < levels.length) {
-        if (levels(s) != 0)
-          checksum += levels(s).toLong * (mbIdx * 131 + tag * 17 + s + 1)
-        s += 1
-      }
-    }
-    def decodeCbpResiduals(mbIdx: Int, mbX: Int, mbY: Int)
-      : (Int, Int, Array[Array[Int]], Array[Array[Int]], Array[Array[Array[Int]]]) = {
-      var cbpL = 0
-      for (b8 <- 0 until 4) {
-        val bx = b8 % 2; val by = b8 / 2
-        val bit = d.decision(CtxCbpLuma + sc.cbpLumaInc(mbX, mbY, bx, by))
-        cbpL |= bit << b8
-        sc.cbpLumaBit(mbY * 2 + by)(mbX * 2 + bx) = bit
-      }
-      var cbpC = 0
-      if (d.decision(CtxCbpChroma + sc.cbpChromaInc(mbX, mbY, 0)) == 1)
-        cbpC = 1 + d.decision(CtxCbpChroma + 4 + sc.cbpChromaInc(mbX, mbY, 1))
-      sc.cbpChroma(mbIdx) = cbpC
-      val cbp = cbpL | (cbpC << 4)
-      cbpSum += cbp.toLong * (mbIdx + 1)
-      if (cbp != 0 && d.decision(CtxMbQpDelta) != 0)
-        bad("nonzero mb_qp_delta out of scope")
-      val ac = Array.fill(16)(new Array[Int](16))
-      for (b <- 0 until 16 if ((cbpL >> (b / 4)) & 1) != 0) {
-        val (blk, cbf) = decodeResidual(d, sc, CatLuma4, mbX, mbY, b,
-          0, 16, curIntra = false)
-        ac(b) = blk
-        sumBlock(mbIdx, 1 + b, blk)
-        val (x4, y4) = blkPos(b)
-        sc.lumaCbf(mbY * 4 + y4)(mbX * 4 + x4) = cbf
-      }
-      val cdc = Array.fill(2)(new Array[Int](4))
-      if (cbpC > 0) for (c <- 0 until 2) {
-        val (blk, cbf) = decodeResidual(d, sc, CatChromaDc, mbX, mbY,
-          0, c, 4, curIntra = false)
-        cdc(c) = blk
-        sumBlock(mbIdx, 17 + c, blk)
-        sc.chromaDcCbf(c)(mbIdx) = cbf
-      }
-      val cac = Array.fill(2, 4)(new Array[Int](15))
-      if (cbpC == 2) for (c <- 0 until 2; b <- 0 until 4) {
-        val (blk, cbf) = decodeResidual(d, sc, CatChromaAc, mbX, mbY,
-          b, c, 15, curIntra = false)
-        cac(c)(b) = blk
-        sumBlock(mbIdx, 19 + 4 * c + b, blk)
-        sc.chromaAcCbf(c)(mbY * 2 + b / 2)(mbX * 2 + b % 2) = cbf
-      }
-      (cbpL, cbpC, ac, cdc, cac)
-    }
+    val s = new InterSlice(wMb, hMb)
+    val sc = s.sc
     val total = wMb * hMb
     for (mbIdx <- 0 until total) {
       val mbX = mbIdx % wMb; val mbY = mbIdx / wMb
       val gx0 = mbX * 4; val gy0 = mbY * 4
       val skip = d.decision(CtxSkipB + skipInc(sc, wMb, mbX, mbY)) == 1
       if (skip) {
-        nSkip += 1
+        s.nSkip += 1
         sc.mbKind(mbIdx) = KindSkip
-        val dm = derive(gridL0, gridL1, gx0, gy0)
-        fillDirect(gridL0, gridL1, dm, gx0, gy0)
-        reconstructDirectMb(dm, l0, l1, emptyResidual, qp, mbX, mbY,
-          y, cb, cr, wMb, hMb)
+        reconstructDirectMb(direct(s, gx0, gy0, colGrid, spatial, poc,
+          pocL0, pocL1), l0, l1, skipMb, qp, mbX, mbY, s.y, s.cb, s.cr,
+          wMb, hMb)
       } else if (d.decision(CtxMbTypeB + btypeInc(sc, wMb, mbX, mbY)) == 0) {
         // B_Direct_16x16
-        nDirect += 1
+        s.nDirect += 1
         sc.mbKind(mbIdx) = KindDirect
-        val dm = derive(gridL0, gridL1, gx0, gy0)
-        fillDirect(gridL0, gridL1, dm, gx0, gy0)
-        val (cbpL, cbpC, ac, cdc, cac) = decodeCbpResiduals(mbIdx, mbX, mbY)
+        val dm = direct(s, gx0, gy0, colGrid, spatial, poc, pocL0, pocL1)
         reconstructDirectMb(dm, l0, l1,
-          InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, ac, cdc, cac),
-          qp, mbX, mbY, y, cb, cr, wMb, hMb)
+          decodeResidualMb(d, s, mbIdx, mbX, mbY),
+          qp, mbX, mbY, s.y, s.cb, s.cr, wMb, hMb)
       } else {
         val bt =
           if (d.decision(CtxMbTypeB + 3) == 1) {
@@ -1034,43 +766,25 @@ object H264CabacInter {
             3
           } else if (d.decision(CtxMbTypeB + 4) == 1) 2
           else 1
-        typeSum += bt.toLong * (mbIdx + 1)
+        s.typeSum += bt.toLong * (mbIdx + 1)
         sc.mbKind(mbIdx) = KindInter
-        val useL0 = bt == 1 || bt == 3
-        val useL1 = bt == 2 || bt == 3
-        var mvL0 = (0, 0); var mvL1 = (0, 0)
-        if (useL0) {
-          val dx = decodeMvd(d, CtxMvdX, mvdInc(amx0, gx0, gy0))
-          val dy = decodeMvd(d, CtxMvdY, mvdInc(amy0, gx0, gy0))
-          mvdSum += (mbIdx * 64L + 1) * dx + (mbIdx * 64L + 3) * dy
-          val (px, py) = mvPred(gridL0, gx0, gy0, 4, 0, PartKind.Full)
-          mvL0 = (px + dx, py + dy)
-          for (yy <- gy0 until gy0 + 4; xx <- gx0 until gx0 + 4) {
-            amx0(yy)(xx) = math.abs(dx); amy0(yy)(xx) = math.abs(dy)
+        val use = Array(bt == 1 || bt == 3, bt == 2 || bt == 3)
+        val mv = Array.tabulate(2) { l =>
+          if (!use(l)) (0, 0)
+          else {
+            val (ctxX, ctxY) = mvdCtxs(l)
+            val dx = decodeMvd(d, ctxX, mvdInc(s.amx(l), gx0, gy0))
+            val dy = decodeMvd(d, ctxY, mvdInc(s.amy(l), gx0, gy0))
+            listMv(s, mbIdx, gx0, gy0, l, dx, dy)
           }
         }
-        if (useL1) {
-          val dx = decodeMvd(d, CtxMvdX1, mvdInc(amx1, gx0, gy0))
-          val dy = decodeMvd(d, CtxMvdY1, mvdInc(amy1, gx0, gy0))
-          mvdSum += (mbIdx * 64L + 17) * dx + (mbIdx * 64L + 19) * dy
-          val (px, py) = mvPred(gridL1, gx0, gy0, 4, 0, PartKind.Full)
-          mvL1 = (px + dx, py + dy)
-          for (yy <- gy0 until gy0 + 4; xx <- gx0 until gx0 + 4) {
-            amx1(yy)(xx) = math.abs(dx); amy1(yy)(xx) = math.abs(dy)
-          }
-        }
-        gridL0.fill(gx0, gy0, 4, 4, mvL0._1, mvL0._2, if (useL0) 0 else -1)
-        gridL1.fill(gx0, gy0, 4, 4, mvL1._1, mvL1._2, if (useL1) 0 else -1)
-        val (cbpL, cbpC, ac, cdc, cac) = decodeCbpResiduals(mbIdx, mbX, mbY)
-        reconstructBMb(useL0, useL1, mvL0, mvL1, l0, l1,
-          InterMb(0, Array(0), Array((0, 0)), cbpL, cbpC, ac, cdc, cac),
-          qp, mbX, mbY, y, cb, cr, wMb, hMb)
+        reconstructB(s, use, mv, l0, l1,
+          decodeResidualMb(d, s, mbIdx, mbX, mbY), qp, mbX, mbY)
       }
       val end = d.terminate() == 1
       if (mbIdx == total - 1) { if (!end) bad("missing end_of_slice") }
       else if (end) bad("early end_of_slice")
     }
-    H264Frame(y, cb, cr, checksum, 0L, 0L, 0L, 0L, mvdSum, 0L,
-      nSkip, typeSum, poc = poc.toLong, nDirect = nDirect, cbpSum = cbpSum)
+    s.frame(poc.toLong)
   }
 }
