@@ -948,16 +948,75 @@ object H265 {
       if (((y0 - 1) >> 5) != (y0 >> 5)) 1 else modeAt(x0, y0 - 1)
   }
 
-  /** Accumulates the per-frame gate sums while coding. */
+  /** Accumulates the per-frame gate sums while coding; the inter
+    * counters stay zero on intra frames.
+    */
   private[operators] final class FrameSums {
     var nCus = 0L; var nNxN = 0L; var splitSum = 0L; var modeSum = 0L
     var chromaModeSum = 0L; var cbfSum = 0L; var lastChecksum = 0L
     var levelChecksum = 0L
+    var nSkipCu = 0L; var nMergeCu = 0L; var nAmvpCu = 0L; var nIntraCu = 0L
+    var mergeIdxSum = 0L; var mvdChecksum = 0L; var rootCbfSum = 0L
+    var predIdcSum = 0L
     def addLevels(tag: Int, levels: Array[(Int, Int)]): Unit =
       levels.foreach { case (k, v) =>
         levelChecksum += v.toLong * (tag.toLong * 31 + k + 1)
       }
+    /** The frame: `st`'s planes and these sums. */
+    def frame(st: SliceState): H265Frame =
+      H265Frame(st.y, st.cb, st.cr, nCus, nNxN, splitSum, modeSum,
+        chromaModeSum, cbfSum, lastChecksum, levelChecksum, nSkipCu,
+        nMergeCu, nAmvpCu, nIntraCu, mergeIdxSum, mvdChecksum, rootCbfSum,
+        predIdcSum)
   }
+
+  /** The coding quadtree of every CTU in raster order (§7.3.8.4), as
+    * this construction shapes it: a 32x32 CTU is one CU or four 16x16
+    * quadrants, each one CU or four 8x8 CUs. `split(x, y, depth, c, q)`
+    * codes or parses split_cu_flag of CTU c (quadrant q, -1 at depth
+    * 0), `cu(x, y, log2Size)` one CU, and `end(last)` the
+    * end_of_slice_segment_flag after each CTU. Split CTUs add c + 1 and
+    * split quadrants 4c + q + 1 to the split sum.
+    */
+  private def walkCtus(wCtb: Int, hCtb: Int, sums: FrameSums,
+      split: (Int, Int, Int, Int, Int) => Boolean,
+      cu: (Int, Int, Int) => Unit, end: Boolean => Unit): Unit = {
+    val nCtus = wCtb * hCtb
+    for (c <- 0 until nCtus) {
+      val x0 = (c % wCtb) * 32; val y0 = (c / wCtb) * 32
+      if (split(x0, y0, 0, c, -1)) {
+        sums.splitSum += c + 1
+        for (q <- 0 until 4) {
+          val qx = x0 + (q % 2) * 16; val qy = y0 + (q / 2) * 16
+          if (split(qx, qy, 1, c, q)) {
+            sums.splitSum += c * 4 + q + 1
+            for (s <- 0 until 4) cu(qx + (s % 2) * 8, qy + (s / 2) * 8, 3)
+          } else cu(qx, qy, 4)
+        }
+      } else cu(x0, y0, 5)
+      end(c == nCtus - 1)
+    }
+  }
+
+  /** Encoder side of [[walkCtus]]: splits from [[ConstructV]]. */
+  private[operators] def encodeCtus(e: H264Cabac.Encoder, st: SliceState,
+      sums: FrameSums, id: Long, f: Int)(cu: (Int, Int, Int) => Unit): Unit =
+    walkCtus(st.w / 32, st.h / 32, sums, (x, y, depth, c, q) => {
+      val s =
+        if (depth == 0) ConstructV.split32(id, f, c)
+        else ConstructV.split16(id, f, c, q)
+      e.decision(CtxSplitCu + st.splitCtxInc(x, y, depth), if (s) 1 else 0)
+      s
+    }, cu, last => e.terminate(if (last) 1 else 0))
+
+  /** Decoder side of [[walkCtus]]; a misplaced end of slice throws. */
+  private[operators] def decodeCtus(d: H264Cabac.Decoder, st: SliceState,
+      sums: FrameSums)(cu: (Int, Int, Int) => Unit): Unit =
+    walkCtus(st.w / 32, st.h / 32, sums, (x, y, depth, _, _) =>
+      d.decision(CtxSplitCu + st.splitCtxInc(x, y, depth)) == 1, cu,
+      last => if ((d.terminate() == 1) != last)
+        throw new IllegalStateException(
+          if (last) "missing end_of_slice" else "early end_of_slice"))
 
   /** Raster-order block of one TU's construction: the k-th significant
     * coefficient sits at scan index k * step with value level(k).
@@ -1102,6 +1161,73 @@ object H265 {
     w.result()
   }
 
+  /** Splits an HEVC Annex B stream into (nal_unit_type, RBSP) pairs. */
+  private[operators] def splitNals(bytes: Array[Byte]): Vector[(Int, Array[Byte])] =
+    H264.splitNals(bytes, headerBytes = 2).map { case (h, rbsp) =>
+      ((h >> 1) & 0x3f, rbsp) }
+
+  /** (width, height) of an SPS [[spsRbsp]] could have written; None
+    * outside the construction's envelope.
+    */
+  private[operators] def readSps(rbsp: Array[Byte]): Option[(Int, Int)] = {
+    val r = new BitReader(rbsp)
+    r.get(8) // vps_id, max_sub_layers, nesting
+    if (!readPtl(r)) return None
+    if (r.ue() != 0) return None // sps_id
+    if (r.ue() != 1) return None // 4:2:0 only
+    val width = r.ue(); val height = r.ue()
+    if (width % 32 != 0 || height % 32 != 0) return None
+    if (r.get(1) != 0) return None // conformance window
+    if (r.ue() != 0 || r.ue() != 0) return None // 8-bit only
+    if (r.ue() != 4) return None // poc lsb bits
+    r.get(1) // sub_layer_ordering_info_present
+    r.ue(); r.ue(); r.ue()
+    if (r.ue() != 0) return None // min CB 8
+    if (r.ue() != 2) return None // CTB 32
+    if (r.ue() != 0) return None // min TB 4
+    if (r.ue() != 3) return None // max TB 32
+    if (r.ue() != 0 || r.ue() != 0) return None // trafo depth 0
+    // scaling lists / amp / sao / pcm must be off
+    if (r.get(4) != 0) return None
+    if (r.ue() != 0) return None // no ref pic sets
+    if (r.get(3) != 0) return None // long-term, tmvp, strong-smooth
+    Some((width, height))
+  }
+
+  /** The QP of a PPS [[ppsRbsp]] could have written; None outside the
+    * construction's envelope.
+    */
+  private[operators] def readPps(rbsp: Array[Byte]): Option[Int] = {
+    val r = new BitReader(rbsp)
+    if (r.ue() != 0 || r.ue() != 0) return None // pps/sps ids
+    if (r.get(2) != 0) return None // dependent, output_flag
+    if (r.get(3) != 0) return None // extra slice header bits
+    if (r.get(1) != 0) return None // sign data hiding OFF only
+    if (r.get(1) != 0) return None // cabac_init_present
+    r.ue(); r.ue() // ref idx defaults
+    val qp = 26 + r.se() // init_qp_minus26
+    if (r.get(1) != 0) return None // constrained intra
+    if (r.get(1) != 0) return None // transform skip OFF only
+    if (r.get(1) != 0) return None // cu_qp_delta OFF only
+    if (r.se() != 0 || r.se() != 0) return None // chroma offsets
+    if (r.get(3) != 0) return None // slice-offsets, weighted pred/bipred
+    if (r.get(1) != 0) return None // transquant bypass
+    if (r.get(2) != 0) return None // tiles, wavefront
+    r.get(1) // loop filter across slices
+    if (r.get(1) != 1) return None // deblocking control present
+    if (r.get(1) != 0) return None // override enabled
+    if (r.get(1) != 1) return None // deblocking DISABLED only
+    Some(qp)
+  }
+
+  /** VPS, SPS and PPS NAL units of a wCtb x hCtb stream at `qp`. */
+  private[operators] def writeParameterSets(out: java.io.OutputStream,
+      wCtb: Int, hCtb: Int, qp: Int): Unit = {
+    out.write(nal(32, vpsRbsp()))
+    out.write(nal(33, spsRbsp(wCtb * 32, hCtb * 32)))
+    out.write(nal(34, ppsRbsp(qp)))
+  }
+
   private[operators] def ppsRbsp(qp: Int): Array[Byte] = {
     val w = new BitWriter
     w.ue(0); w.ue(0) // pps_id, sps_id
@@ -1142,11 +1268,8 @@ object H265 {
     */
   def encode(id: Long, wCtb: Int, hCtb: Int, nFrames: Int,
       qp: Int): (Array[Byte], Vector[H265Frame]) = {
-    val width = wCtb * 32; val height = hCtb * 32
     val out = new java.io.ByteArrayOutputStream()
-    out.write(nal(32, vpsRbsp()))
-    out.write(nal(33, spsRbsp(width, height)))
-    out.write(nal(34, ppsRbsp(qp)))
+    writeParameterSets(out, wCtb, hCtb, qp)
     val frames = Vector.newBuilder[H265Frame]
     for (f <- 0 until nFrames)
       out.write(nal(19, encodeSlice(id, f, wCtb, hCtb, qp, frames)))
@@ -1167,34 +1290,10 @@ object H265 {
     val e = new H264Cabac.Encoder(w, CtxCount)
     val st = new SliceState(wCtb * 32, hCtb * 32)
     val sums = new FrameSums
-    val nCtus = wCtb * hCtb
-    for (c <- 0 until nCtus) {
-      val x0 = (c % wCtb) * 32; val y0 = (c / wCtb) * 32
-      // coding_quadtree at depth 0
-      val s32 = ConstructV.split32(id, f, c)
-      e.decision(CtxSplitCu + st.splitCtxInc(x0, y0, 0), if (s32) 1 else 0)
-      if (s32) {
-        sums.splitSum += c + 1
-        for (q <- 0 until 4) {
-          val qx = x0 + (q % 2) * 16; val qy = y0 + (q / 2) * 16
-          val s16 = ConstructV.split16(id, f, c, q)
-          e.decision(CtxSplitCu + st.splitCtxInc(qx, qy, 1),
-            if (s16) 1 else 0)
-          if (s16) {
-            sums.splitSum += c * 4 + q + 1
-            for (s <- 0 until 4) {
-              val sx = qx + (s % 2) * 8; val sy = qy + (s / 2) * 8
-              encodeCu(e, st, sums, id, f, sx, sy, 3, qp)
-            }
-          } else encodeCu(e, st, sums, id, f, qx, qy, 4, qp)
-        }
-      } else encodeCu(e, st, sums, id, f, x0, y0, 5, qp)
-      e.terminate(if (c == nCtus - 1) 1 else 0) // end_of_slice_segment_flag
-    }
+    encodeCtus(e, st, sums, id, f)((x, y, log2Size) =>
+      encodeCu(e, st, sums, id, f, x, y, log2Size, qp))
     w.alignByte() // trailing zeros (the stop bit is in the flush)
-    frames += H265Frame(st.y, st.cb, st.cr, sums.nCus, sums.nNxN,
-      sums.splitSum, sums.modeSum, sums.chromaModeSum, sums.cbfSum,
-      sums.lastChecksum, sums.levelChecksum)
+    frames += sums.frame(st)
     w.result()
   }
 
@@ -1359,27 +1458,7 @@ object H265 {
     */
   def decode(bytes: Array[Byte]): Option[H265Stream] = {
     try {
-      // split on start codes; HEVC NAL header is 2 bytes
-      val nals = Vector.newBuilder[(Int, Array[Byte])]
-      var i = 0
-      var start = -1
-      var typ = -1
-      while (i + 2 < bytes.length) {
-        if (bytes(i) == 0 && bytes(i + 1) == 0 && bytes(i + 2) == 1) {
-          if (start >= 0) {
-            val end = if (i > 0 && bytes(i - 1) == 0) i - 1 else i
-            nals += ((typ, H264.emulationStrip(
-              java.util.Arrays.copyOfRange(bytes, start, end))))
-          }
-          typ = (bytes(i + 3) >> 1) & 0x3f
-          start = i + 5 // skip the 2-byte nal_unit_header
-          i += 5
-        } else i += 1
-      }
-      if (start >= 0 && start <= bytes.length)
-        nals += ((typ, H264.emulationStrip(
-          java.util.Arrays.copyOfRange(bytes, start, bytes.length))))
-      val all = nals.result()
+      val all = splitNals(bytes)
       if (all.isEmpty) return None
       var width = -1; var height = -1
       var qp = -1
@@ -1388,48 +1467,11 @@ object H265 {
       all.foreach {
         case (32, _) => // VPS carries nothing the slice needs
         case (33, rbsp) =>
-          val r = new BitReader(rbsp)
-          r.get(8) // vps_id, max_sub_layers, nesting
-          if (!readPtl(r)) return None
-          if (r.ue() != 0) return None // sps_id
-          if (r.ue() != 1) return None // 4:2:0 only
-          width = r.ue(); height = r.ue()
-          if (width % 32 != 0 || height % 32 != 0) return None
-          if (r.get(1) != 0) return None // conformance window
-          if (r.ue() != 0 || r.ue() != 0) return None // 8-bit only
-          if (r.ue() != 4) return None // poc lsb bits
-          r.get(1) // sub_layer_ordering_info_present
-          r.ue(); r.ue(); r.ue()
-          if (r.ue() != 0) return None // min CB 8
-          if (r.ue() != 2) return None // CTB 32
-          if (r.ue() != 0) return None // min TB 4
-          if (r.ue() != 3) return None // max TB 32
-          if (r.ue() != 0 || r.ue() != 0) return None // trafo depth 0
-          // scaling lists / amp / sao / pcm must be off
-          if (r.get(4) != 0) return None
-          if (r.ue() != 0) return None // no ref pic sets
-          if (r.get(3) != 0) return None // long-term, tmvp, strong-smooth
+          val (w, h) = readSps(rbsp).getOrElse(return None)
+          width = w; height = h
           sawSps = true
         case (34, rbsp) =>
-          val r = new BitReader(rbsp)
-          if (r.ue() != 0 || r.ue() != 0) return None // pps/sps ids
-          if (r.get(2) != 0) return None // dependent, output_flag
-          if (r.get(3) != 0) return None // extra slice header bits
-          if (r.get(1) != 0) return None // sign data hiding OFF only
-          if (r.get(1) != 0) return None // cabac_init_present
-          r.ue(); r.ue() // ref idx defaults
-          qp = 26 + r.se() // init_qp_minus26
-          if (r.get(1) != 0) return None // constrained intra
-          if (r.get(1) != 0) return None // transform skip OFF only
-          if (r.get(1) != 0) return None // cu_qp_delta OFF only
-          if (r.se() != 0 || r.se() != 0) return None // chroma offsets
-          if (r.get(3) != 0) return None // slice-offsets, weighted pred/bipred
-          if (r.get(1) != 0) return None // transquant bypass
-          if (r.get(2) != 0) return None // tiles, wavefront
-          r.get(1) // loop filter across slices
-          if (r.get(1) != 1) return None // deblocking control present
-          if (r.get(1) != 0) return None // override enabled
-          if (r.get(1) != 1) return None // deblocking DISABLED only
+          qp = readPps(rbsp).getOrElse(return None)
           sawPps = true
         case (19, rbsp) if sawSps && sawPps =>
           decodeSlice(rbsp, width, height, qp, frames)
@@ -1460,32 +1502,9 @@ object H265 {
     val d = new H264Cabac.Decoder(rbsp, r.bitPos, CtxCount)
     val st = new SliceState(width, height)
     val sums = new FrameSums
-    val wCtb = width / 32; val hCtb = height / 32
-    val nCtus = wCtb * hCtb
-    var c = 0
-    while (c < nCtus) {
-      val x0 = (c % wCtb) * 32; val y0 = (c / wCtb) * 32
-      if (d.decision(CtxSplitCu + st.splitCtxInc(x0, y0, 0)) == 1) {
-        sums.splitSum += c + 1
-        for (q <- 0 until 4) {
-          val qx = x0 + (q % 2) * 16; val qy = y0 + (q / 2) * 16
-          if (d.decision(CtxSplitCu + st.splitCtxInc(qx, qy, 1)) == 1) {
-            sums.splitSum += c * 4 + q + 1
-            for (s <- 0 until 4) {
-              val sx = qx + (s % 2) * 8; val sy = qy + (s / 2) * 8
-              decodeCu(d, st, sums, sx, sy, 3, qp)
-            }
-          } else decodeCu(d, st, sums, qx, qy, 4, qp)
-        }
-      } else decodeCu(d, st, sums, x0, y0, 5, qp)
-      val end = d.terminate() == 1
-      if (c == nCtus - 1) { if (!end) bad("missing end_of_slice") }
-      else if (end) bad("early end_of_slice")
-      c += 1
-    }
-    frames += H265Frame(st.y, st.cb, st.cr, sums.nCus, sums.nNxN,
-      sums.splitSum, sums.modeSum, sums.chromaModeSum, sums.cbfSum,
-      sums.lastChecksum, sums.levelChecksum)
+    decodeCtus(d, st, sums)((x, y, log2Size) =>
+      decodeCu(d, st, sums, x, y, log2Size, qp))
+    frames += sums.frame(st)
   }
 
   private[operators] def decodeCu(d: H264Cabac.Decoder, st: SliceState,

@@ -346,6 +346,17 @@ object H265Inter {
   // encode
   // -------------------------------------------------------------------
 
+  /** Parameter sets and the q315 intra IDR frame that opens every inter
+    * stream; returns that frame.
+    */
+  private def encodeIdr(out: java.io.OutputStream, id: Long, wCtb: Int,
+      hCtb: Int, qp: Int): H265Frame = {
+    H265.writeParameterSets(out, wCtb, hCtb, qp)
+    val b0 = Vector.newBuilder[H265Frame]
+    out.write(H265.nal(19, H265.encodeSlice(id, 0, wCtb, hCtb, qp, b0)))
+    b0.result().head
+  }
+
   /** Encode an IDR + P-frame stream (q319): frame 0 is the q315 intra
     * construction; frames 1.. are P slices referencing the previous
     * frame. Returns (bytes, per-frame expected reconstructions).
@@ -353,13 +364,8 @@ object H265Inter {
   def encode(id: Long, wCtb: Int, hCtb: Int, nFrames: Int,
       qp: Int): (Array[Byte], Vector[H265Frame]) = {
     val out = new java.io.ByteArrayOutputStream()
-    out.write(H265.nal(32, H265.vpsRbsp()))
-    out.write(H265.nal(33, H265.spsRbsp(wCtb * 32, hCtb * 32)))
-    out.write(H265.nal(34, H265.ppsRbsp(qp)))
     val frames = Vector.newBuilder[H265Frame]
-    val b0 = Vector.newBuilder[H265Frame]
-    out.write(H265.nal(19, H265.encodeSlice(id, 0, wCtb, hCtb, qp, b0)))
-    var prev = b0.result().head
+    var prev = encodeIdr(out, id, wCtb, hCtb, qp)
     frames += prev
     for (f <- 1 until nFrames) {
       val (rbsp, fr) = encodePSlice(id, f, wCtb, hCtb, qp, prev)
@@ -370,30 +376,71 @@ object H265Inter {
     (out.toByteArray, frames.result())
   }
 
-  private def writePHeader(w: BitWriter, f: Int, qpUnused: Int): Unit = {
+  /** P or B slice header: one reference before the picture (P), or one
+    * before and one after (B), each at POC distance 1.
+    */
+  private def writeInterHeader(w: BitWriter, pocLsb: Int, b: Boolean): Unit = {
     w.put(1, 1) // first_slice_segment_in_pic_flag
     w.ue(0) // slice_pic_parameter_set_id
-    w.ue(1) // slice_type P
-    w.put(f, 8) // slice_pic_order_cnt_lsb
+    w.ue(if (b) 0 else 1) // slice_type B / P
+    w.put(pocLsb, 8) // slice_pic_order_cnt_lsb
     w.put(0, 1) // short_term_ref_pic_set_sps_flag -> inline st_ref_pic_set
     w.ue(1) // num_negative_pics
-    w.ue(0) // num_positive_pics
-    w.ue(0) // delta_poc_s0_minus1: the previous picture
-    w.put(1, 1) // used_by_curr_pic_s0_flag
-    w.put(0, 1) // num_ref_idx_active_override_flag (1 active)
+    w.ue(if (b) 1 else 0) // num_positive_pics
+    w.ue(0); w.put(1, 1) // delta_poc_s0_minus1, used_by_curr_pic_s0_flag
+    if (b) { w.ue(0); w.put(1, 1) } // delta_poc_s1_minus1, used flag
+    w.put(0, 1) // num_ref_idx_active_override_flag (1 active per list)
+    if (b) w.put(0, 1) // mvd_l1_zero_flag
     w.ue(5 - MaxMerge) // five_minus_max_num_merge_cand
     w.se(0) // slice_qp_delta
     w.put(1, 1) // byte_alignment
     w.alignByte()
   }
 
-  private def encodeMergeIdx(e: Encoder, idx: Int): Unit = {
-    e.decision(CtxMergeIdx, if (idx > 0) 1 else 0)
-    if (idx > 0) e.bypass(if (idx > 1) 1 else 0) // TR, cMax 2
+  /** Checks what [[writeInterHeader]] wrote; returns the bit position
+    * where the slice data starts.
+    */
+  private def readInterHeader(rbsp: Array[Byte], b: Boolean): Int = {
+    def bad(msg: String): Nothing = throw new IllegalStateException(msg)
+    val r = new BitReader(rbsp)
+    if (r.get(1) != 1) bad("not first slice segment")
+    if (r.ue() != 0) bad("pps id")
+    if (r.ue() != (if (b) 0 else 1)) bad("slice type")
+    r.get(8) // slice_pic_order_cnt_lsb
+    if (r.get(1) != 0) bad("sps strps out of scope")
+    if (r.ue() != 1) bad("one negative pic only")
+    if (r.ue() != (if (b) 1 else 0)) bad("positive pic count")
+    if (r.ue() != 0) bad("neg delta poc must be 1")
+    if (r.get(1) != 1) bad("neg ref must be used")
+    if (b) {
+      if (r.ue() != 0) bad("pos delta poc must be 1")
+      if (r.get(1) != 1) bad("pos ref must be used")
+    }
+    if (r.get(1) != 0) bad("ref idx override out of scope")
+    if (b && r.get(1) != 0) bad("mvd_l1_zero out of scope")
+    if (r.ue() != 5 - MaxMerge) bad("merge cand count")
+    if (r.se() != 0) bad("nonzero slice_qp_delta")
+    if (r.get(1) != 1) bad("alignment bit")
+    r.alignByte()
+    r.bitPos
   }
-  private def decodeMergeIdx(d: Decoder): Int =
-    if (d.decision(CtxMergeIdx) == 0) 0
-    else if (d.bypass() == 0) 1 else 2
+
+  /** merge_idx (TR cMax 2, bin 0 context-coded) and its gate sum. */
+  private def encodeMergeIdx(e: Encoder, sums: FrameSums, id: Long,
+      cuKey: Int): Int = {
+    val idx = ConstructVI.mergeIdx(id, cuKey)
+    e.decision(CtxMergeIdx, if (idx > 0) 1 else 0)
+    if (idx > 0) e.bypass(if (idx > 1) 1 else 0)
+    sums.mergeIdxSum += idx.toLong * (cuKey + 1)
+    idx
+  }
+  private def decodeMergeIdx(d: Decoder, sums: FrameSums, cuKey: Int): Int = {
+    val idx =
+      if (d.decision(CtxMergeIdx) == 0) 0
+      else if (d.bypass() == 0) 1 else 2
+    sums.mergeIdxSum += idx.toLong * (cuKey + 1)
+    idx
+  }
 
   private def egkBypassEnc(e: Encoder, v0: Int, k0: Int): Unit = {
     var v = v0; var k = k0
@@ -449,238 +496,75 @@ object H265Inter {
     (mvdX, mvdY)
   }
 
-  /** MC + optional residual for one inter CU, shared by both sides. */
-  private def interReconCu(st: SliceState, ref: H265Frame, x0: Int,
-      y0: Int, size: Int, mv: (Int, Int), qp: Int,
-      lumaLv: Array[Int], cbLv: Array[Int], crLv: Array[Int]): Unit = {
-    mc(ref.y, st.w, st.h, st.y, st.w, x0, y0, size, size,
-      mv._1, mv._2, luma = true)
-    mc(ref.cb, st.cw, st.ch, st.cb, st.cw, x0 / 2, y0 / 2, size / 2,
-      size / 2, mv._1, mv._2, luma = false)
-    mc(ref.cr, st.cw, st.ch, st.cr, st.cw, x0 / 2, y0 / 2, size / 2,
-      size / 2, mv._1, mv._2, luma = false)
-    def addResidual(plane: Array[Int], w: Int, px: Int, py: Int,
-        nTbS: Int, lv: Array[Int]): Unit =
-      if (lv != null) {
-        val log2 = Integer.numberOfTrailingZeros(nTbS)
-        val deq = new Array[Int](nTbS * nTbS)
-        var i = 0
-        while (i < deq.length) {
-          if (lv(i) != 0) deq(i) = H265.dequant(lv(i), qp, log2)
-          i += 1
-        }
-        val res = H265.inverseTransform(deq, nTbS, dst = false)
-        for (r <- 0 until nTbS; c <- 0 until nTbS) {
-          val idx = (py + r) * w + px + c
-          plane(idx) = clip8(plane(idx) + res(r * nTbS + c))
-        }
-      }
-    addResidual(st.y, st.w, x0, y0, size, lumaLv)
-    addResidual(st.cb, st.cw, x0 / 2, y0 / 2, size / 2, cbLv)
-    addResidual(st.cr, st.cw, x0 / 2, y0 / 2, size / 2, crLv)
-    st.markY(x0, y0, size)
-    st.markC(x0 / 2, y0 / 2, size / 2)
-  }
-
-  private def encodePSlice(id: Long, f: Int, wCtb: Int, hCtb: Int,
-      qp: Int, ref: H265Frame): (Array[Byte], H265Frame) = {
-    val w = new BitWriter
-    writePHeader(w, f, qp)
-    val e = new Encoder(w, CtxCountInter)
-    val st = new SliceState(wCtb * 32, hCtb * 32)
-    val mf = new MotionField(st.w, st.h)
-    val sums = new FrameSums
-    var nSkipCu = 0L; var nMergeCu = 0L; var nAmvpCu = 0L
-    var nIntraCu = 0L; var mergeIdxSum = 0L; var mvdChecksum = 0L
-    var rootCbfSum = 0L
-    def cu(x0: Int, y0: Int, log2Size: Int): Unit = {
-      val size = 1 << log2Size
-      val cuKey = ConstructV.cuKey(x0, y0)
-      val cls = ConstructVI.cuClass(id, f, cuKey)
-      val skip = cls == 0
-      e.decision(CtxCuSkip + mf.skipCtxInc(x0, y0), if (skip) 1 else 0)
-      if (skip) {
-        st.setDepth(x0, y0, size, 5 - log2Size)
-        sums.nCus += 1
-        nSkipCu += 1
-        val mIdx = ConstructVI.mergeIdx(id, cuKey)
-        encodeMergeIdx(e, mIdx)
-        mergeIdxSum += mIdx.toLong * (cuKey + 1)
-        val mv = mergeCandidates(mf, x0, y0, size)(mIdx)
-        mf.fill(x0, y0, size, mv._1, mv._2, 2)
-        interReconCu(st, ref, x0, y0, size, mv, qp, null, null, null)
-      } else if (cls == 2) {
-        e.decision(CtxPredMode, 1) // MODE_INTRA
-        nIntraCu += 1
-        mf.fill(x0, y0, size, 0, 0, 0)
-        H265.encodeCu(e, st, sums, id, f, x0, y0, log2Size, qp)
-      } else {
-        e.decision(CtxPredMode, 0) // MODE_INTER
-        st.setDepth(x0, y0, size, 5 - log2Size)
-        sums.nCus += 1
-        val merge = cls == 1
-        e.decision(CtxMergeFlag, if (merge) 1 else 0)
-        val mv =
-          if (merge) {
-            nMergeCu += 1
-            val mIdx = ConstructVI.mergeIdx(id, cuKey)
-            encodeMergeIdx(e, mIdx)
-            mergeIdxSum += mIdx.toLong * (cuKey + 1)
-            mergeCandidates(mf, x0, y0, size)(mIdx)
-          } else {
-            nAmvpCu += 1
-            val (dx, dy) = (ConstructVI.mvdX(id, f, cuKey),
-              ConstructVI.mvdY(id, f, cuKey))
-            encodeMvd(e, dx, dy)
-            mvdChecksum += dx.toLong * (cuKey * 4 + 1) +
-              dy.toLong * (cuKey * 4 + 3)
-            val mvp = ConstructVI.mvpFlag(id, cuKey)
-            e.decision(CtxMvpFlag, mvp)
-            val c = amvpCandidates(mf, x0, y0, size)(mvp)
-            (c._1 + dx, c._2 + dy)
-          }
-        mf.fill(x0, y0, size, mv._1, mv._2, 1)
-        val rc = ConstructVI.rootCbf(id, f, cuKey)
-        e.decision(CtxRqtRoot, if (rc) 1 else 0)
-        if (rc) rootCbfSum += cuKey + 1
-        var lumaLv: Array[Int] = null
-        var cbLv: Array[Int] = null; var crLv: Array[Int] = null
-        if (rc) {
-          val cbfCb = ConstructVI.cbfCb(id, cuKey)
-          val cbfCr = ConstructVI.cbfCr(id, cuKey)
-          e.decision(H265.CtxCbfChroma + 0, if (cbfCb) 1 else 0)
-          e.decision(H265.CtxCbfChroma + 0, if (cbfCr) 1 else 0)
-          // cbf_luma INFERRED 1 when both chroma cbfs are zero
-          val cbfY =
-            if (!cbfCb && !cbfCr) true
-            else {
-              val v = ConstructV.cbf(id, cuKey, 0)
-              e.decision(H265.CtxCbfLuma + 1, if (v) 1 else 0)
-              v
-            }
-          if (cbfCb) sums.cbfSum += ConstructV.tuTag(cuKey, 4) + 1
-          if (cbfCr) sums.cbfSum += ConstructV.tuTag(cuKey, 5) + 1
-          if (cbfY) sums.cbfSum += ConstructV.tuTag(cuKey, 0) + 1
-          if (cbfY) {
-            val tag = ConstructV.tuTag(cuKey, 0)
-            val (lv, pairs) = buildLevels(id, tag, size, 0)
-            lumaLv = lv
-            val last = encodeResidual(e, lv, size, luma = true, 0)
-            sums.lastChecksum += last.toLong * (tag + 1)
-            sums.addLevels(tag, pairs)
-          }
-          if (cbfCb) {
-            val tag = ConstructV.tuTag(cuKey, 4)
-            val (lv, pairs) = buildLevels(id, tag, size / 2, 0)
-            cbLv = lv
-            val last = encodeResidual(e, lv, size / 2, luma = false, 0)
-            sums.lastChecksum += last.toLong * (tag + 1)
-            sums.addLevels(tag, pairs)
-          }
-          if (cbfCr) {
-            val tag = ConstructV.tuTag(cuKey, 5)
-            val (lv, pairs) = buildLevels(id, tag, size / 2, 0)
-            crLv = lv
-            val last = encodeResidual(e, lv, size / 2, luma = false, 0)
-            sums.lastChecksum += last.toLong * (tag + 1)
-            sums.addLevels(tag, pairs)
-          }
-        }
-        interReconCu(st, ref, x0, y0, size, mv, qp, lumaLv, cbLv, crLv)
-      }
-    }
-    val nCtus = wCtb * hCtb
-    for (c <- 0 until nCtus) {
-      val x0 = (c % wCtb) * 32; val y0 = (c / wCtb) * 32
-      val s32 = ConstructV.split32(id, f, c)
-      e.decision(H265.CtxSplitCu + st.splitCtxInc(x0, y0, 0),
-        if (s32) 1 else 0)
-      if (s32) {
-        sums.splitSum += c + 1
-        for (q <- 0 until 4) {
-          val qx = x0 + (q % 2) * 16; val qy = y0 + (q / 2) * 16
-          val s16 = ConstructV.split16(id, f, c, q)
-          e.decision(H265.CtxSplitCu + st.splitCtxInc(qx, qy, 1),
-            if (s16) 1 else 0)
-          if (s16) {
-            sums.splitSum += c * 4 + q + 1
-            for (s <- 0 until 4)
-              cu(qx + (s % 2) * 8, qy + (s / 2) * 8, 3)
-          } else cu(qx, qy, 4)
-        }
-      } else cu(x0, y0, 5)
-      e.terminate(if (c == nCtus - 1) 1 else 0)
-    }
-    w.alignByte()
-    (w.result(), H265Frame(st.y, st.cb, st.cr, sums.nCus, sums.nNxN,
-      sums.splitSum, sums.modeSum, sums.chromaModeSum, sums.cbfSum,
-      sums.lastChecksum, sums.levelChecksum, nSkipCu, nMergeCu,
-      nAmvpCu, nIntraCu, mergeIdxSum, mvdChecksum, rootCbfSum))
-  }
-
-  // -------------------------------------------------------------------
-  // B slices (q320): two reference lists + default bi-prediction
-  // -------------------------------------------------------------------
-
-  /** Encode an I / P / B group (q320): I(poc 0) as the q315 intra
-    * frame, P(poc 2, TRAIL_R) as the q319 P slice referencing I, and a
-    * non-reference B(poc 1, TRAIL_N) with L0 = [I], L1 = [P]. Frames
-    * return in decode order (display order is I, B, P).
+  /** Luma, Cb and Cr levels of one inter CU's transform tree (TU = CU);
+    * null where a cbf is 0 or rqt_root_cbf is.
     */
-  def encodeGop(id: Long, wCtb: Int, hCtb: Int,
-      qp: Int): (Array[Byte], Vector[H265Frame]) = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(H265.nal(32, H265.vpsRbsp()))
-    out.write(H265.nal(33, H265.spsRbsp(wCtb * 32, hCtb * 32)))
-    out.write(H265.nal(34, H265.ppsRbsp(qp)))
-    val frames = Vector.newBuilder[H265Frame]
-    val b0 = Vector.newBuilder[H265Frame]
-    out.write(H265.nal(19, H265.encodeSlice(id, 0, wCtb, hCtb, qp, b0)))
-    val frI = b0.result().head
-    frames += frI
-    val (rbspP, frP) = encodePSlice(id, 1, wCtb, hCtb, qp, frI)
-    out.write(H265.nal(1, rbspP))
-    frames += frP
-    val (rbspB, frB) = encodeBSlice(id, 2, wCtb, hCtb, qp, frI, frP)
-    out.write(H265.nal(0, rbspB)) // TRAIL_N: non-reference
-    frames += frB
-    (out.toByteArray, frames.result())
-  }
+  private type CuLevels = (Array[Int], Array[Int], Array[Int])
 
-  private def writeBHeader(w: BitWriter, pocLsb: Int): Unit = {
-    w.put(1, 1) // first_slice_segment_in_pic_flag
-    w.ue(0) // slice_pic_parameter_set_id
-    w.ue(0) // slice_type B
-    w.put(pocLsb, 8) // slice_pic_order_cnt_lsb
-    w.put(0, 1) // short_term_ref_pic_set_sps_flag
-    w.ue(1) // num_negative_pics
-    w.ue(1) // num_positive_pics
-    w.ue(0); w.put(1, 1) // delta_poc_s0_minus1, used flag (the I)
-    w.ue(0); w.put(1, 1) // delta_poc_s1_minus1, used flag (the P)
-    w.put(0, 1) // num_ref_idx_active_override_flag
-    w.put(0, 1) // mvd_l1_zero_flag
-    w.ue(5 - MaxMerge) // five_minus_max_num_merge_cand
-    w.se(0) // slice_qp_delta
-    w.put(1, 1) // byte_alignment
-    w.alignByte()
-  }
-
-  /** inter_pred_idc for 2Nx2N (§9.3.3.1.6): '1' BI with the bin-0
-    * context from the coding depth, '00' L0, '01' L1 (bin 1 at the
-    * fixed offset).
+  /** The inter CU residual chain (§7.3.8.5/§7.3.8.8): rqt_root_cbf, then
+    * cbf_cb and cbf_cr, cbf_luma (inferred 1 when both chroma cbfs are
+    * 0), and the luma, Cb, Cr levels, with their gate sums.
     */
-  private def encodePredIdc(e: Encoder, depth: Int, idc: Int): Unit = {
-    e.decision(CtxInterPredIdc + depth, if (idc == 3) 1 else 0)
-    if (idc != 3) e.decision(CtxInterPredIdc + 4, idc - 1)
+  private def encodeCuResidual(e: Encoder, sums: FrameSums, id: Long,
+      f: Int, cuKey: Int, size: Int): CuLevels = {
+    val rc = ConstructVI.rootCbf(id, f, cuKey)
+    e.decision(CtxRqtRoot, if (rc) 1 else 0)
+    if (!rc) return (null, null, null)
+    sums.rootCbfSum += cuKey + 1
+    val cbfCb = ConstructVI.cbfCb(id, cuKey)
+    val cbfCr = ConstructVI.cbfCr(id, cuKey)
+    e.decision(H265.CtxCbfChroma + 0, if (cbfCb) 1 else 0)
+    e.decision(H265.CtxCbfChroma + 0, if (cbfCr) 1 else 0)
+    val cbfY =
+      if (!cbfCb && !cbfCr) true
+      else {
+        val v = ConstructV.cbf(id, cuKey, 0)
+        e.decision(H265.CtxCbfLuma + 1, if (v) 1 else 0)
+        v
+      }
+    def tu(coded: Boolean, comp: Int, nTbS: Int): Array[Int] =
+      if (!coded) null
+      else {
+        val tag = ConstructV.tuTag(cuKey, comp)
+        sums.cbfSum += tag + 1
+        val (lv, pairs) = buildLevels(id, tag, nTbS, 0)
+        val last = encodeResidual(e, lv, nTbS, luma = comp == 0, 0)
+        sums.lastChecksum += last.toLong * (tag + 1)
+        sums.addLevels(tag, pairs)
+        lv
+      }
+    (tu(cbfY, 0, size), tu(cbfCb, 4, size / 2), tu(cbfCr, 5, size / 2))
   }
-  private def decodePredIdc(d: Decoder, depth: Int): Int =
-    if (d.decision(CtxInterPredIdc + depth) == 1) 3
-    else 1 + d.decision(CtxInterPredIdc + 4)
 
-  /** MC (uni or bi per the prediction flags) + residual, shared. */
-  private def biReconCu(st: SliceState, l0: H265Frame, l1: H265Frame,
+  /** Reads what [[encodeCuResidual]] wrote. */
+  private def decodeCuResidual(d: Decoder, sums: FrameSums, cuKey: Int,
+      size: Int): CuLevels = {
+    if (d.decision(CtxRqtRoot) != 1) return (null, null, null)
+    sums.rootCbfSum += cuKey + 1
+    val cbfCb = d.decision(H265.CtxCbfChroma + 0) == 1
+    val cbfCr = d.decision(H265.CtxCbfChroma + 0) == 1
+    val cbfY =
+      if (!cbfCb && !cbfCr) true
+      else d.decision(H265.CtxCbfLuma + 1) == 1
+    def tu(coded: Boolean, comp: Int, nTbS: Int): Array[Int] =
+      if (!coded) null
+      else {
+        val tag = ConstructV.tuTag(cuKey, comp)
+        sums.cbfSum += tag + 1
+        val (lv, last) = decodeResidual(d, nTbS, luma = comp == 0, 0)
+        sums.lastChecksum += last.toLong * (tag + 1)
+        addDecodedLevelsDiag(sums, tag, lv, nTbS)
+        lv
+      }
+    (tu(cbfY, 0, size), tu(cbfCb, 4, size / 2), tu(cbfCr, 5, size / 2))
+  }
+
+  /** MC (uni or bi per the prediction flags) + residual for one inter
+    * CU, shared by encoder and decoder, P and B.
+    */
+  private def reconCu(st: SliceState, l0: H265Frame, l1: H265Frame,
       x0: Int, y0: Int, size: Int, m: BiMv, qp: Int,
-      lumaLv: Array[Int], cbLv: Array[Int], crLv: Array[Int]): Unit = {
+      lv: CuLevels): Unit = {
     def planes(fr: H265Frame) = (fr.y, fr.cb, fr.cr)
     val (ay, acb, acr) = planes(l0); val (by, bcb, bcr) = planes(l1)
     if (m.use0 && m.use1) {
@@ -716,73 +600,151 @@ object H265Inter {
           plane(idx) = clip8(plane(idx) + res(r * nTbS + c))
         }
       }
-    addResidual(st.y, st.w, x0, y0, size, lumaLv)
-    addResidual(st.cb, st.cw, x0 / 2, y0 / 2, size / 2, cbLv)
-    addResidual(st.cr, st.cw, x0 / 2, y0 / 2, size / 2, crLv)
+    addResidual(st.y, st.w, x0, y0, size, lv._1)
+    addResidual(st.cb, st.cw, x0 / 2, y0 / 2, size / 2, lv._2)
+    addResidual(st.cr, st.cw, x0 / 2, y0 / 2, size / 2, lv._3)
     st.markY(x0, y0, size)
     st.markC(x0 / 2, y0 / 2, size / 2)
   }
 
-  /** Code one B inter TU set (cbfs + residuals); returns the level
-    * blocks. Shared formulas with the P path.
+  /** [[reconCu]] for a P CU: L0 only, from `ref`. */
+  private def reconP(st: SliceState, ref: H265Frame, x0: Int, y0: Int,
+      size: Int, mv: (Int, Int), qp: Int, lv: CuLevels): Unit =
+    reconCu(st, ref, ref, x0, y0, size, BiMv(use0 = true, mv, use1 = false,
+      (0, 0)), qp, lv)
+
+  private val noLevels: CuLevels = (null, null, null)
+
+  private def encodePSlice(id: Long, f: Int, wCtb: Int, hCtb: Int,
+      qp: Int, ref: H265Frame): (Array[Byte], H265Frame) = {
+    val w = new BitWriter
+    writeInterHeader(w, f, b = false)
+    val e = new Encoder(w, CtxCountInter)
+    val st = new SliceState(wCtb * 32, hCtb * 32)
+    val mf = new MotionField(st.w, st.h)
+    val sums = new FrameSums
+    H265.encodeCtus(e, st, sums, id, f) { (x0, y0, log2Size) =>
+      val size = 1 << log2Size
+      val cuKey = ConstructV.cuKey(x0, y0)
+      val cls = ConstructVI.cuClass(id, f, cuKey)
+      val skip = cls == 0
+      e.decision(CtxCuSkip + mf.skipCtxInc(x0, y0), if (skip) 1 else 0)
+      if (cls == 2) {
+        e.decision(CtxPredMode, 1) // MODE_INTRA
+        sums.nIntraCu += 1
+        mf.fill(x0, y0, size, 0, 0, 0)
+        H265.encodeCu(e, st, sums, id, f, x0, y0, log2Size, qp)
+      } else {
+        if (!skip) e.decision(CtxPredMode, 0) // MODE_INTER
+        st.setDepth(x0, y0, size, 5 - log2Size)
+        sums.nCus += 1
+        val merge = skip || cls == 1
+        if (!skip) e.decision(CtxMergeFlag, if (merge) 1 else 0)
+        val mv =
+          if (merge) {
+            if (skip) sums.nSkipCu += 1 else sums.nMergeCu += 1
+            mergeCandidates(mf, x0, y0, size)(
+              encodeMergeIdx(e, sums, id, cuKey))
+          } else {
+            sums.nAmvpCu += 1
+            val (dx, dy) = (ConstructVI.mvdX(id, f, cuKey),
+              ConstructVI.mvdY(id, f, cuKey))
+            encodeMvd(e, dx, dy)
+            sums.mvdChecksum += dx.toLong * (cuKey * 4 + 1) +
+              dy.toLong * (cuKey * 4 + 3)
+            val mvp = ConstructVI.mvpFlag(id, cuKey)
+            e.decision(CtxMvpFlag, mvp)
+            val c = amvpCandidates(mf, x0, y0, size)(mvp)
+            (c._1 + dx, c._2 + dy)
+          }
+        mf.fill(x0, y0, size, mv._1, mv._2, if (skip) 2 else 1)
+        reconP(st, ref, x0, y0, size, mv, qp,
+          if (skip) noLevels
+          else encodeCuResidual(e, sums, id, f, cuKey, size))
+      }
+    }
+    w.alignByte()
+    (w.result(), sums.frame(st))
+  }
+
+  // -------------------------------------------------------------------
+  // B slices (q320): two reference lists + default bi-prediction
+  // -------------------------------------------------------------------
+
+  /** Encode an I / P / B group (q320): I(poc 0) as the q315 intra
+    * frame, P(poc 2, TRAIL_R) as the q319 P slice referencing I, and a
+    * non-reference B(poc 1, TRAIL_N) with L0 = [I], L1 = [P]. Frames
+    * return in decode order (display order is I, B, P).
     */
+  def encodeGop(id: Long, wCtb: Int, hCtb: Int,
+      qp: Int): (Array[Byte], Vector[H265Frame]) = {
+    val out = new java.io.ByteArrayOutputStream()
+    val frames = Vector.newBuilder[H265Frame]
+    val frI = encodeIdr(out, id, wCtb, hCtb, qp)
+    frames += frI
+    val (rbspP, frP) = encodePSlice(id, 1, wCtb, hCtb, qp, frI)
+    out.write(H265.nal(1, rbspP))
+    frames += frP
+    val (rbspB, frB) = encodeBSlice(id, 2, wCtb, hCtb, qp, frI, frP)
+    out.write(H265.nal(0, rbspB)) // TRAIL_N: non-reference
+    frames += frB
+    (out.toByteArray, frames.result())
+  }
+
+  /** inter_pred_idc for 2Nx2N (§9.3.3.1.6): '1' BI with the bin-0
+    * context from the coding depth, '00' L0, '01' L1 (bin 1 at the
+    * fixed offset).
+    */
+  private def encodePredIdc(e: Encoder, depth: Int, idc: Int): Unit = {
+    e.decision(CtxInterPredIdc + depth, if (idc == 3) 1 else 0)
+    if (idc != 3) e.decision(CtxInterPredIdc + 4, idc - 1)
+  }
+  private def decodePredIdc(d: Decoder, depth: Int): Int =
+    if (d.decision(CtxInterPredIdc + depth) == 1) 3
+    else 1 + d.decision(CtxInterPredIdc + 4)
+
   private def encodeBSlice(id: Long, f: Int, wCtb: Int, hCtb: Int,
       qp: Int, l0: H265Frame, l1: H265Frame): (Array[Byte], H265Frame) = {
     val w = new BitWriter
-    writeBHeader(w, 1) // poc 1: between I (0) and P (2)
+    writeInterHeader(w, 1, b = true) // poc 1: between I (0) and P (2)
     val e = new Encoder(w, CtxCountInter)
     val st = new SliceState(wCtb * 32, hCtb * 32)
     val bf = new BiField(st.w, st.h)
     val sums = new FrameSums
-    var nSkipCu = 0L; var nMergeCu = 0L; var nAmvpCu = 0L
-    var nIntraCu = 0L; var mergeIdxSum = 0L; var mvdChecksum = 0L
-    var rootCbfSum = 0L; var predIdcSum = 0L
-    def cu(x0: Int, y0: Int, log2Size: Int): Unit = {
+    H265.encodeCtus(e, st, sums, id, f) { (x0, y0, log2Size) =>
       val size = 1 << log2Size
       val depth = 5 - log2Size
       val cuKey = ConstructV.cuKey(x0, y0)
       val cls = ConstructVI.cuClassB(id, f, cuKey)
       val skip = cls == 0
       e.decision(CtxCuSkip + bf.skipCtxInc(x0, y0), if (skip) 1 else 0)
-      if (skip) {
-        st.setDepth(x0, y0, size, depth)
-        sums.nCus += 1
-        nSkipCu += 1
-        val mIdx = ConstructVI.mergeIdx(id, cuKey)
-        encodeMergeIdx(e, mIdx)
-        mergeIdxSum += mIdx.toLong * (cuKey + 1)
-        val m = mergeCandidatesB(bf, x0, y0, size)(mIdx)
-        bf.fill(x0, y0, size, m, skip = true)
-        biReconCu(st, l0, l1, x0, y0, size, m, qp, null, null, null)
-      } else if (cls == 2) {
+      if (cls == 2) {
         e.decision(CtxPredMode, 1)
-        nIntraCu += 1
+        sums.nIntraCu += 1
         bf.fillIntra(x0, y0, size)
         H265.encodeCu(e, st, sums, id, f, x0, y0, log2Size, qp)
       } else {
-        e.decision(CtxPredMode, 0)
+        if (!skip) e.decision(CtxPredMode, 0)
         st.setDepth(x0, y0, size, depth)
         sums.nCus += 1
-        val merge = cls == 1
-        e.decision(CtxMergeFlag, if (merge) 1 else 0)
+        val merge = skip || cls == 1
+        if (!skip) e.decision(CtxMergeFlag, if (merge) 1 else 0)
         val m: BiMv =
           if (merge) {
-            nMergeCu += 1
-            val mIdx = ConstructVI.mergeIdx(id, cuKey)
-            encodeMergeIdx(e, mIdx)
-            mergeIdxSum += mIdx.toLong * (cuKey + 1)
-            mergeCandidatesB(bf, x0, y0, size)(mIdx)
+            if (skip) sums.nSkipCu += 1 else sums.nMergeCu += 1
+            mergeCandidatesB(bf, x0, y0, size)(
+              encodeMergeIdx(e, sums, id, cuKey))
           } else {
-            nAmvpCu += 1
+            sums.nAmvpCu += 1
             val idc = cls - 2 // 1 L0, 2 L1, 3 BI
-            predIdcSum += idc.toLong * (cuKey + 1)
+            sums.predIdcSum += idc.toLong * (cuKey + 1)
             encodePredIdc(e, depth, idc)
             var mv0 = (0, 0); var mv1 = (0, 0)
             if (idc == 1 || idc == 3) {
               val (dx, dy) = (ConstructVI.mvdX(id, f, cuKey),
                 ConstructVI.mvdY(id, f, cuKey))
               encodeMvd(e, dx, dy)
-              mvdChecksum += dx.toLong * (cuKey * 8 + 1) +
+              sums.mvdChecksum += dx.toLong * (cuKey * 8 + 1) +
                 dy.toLong * (cuKey * 8 + 3)
               val mvp = ConstructVI.mvpFlag(id, cuKey)
               e.decision(CtxMvpFlag, mvp)
@@ -793,7 +755,7 @@ object H265Inter {
               val (dx, dy) = (ConstructVI.mvdX1(id, f, cuKey),
                 ConstructVI.mvdY1(id, f, cuKey))
               encodeMvd(e, dx, dy)
-              mvdChecksum += dx.toLong * (cuKey * 8 + 5) +
+              sums.mvdChecksum += dx.toLong * (cuKey * 8 + 5) +
                 dy.toLong * (cuKey * 8 + 7)
               val mvp = ConstructVI.mvpFlag1(id, cuKey)
               e.decision(CtxMvpFlag, mvp)
@@ -802,149 +764,47 @@ object H265Inter {
             }
             BiMv(idc != 2, mv0, idc != 1, mv1)
           }
-        bf.fill(x0, y0, size, m, skip = false)
-        val rc = ConstructVI.rootCbf(id, f, cuKey)
-        e.decision(CtxRqtRoot, if (rc) 1 else 0)
-        if (rc) rootCbfSum += cuKey + 1
-        var lumaLv: Array[Int] = null
-        var cbLv: Array[Int] = null; var crLv: Array[Int] = null
-        if (rc) {
-          val cbfCb = ConstructVI.cbfCb(id, cuKey)
-          val cbfCr = ConstructVI.cbfCr(id, cuKey)
-          e.decision(H265.CtxCbfChroma + 0, if (cbfCb) 1 else 0)
-          e.decision(H265.CtxCbfChroma + 0, if (cbfCr) 1 else 0)
-          val cbfY =
-            if (!cbfCb && !cbfCr) true
-            else {
-              val v = ConstructV.cbf(id, cuKey, 0)
-              e.decision(H265.CtxCbfLuma + 1, if (v) 1 else 0)
-              v
-            }
-          if (cbfCb) sums.cbfSum += ConstructV.tuTag(cuKey, 4) + 1
-          if (cbfCr) sums.cbfSum += ConstructV.tuTag(cuKey, 5) + 1
-          if (cbfY) sums.cbfSum += ConstructV.tuTag(cuKey, 0) + 1
-          if (cbfY) {
-            val tag = ConstructV.tuTag(cuKey, 0)
-            val (lv, pairs) = buildLevels(id, tag, size, 0)
-            lumaLv = lv
-            val last = encodeResidual(e, lv, size, luma = true, 0)
-            sums.lastChecksum += last.toLong * (tag + 1)
-            sums.addLevels(tag, pairs)
-          }
-          if (cbfCb) {
-            val tag = ConstructV.tuTag(cuKey, 4)
-            val (lv, pairs) = buildLevels(id, tag, size / 2, 0)
-            cbLv = lv
-            val last = encodeResidual(e, lv, size / 2, luma = false, 0)
-            sums.lastChecksum += last.toLong * (tag + 1)
-            sums.addLevels(tag, pairs)
-          }
-          if (cbfCr) {
-            val tag = ConstructV.tuTag(cuKey, 5)
-            val (lv, pairs) = buildLevels(id, tag, size / 2, 0)
-            crLv = lv
-            val last = encodeResidual(e, lv, size / 2, luma = false, 0)
-            sums.lastChecksum += last.toLong * (tag + 1)
-            sums.addLevels(tag, pairs)
-          }
-        }
-        biReconCu(st, l0, l1, x0, y0, size, m, qp, lumaLv, cbLv, crLv)
+        bf.fill(x0, y0, size, m, skip)
+        reconCu(st, l0, l1, x0, y0, size, m, qp,
+          if (skip) noLevels
+          else encodeCuResidual(e, sums, id, f, cuKey, size))
       }
     }
-    val nCtus = wCtb * hCtb
-    for (c <- 0 until nCtus) {
-      val x0 = (c % wCtb) * 32; val y0 = (c / wCtb) * 32
-      val s32 = ConstructV.split32(id, f, c)
-      e.decision(H265.CtxSplitCu + st.splitCtxInc(x0, y0, 0),
-        if (s32) 1 else 0)
-      if (s32) {
-        sums.splitSum += c + 1
-        for (q <- 0 until 4) {
-          val qx = x0 + (q % 2) * 16; val qy = y0 + (q / 2) * 16
-          val s16 = ConstructV.split16(id, f, c, q)
-          e.decision(H265.CtxSplitCu + st.splitCtxInc(qx, qy, 1),
-            if (s16) 1 else 0)
-          if (s16) {
-            sums.splitSum += c * 4 + q + 1
-            for (s <- 0 until 4)
-              cu(qx + (s % 2) * 8, qy + (s / 2) * 8, 3)
-          } else cu(qx, qy, 4)
-        }
-      } else cu(x0, y0, 5)
-      e.terminate(if (c == nCtus - 1) 1 else 0)
-    }
     w.alignByte()
-    (w.result(), H265Frame(st.y, st.cb, st.cr, sums.nCus, sums.nNxN,
-      sums.splitSum, sums.modeSum, sums.chromaModeSum, sums.cbfSum,
-      sums.lastChecksum, sums.levelChecksum, nSkipCu, nMergeCu,
-      nAmvpCu, nIntraCu, mergeIdxSum, mvdChecksum, rootCbfSum,
-      predIdcSum))
+    (w.result(), sums.frame(st))
   }
 
   private def decodeBSlice(rbsp: Array[Byte], width: Int, height: Int,
       qp: Int, l0: H265Frame, l1: H265Frame): H265Frame = {
-    def bad(msg: String): Nothing = throw new IllegalStateException(msg)
-    val r = new BitReader(rbsp)
-    if (r.get(1) != 1) bad("not first slice segment")
-    if (r.ue() != 0) bad("pps id")
-    if (r.ue() != 0) bad("not a B slice")
-    r.get(8) // slice_pic_order_cnt_lsb
-    if (r.get(1) != 0) bad("sps strps out of scope")
-    if (r.ue() != 1) bad("one negative pic only")
-    if (r.ue() != 1) bad("one positive pic only")
-    if (r.ue() != 0) bad("neg delta poc must be 1")
-    if (r.get(1) != 1) bad("neg ref must be used")
-    if (r.ue() != 0) bad("pos delta poc must be 1")
-    if (r.get(1) != 1) bad("pos ref must be used")
-    if (r.get(1) != 0) bad("ref idx override out of scope")
-    if (r.get(1) != 0) bad("mvd_l1_zero out of scope")
-    if (r.ue() != 5 - MaxMerge) bad("merge cand count")
-    if (r.se() != 0) bad("nonzero slice_qp_delta")
-    if (r.get(1) != 1) bad("alignment bit")
-    r.alignByte()
-    val d = new Decoder(rbsp, r.bitPos, CtxCountInter)
+    val d = new Decoder(rbsp, readInterHeader(rbsp, b = true), CtxCountInter)
     val st = new SliceState(width, height)
     val bf = new BiField(width, height)
     val sums = new FrameSums
-    var nSkipCu = 0L; var nMergeCu = 0L; var nAmvpCu = 0L
-    var nIntraCu = 0L; var mergeIdxSum = 0L; var mvdChecksum = 0L
-    var rootCbfSum = 0L; var predIdcSum = 0L
-    def cu(x0: Int, y0: Int, log2Size: Int): Unit = {
+    H265.decodeCtus(d, st, sums) { (x0, y0, log2Size) =>
       val size = 1 << log2Size
       val depth = 5 - log2Size
       val cuKey = ConstructV.cuKey(x0, y0)
       val skip = d.decision(CtxCuSkip + bf.skipCtxInc(x0, y0)) == 1
-      if (skip) {
-        st.setDepth(x0, y0, size, depth)
-        sums.nCus += 1
-        nSkipCu += 1
-        val mIdx = decodeMergeIdx(d)
-        mergeIdxSum += mIdx.toLong * (cuKey + 1)
-        val m = mergeCandidatesB(bf, x0, y0, size)(mIdx)
-        bf.fill(x0, y0, size, m, skip = true)
-        biReconCu(st, l0, l1, x0, y0, size, m, qp, null, null, null)
-      } else if (d.decision(CtxPredMode) == 1) {
-        nIntraCu += 1
+      if (!skip && d.decision(CtxPredMode) == 1) {
+        sums.nIntraCu += 1
         bf.fillIntra(x0, y0, size)
         H265.decodeCu(d, st, sums, x0, y0, log2Size, qp)
       } else {
         st.setDepth(x0, y0, size, depth)
         sums.nCus += 1
-        val merge = d.decision(CtxMergeFlag) == 1
+        val merge = skip || d.decision(CtxMergeFlag) == 1
         val m: BiMv =
           if (merge) {
-            nMergeCu += 1
-            val mIdx = decodeMergeIdx(d)
-            mergeIdxSum += mIdx.toLong * (cuKey + 1)
-            mergeCandidatesB(bf, x0, y0, size)(mIdx)
+            if (skip) sums.nSkipCu += 1 else sums.nMergeCu += 1
+            mergeCandidatesB(bf, x0, y0, size)(decodeMergeIdx(d, sums, cuKey))
           } else {
-            nAmvpCu += 1
+            sums.nAmvpCu += 1
             val idc = decodePredIdc(d, depth)
-            predIdcSum += idc.toLong * (cuKey + 1)
+            sums.predIdcSum += idc.toLong * (cuKey + 1)
             var mv0 = (0, 0); var mv1 = (0, 0)
             if (idc == 1 || idc == 3) {
               val (dx, dy) = decodeMvd(d)
-              mvdChecksum += dx.toLong * (cuKey * 8 + 1) +
+              sums.mvdChecksum += dx.toLong * (cuKey * 8 + 1) +
                 dy.toLong * (cuKey * 8 + 3)
               val mvp = d.decision(CtxMvpFlag)
               val c = amvpCandidates(bf.l0, x0, y0, size)(mvp)
@@ -952,7 +812,7 @@ object H265Inter {
             }
             if (idc == 2 || idc == 3) {
               val (dx, dy) = decodeMvd(d)
-              mvdChecksum += dx.toLong * (cuKey * 8 + 5) +
+              sums.mvdChecksum += dx.toLong * (cuKey * 8 + 5) +
                 dy.toLong * (cuKey * 8 + 7)
               val mvp = d.decision(CtxMvpFlag)
               val c = amvpCandidates(bf.l1, x0, y0, size)(mvp)
@@ -960,70 +820,12 @@ object H265Inter {
             }
             BiMv(idc != 2, mv0, idc != 1, mv1)
           }
-        bf.fill(x0, y0, size, m, skip = false)
-        val rc = d.decision(CtxRqtRoot) == 1
-        if (rc) rootCbfSum += cuKey + 1
-        var lumaLv: Array[Int] = null
-        var cbLv: Array[Int] = null; var crLv: Array[Int] = null
-        if (rc) {
-          val cbfCb = d.decision(H265.CtxCbfChroma + 0) == 1
-          val cbfCr = d.decision(H265.CtxCbfChroma + 0) == 1
-          val cbfY =
-            if (!cbfCb && !cbfCr) true
-            else d.decision(H265.CtxCbfLuma + 1) == 1
-          if (cbfCb) sums.cbfSum += ConstructV.tuTag(cuKey, 4) + 1
-          if (cbfCr) sums.cbfSum += ConstructV.tuTag(cuKey, 5) + 1
-          if (cbfY) sums.cbfSum += ConstructV.tuTag(cuKey, 0) + 1
-          if (cbfY) {
-            val tag = ConstructV.tuTag(cuKey, 0)
-            val (lv, last) = decodeResidual(d, size, luma = true, 0)
-            lumaLv = lv
-            sums.lastChecksum += last.toLong * (tag + 1)
-            addDecodedLevelsDiag(sums, tag, lv, size)
-          }
-          if (cbfCb) {
-            val tag = ConstructV.tuTag(cuKey, 4)
-            val (lv, last) = decodeResidual(d, size / 2, luma = false, 0)
-            cbLv = lv
-            sums.lastChecksum += last.toLong * (tag + 1)
-            addDecodedLevelsDiag(sums, tag, lv, size / 2)
-          }
-          if (cbfCr) {
-            val tag = ConstructV.tuTag(cuKey, 5)
-            val (lv, last) = decodeResidual(d, size / 2, luma = false, 0)
-            crLv = lv
-            sums.lastChecksum += last.toLong * (tag + 1)
-            addDecodedLevelsDiag(sums, tag, lv, size / 2)
-          }
-        }
-        biReconCu(st, l0, l1, x0, y0, size, m, qp, lumaLv, cbLv, crLv)
+        bf.fill(x0, y0, size, m, skip)
+        reconCu(st, l0, l1, x0, y0, size, m, qp,
+          if (skip) noLevels else decodeCuResidual(d, sums, cuKey, size))
       }
     }
-    val wCtb = width / 32; val hCtb = height / 32
-    val nCtus = wCtb * hCtb
-    var c = 0
-    while (c < nCtus) {
-      val x0 = (c % wCtb) * 32; val y0 = (c / wCtb) * 32
-      if (d.decision(H265.CtxSplitCu + st.splitCtxInc(x0, y0, 0)) == 1) {
-        sums.splitSum += c + 1
-        for (q <- 0 until 4) {
-          val qx = x0 + (q % 2) * 16; val qy = y0 + (q / 2) * 16
-          if (d.decision(H265.CtxSplitCu + st.splitCtxInc(qx, qy, 1)) == 1) {
-            sums.splitSum += c * 4 + q + 1
-            for (s <- 0 until 4)
-              cu(qx + (s % 2) * 8, qy + (s / 2) * 8, 3)
-          } else cu(qx, qy, 4)
-        }
-      } else cu(x0, y0, 5)
-      val end = d.terminate() == 1
-      if (c == nCtus - 1) { if (!end) bad("missing end_of_slice") }
-      else if (end) bad("early end_of_slice")
-      c += 1
-    }
-    H265Frame(st.y, st.cb, st.cr, sums.nCus, sums.nNxN, sums.splitSum,
-      sums.modeSum, sums.chromaModeSum, sums.cbfSum, sums.lastChecksum,
-      sums.levelChecksum, nSkipCu, nMergeCu, nAmvpCu, nIntraCu,
-      mergeIdxSum, mvdChecksum, rootCbfSum, predIdcSum)
+    sums.frame(st)
   }
 
   /** Decode a q320 I/P/B group; None outside the envelope. */
@@ -1045,74 +847,20 @@ object H265Inter {
   private def decodeWith(bytes: Array[Byte],
       allowB: Boolean): Option[H265Stream] = {
     try {
-      val nals = Vector.newBuilder[(Int, Array[Byte])]
-      var i = 0
-      var start = -1
-      var typ = -1
-      while (i + 2 < bytes.length) {
-        if (bytes(i) == 0 && bytes(i + 1) == 0 && bytes(i + 2) == 1) {
-          if (start >= 0) {
-            val end = if (i > 0 && bytes(i - 1) == 0) i - 1 else i
-            nals += ((typ, H264.emulationStrip(
-              java.util.Arrays.copyOfRange(bytes, start, end))))
-          }
-          typ = (bytes(i + 3) >> 1) & 0x3f
-          start = i + 5
-          i += 5
-        } else i += 1
-      }
-      if (start >= 0 && start <= bytes.length)
-        nals += ((typ, H264.emulationStrip(
-          java.util.Arrays.copyOfRange(bytes, start, bytes.length))))
       var width = -1; var height = -1
       var qp = -1
       var sawSps = false; var sawPps = false
       var prev: Option[H265Frame] = None
       var prevPrev: Option[H265Frame] = None
       val frames = Vector.newBuilder[H265Frame]
-      nals.result().foreach {
+      H265.splitNals(bytes).foreach {
         case (32, _) => // VPS
         case (33, rbsp) =>
-          val r = new BitReader(rbsp)
-          r.get(8)
-          if (!H265.readPtl(r)) return None
-          if (r.ue() != 0) return None
-          if (r.ue() != 1) return None
-          width = r.ue(); height = r.ue()
-          if (width % 32 != 0 || height % 32 != 0) return None
-          if (r.get(1) != 0) return None
-          if (r.ue() != 0 || r.ue() != 0) return None
-          if (r.ue() != 4) return None
-          r.get(1); r.ue(); r.ue(); r.ue()
-          if (r.ue() != 0) return None
-          if (r.ue() != 2) return None
-          if (r.ue() != 0) return None
-          if (r.ue() != 3) return None
-          if (r.ue() != 0 || r.ue() != 0) return None
-          if (r.get(4) != 0) return None
-          if (r.ue() != 0) return None
-          if (r.get(3) != 0) return None
+          val (w, h) = H265.readSps(rbsp).getOrElse(return None)
+          width = w; height = h
           sawSps = true
         case (34, rbsp) =>
-          val r = new BitReader(rbsp)
-          if (r.ue() != 0 || r.ue() != 0) return None
-          if (r.get(2) != 0) return None
-          if (r.get(3) != 0) return None
-          if (r.get(1) != 0) return None
-          if (r.get(1) != 0) return None
-          r.ue(); r.ue()
-          qp = 26 + r.se()
-          if (r.get(1) != 0) return None
-          if (r.get(1) != 0) return None
-          if (r.get(1) != 0) return None
-          if (r.se() != 0 || r.se() != 0) return None
-          if (r.get(3) != 0) return None
-          if (r.get(1) != 0) return None
-          if (r.get(2) != 0) return None
-          r.get(1)
-          if (r.get(1) != 1) return None
-          if (r.get(1) != 0) return None
-          if (r.get(1) != 1) return None
+          qp = H265.readPps(rbsp).getOrElse(return None)
           sawPps = true
         case (19, rbsp) if sawSps && sawPps =>
           val b = Vector.newBuilder[H265Frame]
@@ -1146,129 +894,41 @@ object H265Inter {
 
   private def decodePSlice(rbsp: Array[Byte], width: Int, height: Int,
       qp: Int, ref: H265Frame): H265Frame = {
-    def bad(msg: String): Nothing = throw new IllegalStateException(msg)
-    val r = new BitReader(rbsp)
-    if (r.get(1) != 1) bad("not first slice segment")
-    if (r.ue() != 0) bad("pps id")
-    if (r.ue() != 1) bad("not a P slice")
-    r.get(8) // slice_pic_order_cnt_lsb
-    if (r.get(1) != 0) bad("sps strps out of scope")
-    if (r.ue() != 1) bad("one negative pic only")
-    if (r.ue() != 0) bad("no positive pics")
-    if (r.ue() != 0) bad("delta poc must be 1")
-    if (r.get(1) != 1) bad("ref must be used")
-    if (r.get(1) != 0) bad("ref idx override out of scope")
-    if (r.ue() != 5 - MaxMerge) bad("merge cand count")
-    if (r.se() != 0) bad("nonzero slice_qp_delta")
-    if (r.get(1) != 1) bad("alignment bit")
-    r.alignByte()
-    val d = new Decoder(rbsp, r.bitPos, CtxCountInter)
+    val d = new Decoder(rbsp, readInterHeader(rbsp, b = false), CtxCountInter)
     val st = new SliceState(width, height)
     val mf = new MotionField(width, height)
     val sums = new FrameSums
-    var nSkipCu = 0L; var nMergeCu = 0L; var nAmvpCu = 0L
-    var nIntraCu = 0L; var mergeIdxSum = 0L; var mvdChecksum = 0L
-    var rootCbfSum = 0L
-    def cu(x0: Int, y0: Int, log2Size: Int): Unit = {
+    H265.decodeCtus(d, st, sums) { (x0, y0, log2Size) =>
       val size = 1 << log2Size
       val cuKey = ConstructV.cuKey(x0, y0)
       val skip = d.decision(CtxCuSkip + mf.skipCtxInc(x0, y0)) == 1
-      if (skip) {
-        st.setDepth(x0, y0, size, 5 - log2Size)
-        sums.nCus += 1
-        nSkipCu += 1
-        val mIdx = decodeMergeIdx(d)
-        mergeIdxSum += mIdx.toLong * (cuKey + 1)
-        val mv = mergeCandidates(mf, x0, y0, size)(mIdx)
-        mf.fill(x0, y0, size, mv._1, mv._2, 2)
-        interReconCu(st, ref, x0, y0, size, mv, qp, null, null, null)
-      } else if (d.decision(CtxPredMode) == 1) {
-        nIntraCu += 1
+      if (!skip && d.decision(CtxPredMode) == 1) {
+        sums.nIntraCu += 1
         mf.fill(x0, y0, size, 0, 0, 0)
         H265.decodeCu(d, st, sums, x0, y0, log2Size, qp)
       } else {
         st.setDepth(x0, y0, size, 5 - log2Size)
         sums.nCus += 1
-        val merge = d.decision(CtxMergeFlag) == 1
+        val merge = skip || d.decision(CtxMergeFlag) == 1
         val mv =
           if (merge) {
-            nMergeCu += 1
-            val mIdx = decodeMergeIdx(d)
-            mergeIdxSum += mIdx.toLong * (cuKey + 1)
-            mergeCandidates(mf, x0, y0, size)(mIdx)
+            if (skip) sums.nSkipCu += 1 else sums.nMergeCu += 1
+            mergeCandidates(mf, x0, y0, size)(decodeMergeIdx(d, sums, cuKey))
           } else {
-            nAmvpCu += 1
+            sums.nAmvpCu += 1
             val (dx, dy) = decodeMvd(d)
-            mvdChecksum += dx.toLong * (cuKey * 4 + 1) +
+            sums.mvdChecksum += dx.toLong * (cuKey * 4 + 1) +
               dy.toLong * (cuKey * 4 + 3)
             val mvp = d.decision(CtxMvpFlag)
             val c = amvpCandidates(mf, x0, y0, size)(mvp)
             (c._1 + dx, c._2 + dy)
           }
-        mf.fill(x0, y0, size, mv._1, mv._2, 1)
-        val rc = d.decision(CtxRqtRoot) == 1
-        if (rc) rootCbfSum += cuKey + 1
-        var lumaLv: Array[Int] = null
-        var cbLv: Array[Int] = null; var crLv: Array[Int] = null
-        if (rc) {
-          val cbfCb = d.decision(H265.CtxCbfChroma + 0) == 1
-          val cbfCr = d.decision(H265.CtxCbfChroma + 0) == 1
-          val cbfY =
-            if (!cbfCb && !cbfCr) true
-            else d.decision(H265.CtxCbfLuma + 1) == 1
-          if (cbfCb) sums.cbfSum += ConstructV.tuTag(cuKey, 4) + 1
-          if (cbfCr) sums.cbfSum += ConstructV.tuTag(cuKey, 5) + 1
-          if (cbfY) sums.cbfSum += ConstructV.tuTag(cuKey, 0) + 1
-          if (cbfY) {
-            val tag = ConstructV.tuTag(cuKey, 0)
-            val (lv, last) = decodeResidual(d, size, luma = true, 0)
-            lumaLv = lv
-            sums.lastChecksum += last.toLong * (tag + 1)
-            addDecodedLevelsDiag(sums, tag, lv, size)
-          }
-          if (cbfCb) {
-            val tag = ConstructV.tuTag(cuKey, 4)
-            val (lv, last) = decodeResidual(d, size / 2, luma = false, 0)
-            cbLv = lv
-            sums.lastChecksum += last.toLong * (tag + 1)
-            addDecodedLevelsDiag(sums, tag, lv, size / 2)
-          }
-          if (cbfCr) {
-            val tag = ConstructV.tuTag(cuKey, 5)
-            val (lv, last) = decodeResidual(d, size / 2, luma = false, 0)
-            crLv = lv
-            sums.lastChecksum += last.toLong * (tag + 1)
-            addDecodedLevelsDiag(sums, tag, lv, size / 2)
-          }
-        }
-        interReconCu(st, ref, x0, y0, size, mv, qp, lumaLv, cbLv, crLv)
+        mf.fill(x0, y0, size, mv._1, mv._2, if (skip) 2 else 1)
+        reconP(st, ref, x0, y0, size, mv, qp,
+          if (skip) noLevels else decodeCuResidual(d, sums, cuKey, size))
       }
     }
-    val wCtb = width / 32; val hCtb = height / 32
-    val nCtus = wCtb * hCtb
-    var c = 0
-    while (c < nCtus) {
-      val x0 = (c % wCtb) * 32; val y0 = (c / wCtb) * 32
-      if (d.decision(H265.CtxSplitCu + st.splitCtxInc(x0, y0, 0)) == 1) {
-        sums.splitSum += c + 1
-        for (q <- 0 until 4) {
-          val qx = x0 + (q % 2) * 16; val qy = y0 + (q / 2) * 16
-          if (d.decision(H265.CtxSplitCu + st.splitCtxInc(qx, qy, 1)) == 1) {
-            sums.splitSum += c * 4 + q + 1
-            for (s <- 0 until 4)
-              cu(qx + (s % 2) * 8, qy + (s / 2) * 8, 3)
-          } else cu(qx, qy, 4)
-        }
-      } else cu(x0, y0, 5)
-      val end = d.terminate() == 1
-      if (c == nCtus - 1) { if (!end) bad("missing end_of_slice") }
-      else if (end) bad("early end_of_slice")
-      c += 1
-    }
-    H265Frame(st.y, st.cb, st.cr, sums.nCus, sums.nNxN, sums.splitSum,
-      sums.modeSum, sums.chromaModeSum, sums.cbfSum, sums.lastChecksum,
-      sums.levelChecksum, nSkipCu, nMergeCu, nAmvpCu, nIntraCu,
-      mergeIdxSum, mvdChecksum, rootCbfSum)
+    sums.frame(st)
   }
 
   private def addDecodedLevelsDiag(sums: FrameSums, tag: Int,
