@@ -1074,6 +1074,44 @@ object H264 {
     true
   }
 
+  /** A slice RBSP writer holding the slice header (§7.3.3) of this
+    * construction's one-slice pictures: slice_type 7 (IDR I), 5 (P) or
+    * 6 (B, non-reference); an 8-bit pic_order_cnt_lsb under POC type 0;
+    * P slices override to two active refs when `nRefs` is 2; B slices
+    * carry spatial or temporal direct. Deblocking is off; under CABAC
+    * P/B slices add cabac_init_idc 0 and every slice the alignment ones.
+    */
+  private[operators] def sliceHeader(sliceType: Int, f: Int, qp: Int,
+      pocLsb: Option[Int], cabac: Boolean, nRefs: Int = 1,
+      spatial: Boolean = true): BitWriter = {
+    val w = new BitWriter
+    w.ue(0) // first_mb_in_slice
+    w.ue(sliceType) // slice_type (all slices in pic)
+    w.ue(0) // pps_id
+    if (sliceType == 7) {
+      w.put(0, 4) // frame_num (log2_max_frame_num = 4)
+      w.ue(f % 2) // idr_pic_id
+    } else w.put(f % 16, 4) // frame_num
+    pocLsb.foreach(v => w.put(v, 8)) // pic_order_cnt_lsb (POC type 0)
+    sliceType match {
+      case 7 => w.put(0, 1); w.put(0, 1) // no_output_of_prior_pics, long_term_ref
+      case 5 =>
+        // PPS default is one active ref; override to two once the DPB has two
+        if (nRefs == 2) { w.put(1, 1); w.ue(1) } else w.put(0, 1)
+        w.put(0, 1) // ref_pic_list_modification_flag_l0
+        w.put(0, 1) // adaptive_ref_pic_marking_mode_flag (sliding window)
+      case _ => // non-reference B: no dec_ref_pic_marking
+        w.put(if (spatial) 1 else 0, 1) // direct_spatial_mv_pred_flag
+        w.put(0, 1) // num_ref_idx override: one active ref per list
+        w.put(0, 1); w.put(0, 1) // ref_pic_list_modification l0, l1
+    }
+    if (cabac && sliceType != 7) w.ue(0) // cabac_init_idc
+    w.se(qp - 26) // slice_qp_delta
+    w.ue(1) // disable_deblocking_filter_idc = 1 (no loop filter)
+    if (cabac) w.alignByteOnes() // cabac_alignment_one_bit
+    w
+  }
+
   /** Zeroed Y, Cb, Cr planes of a wMb x hMb picture (4:2:0). */
   private[operators] def newPlanes(wMb: Int, hMb: Int): Planes =
     (new Array[Int](wMb * 16 * hMb * 16), new Array[Int](wMb * 8 * hMb * 8),
@@ -1212,16 +1250,7 @@ object H264 {
   private def encodeISlice(id: Long, f: Int, wMb: Int, hMb: Int, qp: Int,
       mixed: Boolean, pcmMode: Boolean = false,
       pocLsb: Option[Int] = None): (Array[Byte], H264Frame) = {
-      val w = new BitWriter
-      w.ue(0) // first_mb_in_slice
-      w.ue(7) // slice_type: I (all slices in pic)
-      w.ue(0) // pps_id
-      w.put(0, 4) // frame_num (log2_max_frame_num = 4)
-      w.ue(f % 2) // idr_pic_id
-      pocLsb.foreach(v => w.put(v, 8)) // pic_order_cnt_lsb (POC type 0)
-      w.put(0, 1); w.put(0, 1) // no_output_of_prior_pics, long_term_ref
-      w.se(qp - 26) // slice_qp_delta
-      w.ue(1) // disable_deblocking_filter_idc = 1 (no loop filter)
+      val w = sliceHeader(7, f, qp, pocLsb, cabac = false)
       val (y, cb, cr) = newPlanes(wMb, hMb)
       val vlc = new CavlcCtx(wMb, hMb)
       // per-4x4 Intra4x4PredMode store for predicted-mode coding; 2
@@ -1866,18 +1895,7 @@ object H264 {
       refs: IndexedSeq[(Array[Int], Array[Int], Array[Int])],
       pocLsb: Option[Int] = None): (Array[Byte], H264Frame, MotionGrid) = {
     val nRefs = math.min(refs.size, 2)
-    val w = new BitWriter
-    w.ue(0) // first_mb_in_slice
-    w.ue(5) // slice_type: P (all slices in pic)
-    w.ue(0) // pps_id
-    w.put(f % 16, 4) // frame_num
-    pocLsb.foreach(v => w.put(v, 8)) // pic_order_cnt_lsb (POC type 0)
-    // PPS default is one active ref; override to two once the DPB has two
-    if (nRefs == 2) { w.put(1, 1); w.ue(1) } else w.put(0, 1)
-    w.put(0, 1) // ref_pic_list_modification_flag_l0
-    w.put(0, 1) // adaptive_ref_pic_marking_mode_flag (sliding window)
-    w.se(qp - 26) // slice_qp_delta
-    w.ue(1) // disable_deblocking_filter_idc
+    val w = sliceHeader(5, f, qp, pocLsb, cabac = false, nRefs)
     val (y, cb, cr) = newPlanes(wMb, hMb)
     val grid = new MotionGrid(wMb * 4, hMb * 4)
     val vlc = new CavlcCtx(wMb, hMb)
@@ -2152,18 +2170,8 @@ object H264 {
   private def encodeBSlice(id: Long, f: Int, wMb: Int, hMb: Int, qp: Int,
       l0: Planes, l1: Planes, colGrid: Option[MotionGrid],
       pocLsb: Int): (Array[Byte], H264Frame) = {
-    val w = new BitWriter
-    w.ue(0) // first_mb_in_slice
-    w.ue(6) // slice_type: B (all slices in pic)
-    w.ue(0) // pps_id
-    w.put(f % 16, 4) // frame_num
-    w.put(pocLsb, 8) // pic_order_cnt_lsb
-    w.put(1, 1) // direct_spatial_mv_pred_flag (spatial direct, §8.4.1.2.2)
-    w.put(0, 1) // num_ref_idx override: one active ref per list
-    w.put(0, 1); w.put(0, 1) // ref_pic_list_modification l0, l1
-    // non-reference picture: NO dec_ref_pic_marking
-    w.se(qp - 26)
-    w.ue(1) // disable_deblocking_filter_idc
+    // spatial direct (§8.4.1.2.2)
+    val w = sliceHeader(6, f, qp, Some(pocLsb), cabac = false)
     val (y, cb, cr) = newPlanes(wMb, hMb)
     val gridL0 = new MotionGrid(wMb * 4, hMb * 4)
     val gridL1 = new MotionGrid(wMb * 4, hMb * 4)

@@ -615,17 +615,7 @@ object H264Cabac {
   private[operators] def encodeSlice(id: Long, f: Int, wMb: Int, hMb: Int, qp: Int,
       frames: scala.collection.mutable.Builder[H264Frame, Vector[H264Frame]],
       pocLsb: Option[Int] = None): Array[Byte] = {
-    val w = new H264.BitWriter
-    w.ue(0) // first_mb_in_slice
-    w.ue(7) // slice_type: I
-    w.ue(0) // pps_id
-    w.put(0, 4) // frame_num
-    w.ue(f % 2) // idr_pic_id
-    pocLsb.foreach(v => w.put(v, 8)) // pic_order_cnt_lsb (POC type 0)
-    w.put(0, 1); w.put(0, 1) // dec_ref_pic_marking
-    w.se(qp - 26)
-    w.ue(1) // disable_deblocking_filter_idc
-    w.alignByteOnes() // cabac_alignment_one_bit
+    val w = H264.sliceHeader(7, f, qp, pocLsb, cabac = true)
     val e = new Encoder(w)
     val sc = new SliceCtx(wMb, hMb)
     val (y, cb, cr) = newPlanes(wMb, hMb)

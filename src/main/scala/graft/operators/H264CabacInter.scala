@@ -52,11 +52,12 @@ package graft.operators
   */
 object H264CabacInter {
 
-  import H264.{BitReader, BitWriter, ConstructB, ConstructH, ConstructP,
+  import H264.{BitReader, ConstructB, ConstructH, ConstructP,
     DirectMotion, H264Frame, H264Stream, InterMb, MotionGrid, PartKind,
     Planes, directMotion, fillDirect, mvPred, nal, newPlanes, ppsRbsp,
     skipMv, nPartsOf, partKindOf, partRect, reconstructBMb,
-    reconstructDirectMb, reconstructInterMb, residualMb, skipMb, spsRbsp}
+    reconstructDirectMb, reconstructInterMb, residualMb, skipMb,
+    sliceHeader, spsRbsp}
   import H264Cabac.{CatLuma4, CtxMbQpDelta, Decoder, Encoder, SliceCtx}
 
   // -------------------------------------------------------------------
@@ -265,19 +266,7 @@ object H264CabacInter {
       pocLsb: Option[Int] = None)
     : (Array[Byte], H264Frame, MotionGrid) = {
     val nRefs = math.min(refs.size, 2)
-    val w = new BitWriter
-    w.ue(0) // first_mb_in_slice
-    w.ue(5) // slice_type: P (all slices in pic)
-    w.ue(0) // pps_id
-    w.put(f % 16, 4) // frame_num
-    pocLsb.foreach(v => w.put(v, 8)) // pic_order_cnt_lsb (POC type 0)
-    if (nRefs == 2) { w.put(1, 1); w.ue(1) } else w.put(0, 1)
-    w.put(0, 1) // ref_pic_list_modification_flag_l0
-    w.put(0, 1) // adaptive_ref_pic_marking_mode_flag
-    w.ue(0) // cabac_init_idc
-    w.se(qp - 26)
-    w.ue(1) // disable_deblocking_filter_idc
-    w.alignByteOnes() // cabac_alignment_one_bit
+    val w = sliceHeader(5, f, qp, pocLsb, cabac = true, nRefs)
     val e = new Encoder(w, CtxCountP)
     val s = new InterSlice(wMb, hMb)
     val sc = s.sc; val grid = s.grid(0)
@@ -458,20 +447,8 @@ object H264CabacInter {
       pocLsb: Int, spatial: Boolean): (Array[Byte], H264Frame) = {
     // the Bi plan's fixed reference POCs (I past, P future)
     val pocL0 = ConstructB.Pocs(0); val pocL1 = ConstructB.Pocs(1)
-    val w = new BitWriter
-    w.ue(0) // first_mb_in_slice
-    w.ue(6) // slice_type: B (all slices in pic)
-    w.ue(0) // pps_id
-    w.put(f % 16, 4) // frame_num
-    w.put(pocLsb, 8) // pic_order_cnt_lsb
-    w.put(if (spatial) 1 else 0, 1) // direct_spatial_mv_pred_flag
-    w.put(0, 1) // num_ref_idx override: one active ref per list
-    w.put(0, 1); w.put(0, 1) // ref_pic_list_modification l0, l1
-    // non-reference picture: NO dec_ref_pic_marking
-    w.ue(0) // cabac_init_idc
-    w.se(qp - 26)
-    w.ue(1) // disable_deblocking_filter_idc
-    w.alignByteOnes() // cabac_alignment_one_bit
+    val w = sliceHeader(6, f, qp, Some(pocLsb), cabac = true,
+      spatial = spatial)
     val e = new Encoder(w, CtxCountP)
     val s = new InterSlice(wMb, hMb)
     val sc = s.sc

@@ -1620,7 +1620,7 @@ object H265 {
     * scan order, numbering them k = 0, 1, ... — the construction's
     * k-th-significant indexing, re-derived from the decoded block.
     */
-  private def addDecodedLevels(sums: FrameSums, tag: Int,
+  private[operators] def addDecodedLevels(sums: FrameSums, tag: Int,
       levels: Array[Int], nTbS: Int, scanIdx: Int): Unit = {
     val order = scanOrder(nTbS, scanIdx)
     var k = 0

@@ -232,20 +232,8 @@ object H265Inter {
     */
   def mergeCandidatesB(bf: BiField, x0: Int, y0: Int,
       s: Int): IndexedSeq[BiMv] = {
-    def cand(px: Int, py: Int): Option[BiMv] =
-      if (bf.interAt(px, py)) Some(bf.biAt(px, py)) else None
-    val a1 = cand(x0 - 1, y0 + s - 1)
-    val b1 = cand(x0 + s - 1, y0 - 1)
-    val b0 = cand(x0 + s, y0 - 1)
-    val a0 = cand(x0 - 1, y0 + s)
-    val b2 = cand(x0 - 1, y0 - 1)
-    val list = scala.collection.mutable.ArrayBuffer[BiMv]()
-    a1.foreach(list += _)
-    b1.foreach(m => if (!a1.contains(m)) list += m)
-    b0.foreach(m => if (!b1.contains(m)) list += m)
-    a0.foreach(m => if (!a1.contains(m)) list += m)
-    if (list.size < 4)
-      b2.foreach(m => if (!a1.contains(m) && !b1.contains(m)) list += m)
+    val list = spatialMerge(x0, y0, s)((px, py) =>
+      if (bf.interAt(px, py)) Some(bf.biAt(px, py)) else None)
     // combined bi candidates over ordered pairs of current entries
     val pairs = Seq((0, 1), (1, 0), (0, 2), (2, 0), (1, 2), (2, 1))
     val base = list.toIndexedSeq
@@ -260,27 +248,35 @@ object H265Inter {
     list.take(MaxMerge).toIndexedSeq
   }
 
-  /** Spatial merge candidates (§8.5.3.2.3) for a 2Nx2N PU at (x0, y0)
-    * size `s`: A1, B1 (pruned vs A1), B0 (pruned vs B1), A0 (pruned
-    * vs A1), B2 (only while fewer than 4, pruned vs A1 and B1), then
-    * zero-MV fill to [[MaxMerge]].
+  /** The spatial merge scan (§8.5.3.2.3) for a 2Nx2N PU at (x0, y0)
+    * size `s`, given each neighbor's motion (None when not inter): A1,
+    * B1 (pruned vs A1), B0 (pruned vs B1), A0 (pruned vs A1), B2 (only
+    * while fewer than 4, pruned vs A1 and B1).
     */
-  def mergeCandidates(mf: MotionField, x0: Int, y0: Int,
-      s: Int): IndexedSeq[(Int, Int)] = {
-    def cand(px: Int, py: Int): Option[(Int, Int)] =
-      if (mf.inter(px, py)) Some(mf.mvAt(px, py)) else None
+  private def spatialMerge[M](x0: Int, y0: Int, s: Int)(
+      cand: (Int, Int) => Option[M]): scala.collection.mutable.ArrayBuffer[M] = {
     val a1 = cand(x0 - 1, y0 + s - 1)
     val b1 = cand(x0 + s - 1, y0 - 1)
     val b0 = cand(x0 + s, y0 - 1)
     val a0 = cand(x0 - 1, y0 + s)
     val b2 = cand(x0 - 1, y0 - 1)
-    val list = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
+    val list = scala.collection.mutable.ArrayBuffer[M]()
     a1.foreach(list += _)
     b1.foreach(m => if (!a1.contains(m)) list += m)
     b0.foreach(m => if (!b1.contains(m)) list += m)
     a0.foreach(m => if (!a1.contains(m)) list += m)
     if (list.size < 4)
       b2.foreach(m => if (!a1.contains(m) && !b1.contains(m)) list += m)
+    list
+  }
+
+  /** Spatial merge candidates of a P PU: [[spatialMerge]], then zero-MV
+    * fill to [[MaxMerge]].
+    */
+  def mergeCandidates(mf: MotionField, x0: Int, y0: Int,
+      s: Int): IndexedSeq[(Int, Int)] = {
+    val list = spatialMerge(x0, y0, s)((px, py) =>
+      if (mf.inter(px, py)) Some(mf.mvAt(px, py)) else None)
     while (list.size < MaxMerge) list += ((0, 0))
     list.take(MaxMerge).toIndexedSeq
   }
@@ -553,7 +549,7 @@ object H265Inter {
         sums.cbfSum += tag + 1
         val (lv, last) = decodeResidual(d, nTbS, luma = comp == 0, 0)
         sums.lastChecksum += last.toLong * (tag + 1)
-        addDecodedLevelsDiag(sums, tag, lv, nTbS)
+        H265.addDecodedLevels(sums, tag, lv, nTbS, 0)
         lv
       }
     (tu(cbfY, 0, size), tu(cbfCb, 4, size / 2), tu(cbfCr, 5, size / 2))
@@ -929,20 +925,5 @@ object H265Inter {
       }
     }
     sums.frame(st)
-  }
-
-  private def addDecodedLevelsDiag(sums: FrameSums, tag: Int,
-      levels: Array[Int], nTbS: Int): Unit = {
-    val order = H265.scanOrder(nTbS, 0)
-    var k = 0
-    var i = 0
-    while (i < order.length) {
-      val v = levels(order(i))
-      if (v != 0) {
-        sums.levelChecksum += v.toLong * (tag.toLong * 31 + k + 1)
-        k += 1
-      }
-      i += 1
-    }
   }
 }

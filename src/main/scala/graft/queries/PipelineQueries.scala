@@ -497,8 +497,8 @@ object PipelineQueries extends Registry {
             FROM q16, UNNEST(range(0, 4)) AS t(s)
             WHERE split16),"""
 
-  /** H.265 inter oracles: split-flag checksums per frame. */
-  private val h265InterSplits = """splits AS (
+  /** H.265 oracles (q315, q319, q320): split-flag checksums per frame. */
+  private val h265Splits = """splits AS (
             SELECT id, f, CAST(sum(CASE WHEN split32 THEN c + 1 ELSE 0
               END) AS BIGINT) AS s32
             FROM ctu GROUP BY id, f),
@@ -677,16 +677,19 @@ object PipelineQueries extends Registry {
             "left_semi")
         val gold = s.createDataset(tcs.flatMap(tc =>
           tc.goldMapping.map(gm => (tc.id, gm._1, gm._2)))).toDF("case_id", "src_attr", "tgt_attr")
-        val tp = predictions.intersect(gold).groupBy($"case_id").agg(count(lit(1)).as("tp"))
-        val fp = predictions.except(gold).groupBy($"case_id").agg(count(lit(1)).as("fp"))
-        val fn = gold.except(predictions).groupBy($"case_id").agg(count(lit(1)).as("fn"))
-        val counts = gold.select($"case_id").distinct()
-          .join(tp, Seq("case_id"), "left").join(fp, Seq("case_id"), "left")
-          .join(fn, Seq("case_id"), "left")
-          .select($"case_id",
-            coalesce($"tp", lit(0L)).cast("double").as("tp"),
-            coalesce($"fp", lit(0L)).cast("double").as("fp"),
-            coalesce($"fn", lit(0L)).cast("double").as("fn"),
+        // tp/fp/fn in one aggregation (OverlapEvaluator.tableOverlap's
+        // form): prediction rows tag 1, gold rows 2, OR-ed per distinct
+        // match, so 3 = in both; cases without gold are dropped
+        val tag = col("tag")
+        val counts = predictions.withColumn("tag", lit(1))
+          .union(gold.withColumn("tag", lit(2)))
+          .groupBy($"case_id", $"src_attr", $"tgt_attr").agg(bit_or(tag).as("tag"))
+          .groupBy($"case_id")
+          .agg(count(when(tag === 3, 1)).as("tp"), count(when(tag === 1, 1)).as("fp"),
+            count(when(tag === 2, 1)).as("fn"))
+          .filter($"tp" + $"fn" > 0)
+          .select($"case_id", $"tp".cast("double").as("tp"),
+            $"fp".cast("double").as("fp"), $"fn".cast("double").as("fn"),
             lit(0.0).as("tn"))
         graft.eval.Metrics.withPrfAccuracyEffort(counts)
           .drop("tn", "accuracy2")
@@ -3148,16 +3151,7 @@ object PipelineQueries extends Registry {
               log2s = 3 AND (id + (cuy // 8) * 16 + (cux // 8)) % 3 = 0
                 AS nxn
             FROM cus),
-          splits AS (
-            SELECT id, f,
-              CAST(sum(CASE WHEN split32 THEN c + 1 ELSE 0 END)
-                AS BIGINT) AS s32
-            FROM ctu GROUP BY id, f),
-          splits16 AS (
-            SELECT id, f,
-              CAST(sum(CASE WHEN split16 THEN c * 4 + q + 1 ELSE 0 END)
-                AS BIGINT) AS s16
-            FROM q16 GROUP BY id, f),
+          $h265Splits
           -- luma PUs: one for 2Nx2N, four for NxN
           pus AS (
             SELECT cuk.*, CAST(t.s2 AS BIGINT) AS s2,
@@ -3302,7 +3296,7 @@ object PipelineQueries extends Registry {
               log2s = 3 AND isintra AND (id + cukey) % 3 = 0 AS nxn,
               cls IN (1, 3, 4) AND (id + f + cukey) % 4 != 3 AS rootcbf
             FROM cuk),
-          $h265InterSplits
+          $h265Splits
           clssums AS (
             SELECT id, f,
               CAST(count(*) AS BIGINT) AS n_cus,
@@ -3428,7 +3422,7 @@ object PipelineQueries extends Registry {
               NOT isintra AND cls != 0 AND (id + f + cukey) % 4 != 3
                 AS rootcbf
             FROM cukx),
-          $h265InterSplits
+          $h265Splits
           clssums AS (
             SELECT id, f,
               CAST(count(*) AS BIGINT) AS n_cus,

@@ -20,15 +20,19 @@ object RelationalQueries extends Registry {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables(s, dir, n)
 
-  /** The (x, y) bounds of `d`, both axes scaled to an 8-bit grid, and the
-    * Hilbert index stage `h` over that grid (q291, q296). */
-  private def hilbertGridCtes(h: String): String =
-    s"""mm AS (SELECT min(x) AS xmin, max(x) AS xmax,
+  /** The (x, y) bounds of `d` and both axes scaled to an 8-bit grid
+    * (q259, q291, q296). */
+  private val grid8Ctes = """mm AS (SELECT min(x) AS xmin, max(x) AS xmax,
               min(y) AS ymin, max(y) AS ymax FROM d),
           n AS (SELECT x, y,
               ((x - xmin) * 256) // (xmax - xmin + 1) AS x8,
               ((y - ymin) * 256) // (ymax - ymin + 1) AS y8
-            FROM d, mm),
+            FROM d, mm),"""
+
+  /** [[grid8Ctes]] and the Hilbert index stage `h` over that grid (q291,
+    * q296). */
+  private def hilbertGridCtes(h: String): String =
+    s"""$grid8Ctes
           hz AS ($h),"""
 
   override def entries: Seq[Q] = Seq(
@@ -1456,12 +1460,7 @@ object RelationalQueries extends Registry {
       Some(s"""WITH d AS (SELECT
             date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE)) AS x,
             CAST(l_suppkey AS BIGINT) AS y FROM lineitem),
-        mm AS (SELECT min(x) AS xmin, max(x) AS xmax,
-            min(y) AS ymin, max(y) AS ymax FROM d),
-        n AS (SELECT x, y,
-            ((x - xmin) * 256) // (xmax - xmin + 1) AS x8,
-            ((y - ymin) * 256) // (ymax - ymin + 1) AS y8
-          FROM d, mm),
+        $grid8Ctes
         zb AS (SELECT x, y,
             (${graft.functions.ZOrder.interleaveSql("x8", "y8", bits = 8)}) // 1024 AS zbucket
           FROM n),

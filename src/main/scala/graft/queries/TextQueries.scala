@@ -501,13 +501,17 @@ object TextQueries extends Registry {
       ${roundSql(6, "v5")}"""
   }
 
-  /** q161's funnel stages as DuckDB CTEs (s1..s5), shared with q300. */
-  private def funnelCtes: String = s"""s1 AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-          lex(word, cand_lang) AS (VALUES ${LangLexicon.sqlValues}),
+  /** Language-ID votes (q27, q78, q161, q300): the lexicon and each
+    * document's token hits per candidate language. */
+  private def langHitsCtes: String = s"""lex(word, cand_lang) AS (VALUES ${LangLexicon.sqlValues}),
           hits AS (SELECT doc_id, cand_lang, count(*) AS n_hits
                    FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
                          FROM documents) tok
-                   JOIN lex USING (word) GROUP BY doc_id, cand_lang),
+                   JOIN lex USING (word) GROUP BY doc_id, cand_lang),"""
+
+  /** q161's funnel stages as DuckDB CTEs (s1..s5), shared with q300. */
+  private def funnelCtes: String = s"""s1 AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+          $langHitsCtes
           en AS (SELECT doc_id FROM (
                    SELECT *, row_number() OVER (PARTITION BY doc_id
                      ORDER BY n_hits DESC, cand_lang) AS rn FROM hits)
@@ -672,11 +676,7 @@ object TextQueries extends Registry {
           .orderBy($"doc_id")
       },
       Some(s"""WITH surv AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-          lex(word, cand_lang) AS (VALUES ${LangLexicon.sqlValues}),
-          hits AS (SELECT doc_id, cand_lang, count(*) AS n_hits
-                   FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
-                         FROM documents) tok
-                   JOIN lex USING (word) GROUP BY doc_id, cand_lang),
+          $langHitsCtes
           best AS (SELECT doc_id, cand_lang AS pred_lang FROM (
                      SELECT *, row_number() OVER (PARTITION BY doc_id
                        ORDER BY n_hits DESC, cand_lang) AS rn FROM hits)
@@ -1768,11 +1768,7 @@ object TextQueries extends Registry {
             when(coalesce($"cand_lang", lit("und")) === $"lang", 1).otherwise(0).as("correct"))
           .orderBy($"doc_id")
       },
-      Some(s"""WITH lex(word, cand_lang) AS (VALUES ${LangLexicon.sqlValues}),
-        hits AS (SELECT doc_id, cand_lang, count(*) AS n_hits
-                 FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
-                       FROM documents) tok
-                 JOIN lex USING (word) GROUP BY doc_id, cand_lang),
+      Some(s"""WITH $langHitsCtes
         best AS (SELECT doc_id, cand_lang, n_hits FROM (
                    SELECT *, row_number() OVER (PARTITION BY doc_id
                      ORDER BY n_hits DESC, cand_lang) AS rn FROM hits)

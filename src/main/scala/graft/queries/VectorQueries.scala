@@ -121,6 +121,20 @@ object VectorQueries extends Registry {
           ${meansCte("tc2", "a1")},"""
   }
 
+  /** The IVF coarse quantizer of q31, q140 and [[ivfPqScored]]: the 8
+    * centroids (vec_id < 8) and each vector's max-cosine centroid (ties
+    * on cid). */
+  private val ivfAssignCtes = s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
+                    FROM embeddings WHERE vec_id < 8),
+        assign AS (SELECT vec_id, embedding, cid FROM (
+                     SELECT e.vec_id, e.embedding, c.cid,
+                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
+                         ${dotSql("c.cv", "e.embedding")}
+                           / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
+                         c.cid) AS arn
+                     FROM embeddings e, cents c)
+                   WHERE arn = 1),"""
+
   /** The IVF-PQ oracles' shared front (q109, q154, q183): coarse
     * assignment to the 8 centroids, 4 x 16-dim PQ encoding against the
     * same codebook, and each query's approximate L2 to its cluster-mates
@@ -132,16 +146,7 @@ object VectorQueries extends Registry {
         s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE)) * " +
         s"(CAST($v[t.s * 16 + i + 1] AS DOUBLE) - CAST(c.cv[t.s * 16 + i + 1] AS DOUBLE))), " +
         "(acc, x) -> acc + x)"
-    s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          assign AS (SELECT vec_id, embedding, cid FROM (
-                SELECT e.vec_id, e.embedding, c.cid,
-                  row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                    ${dotSql("c.cv", "e.embedding")}
-                      / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                    c.cid) AS arn
-                FROM embeddings e, cents c)
-              WHERE arn = 1),
+    s"""$ivfAssignCtes
           codes AS (SELECT vec_id AS code, embedding AS cv
               FROM embeddings WHERE vec_id < 8),
           encd AS (SELECT a.vec_id, a.cid, c.code, t.s, ${sliceDistSql("a.embedding")} AS dist
@@ -163,19 +168,6 @@ object VectorQueries extends Registry {
               JOIN lutd l ON l.query_id = q.query_id AND l.s = e.s AND l.code = e.code
               GROUP BY q.query_id, e.vec_id)"""
   }
-
-  /** q31 and q140's coarse quantizer: the 8 centroids (vec_id < 8) and
-    * each vector's max-cosine centroid (ties on cid). */
-  private val ivfAssignCtes = s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-                    FROM embeddings WHERE vec_id < 8),
-        assign AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT e.vec_id, e.embedding, c.cid,
-                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                         ${dotSql("c.cv", "e.embedding")}
-                           / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                         c.cid) AS arn
-                     FROM embeddings e, cents c)
-                   WHERE arn = 1),"""
 
   /** Top-3 cosine neighbours of each query `q` among its cluster-mates
     * in `assign`, ranked by cosine then id (q31, q140). */
