@@ -18,19 +18,13 @@ object Bench {
     graft.core.Tables(spark, sfDir, "region").count()
     // local-iteration filter (the driver never sets it): bench only the
     // named queries, e.g. SPARK_GRAFT_BENCH_ONLY=q73_dedup_components
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    only.foreach(SparkEntry.requireKnown)
+    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(Runner.names)
     // SPARK_GRAFT_BENCH_ARTIFACT names the artifact file, e.g.
     // BENCH_SF1_FULL.json for a full-suite pass at another scale factor.
     // Bench compares it with no other run: scale ratios are
     // LadderAdjudicate's job, cross-run comparison tools/bench_adjudicate.py's.
     val artifactEnv = sys.env.getOrElse("SPARK_GRAFT_BENCH_ARTIFACT", "BENCH_FULL.json")
-    final case class StrmStats(inputRows: Long, triggerMs: Long) {
-      def rowsPerTriggerSec: Double =
-        if (triggerMs <= 0) 0.0 else inputRows * 1000.0 / triggerMs
-    }
-    val strmStats = scala.collection.mutable.Map[String, StrmStats]()
+    val strmStats = scala.collection.mutable.Map[String, Runner.Stream]()
     // every query runs once cold and Harness.WarmRuns times warm (the one
     // timing rule, Harness.time). "cold" includes per-plan codegen; the
     // warm median is the steady-state cost that scales with data volume.
@@ -39,28 +33,16 @@ object Bench {
     // is captured per query and lands in BENCH_FULL.json (rc stays 0 — the
     // CORRECTNESS gate owns pass/fail; the artifact keeps the regression
     // visible)
-    val results: Seq[(String, Harness.Timing)] = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>
+    val results: Seq[(String, Harness.Timing)] = Runner.select(only).map { name =>
       System.err.println(s"[bench] start $name @${java.time.Instant.now()}")
-      val isStreaming = SparkEntry.streamingQueries(name)
-      // discard listener events left over from a previous query so the
-      // per-query attribution below only sees this query's micro-batches
-      if (isStreaming) { BenchListener.quiesce(); BenchListener.drain() }
-      val t = Harness.time(() => fn(spark, sfDir).count())
-      if (isStreaming) {
-        // engine-side steady-state metric: wall-clock around
-        // processAllAvailable measures stream start/stop + harness setup
-        // (same-code runs swing 2x); triggerExecution per micro-batch is
-        // the engine's own work and scales with fed rows. Every run feeds
-        // the same batches — summing across them just widens the sample
-        // for rows/sum(triggerExecution).
-        BenchListener.quiesce()
-        val bs = BenchListener.drain()
-        strmStats(name) = StrmStats(bs.map(_.inputRows).sum, bs.map(_.triggerMs).sum)
-      }
-      // between-query isolation (see SessionHygiene); sorted name order so
-      // a query's predecessors are the same every round
-      graft.core.SessionHygiene.dropAllBlocks(spark)
+      // a streaming query's steady-state metric is engine-side: wall-clock
+      // around processAllAvailable measures stream start/stop + harness
+      // setup (same-code runs swing 2x); triggerExecution per micro-batch
+      // is the engine's own work and scales with fed rows. Every run feeds
+      // the same batches — summing across them just widens the sample for
+      // rows/sum(triggerExecution).
+      val (t, stream) = Runner.timed(spark, name, sfDir)(_.count())
+      stream.foreach(strmStats(name) = _)
       t.error.foreach(m => System.err.println(s"[bench] ERROR $name: $m"))
       System.err.println(f"[bench] done  $name cold ${t.cold}%.2f s warm " +
         t.warm.map(w => f"$w%.2f").mkString("/") + " s")
@@ -70,7 +52,7 @@ object Bench {
     val warmMedian: Seq[(String, Double)] =
       results.collect { case (k, t) if t.warm.nonEmpty => k -> t.median }
     val seqStrmRates: Map[String, Double] =
-      strmStats.map { case (k, s) => k -> s.rowsPerTriggerSec }.toMap
+      strmStats.map { case (k, s) => k -> s.rate }.toMap
     // Concurrent-stream pass (VERDICT r14 item 8): a shared 100 TB
     // cluster runs mixed concurrent load, never one query at a time.
     // Four FAIR-scheduler pools each drain a deterministic shuffled
@@ -86,8 +68,7 @@ object Bench {
       JObj(vs.map { case (k, v) => k -> d3(v) }.toSeq)
     val concurrent: Option[JObj] = Option.when(only.isEmpty) {
       val nPools = 4
-      val names = SparkEntry.queries.keySet.toSeq
-        .filterNot(SparkEntry.streamingQueries).sorted
+      val names = Runner.select(None).filterNot(SparkEntry.streamingQueries)
       val assign = BenchAdjudicate.poolAssignment(names, nPools)
       graft.core.SessionHygiene.dropAllBlocks(spark)
       System.err.println(s"[bench] concurrent pass: $nPools pools, ${names.size} queries")
@@ -101,13 +82,9 @@ object Bench {
         new Thread(() => {
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"bench$p")
           mine.foreach { name =>
-            val q0 = System.nanoTime()
-            try SparkEntry.queries(name)(spark, sfDir).count()
-            catch {
-              case e: Throwable => cErrs.put(name,
-                s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
-            }
-            perQ.put(name, (System.nanoTime() - q0) / 1e9)
+            val r = Runner.once(spark, name, sfDir, hygiene = false)(_.count())
+            r.result.left.foreach(cErrs.put(name, _))
+            perQ.put(name, r.seconds)
           }
           poolSec(p) = (System.nanoTime() - t0) / 1e9
         }, s"bench-pool-$p")
@@ -115,9 +92,9 @@ object Bench {
       // Mixed batch+streaming contention (r16 — VERDICT r15 item 6): a
       // fifth pool drives three streaming queries — one per state-store
       // family — SEQUENTIALLY while the batch pools churn, so the
-      // BenchListener attribution stays single-stream (batch jobs emit
-      // no streaming progress events). SessionHygiene is NOT run inside
-      // the loop: dropping all blocks would evict concurrent batch
+      // Runner's streaming attribution stays single-stream (batch jobs
+      // emit no streaming progress events). No pool runs hygiene inside
+      // its loop: dropping all blocks would evict concurrent batch
       // queries' cached data mid-flight.
       val strmPicks = BenchAdjudicate.ConcurrentStreamingPicks
         .filter(SparkEntry.queries.contains)
@@ -126,18 +103,11 @@ object Bench {
       val strmThread = new Thread(() => {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "benchStrm")
         strmPicks.foreach { name =>
-          try {
-            BenchListener.quiesce(); BenchListener.drain()
-            SparkEntry.queries(name)(spark, sfDir).count()
-            BenchListener.quiesce()
-            val bs = BenchListener.drain()
-            val rows = bs.map(_.inputRows).sum
-            val ms = bs.map(_.triggerMs).sum
-            strmConc.put(name, if (ms <= 0) 0.0 else rows * 1000.0 / ms)
-            strmOverlap.put(name, threads.exists(_.isAlive))
-          } catch {
-            case e: Throwable => cErrs.put(name,
-              s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
+          Runner.once(spark, name, sfDir, hygiene = false)(_.count()) match {
+            case Runner.Once(Left(e), _, _) => cErrs.put(name, e)
+            case r =>
+              r.stream.foreach(st => strmConc.put(name, st.rate))
+              strmOverlap.put(name, threads.exists(_.isAlive))
           }
         }
       }, "bench-pool-strm")
@@ -204,7 +174,7 @@ object Bench {
     val strmJson = JObj(strmStats.toSeq.sortBy(_._1).map { case (k, s) =>
       k -> obj("input_rows" -> JNum(s.inputRows.toDouble),
         "trigger_ms" -> JNum(s.triggerMs.toDouble),
-        "rows_per_trigger_sec" -> d3(s.rowsPerTriggerSec))
+        "rows_per_trigger_sec" -> d3(s.rate))
     })
     val full = JObj(Seq[(String, JValue)](
       "metric" -> JStr("total"), "value" -> d3(results.map(_._2.cold).sum),

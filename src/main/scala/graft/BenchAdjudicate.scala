@@ -60,7 +60,7 @@ object BenchAdjudicate {
     * window aggregation (HDFS state store), a stateless stream-static
     * broadcast join, and a transformWithState counter on RocksDB. They
     * run SEQUENTIALLY inside one extra pool while the four batch pools
-    * churn, so [[graft.BenchListener]]'s single-stream attribution
+    * churn, so [[graft.Runner]]'s single-stream attribution
     * still holds (batch jobs emit no streaming progress events).
     */
   val ConcurrentStreamingPicks: Seq[String] = Seq(

@@ -3,7 +3,9 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Micro-batch progress capture for Bench's streaming steady-state metric.
+/** Micro-batch progress capture for the streaming totals `graft.Runner`
+  * attributes to each query (Bench's steady-state metric, the streaming
+  * ladder's rungs).
   *
   * Registered via `spark.sql.streaming.streamingQueryListeners` (zero-arg
   * constructor required) so every session — including the child sessions
@@ -16,7 +18,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * Wall-clock around `processAllAvailable` measures stream start/stop +
   * harness setup (same-code runs swing 2x); `triggerExecution` per
   * micro-batch is the engine's own work and is what actually scales with
-  * fed rows — so Bench reports rows / sum(triggerExecution) as the
+  * fed rows — so the Runner reports rows / sum(triggerExecution) as the
   * steady-state throughput for streaming queries.
   */
 final class BenchListener extends StreamingQueryListener {
@@ -36,9 +38,10 @@ final class BenchListener extends StreamingQueryListener {
     }
     BenchListener.buf.add(BenchListener.Batch(p.runId.toString, p.batchId,
       p.numInputRows, trig, stRows, stBytes))
-    // the static-conf registration reaches EVERY graft session — Verify
-    // and test JVMs feed this buffer too but never drain it, so cap it:
-    // evict oldest past MaxBuffered (Bench drains per-query, far below it)
+    // the static-conf registration reaches EVERY graft session — test
+    // JVMs feed this buffer too but never drain it, so cap it: evict
+    // oldest past MaxBuffered (the Runner drains per streaming query, far
+    // below it)
     while (BenchListener.buf.size > BenchListener.MaxBuffered)
       BenchListener.buf.poll()
   }
@@ -49,8 +52,8 @@ object BenchListener {
       triggerMs: Long, stateRows: Long = 0L, stateBytes: Long = 0L)
 
   /** Upper bound on buffered micro-batch records in JVMs that never
-    * drain (Verify, tests): ~64 B each, so the cap is a few MB worst
-    * case instead of unbounded growth for the life of the process.
+    * drain (tests): ~64 B each, so the cap is a few MB worst case
+    * instead of unbounded growth for the life of the process.
     */
   val MaxBuffered = 65536
 

@@ -16,18 +16,17 @@ object Explain {
     sb.append("# PLANS — formatted physical plans per query\n\n")
     sb.append(s"Generated by `graft.Explain` at `$sfDir`. Queries that run\n")
     sb.append("imperative stages (streaming, mock-LLM) show the final plan only.\n")
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+    for (name <- Runner.select(None)) {
       sb.append(s"\n## $name\n\n```\n")
-      try {
-        val df = fn(spark, sfDir)
-        val formatted = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        // cap per-query output; the interesting structure is at the top
-        val lines = formatted.linesIterator.toSeq
-        sb.append(lines.take(120).mkString("\n"))
-        if (lines.size > 120) sb.append(s"\n... (${lines.size - 120} more lines)")
-      } catch {
-        case e: Throwable => sb.append(s"explain failed: ${e.getMessage}")
+      Runner.once(spark, name, sfDir)(
+        _.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      ).result match {
+        case Right(formatted) =>
+          // cap per-query output; the interesting structure is at the top
+          val lines = formatted.linesIterator.toSeq
+          sb.append(lines.take(120).mkString("\n"))
+          if (lines.size > 120) sb.append(s"\n... (${lines.size - 120} more lines)")
+        case Left(e) => sb.append(s"explain failed: $e")
       }
       sb.append("\n```\n")
     }

@@ -68,15 +68,13 @@ object Harness {
   }
 
   /** Runs `query` once cold, then [[WarmRuns]] times warm, stopping at the
-    * first error. The one timing rule of Bench and LadderAdjudicate.
+    * first error. The one timing rule, which [[Runner.timed]] applies for
+    * Bench and LadderAdjudicate.
     */
   def time(query: () => Unit): Timing = {
     def once(): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      val err = try { query(); None } catch {
-        case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-      }
+      val err = try { query(); None } catch { case e: Throwable => Some(Runner.errorText(e)) }
       ((System.nanoTime() - t0) / 1e9, err)
     }
     @annotation.tailrec

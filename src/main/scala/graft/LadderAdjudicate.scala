@@ -110,16 +110,15 @@ object LadderAdjudicate {
     val priorRatio: Map[String, Double] = prior.collect {
       case (q, (Some(a), Some(b))) if a > 0 => q -> b / a
     }
-    def envSet(name: String): Option[Set[String]] = sys.env.get(name)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val known = SparkEntry.queries.keySet -- SparkEntry.streamingQueries
     // ONLY restricts to the named rungs; ADD enrolls new kernels on top
     // of every recorded rung (how a new query enters the ladder); rung
     // NAMES from the prior regular artifact keep once-errored rungs
-    // enrolled even though they have no prior timings
-    val rungSet = envSet("SPARK_GRAFT_LADDER_ONLY").getOrElse(
-      prior.keySet ++ rungNames(regular) ++
-        envSet("SPARK_GRAFT_LADDER_ADD").getOrElse(Set.empty))
+    // enrolled even though they have no prior timings. A typed name the
+    // registry lacks fails; a recorded one is skipped below.
+    val onlyEnv = sys.env.get("SPARK_GRAFT_LADDER_ONLY").map(Runner.names)
+    val rungSet = onlyEnv.getOrElse(prior.keySet ++ rungNames(regular) ++
+      sys.env.get("SPARK_GRAFT_LADDER_ADD").fold(Set.empty[String])(Runner.names))
     val queries = rungSet.filter { q =>
       val ok = known.contains(q)
       if (!ok) System.err.println(s"[ladder] skip $q (unknown or streaming-gated)")
@@ -130,10 +129,9 @@ object LadderAdjudicate {
     val cores = Harness.cores
     val spark = Harness.session(cores)
     Harness.warmUp(spark)
-    // the warm median of Harness.time; hygiene once, after all samples
+    // the warm median of Harness.time
     def timeOne(name: String, dir: String): Either[String, Double] = {
-      val t = Harness.time(() => SparkEntry.queries(name)(spark, dir).count())
-      graft.core.SessionHygiene.dropAllBlocks(spark)
+      val (t, _) = Runner.timed(spark, name, dir)(_.count())
       t.error.toLeft(t.median)
     }
     val results: Seq[(String, Either[String, (Double, Double)])] = queries.map { q =>
@@ -190,16 +188,12 @@ object LadderAdjudicate {
     // BENCH_LADDER_SUBSET.json AND merges them into the canonical
     // artifact with every other recorded rung carried forward — subset
     // runs no longer lose rungs by overwriting each other (r13 item 2)
-    val onlyMode = sys.env.contains("SPARK_GRAFT_LADDER_ONLY")
+    val onlyMode = onlyEnv.isDefined
     val (allResults, carriedKeys) =
       if (onlyMode) mergeCarried(parsePrior(regular), results)
       else (results.sortBy(_._1), Set.empty[String])
-    // the streaming_ladder block (written by graft.StreamingLadder into
-    // this same artifact) must survive a batch-rung rewrite — carry it
-    val merged = emit(allResults, carriedKeys,
-      if (onlyMode) rungNames(regular) else Set.empty)
-    Harness.writeArtifact("BENCH_LADDER.json", regular.get("streaming_ladder")
-      .fold(merged)(StreamingLadder.withStreamingBlock(merged, _)))
+    Harness.writeArtifact("BENCH_LADDER.json", emit(allResults, carriedKeys,
+      if (onlyMode) rungNames(regular) else Set.empty))
     if (onlyMode) Harness.writeArtifact("BENCH_LADDER_SUBSET.json", emit(results, Set.empty))
     println(obj("metric" -> JStr("sf_ladder_adjudicated"), "n_rungs" -> JNum(allResults.size),
       "n_measured" -> JNum(results.size), "n_errors" -> JNum(results.count(_._2.isLeft)),

@@ -17,20 +17,19 @@ import graft.llm.MiniJson._
   * quantity is the per-row throughput ratio base/scaled: a query whose
   * state work is linear holds ratio ≈ 1; super-linear state (e.g. a
   * per-batch full-state scan) collapses the scaled rate and the ratio
-  * balloons. Results land in a `streaming_ladder` block MERGED into
-  * BENCH_LADDER.json (same artifact the batch rungs live in; the batch
-  * writer carries the block forward), with the batch ladder's
-  * prior-ratio + regression protocol plus one re-measure before a
-  * breach is called. A standalone run log goes to
-  * BENCH_STREAMING_LADDER.json.
+  * balloons. Results land in the `streaming_ladder` block of
+  * [[Artifact]], which is also the prior it reads, with the batch
+  * ladder's prior-ratio + regression protocol plus one re-measure before
+  * a breach is called.
   */
 object StreamingLadder {
 
-  /** `artifact` with its `streaming_ladder` block replaced by `block`, or
-    * with `block` appended when it has none.
-    */
-  def withStreamingBlock(artifact: JValue, block: JValue): JObj =
-    JObj(artifact.fields.filterNot(_._1 == "streaming_ladder") :+ ("streaming_ladder" -> block))
+  /** The streaming ladder's one artifact: its prior and its output. */
+  private val Artifact = "BENCH_STREAMING_LADDER.json"
+
+  /** Rows fed to the scaled rung and to the 100x rung. */
+  private val ScaledFeed = 20000
+  private val Feed100 = 200000
 
   /** (rate_base, rate_scaled) per query from a prior artifact's
     * `streaming_ladder.rungs` (absent → empty).
@@ -177,52 +176,41 @@ object StreamingLadder {
     require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir100)),
       s"100x corpus missing at $dir100 — generate it first: " +
         "runMain graft.ScaleUp /root/testdata/sf0.1 /tmp/graft_sf10 100")
-    val scaledFeed = sys.env.get("SPARK_GRAFT_LADDER_FEED").map(_.toInt)
-      .getOrElse(20000)
-    val feed100 = sys.env.get("SPARK_GRAFT_LADDER_FEED100").map(_.toInt)
-      .getOrElse(200000)
     val spark = Harness.session(Harness.cores)
     Harness.warmUp(spark)
 
-    val priorArtifact = Harness.readArtifact("BENCH_LADDER.json")
-    val prior = parsePrior(priorArtifact)
+    val prior = parsePrior(Harness.readArtifact(Artifact))
 
     val queries = SparkEntry.streamingQueries.toSeq.sorted
-    final case class Rung(rate: Double, stateRows: Long, stateBytes: Long)
-    def measure(name: String, dir: String, feed: Option[Int]): Rung =
+    // a failed run stops the ladder: its partial totals would read as a
+    // measured rate
+    def measure(name: String, dir: String, feed: Option[Int]): Runner.Stream =
       graft.streaming.StreamingOps.withFeedLimit(feed) {
-        BenchListener.quiesce(); BenchListener.drain()
-        SparkEntry.queries(name)(spark, dir).count()
-        BenchListener.quiesce()
-        val bs = BenchListener.drain()
-        graft.core.SessionHygiene.dropAllBlocks(spark)
-        val rows = bs.map(_.inputRows).sum
-        val ms = bs.map(_.triggerMs).sum
-        Rung(if (ms <= 0) 0.0 else rows * 1000.0 / ms,
-          if (bs.isEmpty) 0L else bs.map(_.stateRows).max,
-          if (bs.isEmpty) 0L else bs.map(_.stateBytes).max)
+        val r = Runner.once(spark, name, dir)(_.count())
+        r.result.left.foreach(e => sys.error(s"[strm-ladder] $name failed: $e"))
+        r.stream.get
       }
-    val results: Seq[(String, (Rung, Rung, Rung))] = queries.map { q =>
+    val results: Seq[(String, (Runner.Stream, Runner.Stream, Runner.Stream))] = queries.map { q =>
       System.err.println(s"[strm-ladder] $q base feed")
       val rb = measure(q, dir1, None)
-      System.err.println(f"[strm-ladder] $q base ${rb.rate}%.0f rows/trigger-sec; scaled feed $scaledFeed")
-      var rs = measure(q, dir100, Some(scaledFeed))
+      System.err.println(f"[strm-ladder] $q base ${rb.rate}%.0f rows/trigger-sec; scaled feed $ScaledFeed")
+      var rs = measure(q, dir100, Some(ScaledFeed))
       // retry protocol: same-code TWS rates swing ±1.7×; re-measure once
       // before calling a 2× prior-ratio breach a regression, keep the
       // better sample
       val priorRatio = prior.get(q).collect { case (pb, ps) if ps > 0 => pb / ps }
       if (rs.rate > 0 && priorRatio.exists(p => rb.rate / rs.rate > 2.0 * p)) {
         System.err.println(f"[strm-ladder] $q retry (ratio ${rb.rate / rs.rate}%.2f vs prior ${priorRatio.get}%.2f)")
-        val again = measure(q, dir100, Some(scaledFeed))
+        val again = measure(q, dir100, Some(ScaledFeed))
         if (again.rate > rs.rate) rs = again
       }
       // the 100x feed (r14 item 4): same key space, 10x the scaled rows —
       // keyed state must NOT grow with it, and per-row cost must not blow up
-      System.err.println(s"[strm-ladder] $q 100x feed $feed100")
-      var r100 = measure(q, dir100, Some(feed100))
+      System.err.println(s"[strm-ladder] $q 100x feed $Feed100")
+      var r100 = measure(q, dir100, Some(Feed100))
       if (r100.rate > 0 && rs.rate / r100.rate > 3.0) {
         System.err.println(f"[strm-ladder] $q 100x retry (rate fell ${rs.rate / r100.rate}%.2f x)")
-        val again = measure(q, dir100, Some(feed100))
+        val again = measure(q, dir100, Some(Feed100))
         if (again.rate > r100.rate) r100 = again
       }
       System.err.println(f"[strm-ladder] $q scaled ${rs.rate}%.0f 100x ${r100.rate}%.0f state ${rs.stateRows}->${r100.stateRows}")
@@ -231,8 +219,8 @@ object StreamingLadder {
     val cur = results.map { case (q, (rb, rs, _)) => q -> (rb.rate, rs.rate) }.toMap
     val regs = regressions(prior, cur)
     // feed-derived row-buffering bounds (r16 — VERDICT r15 item 5)
-    val expScaled = expectedBufferRows(spark, dir100, scaledFeed)
-    val exp100 = expectedBufferRows(spark, dir100, feed100)
+    val expScaled = expectedBufferRows(spark, dir100, ScaledFeed)
+    val exp100 = expectedBufferRows(spark, dir100, Feed100)
     val bufRegs = bufferRegressions(exp100,
       results.collect { case (q, (_, _, r100))
         if RowBufferingQueries.contains(q) => q -> r100.stateRows }.toMap) ++
@@ -258,7 +246,7 @@ object StreamingLadder {
         val distinct = spark.sql(
           s"""SELECT COUNT(DISTINCT struct($keys)) FROM (
                 SELECT * FROM ladder_adj_events
-                ORDER BY ts, event_id LIMIT $feed100)""").head().getLong(0)
+                ORDER BY ts, event_id LIMIT $Feed100)""").head().getLong(0)
         System.err.println(s"[strm-ladder] $q state flag adjudication: " +
           s"state_rows $r100 vs distinct keys $distinct")
         q -> (r100, distinct)
@@ -299,8 +287,8 @@ object StreamingLadder {
         Seq("row_buffering" -> JBool(RowBufferingQueries.contains(q))))
     })
     val block = obj(
-      "protocol" -> JStr(s"graft.StreamingLadder: rows/sum(triggerExecution) at the 2000-row sf0.1 feed (base) vs $scaledFeed-row and $feed100-row feeds from $dir100 (100x key space); ratio=base/scaled; retry past 2x prior ratio (scaled) / 3x rate fall (100x); state gate: keyed-state rows at the 100x feed must stay within 8x of the 10x feed; row-buffering joins/replay are exempt from THAT gate but carry their own feed-derived bound (state_expected_rows_*: watermark-horizon rows for the interval joins, 2 state rows per key for the replay buffer) gated at 2x expected (buffer_regressions); a ratio flag is exonerated when state rows EQUAL the distinct-key count over the same feed (state_adjudicated)"),
-      "feed_scaled" -> JNum(scaledFeed), "feed_100x" -> JNum(feed100),
+      "protocol" -> JStr(s"graft.StreamingLadder: rows/sum(triggerExecution) at the 2000-row sf0.1 feed (base) vs $ScaledFeed-row and $Feed100-row feeds from $dir100 (100x key space); ratio=base/scaled; retry past 2x prior ratio (scaled) / 3x rate fall (100x); state gate: keyed-state rows at the 100x feed must stay within 8x of the 10x feed; row-buffering joins/replay are exempt from THAT gate but carry their own feed-derived bound (state_expected_rows_*: watermark-horizon rows for the interval joins, 2 state rows per key for the replay buffer) gated at 2x expected (buffer_regressions); a ratio flag is exonerated when state rows EQUAL the distinct-key count over the same feed (state_adjudicated)"),
+      "feed_scaled" -> JNum(ScaledFeed), "feed_100x" -> JNum(Feed100),
       "rungs" -> rungs,
       "regressions" -> JObj(regs.toSeq.sortBy(_._1).map { case (q, (p, c)) =>
         q -> obj("prior_ratio" -> d3(p), "ratio" -> d3(c)) }),
@@ -312,17 +300,14 @@ object StreamingLadder {
         q -> obj("rate_scaled" -> d1(a), "rate_100x" -> d1(b)) }),
       "buffer_regressions" -> JObj(bufRegs.toSeq.sortBy(_._1).map { case (q, (e, a)) =>
         q -> obj("state_expected_rows" -> n(e), "state_rows" -> n(a)) }))
-    // merge into the canonical ladder artifact + standalone run log
-    Harness.writeArtifact("BENCH_LADDER.json", withStreamingBlock(priorArtifact, block))
-    Harness.writeArtifact("BENCH_STREAMING_LADDER.json",
-      obj("metric" -> JStr("streaming_ladder"), "streaming_ladder" -> block))
+    Harness.writeArtifact(Artifact, obj("metric" -> JStr("streaming_ladder"), "streaming_ladder" -> block))
     println(obj("metric" -> JStr("streaming_ladder"), "n_queries" -> JNum(results.size),
       "n_regressions" -> JNum(regs.size), "n_state_regressions" -> JNum(stateRegs.size),
       "n_state_adjudicated" -> JNum(stateAdjudicated.size),
       "n_buffer_regressions" -> JNum(bufRegs.size),
       "n_rate_regressions_100x" -> JNum(rateRegs100.size),
-      "feed_scaled" -> JNum(scaledFeed), "feed_100x" -> JNum(feed100),
-      "artifact" -> JStr("BENCH_LADDER.json")).render)
+      "feed_scaled" -> JNum(ScaledFeed), "feed_100x" -> JNum(Feed100),
+      "artifact" -> JStr(Artifact)).render)
     spark.stop()
   }
 }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.DataFrame
   *
   * The contract: the persist lives INSIDE one query's timed region — every
   * caller's blocks are dropped by [[SessionHygiene.dropAllBlocks]] between
-  * queries in Bench/Verify/StreamingLadder, so nothing is ever cached
-  * across runs. Callers outside those drivers must run SessionHygiene
-  * themselves or blocks accumulate (documented at Registry).
+  * queries run through `graft.Runner`, so nothing is ever cached across
+  * runs. Callers outside the Runner must run SessionHygiene themselves or
+  * blocks accumulate (documented at Registry).
   */
 object Caching {
   def materialize(df: DataFrame): DataFrame = {

@@ -39,8 +39,8 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     // static conf: every SessionState (including the child sessions
-    // StreamingOps.streamSession builds with newSession()) instantiates a
-    // graft.BenchListener into its own StreamingQueryManager, all feeding
+    // StreamingOps.streamSession builds with newSession()) instantiates
+    // this listener into its own StreamingQueryManager, all feeding
     // the shared static buffer — an addListener on the parent would miss
     // child sessions, whose progress events are filtered per-session.
     "spark.sql.streaming.streamingQueryListeners" -> "graft.BenchListener",

@@ -9,10 +9,11 @@ import org.apache.spark.sql.types.DecimalType
   *
   * CALLER CONTRACT (ADVICE r16 #4): query bodies may persist intermediates
   * (`graft.core.Caching.materialize`) and deliberately do NOT unpersist —
-  * the frames they return still reference those blocks lazily. Every
-  * driver that executes registry queries (Bench/Verify/StreamingLadder do)
-  * must call `graft.core.SessionHygiene.dropAllBlocks` between queries, or
-  * cached blocks accumulate across the run.
+  * the frames they return still reference those blocks lazily. A driver
+  * that executes registry queries runs them through `graft.Runner`, which
+  * calls `graft.core.SessionHygiene.dropAllBlocks` after each, or calls it
+  * itself between queries; otherwise cached blocks accumulate across the
+  * run.
   */
 final case class Q(
     name: String,

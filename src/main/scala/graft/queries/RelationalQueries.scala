@@ -35,6 +35,36 @@ object RelationalQueries extends Registry {
     s"""$grid8Ctes
           hz AS ($h),"""
 
+  /** Per-bucket x/y bounds `st` of the bucketed points `pts` (x, y,
+    * `bucket`), the central-quarter window `w` over [[grid8Ctes]]' bounds,
+    * and the files and rows a pruning reader of that window touches
+    * (q259, q296). */
+  private def skipReport(pts: String, bucket: String): String =
+    s"""st AS (SELECT $bucket, min(x) AS fxmin, max(x) AS fxmax,
+            min(y) AS fymin, max(y) AS fymax, count(*) AS nrows
+          FROM $pts GROUP BY $bucket),
+        w AS (SELECT
+            xmin + (xmax - xmin + 1) * 3 // 8 AS xa,
+            xmin + (xmax - xmin + 1) * 5 // 8 - 1 AS xb,
+            ymin + (ymax - ymin + 1) * 3 // 8 AS ya,
+            ymin + (ymax - ymin + 1) * 5 // 8 - 1 AS yb
+          FROM mm)
+        SELECT w.xa, w.xb, w.ya, w.yb,
+          (SELECT count(*) FROM st) AS n_files,
+          (SELECT count(*) FROM st) AS n_rowgroups,
+          (SELECT count(*) FROM st
+            WHERE fxmin <= w.xb AND fxmax >= w.xa
+              AND fymin <= w.yb AND fymax >= w.ya) AS files_read,
+          (SELECT count(*) FROM st) - (SELECT count(*) FROM st
+            WHERE fxmin <= w.xb AND fxmax >= w.xa
+              AND fymin <= w.yb AND fymax >= w.ya) AS files_pruned,
+          (SELECT CAST(COALESCE(sum(nrows), 0) AS BIGINT) FROM st
+            WHERE fxmin <= w.xb AND fxmax >= w.xa
+              AND fymin <= w.yb AND fymax >= w.ya) AS rows_scanned,
+          (SELECT count(*) FROM $pts
+            WHERE x BETWEEN w.xa AND w.xb AND y BETWEEN w.ya AND w.yb) AS rows_selected
+        FROM w"""
+
   override def entries: Seq[Q] = Seq(
 
     // ---- D4 grouped aggregates (ref: eval/eval_dataset.py:399-447) -------
@@ -1103,31 +1133,7 @@ object RelationalQueries extends Registry {
               CAST(l_suppkey AS BIGINT) AS y FROM lineitem),
           ${hilbertGridCtes(h)}
           hb AS (SELECT x, y, (hd * 48) // 65536 AS hbucket FROM hz),
-          st AS (SELECT hbucket, min(x) AS fxmin, max(x) AS fxmax,
-              min(y) AS fymin, max(y) AS fymax, count(*) AS nrows
-            FROM hb GROUP BY hbucket),
-          w AS (SELECT
-              xmin + (xmax - xmin + 1) * 3 // 8 AS xa,
-              xmin + (xmax - xmin + 1) * 5 // 8 - 1 AS xb,
-              ymin + (ymax - ymin + 1) * 3 // 8 AS ya,
-              ymin + (ymax - ymin + 1) * 5 // 8 - 1 AS yb
-            FROM mm)
-          SELECT w.xa, w.xb, w.ya, w.yb,
-            (SELECT count(*) FROM st) AS n_files,
-            (SELECT count(*) FROM st) AS n_rowgroups,
-            (SELECT count(*) FROM st
-              WHERE fxmin <= w.xb AND fxmax >= w.xa
-                AND fymin <= w.yb AND fymax >= w.ya) AS files_read,
-            (SELECT count(*) FROM st) - (SELECT count(*) FROM st
-              WHERE fxmin <= w.xb AND fxmax >= w.xa
-                AND fymin <= w.yb AND fymax >= w.ya) AS files_pruned,
-            (SELECT CAST(COALESCE(sum(nrows), 0) AS BIGINT) FROM st
-              WHERE fxmin <= w.xb AND fxmax >= w.xa
-                AND fymin <= w.yb AND fymax >= w.ya) AS rows_scanned,
-            (SELECT count(*) FROM hb
-              WHERE x BETWEEN w.xa AND w.xb AND y BETWEEN w.ya AND w.yb)
-              AS rows_selected
-          FROM w"""
+          ${skipReport("hb", "hbucket")}"""
       }),
 
     // ---- LAYOUT-CURVE DECISION (the sketch→plan QUINTET's fifth member,
@@ -1464,30 +1470,7 @@ object RelationalQueries extends Registry {
         zb AS (SELECT x, y,
             (${graft.functions.ZOrder.interleaveSql("x8", "y8", bits = 8)}) // 1024 AS zbucket
           FROM n),
-        st AS (SELECT zbucket, min(x) AS fxmin, max(x) AS fxmax,
-            min(y) AS fymin, max(y) AS fymax, count(*) AS nrows
-          FROM zb GROUP BY zbucket),
-        w AS (SELECT
-            xmin + (xmax - xmin + 1) * 3 // 8 AS xa,
-            xmin + (xmax - xmin + 1) * 5 // 8 - 1 AS xb,
-            ymin + (ymax - ymin + 1) * 3 // 8 AS ya,
-            ymin + (ymax - ymin + 1) * 5 // 8 - 1 AS yb
-          FROM mm)
-        SELECT w.xa, w.xb, w.ya, w.yb,
-          (SELECT count(*) FROM st) AS n_files,
-          (SELECT count(*) FROM st) AS n_rowgroups,
-          (SELECT count(*) FROM st
-            WHERE fxmin <= w.xb AND fxmax >= w.xa
-              AND fymin <= w.yb AND fymax >= w.ya) AS files_read,
-          (SELECT count(*) FROM st) - (SELECT count(*) FROM st
-            WHERE fxmin <= w.xb AND fxmax >= w.xa
-              AND fymin <= w.yb AND fymax >= w.ya) AS files_pruned,
-          (SELECT CAST(COALESCE(sum(nrows), 0) AS BIGINT) FROM st
-            WHERE fxmin <= w.xb AND fxmax >= w.xa
-              AND fymin <= w.yb AND fymax >= w.ya) AS rows_scanned,
-          (SELECT count(*) FROM zb
-            WHERE x BETWEEN w.xa AND w.xb AND y BETWEEN w.ya AND w.yb) AS rows_selected
-        FROM w""")),
+        ${skipReport("zb", "zbucket")}""")),
 
     // ---- SMALL-FILE COMPACTION planner + executor (q259's storage layer,
     //      maintenance axis): the operational 100 TB lake problem — ingest

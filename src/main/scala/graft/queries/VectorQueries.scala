@@ -90,16 +90,31 @@ object VectorQueries extends Registry {
     (scored, q)
   }
 
-  /** IVF assignment of every embedding to its max-cosine centroid in
-    * `centsRel`, ties on cid (q163, q261). */
-  private def assignCte(name: String, centsRel: String, centsCol: String) =
-    s"""$name AS (SELECT vec_id, embedding, cid FROM (
-               SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   ${dotSql(s"t.$centsCol", "e.embedding")}
-                     / (sqrt(${dotSql(s"t.$centsCol", s"t.$centsCol")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                   t.cid) AS arn
-               FROM embeddings e, $centsRel t) WHERE arn = 1)"""
+  /** The 8 seed centroids: embeddings with vec_id < 8 as (cid, cv). */
+  private val centsCte = """cents AS (SELECT vec_id AS cid, embedding AS cv
+                    FROM embeddings WHERE vec_id < 8)"""
+
+  /** CTE `name`: every embedding's max-cosine centroid among the (cid, cv)
+    * rows of `cents`, aliased `c`, ties on cid, projected to `cols`;
+    * `ccos` adds the winning cosine as a column. The IVF assignment and
+    * each k-means step of the vector oracles. */
+  private def cosineArgmaxCte(name: String, cols: String, cents: String = "cents",
+      c: String = "c", ccos: Boolean = false): String = {
+    val cos = s"""${dotSql(s"$c.cv", "e.embedding")}
+                           / (sqrt(${dotSql(s"$c.cv", s"$c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")}))"""
+    s"""$name AS (SELECT $cols FROM (
+                     SELECT e.vec_id, e.embedding, $c.cid,${if (ccos) s" $cos AS ccos," else ""}
+                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
+                         $cos DESC,
+                         $c.cid) AS arn
+                     FROM embeddings e, $cents $c)
+                   WHERE arn = 1)"""
+  }
+
+  /** IVF assignment `name` of every embedding to its max-cosine centroid
+    * in `centsRel` (q163, q261). */
+  private def assignCte(name: String, centsRel: String) =
+    cosineArgmaxCte(name, "vec_id, embedding, cid", centsRel, "t")
 
   /** Two Lloyd rounds from the 8 seed centroids: assignments a0, a1 and
     * the updated centroid sets tc1, tc2 (q163, q261). */
@@ -113,27 +128,18 @@ object VectorQueries extends Registry {
                GROUP BY cid, dim),
              $name AS (SELECT cid, list(m ORDER BY dim) AS cv
                        FROM ${name}_m GROUP BY cid)"""
-    s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          ${assignCte("a0", "cents", "cv")},
+    s"""WITH $centsCte,
+          ${assignCte("a0", "cents")},
           ${meansCte("tc1", "a0")},
-          ${assignCte("a1", "tc1", "cv")},
+          ${assignCte("a1", "tc1")},
           ${meansCte("tc2", "a1")},"""
   }
 
   /** The IVF coarse quantizer of q31, q140 and [[ivfPqScored]]: the 8
     * centroids (vec_id < 8) and each vector's max-cosine centroid (ties
     * on cid). */
-  private val ivfAssignCtes = s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-                    FROM embeddings WHERE vec_id < 8),
-        assign AS (SELECT vec_id, embedding, cid FROM (
-                     SELECT e.vec_id, e.embedding, c.cid,
-                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                         ${dotSql("c.cv", "e.embedding")}
-                           / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                         c.cid) AS arn
-                     FROM embeddings e, cents c)
-                   WHERE arn = 1),"""
+  private val ivfAssignCtes = s"""WITH $centsCte,
+        ${cosineArgmaxCte("assign", "vec_id, embedding, cid")},"""
 
   /** The IVF-PQ oracles' shared front (q109, q154, q183): coarse
     * assignment to the 8 centroids, 4 x 16-dim PQ encoding against the
@@ -251,17 +257,9 @@ object VectorQueries extends Registry {
             (dotFast($"a.embedding", $"b.embedding") / ($"a.nrm" * $"b.nrm")).as("cosine"))
         pairs.orderBy($"cosine".desc, $"keep_id", $"dup_id").limit(40)
       },
-      Some(s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-                    FROM embeddings WHERE vec_id < 8),
+      Some(s"""WITH $centsCte,
         assign AS (SELECT vec_id, embedding FROM embeddings),
-        asg AS (SELECT vec_id, embedding, cid FROM (
-                  SELECT e.vec_id, e.embedding, c.cid,
-                    row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                      ${dotSql("c.cv", "e.embedding")}
-                        / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                      c.cid) AS arn
-                  FROM embeddings e, cents c)
-                WHERE arn = 1)
+        ${cosineArgmaxCte("asg", "vec_id, embedding, cid")}
         SELECT a.vec_id AS keep_id, b.vec_id AS dup_id,
           ${dotSql("a.embedding", "b.embedding")}
             / (sqrt(${dotSql("a.embedding", "a.embedding")}) * sqrt(${dotSql("b.embedding", "b.embedding")})) AS cosine
@@ -348,16 +346,8 @@ object VectorQueries extends Registry {
             ($"sq".cast("double") / 1000.0 / $"n_members").as("mean_q"))
           .orderBy($"cid", $"dim")
       },
-      Some(s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-            FROM embeddings WHERE vec_id < 8),
-        m AS (SELECT cid, embedding FROM (
-            SELECT e.vec_id, e.embedding, c.cid,
-              row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                ${dotSql("c.cv", "e.embedding")}
-                  / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                c.cid) AS arn
-            FROM embeddings e, cents c)
-          WHERE arn = 1),
+      Some(s"""WITH $centsCte,
+        ${cosineArgmaxCte("m", "cid, embedding")},
         x AS (SELECT cid, dim,
             CAST(round(CAST(embedding[dim + 1] AS DOUBLE) * 1000.0) AS BIGINT) AS q
           FROM m, UNNEST(range(0, 8)) AS t(dim))
@@ -703,28 +693,15 @@ object VectorQueries extends Registry {
           .select($"query_id", $"rank", $"neighbor_id", $"cosine")
           .orderBy($"query_id", $"rank")
       },
-      Some(s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-              FROM embeddings WHERE vec_id < 8),
-          a0 AS (SELECT vec_id, embedding, cid FROM (
-               SELECT e.vec_id, e.embedding, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   ${dotSql("c.cv", "e.embedding")}
-                     / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                   c.cid) AS arn
-               FROM embeddings e, cents c) WHERE arn = 1),
+      Some(s"""WITH $centsCte,
+          ${cosineArgmaxCte("a0", "vec_id, embedding, cid")},
           comp AS (SELECT cid, dim,
                  CAST(sum(CAST(round(CAST(embedding[dim + 1] AS DOUBLE) * 1000.0) AS BIGINT)) AS DOUBLE)
                    / 1000.0 / count(*) AS m
                FROM a0, UNNEST(range(0, 64)) AS t(dim)
                GROUP BY cid, dim),
           tc AS (SELECT cid, list(m ORDER BY dim) AS cv FROM comp GROUP BY cid),
-          a1 AS (SELECT vec_id, embedding, cid FROM (
-               SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   ${dotSql("t.cv", "e.embedding")}
-                     / (sqrt(${dotSql("t.cv", "t.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                   t.cid) AS arn
-               FROM embeddings e, tc t) WHERE arn = 1),
+          ${assignCte("a1", "tc")},
           q AS (SELECT vec_id AS query_id, embedding AS qv, cid
                 FROM a1 WHERE vec_id % 100 = 0),
           scored AS (SELECT q.query_id, a.vec_id AS neighbor_id,
@@ -888,7 +865,7 @@ object VectorQueries extends Registry {
           .orderBy($"query_id", $"rank")
       },
       Some(s"""$lloydTwoRounds
-          ${assignCte("a2", "tc2", "cv")},
+          ${assignCte("a2", "tc2")},
           q AS (SELECT vec_id AS query_id, embedding AS qv, cid
                 FROM a2 WHERE vec_id % 100 = 0),
           scored AS (SELECT q.query_id, a.vec_id AS neighbor_id,
@@ -1138,18 +1115,8 @@ object VectorQueries extends Registry {
             when($"hit".isNotNull, "drop").otherwise("keep").as("verdict"))
           .orderBy($"vec_id")
       },
-      Some(s"""WITH cents AS (SELECT vec_id AS cid, embedding AS cv
-                    FROM embeddings WHERE vec_id < 8),
-          asg AS (SELECT vec_id, embedding, cid, ccos FROM (
-                    SELECT e.vec_id, e.embedding, c.cid,
-                      ${dotSql("c.cv", "e.embedding")}
-                        / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) AS ccos,
-                      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                        ${dotSql("c.cv", "e.embedding")}
-                          / (sqrt(${dotSql("c.cv", "c.cv")}) * sqrt(${dotSql("e.embedding", "e.embedding")})) DESC,
-                        c.cid) AS arn
-                    FROM embeddings e, cents c)
-                  WHERE arn = 1),
+      Some(s"""WITH $centsCte,
+          ${cosineArgmaxCte("asg", "vec_id, embedding, cid, ccos", ccos = true)},
           drops AS (SELECT DISTINCT a.vec_id
                     FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id <> b.vec_id
                       AND ${dotSql("a.embedding", "b.embedding")}

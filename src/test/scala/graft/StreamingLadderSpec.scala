@@ -13,24 +13,6 @@ class StreamingLadderSpec extends AnyFunSuite {
       "regressions":{}},
     "rung_regressions":{}}"""
 
-  test("withStreamingBlock replaces the streaming_ladder block idempotently, appends it when absent") {
-    val block = parse(artifact).obj("streaming_ladder")
-    assert(block.obj("rungs").get("q41_streaming_tumbling").nonEmpty &&
-      block.get("regressions").nonEmpty)
-    assert(parse(artifact).get("absent_key").isEmpty)
-    // replace: the new block wins, the old one is gone, JSON stays valid
-    val empty = parse("""{"rungs":{},"regressions":{}}""")
-    val replaced = StreamingLadder.withStreamingBlock(parse(artifact), empty).render
-    assert(!replaced.contains("q41_streaming_tumbling"))
-    assert(parse(replaced).obj("streaming_ladder") == empty)
-    assert(StreamingLadder.withStreamingBlock(parse(replaced), empty).render == replaced)
-    // append: adding to an artifact without the block keeps other keys
-    val bare = parse("""{"a":1,"rungs":{"q22":{"x1":1.0}}}""")
-    val appended = StreamingLadder.withStreamingBlock(bare, parse("""{"x":{}}""")).render
-    assert(appended.contains(""""a":1""") && appended.contains(""""q22""""))
-    assert(parse(appended).obj("streaming_ladder") == parse("""{"x":{}}"""))
-  }
-
   test("parsePrior reads (rate_base, rate_scaled) per query") {
     val p = StreamingLadder.parsePrior(parse(artifact))
     assert(p("q41_streaming_tumbling") == (3300.0, 2900.0))
@@ -56,16 +38,6 @@ class StreamingLadderSpec extends AnyFunSuite {
     assert(StreamingLadder.regressions(Map.empty, cur).isEmpty)
     assert(StreamingLadder.regressions(
       Map("qa" -> (0.0, 0.0)), Map("qa" -> (1.0, 0.0))).isEmpty)
-  }
-
-  test("LadderAdjudicate-style rewrite carries the streaming block through withStreamingBlock") {
-    // simulate: batch writer produces fresh text, then re-attaches the
-    // block extracted from the previous artifact
-    val fresh = parse("""{"metric":"sf_ladder_adjudicated","rungs":{"q22":{"x1":1.1}}}""")
-    val carried = parse(artifact).get("streaming_ladder")
-      .map(b => StreamingLadder.withStreamingBlock(fresh, b).render).get
-    assert(carried.contains("q41_streaming_tumbling") &&
-      carried.contains(""""q22":{"x1":1.1}"""))
   }
 
   test("state gate: keyed-state growth past 8x flags; row-buffering " +
